@@ -282,16 +282,6 @@ def bench_filter_throughput(
         tab = build_xor_filter_table(
             corpus, "key", f"{art_root}/{tag}", num_shards=BENCH_SHARDS,
             width=16, seed=12345, jvm_digests=True,
-            # rows transport: digests stay JVM-side from scan through the
-            # shard shuffle (16 B/key, zero Python before the kernel).
-            # A/B vs the blob transport (map-side digest packing into one
-            # binary blob per partition x shard) via tools/cmp_transport:
-            # rows 5.07M keys/s vs blob 2.67M at local[32]/11.5M keys —
-            # the blob's Arrow pack stage costs more than the per-row
-            # shuffle overhead it saves. Artifacts are byte-identical
-            # either way; blob remains for narrow-network clusters where
-            # shuffle row overhead dominates.
-            transport=os.environ.get("SPARK_GRAFT_BENCH_TRANSPORT", "rows"),
         )
         t_build = time.perf_counter() - t0
 
@@ -348,20 +338,19 @@ def bench_filter_throughput(
             # zero-Python SQL path (sqlhash addressing, the jvm-digest
             # default — same plan shape as the XOR probe_sql), timed at
             # steady state via plan re-execution like the main probe below
-            from xorfilter_net_spark.filters.fuse_spark import (
-                build_sharded_fuse_filter,
-                probe_sql_fuse,
+            from xorfilter_net_spark.filters.spark_build import (
+                build_sharded_filter,
             )
 
             t0 = time.perf_counter()
-            sff = build_sharded_fuse_filter(
+            sff = build_sharded_filter(
                 corpus, "key", num_shards=BENCH_SHARDS, width=16,
-                seed=12345, jvm_digests=True,
+                seed=12345, jvm_digests=True, kind="fuse3",
             )
             dt = time.perf_counter() - t0
             extras["fuse_construction_sec"] = round(dt, 3)
             extras["fuse_construction_keys_per_sec"] = int(n_keys / dt)
-            fm = sff.metrics()
+            fm = sff.metrics
             extras["fuse_bits_per_key"] = round(fm["bits_per_key"], 3)
             # same denominator as the fuse metric: UNIQUE keys (the
             # replicated corpus carries within-conversation duplicate
@@ -372,7 +361,7 @@ def bench_filter_throughput(
             extras["xor_bits_per_key"] = round(
                 sum(f.size for f in sxf.shards.values()) * 16 / max(xn, 1), 3
             )
-            fprobe = probe_sql_fuse(sff, probe_df, "key", "m")
+            fprobe = probe_sql(sff, probe_df, "key", "m")
             nf = (
                 fprobe.agg(F.sum(F.col("m").cast("long")).alias("n"))
                 .collect()[0]["n"]

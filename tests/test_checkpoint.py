@@ -53,7 +53,7 @@ def test_param_change_invalidates_downstream(spark, sf_tiny, tmp_path):
 def test_resumed_filter_probes_correctly(spark, sf_tiny, tmp_path):
     from pyspark.sql import functions as F
 
-    from xorfilter_net_spark.filters.spark_build import is_member_sharded
+    from xorfilter_net_spark.filters.spark_build import is_member
 
     df = _keyed(spark, sf_tiny)
     run_dir = str(tmp_path / "run3")
@@ -67,7 +67,7 @@ def test_resumed_filter_probes_correctly(spark, sf_tiny, tmp_path):
     members = df.distinct()
     n = members.count()
     found = (
-        members.withColumn("m", is_member_sharded(spark, sxf, "key"))
+        members.withColumn("m", is_member(spark, sxf, "key"))
         .agg(F.sum(F.col("m").cast("long")).alias("n"))
         .collect()[0]["n"]
     )
@@ -282,3 +282,94 @@ class TestIncrementalUpdate:
             if name != "update"
         )
         assert self._canon(u2b.to_dict()) == self._canon(u2.to_dict())
+
+
+def test_checkpointed_shards_equal_table_build_bytes(spark, sf_tiny, tmp_path):
+    """The checkpointed build and build_xor_filter_table run the same shard
+    kernel: per-shard meta and slot bytes are equal for the same keys and
+    seed (only the wall-clock build_sec differs)."""
+    from xorfilter_net_spark.filters.table import build_xor_filter_table
+
+    df = _keyed(spark, sf_tiny)
+    kw = dict(num_shards=8, width=16, seed=42, jvm_digests=True)
+    build_xor_filter_checkpointed(
+        df, "key", str(tmp_path / "run"), input_token="t", **kw
+    )
+    tab = build_xor_filter_table(df, "key", str(tmp_path / "tab"), **kw)
+
+    def rows(sdf):
+        out = {}
+        for r in sdf.toPandas().itertuples(index=False):
+            meta = json.loads(r.meta)
+            meta["metrics"].pop("build_sec")
+            out[int(r.shard)] = (meta, bytes(r.slots))
+        return out
+
+    ck = rows(spark.read.parquet(str(tmp_path / "run" / "shards")))
+    assert ck == rows(tab.shards_df())
+    assert len(ck) == 8
+
+
+def test_previous_format_run_dir_rebuilds_shards(spark, sf_tiny, tmp_path):
+    """A run dir whose shards stage holds the previous row format (one
+    JSON ``artifact`` column per shard, no format token in the stage
+    fingerprint) is rebuilt on resume, not misread; an update refuses it
+    as a base."""
+    import shutil
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+    import pytest
+
+    from xorfilter_net_spark.pipeline.checkpoint import (
+        _fingerprint,
+        artifact_canonical_json,
+        update_xor_filter_checkpointed,
+    )
+
+    df = _keyed(spark, sf_tiny)
+    run_dir = str(tmp_path / "old")
+    kw = dict(num_shards=8, width=16, seed=42, input_token="t", jvm_digests=True)
+    fresh, _ = build_xor_filter_checkpointed(df, "key", run_dir, **kw)
+
+    # rewrite the shards and filter stages as the previous format left them
+    shards_dir = os.path.join(run_dir, "shards")
+    shutil.rmtree(shards_dir)
+    os.makedirs(shards_dir)
+    fs = [fresh.shards[s] for s in sorted(fresh.shards)]
+    pq.write_table(
+        pa.table(
+            {
+                "shard": pa.array(sorted(fresh.shards), pa.int32()),
+                "artifact": [f.to_json() for f in fs],
+                "n_keys": pa.array([f.metrics["n_keys"] for f in fs], pa.int64()),
+                "table_size": pa.array([f.size for f in fs], pa.int64()),
+                "attempts": pa.array([f.attempts for f in fs], pa.int32()),
+            }
+        ),
+        os.path.join(shards_dir, "part-00000.parquet"),
+    )
+    man_p = os.path.join(run_dir, "shards.manifest.json")
+    man = json.load(open(man_p))
+    old_fp = json.loads(man["fingerprint"])
+    del old_fp["format"]
+    man["fingerprint"] = _fingerprint(old_fp)
+    json.dump(man, open(man_p, "w"))
+    fman_p = os.path.join(run_dir, "filter.manifest.json")
+    fman = json.load(open(fman_p))
+    fman["fingerprint"] = _fingerprint({"stage": "filter", "up": man["fingerprint"]})
+    json.dump(fman, open(fman_p, "w"))
+    art = json.load(open(os.path.join(run_dir, "filter.json")))
+    del art["kind"]
+    json.dump(art, open(os.path.join(run_dir, "filter.json"), "w"))
+
+    with pytest.raises(ValueError, match="row format"):
+        update_xor_filter_checkpointed(
+            df.limit(5), "key", run_dir, str(tmp_path / "upd"), input_token="d"
+        )
+
+    resumed, m = build_xor_filter_checkpointed(df, "key", run_dir, **kw)
+    assert m["digests"]["resumed"]
+    assert not m["shards"]["resumed"] and not m["filter"]["resumed"]
+    assert artifact_canonical_json(resumed) == artifact_canonical_json(fresh)
+    assert spark.read.parquet(shards_dir).columns == ["shard", "meta", "slots"]

@@ -11,8 +11,8 @@ import pytest
 from pyspark.sql import functions as F
 
 from xorfilter_net_spark.filters.spark_build import (
-    build_sharded_xor_filter,
-    is_member_sharded,
+    build_sharded_filter,
+    is_member,
 )
 from xorfilter_net_spark.filters.table import XorFilterTable, build_xor_filter_table
 from xorfilter_net_spark.sources.transcripts import load_transcripts, with_membership_key
@@ -28,7 +28,7 @@ def test_table_build_bit_identical_to_collected_build(spark, keyed, tmp_path):
         keyed, "key", str(tmp_path / "art"), num_shards=8, width=16,
         seed=42, jvm_digests=True,
     )
-    mem = build_sharded_xor_filter(
+    mem = build_sharded_filter(
         keyed, "key", num_shards=8, width=16, seed=42, jvm_digests=True
     )
     loaded = tab.to_sharded()
@@ -70,7 +70,7 @@ def test_cogroup_probe_matches_broadcast_probe_rowwise(spark, keyed, tmp_path):
     via_bcast = {
         r["key"]: r["is_member"]
         for r in non.withColumn(
-            "is_member", is_member_sharded(spark, sxf, "key")
+            "is_member", is_member(spark, sxf, "key")
         ).collect()
     }
     assert via_table == via_bcast
@@ -133,42 +133,6 @@ def test_load_roundtrip(spark, keyed, tmp_path):
         .collect()[0]["n"]
         == n
     )
-
-
-def test_blob_transport_bit_identical_and_probes(spark, keyed, tmp_path):
-    """transport='blob' (map-side packed shuffle) must produce the same
-    artifact bytes as the row-transport build, and probe identically —
-    including when the corpus carries duplicates (blobs ship raw rows)."""
-    dup = keyed.unionAll(keyed.limit(50))
-    rows = build_xor_filter_table(
-        dup, "key", str(tmp_path / "rows"), num_shards=8, width=16,
-        seed=42, jvm_digests=True,
-    )
-    blob = build_xor_filter_table(
-        dup, "key", str(tmp_path / "blob"), num_shards=8, width=16,
-        seed=42, jvm_digests=True, transport="blob",
-    )
-    a, b = rows.to_sharded(), blob.to_sharded()
-    assert set(a.shards) == set(b.shards)
-    for sid, f in a.shards.items():
-        assert np.array_equal(b.shards[sid].slots, f.slots)
-        assert np.array_equal(b.shards[sid].seeds, f.seeds)
-    assert blob.metrics["n_keys"] == keyed.count()
-    n = keyed.count()
-    found = (
-        blob.probe(keyed, "key")
-        .agg(F.sum(F.col("is_member").cast("long")).alias("n"))
-        .collect()[0]["n"]
-    )
-    assert found == n
-
-
-def test_blob_transport_rejects_shuffle_dedup(spark, keyed, tmp_path):
-    with pytest.raises(ValueError, match="in_shard"):
-        build_xor_filter_table(
-            keyed, "key", str(tmp_path / "x"), num_shards=4, width=8,
-            jvm_digests=True, transport="blob", dedup="shuffle",
-        )
 
 
 def test_table_probe_sql_shuffle_matches_cogroup_rowwise(spark, keyed, tmp_path):

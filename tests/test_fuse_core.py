@@ -122,11 +122,12 @@ class TestCoreInvariants:
 
     def test_slots_pairwise_distinct_per_key(self):
         # consecutive-segment addressing guarantees a true 3-uniform edge
-        from xorfilter_net_spark.filters.fuse_core import _fuse_idx
+        from xorfilter_net_spark.filters.fuse_core import probe_params, slot_index
 
         d0, _ = _digests(20_000, seed=9)
         sl, sc, _ = fuse_layout(20_000)
-        idx = _fuse_idx(d0, np.uint64(123), sl, sc)
+        p = {"seed": 123, "segment_length": sl, "segment_count": sc}
+        idx = slot_index(d0, probe_params(p), "digest")
         assert (idx[:, 0] // sl + 1 == idx[:, 1] // sl).all()
         assert (idx[:, 1] // sl + 1 == idx[:, 2] // sl).all()
 
@@ -136,20 +137,21 @@ class TestShardedFuse:
     def test_sharded_build_zero_fn_and_space(self, spark, jvm):
         from pyspark.sql import functions as F
 
-        from xorfilter_net_spark.filters.fuse_spark import (
-            build_sharded_fuse_filter,
-            is_member_sharded_fuse,
+        from xorfilter_net_spark.filters.spark_build import (
+            build_sharded_filter,
+            is_member,
         )
 
         rows = [(f"k-{i}",) for i in range(20_000)]
         df = spark.createDataFrame(rows, "key string")
-        sff = build_sharded_fuse_filter(
-            df, "key", num_shards=8, width=16, seed=9, jvm_digests=jvm
+        sff = build_sharded_filter(
+            df, "key", num_shards=8, width=16, seed=9, jvm_digests=jvm,
+            kind="fuse3",
         )
         assert len(sff.shards) == 8
         # zero false negatives through the distributed probe
         probed = df.withColumn(
-            "m", is_member_sharded_fuse(spark, sff, "key")
+            "m", is_member(spark, sff, "key")
         )
         assert (
             probed.agg(F.sum(F.col("m").cast("long"))).collect()[0][0]
@@ -159,7 +161,7 @@ class TestShardedFuse:
         # per shard (0.875 + 0.25·ln(1e6)/ln(n) = 1.23 at n≈16.8k), so at
         # 2.5k/shard we only bound the small-set overhead; the asymptotic
         # beats-XOR claim is asserted on the unsharded core at 100k keys
-        m = sff.metrics()
+        m = sff.metrics
         assert m["n_keys"] == 20_000
         assert m["bits_per_key"] < 1.45 * 16
         # non-members nearly all rejected
@@ -167,25 +169,23 @@ class TestShardedFuse:
             [(f"absent-{i}",) for i in range(20_000)], "key string"
         )
         fp = (
-            non.withColumn("m", is_member_sharded_fuse(spark, sff, "key"))
+            non.withColumn("m", is_member(spark, sff, "key"))
             .agg(F.sum(F.col("m").cast("long")))
             .collect()[0][0]
         )
         assert fp <= max(3, int(0.001 * 20_000))
 
     def test_rebuild_stable_across_partitionings(self, spark):
-        from xorfilter_net_spark.filters.fuse_spark import (
-            build_sharded_fuse_filter,
-        )
+        from xorfilter_net_spark.filters.spark_build import build_sharded_filter
 
         rows = [(f"k-{i}",) for i in range(5_000)]
-        a = build_sharded_fuse_filter(
+        a = build_sharded_filter(
             spark.createDataFrame(rows, "key string").repartition(3),
-            "key", num_shards=4, width=8, seed=1,
+            "key", num_shards=4, width=8, seed=1, kind="fuse3",
         )
-        b = build_sharded_fuse_filter(
+        b = build_sharded_filter(
             spark.createDataFrame(rows[::-1], "key string").repartition(11),
-            "key", num_shards=4, width=8, seed=1,
+            "key", num_shards=4, width=8, seed=1, kind="fuse3",
         )
         for sid in a.shards:
             assert (a.shards[sid].slots == b.shards[sid].slots).all()
@@ -193,20 +193,17 @@ class TestShardedFuse:
 
 class TestSparkFuse:
     def test_spark_build_matches_local_core_and_probe(self, spark):
-        from xorfilter_net_spark.filters.fuse_spark import (
-            build_fuse_filter,
-            probe_fuse,
-        )
+        from xorfilter_net_spark.filters.spark_build import build_filter, probe
 
         rows = [(f"conv-{i % 97}", i, f"text {i}") for i in range(3_000)]
         df = spark.createDataFrame(rows, "conv_id string, turn_idx int, text string")
         keyed = df.selectExpr("conv_id || ':' || cast(turn_idx as string) as key")
-        ff = build_fuse_filter(keyed, "key", width=16, seed=12345)
+        ff = build_filter(keyed, "key", width=16, seed=12345, kind="fuse3")
 
         # zero false negatives, distributed probe
         from pyspark.sql import functions as F
 
-        r = probe_fuse(keyed.distinct(), ff, "key")
+        r = probe(keyed.distinct(), ff, "key")
         got = r.agg(F.sum(F.col("is_member").cast("long"))).collect()[0][0]
         assert got == keyed.distinct().count()
 
@@ -219,7 +216,7 @@ class TestSparkFuse:
         # non-members nearly all rejected at 2^-16
         non = keyed.selectExpr("'nm:' || key as key").distinct()
         fp = (
-            probe_fuse(non, ff, "key")
+            probe(non, ff, "key")
             .agg(F.sum(F.col("is_member").cast("long")))
             .collect()[0][0]
         )
@@ -230,24 +227,25 @@ class TestFuseSqlProbe:
     def test_sql_probe_row_identical_to_arrow(self, spark):
         from pyspark.sql import functions as F
 
-        from xorfilter_net_spark.filters.fuse_spark import (
-            build_sharded_fuse_filter,
-            is_member_sharded_fuse,
-            probe_sql_fuse,
+        from xorfilter_net_spark.filters.spark_build import (
+            build_sharded_filter,
+            is_member,
+            probe_sql,
         )
 
         rows = [(f"k-{i}",) for i in range(20_000)]
         df = spark.createDataFrame(rows, "key string")
-        sff = build_sharded_fuse_filter(
-            df, "key", num_shards=8, width=16, seed=9, jvm_digests=True
+        sff = build_sharded_filter(
+            df, "key", num_shards=8, width=16, seed=9, jvm_digests=True,
+            kind="fuse3",
         )
         assert sff.mode == "sqlhash"
         # members + guaranteed non-members through both probe paths
         probes = df.union(
             spark.createDataFrame([(f"nm-{i}",) for i in range(20_000)], "key string")
         )
-        sql = probe_sql_fuse(sff, probes, "key", "m")
-        arrow = probes.withColumn("m", is_member_sharded_fuse(spark, sff, "key"))
+        sql = probe_sql(sff, probes, "key", "m")
+        arrow = probes.withColumn("m", is_member(spark, sff, "key"))
         # row-for-row identical, INCLUDING false positives
         assert sql.exceptAll(arrow).count() == 0
         assert arrow.exceptAll(sql).count() == 0
@@ -269,12 +267,14 @@ class TestFuseSqlProbe:
         assert "MapInPandas" not in plan
 
     def test_sql_probe_rejects_digest_mode(self, spark):
-        from xorfilter_net_spark.filters.fuse_spark import (
-            build_sharded_fuse_filter,
-            probe_sql_fuse,
+        from xorfilter_net_spark.filters.spark_build import (
+            build_sharded_filter,
+            probe_sql,
         )
 
         df = spark.createDataFrame([(f"k-{i}",) for i in range(500)], "key string")
-        sff = build_sharded_fuse_filter(df, "key", num_shards=2, width=8, seed=1)
+        sff = build_sharded_filter(
+            df, "key", num_shards=2, width=8, seed=1, kind="fuse3"
+        )
         with pytest.raises(ValueError):
-            probe_sql_fuse(sff, df, "key")
+            probe_sql(sff, df, "key")

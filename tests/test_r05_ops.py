@@ -368,3 +368,63 @@ def test_rotation_unlisted_sorts_after_listed_tail():
         front.setdefault(n, i)
     sentinel = len(se._FRONT)
     assert all(v < sentinel for v in front.values())
+
+
+# ------------------------------------ ragged / zero-norm / boundary guards
+def test_centroid_pairs_rejects_ragged_vectors(spark):
+    emb = spark.createDataFrame(
+        [(1, [1.0, 2.0, 3.0], 0), (2, [1.0, 2.0], 0), (3, [1.0, 0.0, 1.0], 1)],
+        "vec_id long, embedding array<float>, label int",
+    )
+    with pytest.raises(ValueError, match="ragged"):
+        centroid_pairs(emb).collect()
+
+
+def test_centroid_pairs_zero_norm_group_null_in_both_engines(spark):
+    """A group whose centroid is the zero vector has no direction: its
+    cosines are NULL in Spark and in the DuckDB oracle alike."""
+    import duckdb
+
+    from xorfilter_net_spark.ann.centroid_drift import centroid_oracle_sql
+
+    rows = [(1, [0.0, 0.0], 0), (2, [1.0, 2.0], 1), (3, [2.0, 1.0], 2)]
+    emb = spark.createDataFrame(
+        rows, "vec_id long, embedding array<double>, label int"
+    )
+    got = {
+        (r["group_a"], r["group_b"]): r["cos_e6"]
+        for r in centroid_pairs(emb).collect()
+    }
+    con = duckdb.connect()
+    con.execute(
+        "create table embeddings (vec_id bigint, embedding double[], label int)"
+    )
+    con.executemany("insert into embeddings values (?, ?, ?)", rows)
+    want = {(a, b): c for a, b, _, _, c in con.execute(centroid_oracle_sql()).fetchall()}
+    assert got == want
+    assert got[(0, 1)] is None and got[(0, 2)] is None
+    assert got[(1, 2)] == 800000
+
+
+def test_fork_fingerprint_field_boundary_safe(spark):
+    """('a|b', 'c') and ('a', 'b|c') are different turns: with a joined
+    ``role || '|' || text`` fingerprint they collided, and these two
+    conversations showed as a depth-1 fork."""
+    import duckdb
+
+    from xorfilter_net_spark.pipeline.forks import fork_oracle_sql
+
+    rows = [
+        ("c1", 0, "a|b", "c", None, 0),
+        ("c1", 1, "user", "x", None, 1),
+        ("c2", 0, "a", "b|c", None, 0),
+        ("c2", 1, "user", "y", None, 1),
+    ]
+    assert fork_points(spark.createDataFrame(rows, TURN_SCHEMA)).collect() == []
+    con = duckdb.connect()
+    con.execute(
+        "create table transcripts (conv_id varchar, turn_idx int, role varchar,"
+        " text varchar, tool varchar, ts_epoch bigint)"
+    )
+    con.executemany("insert into transcripts values (?, ?, ?, ?, ?, ?)", rows)
+    assert con.execute(fork_oracle_sql()).fetchall() == []

@@ -8,9 +8,9 @@ import pytest
 from pyspark.sql import functions as F
 
 from xorfilter_net_spark.filters.spark_build import (
-    build_sharded_xor_filter,
-    build_xor_filter,
-    is_member_sharded,
+    build_sharded_filter,
+    build_filter,
+    is_member,
     probe,
 )
 from xorfilter_net_spark.sketches.base import aggregate, aggregate_by_group
@@ -143,7 +143,7 @@ def test_two_phase_partition_count_invariance(spark, transcripts):
 
 
 def test_xor_global_and_sharded_pipeline(spark, transcripts):
-    xf = build_xor_filter(transcripts, "key", width=16, seed=12345)
+    xf = build_filter(transcripts, "key", width=16, seed=12345)
     total = transcripts.select("key").distinct().count()
     assert (
         probe(transcripts.select("key").distinct(), xf, "key")
@@ -151,13 +151,13 @@ def test_xor_global_and_sharded_pipeline(spark, transcripts):
         .count()
         == total
     )
-    sxf = build_sharded_xor_filter(
+    sxf = build_sharded_filter(
         transcripts, "key", num_shards=5, width=16, seed=12345
     )
     found = (
         transcripts.select("key")
         .distinct()
-        .withColumn("m", is_member_sharded(spark, sxf, "key"))
+        .withColumn("m", is_member(spark, sxf, "key"))
         .filter("m")
         .count()
     )
@@ -171,8 +171,8 @@ class TestJvmDigestPath:
         from pyspark.sql import functions as F
 
         from xorfilter_net_spark.filters.spark_build import (
-            build_sharded_xor_filter,
-            is_member_sharded,
+            build_sharded_filter,
+            is_member,
         )
         from xorfilter_net_spark.sources.transcripts import (
             load_transcripts,
@@ -182,19 +182,19 @@ class TestJvmDigestPath:
         t = with_membership_key(load_transcripts(spark, sf_tiny))
         members = t.select("key").distinct().persist()
         n = members.count()
-        sxf = build_sharded_xor_filter(
+        sxf = build_sharded_filter(
             members, "key", num_shards=8, width=16, seed=9, jvm_digests=True
         )
         assert sxf.digest_kind == "xxhash64jvm"
         found = (
-            members.withColumn("m", is_member_sharded(spark, sxf, "key"))
+            members.withColumn("m", is_member(spark, sxf, "key"))
             .agg(F.sum(F.col("m").cast("long")).alias("n"))
             .collect()[0]["n"]
         )
         assert found == n
         fp = (
             members.selectExpr("'nm:' || key as key")
-            .withColumn("m", is_member_sharded(spark, sxf, "key"))
+            .withColumn("m", is_member(spark, sxf, "key"))
             .agg(F.sum(F.col("m").cast("long")).alias("n"))
             .collect()[0]["n"]
         )
@@ -204,7 +204,7 @@ class TestJvmDigestPath:
 
     def test_in_shard_dedup_matches_shuffle_dedup(self, spark, sf_tiny):
         from xorfilter_net_spark.filters.spark_build import (
-            build_sharded_xor_filter,
+            build_sharded_filter,
         )
         from xorfilter_net_spark.sources.transcripts import (
             load_transcripts,
@@ -214,11 +214,11 @@ class TestJvmDigestPath:
         t = with_membership_key(load_transcripts(spark, sf_tiny))
         # triple the input (duplicates) - dedup strategies must agree
         tripled = t.unionAll(t).unionAll(t)
-        a = build_sharded_xor_filter(
+        a = build_sharded_filter(
             tripled, "key", num_shards=4, width=16, seed=5,
             jvm_digests=True, dedup="in_shard",
         )
-        b = build_sharded_xor_filter(
+        b = build_sharded_filter(
             tripled, "key", num_shards=4, width=16, seed=5,
             jvm_digests=True, dedup="shuffle",
         )
@@ -259,8 +259,8 @@ class TestSqlProbe:
         from pyspark.sql import functions as F
 
         from xorfilter_net_spark.filters.spark_build import (
-            build_sharded_xor_filter,
-            is_member_sharded,
+            build_sharded_filter,
+            is_member,
             probe_sql,
         )
         from xorfilter_net_spark.sources.transcripts import (
@@ -271,7 +271,7 @@ class TestSqlProbe:
         t = with_membership_key(load_transcripts(spark, sf_tiny))
         members = t.select("key").distinct().persist()
         n = members.count()
-        sxf = build_sharded_xor_filter(
+        sxf = build_sharded_filter(
             members, "key", num_shards=32, width=8, seed=77, jvm_digests=True
         )
         assert sxf.mode == "sqlhash"
@@ -283,7 +283,7 @@ class TestSqlProbe:
             .withColumnRenamed("is_member", "m_sql")
             .join(
                 mixed.withColumn(
-                    "m_arrow", is_member_sharded(spark, sxf, "key")
+                    "m_arrow", is_member(spark, sxf, "key")
                 ),
                 "key",
             )
@@ -307,14 +307,14 @@ class TestSqlProbe:
         from pyspark.sql import functions as F
 
         from xorfilter_net_spark.filters.spark_build import (
-            build_sharded_xor_filter,
+            build_sharded_filter,
             probe_sql,
         )
 
         few = spark.createDataFrame(
             [(f"k{i}",) for i in range(5)], "key string"
         )
-        sxf = build_sharded_xor_filter(
+        sxf = build_sharded_filter(
             few, "key", num_shards=64, width=16, seed=2, jvm_digests=True
         )
         assert len(sxf.shards) < 64

@@ -68,6 +68,28 @@ class TestBatch:
 
 
 class TestPushdown:
+    def test_reads_with_pushdown_conf_off(self, spark):
+        """A session that sets spark.sql.python.filterPushdown.enabled=false
+        (Spark 4 then rejects readers implementing pushFilters) still reads
+        the source, filters included, with the same rows."""
+        key = "spark.sql.python.filterPushdown.enabled"
+        before = spark.conf.get(key, "false")
+        spark.conf.set(key, "false")
+        try:
+            register(spark)
+            df = (
+                spark.read.format("synthetic_transcripts")
+                .option("conversations", 300)
+                .load()
+            )
+            assert df.count() == generate_batch(0, 300, 42, 8).num_rows
+            one = df.filter("conv_id = 'conv-00000007'").collect()
+            assert {r["conv_id"] for r in one} == {"conv-00000007"}
+            assert len(one) == generate_batch(7, 8, 42, 8).num_rows
+        finally:
+            spark.conf.set(key, before)
+            register(spark)
+
     def test_filters_absorbed_into_range(self):
         r = SyntheticTranscriptsReader({"conversations": "300"})
         rest = list(

@@ -31,7 +31,7 @@ def main() -> None:
 
     from bench import make_spark
     from xorfilter_net_spark.filters.spark_build import (
-        build_sharded_xor_filter,
+        build_sharded_filter,
         key_digests_jvm,
         probe_sql,
     )
@@ -60,7 +60,7 @@ def main() -> None:
         )
     )
 
-    sxf = build_sharded_xor_filter(
+    sxf = build_sharded_filter(
         t, "key", num_shards=32, width=16, seed=7, jvm_digests=True
     )
 
@@ -291,18 +291,14 @@ def main() -> None:
     )
 
     # 18. fuse SQL probe: zero Python, power-of-two masks (no mod math)
-    from xorfilter_net_spark.filters.fuse_spark import (
-        build_sharded_fuse_filter,
-        probe_sql_fuse,
+    sff = build_sharded_filter(
+        t, "key", num_shards=32, width=16, seed=7, jvm_digests=True,
+        kind="fuse3",
     )
-
-    sff = build_sharded_fuse_filter(
-        t, "key", num_shards=32, width=16, seed=7, jvm_digests=True
-    )
-    fuse_probed = probe_sql_fuse(sff, t.select("key").distinct(), "key")
+    fuse_probed = probe_sql(sff, t.select("key").distinct(), "key")
     sections.append(
         (
-            "Fuse SQL probe (probe_sql_fuse, sqlhash addressing)",
+            "Fuse SQL probe (probe_sql, sqlhash addressing)",
             "Same zero-Python shape as the XOR probe — per-shard params "
             "broadcast + three BroadcastHashJoins against the flattened "
             "slot table — but the index math is simpler: fastrange "

@@ -100,9 +100,6 @@ def main() -> None:
 
         # (c) explode + bit_xor single-join variant, verdict joined back
         from xorfilter_net_spark.filters.spark_build import _JVM_D1_SALT
-        from xorfilter_net_spark.filters.spark_build import (
-            _MASK_BITS,
-        )
 
         def xoragg(joinback: bool):
             t = "__xorsql_"
@@ -139,7 +136,7 @@ def main() -> None:
             ).withColumn(
                 f"{t}fp",
                 F.xxhash64(F.col(f"{t}d1"), F.lit(FP_SEED_SIGNED)).bitwiseAND(
-                    F.lit(int(_MASK_BITS[tab.width]))
+                    F.lit((1 << tab.width) - 1)
                 ),
             )
             # verdicts are a pure function of the digest pair: dedup

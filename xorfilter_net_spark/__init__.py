@@ -10,9 +10,9 @@ what they touch).
 __version__ = "0.1.0"
 
 _EXPORTS = {
-    "build_xor_filter": "xorfilter_net_spark.filters.spark_build",
-    "build_sharded_xor_filter": "xorfilter_net_spark.filters.spark_build",
-    "is_member_sharded": "xorfilter_net_spark.filters.spark_build",
+    "build_filter": "xorfilter_net_spark.filters.spark_build",
+    "build_sharded_filter": "xorfilter_net_spark.filters.spark_build",
+    "is_member": "xorfilter_net_spark.filters.spark_build",
     "probe": "xorfilter_net_spark.filters.spark_build",
     "probe_sql": "xorfilter_net_spark.filters.spark_build",
     "build_xor_filter_checkpointed": "xorfilter_net_spark.pipeline.checkpoint",

@@ -61,20 +61,30 @@ def centroid_pairs(
     # error; non-ANSI: silent wrap) while the DuckDB oracle's HUGEINT
     # promotion sails on — the exact divergence this module promises
     # not to have. The loud raise is the repo convention
-    # (sketches/decay.py's 'exceeds int64').
+    # (sketches/decay.py's 'exceeds int64'). The same aggregate rejects
+    # ragged vectors: a vector of length L adds L to the cell count and
+    # 1 to dim 0's, so cells == d * vectors iff every vector has length d
+    # (a shorter one would silently pair zero-filled dims).
     chk = sums.agg(
         F.max(F.abs(F.col("s"))).alias("m"),
         (F.max("dim") + 1).alias("d"),
+        F.sum("cnt").alias("cells"),
+        F.sum(F.when(F.col("dim") == 0, F.col("cnt"))).alias("vecs"),
     ).first()
     if chk is not None and chk["m"] is not None:
         m, d = int(chk["m"]), int(chk["d"])
+        if chk["cells"] != d * chk["vecs"]:
+            raise ValueError(
+                f"ragged {vec_col!r} vectors: every vector must have the "
+                f"same length (longest is {d})"
+            )
         if d * m * m >= 2**63:
             raise ValueError(
                 f"centroid dot product exceeds int64 (d={d}, max|sum|={m}); "
                 "pre-scale the vectors or split groups"
             )
     # per-group row count = any dimension's count (all dims present on
-    # every vector); take dim 0's
+    # every vector, checked above); take dim 0's
     counts = sums.filter(F.col("dim") == 0).select(
         "grp", F.col("cnt").cast("long").alias("n")
     )
@@ -102,12 +112,14 @@ def centroid_pairs(
             F.col("gb").alias("group_b"),
             "n_a",
             "n_b",
+            # a zero-norm centroid has no direction: NULL, as the oracle
             F.floor(
                 1000000.0
                 * F.col("dot").cast("double")
-                / (
+                / F.nullif(
                     F.sqrt(F.col("na2").cast("double"))
-                    * F.sqrt(F.col("nb2").cast("double"))
+                    * F.sqrt(F.col("nb2").cast("double")),
+                    F.lit(0.0),
                 )
             )
             .cast("long")
@@ -143,7 +155,7 @@ def centroid_oracle_sql(
     select d.ga as group_a, d.gb as group_b,
            ca.n as n_a, cb.n as n_b,
            cast(floor(1000000.0 * d.dot::double /
-                (sqrt(d.na2::double) * sqrt(d.nb2::double)))
+                nullif(sqrt(d.na2::double) * sqrt(d.nb2::double), 0))
                 as bigint) as cos_e6
     from dots d
     join counts ca on ca.grp = d.ga

@@ -110,22 +110,18 @@ def cmd_probe(args: argparse.Namespace) -> dict:
 
     from pyspark.sql import functions as F
 
-    from .filters.spark_build import ShardedXorFilter, is_member_sharded
+    from .filters.spark_build import ShardedFilter, is_member, probe_sql
 
     spark = _get_spark("xorfilter-probe")
     with open(args.filter) as f:
-        sxf = ShardedXorFilter.from_dict(_json.load(f))
+        sxf = ShardedFilter.from_dict(_json.load(f))
     df = spark.read.parquet(args.input).withColumn(
         "key", F.expr(args.key_expr)
     )
     if sxf.digest_kind == "xxhash64jvm" and sxf.mode == "sqlhash":
-        from .filters.spark_build import probe_sql
-
         probed = probe_sql(sxf, df, "key")  # zero-Python codegen path
     else:
-        probed = df.withColumn(
-            "is_member", is_member_sharded(spark, sxf, "key")
-        )
+        probed = df.withColumn("is_member", is_member(spark, sxf, "key"))
     probed.write.mode("overwrite").parquet(args.output)
     n = spark.read.parquet(args.output).count()
     return {"command": "probe", "output": args.output, "rows": n}

@@ -26,13 +26,12 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .filters.fuse_spark import build_fuse_filter, probe_fuse
 from .text.cooccur import token_cooccurrence
 from .filters.xor_core import table_size as xor_table_size
 from .filters.spark_build import (
-    build_sharded_xor_filter,
-    build_xor_filter,
-    is_member_sharded,
+    build_filter,
+    build_sharded_filter,
+    is_member,
     probe,
     probe_sql,
 )
@@ -92,7 +91,7 @@ def q_transcripts_shape(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q_xor16_zero_fn(spark: SparkSession, sf_dir: str) -> DataFrame:
     t = with_membership_key(load_transcripts(spark, sf_dir))
-    xf = build_xor_filter(t, "key", width=16, seed=12345)
+    xf = build_filter(t, "key", width=16, seed=12345)
     r = probe(t.select("key").distinct(), xf, "key")
     return r.agg(F.sum(F.col("is_member").cast("long")).alias("n_members_found"))
 
@@ -107,7 +106,7 @@ def q_xor8_fpr(spark: SparkSession, sf_dir: str) -> DataFrame:
     DeterministicIntegrationTests.cs:109-141)."""
     t = with_membership_key(load_transcripts(spark, sf_dir))
     members = t.select("key").distinct()
-    xf = build_xor_filter(members, "key", width=8, seed=12345)
+    xf = build_filter(members, "key", width=8, seed=12345)
     fn_count = (
         probe(members, xf, "key")
         .agg(F.sum((~F.col("is_member")).cast("long")).alias("fn"))
@@ -139,7 +138,7 @@ def q_xor32_semijoin(spark: SparkSession, sf_dir: str) -> DataFrame:
     keys; at FPR 2^-32 the result equals the exact semi-join."""
     t = with_membership_key(load_transcripts(spark, sf_dir))
     members = t.filter("turn_idx % 2 = 0").select("key").distinct()
-    xf = build_xor_filter(members, "key", width=32, seed=777)
+    xf = build_filter(members, "key", width=32, seed=777)
     return probe(t.select("key").distinct(), xf, "key").filter("is_member").select(
         "key"
     )
@@ -155,8 +154,8 @@ def q_fuse16_zero_fn(spark: SparkSession, sf_dir: str) -> DataFrame:
     contract at ~1.125n slots instead of 1.23n (BaseXorFilter.cs:31-32),
     with segment-local probe gathers."""
     t = with_membership_key(load_transcripts(spark, sf_dir))
-    ff = build_fuse_filter(t, "key", width=16, seed=12345)
-    r = probe_fuse(t.select("key").distinct(), ff, "key")
+    ff = build_filter(t, "key", width=16, seed=12345, kind="fuse3")
+    r = probe(t.select("key").distinct(), ff, "key")
     return r.agg(F.sum(F.col("is_member").cast("long")).alias("n_members_found"))
 
 
@@ -174,15 +173,15 @@ def q_fuse8_gates(spark: SparkSession, sf_dir: str) -> DataFrame:
     layout's rounding dominates)."""
     t = with_membership_key(load_transcripts(spark, sf_dir))
     members = t.select("key").distinct()
-    ff = build_fuse_filter(members, "key", width=8, seed=12345)
+    ff = build_filter(members, "key", width=8, seed=12345, kind="fuse3")
     fn_count = (
-        probe_fuse(members, ff, "key")
+        probe(members, ff, "key")
         .agg(F.sum((~F.col("is_member")).cast("long")).alias("fn"))
         .collect()[0]["fn"]
     )
     non = members.selectExpr("'nm:' || key as key")
     stats = (
-        probe_fuse(non, ff, "key")
+        probe(non, ff, "key")
         .agg(
             F.sum(F.col("is_member").cast("long")).alias("fp"),
             F.count(F.lit(1)).alias("n"),
@@ -207,11 +206,9 @@ def q_ribbon16_zero_fn(spark: SparkSession, sf_dir: str) -> DataFrame:
     space-optimal point of the family: same zero-false-negative contract
     at ~1.05n slots via a banded GF(2) solve instead of a peel; the
     broadcast-size-constrained choice (filters/ribbon.py)."""
-    from .filters.ribbon_spark import build_ribbon_filter, probe_ribbon
-
     t = with_membership_key(load_transcripts(spark, sf_dir))
-    rf = build_ribbon_filter(t, "key", width=16, seed=12345)
-    r = probe_ribbon(t.select("key").distinct(), rf, "key")
+    rf = build_filter(t, "key", width=16, seed=12345, kind="ribbon64")
+    r = probe(t.select("key").distinct(), rf, "key")
     return r.agg(F.sum(F.col("is_member").cast("long")).alias("n_members_found"))
 
 
@@ -227,19 +224,18 @@ def q_ribbon_gates(spark: SparkSession, sf_dir: str) -> DataFrame:
     set (asserted past the small-n regime where the 4/sqrt(n) slack and
     the W-1 tail dominate)."""
     from .filters.fuse_core import fuse_layout
-    from .filters.ribbon_spark import build_ribbon_filter, probe_ribbon
 
     t = with_membership_key(load_transcripts(spark, sf_dir))
     members = t.select("key").distinct()
-    rf = build_ribbon_filter(members, "key", width=8, seed=12345)
+    rf = build_filter(members, "key", width=8, seed=12345, kind="ribbon64")
     fn_count = (
-        probe_ribbon(members, rf, "key")
+        probe(members, rf, "key")
         .agg(F.sum((~F.col("is_member")).cast("long")).alias("fn"))
         .collect()[0]["fn"]
     )
     non = members.selectExpr("'nm:' || key as key")
     stats = (
-        probe_ribbon(non, rf, "key")
+        probe(non, rf, "key")
         .agg(
             F.sum(F.col("is_member").cast("long")).alias("fp"),
             F.count(F.lit(1)).alias("n"),
@@ -265,17 +261,13 @@ def q_fuse_sharded(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Executor-parallel fuse construction (per-shard applyInPandas peel,
     JVM codegen digests — no raw key ever crosses the Arrow boundary):
     the scale path for the smaller filter family."""
-    from .filters.fuse_spark import (
-        build_sharded_fuse_filter,
-        is_member_sharded_fuse,
-    )
-
     t = with_membership_key(load_transcripts(spark, sf_dir))
-    sff = build_sharded_fuse_filter(
-        t, "key", num_shards=16, width=16, seed=42, jvm_digests=True
+    sff = build_sharded_filter(
+        t, "key", num_shards=16, width=16, seed=42, jvm_digests=True,
+        kind="fuse3",
     )
     r = t.select("key").distinct().withColumn(
-        "is_member", is_member_sharded_fuse(spark, sff, "key")
+        "is_member", is_member(spark, sff, "key")
     )
     return r.agg(F.sum(F.col("is_member").cast("long")).alias("n_members_found"))
 
@@ -286,17 +278,16 @@ def q_fuse_sharded(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q_fuse_sql_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Zero-Python fuse pipeline: sqlhash addressing + the probe evaluated
-    entirely in whole-stage codegen (``probe_sql_fuse``) — fuse addressing
+    entirely in whole-stage codegen (``probe_sql``) — fuse addressing
     is simpler in SQL than XOR's (fastrange segment + power-of-two offset
     masks, no unsigned-mod corrections). Row-identical to the Arrow probe
     (tests/test_fuse_core.py::TestFuseSqlProbe)."""
-    from .filters.fuse_spark import build_sharded_fuse_filter, probe_sql_fuse
-
     t = with_membership_key(load_transcripts(spark, sf_dir))
-    sff = build_sharded_fuse_filter(
-        t, "key", num_shards=16, width=16, seed=42, jvm_digests=True
+    sff = build_sharded_filter(
+        t, "key", num_shards=16, width=16, seed=42, jvm_digests=True,
+        kind="fuse3",
     )
-    r = probe_sql_fuse(sff, t.select("key").distinct(), "key")
+    r = probe_sql(sff, t.select("key").distinct(), "key")
     return r.agg(F.sum(F.col("is_member").cast("long")).alias("n_members_found"))
 
 
@@ -307,9 +298,9 @@ def q_fuse_sql_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_xor_sharded(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Fully executor-side construction path (per-shard applyInPandas peel)."""
     t = with_membership_key(load_transcripts(spark, sf_dir))
-    sxf = build_sharded_xor_filter(t, "key", num_shards=16, width=16, seed=42)
+    sxf = build_sharded_filter(t, "key", num_shards=16, width=16, seed=42)
     r = t.select("key").distinct().withColumn(
-        "is_member", is_member_sharded(spark, sxf, "key")
+        "is_member", is_member(spark, sxf, "key")
     )
     return r.agg(F.sum(F.col("is_member").cast("long")).alias("n_members_found"))
 
@@ -323,11 +314,11 @@ def q_xor_jvm(spark: SparkSession, sf_dir: str) -> DataFrame:
     codegen, single shard shuffle, in-shard dedup — no Python sees a raw
     key anywhere in build OR probe."""
     t = with_membership_key(load_transcripts(spark, sf_dir))
-    sxf = build_sharded_xor_filter(
+    sxf = build_sharded_filter(
         t, "key", num_shards=16, width=16, seed=42, jvm_digests=True
     )
     r = t.select("key").distinct().withColumn(
-        "is_member", is_member_sharded(spark, sxf, "key")
+        "is_member", is_member(spark, sxf, "key")
     )
     return r.agg(F.sum(F.col("is_member").cast("long")).alias("n_members_found"))
 
@@ -343,7 +334,7 @@ def q_xor_sql_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
     flattened slot table — no Arrow boundary in build digesting OR
     probing. The scale headline path (see BENCH/BASELINE.md)."""
     t = with_membership_key(load_transcripts(spark, sf_dir))
-    sxf = build_sharded_xor_filter(
+    sxf = build_sharded_filter(
         t, "key", num_shards=16, width=16, seed=42, jvm_digests=True
     )
     r = probe_sql(sxf, t.select("key").distinct(), "key")
@@ -10033,12 +10024,10 @@ def q_incremental_update(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         identical = artifact_bytes(upd_f) == artifact_bytes(full_f)
 
-        from .filters.spark_build import is_member_sharded
-
         union_df = base_df.unionAll(delta_df)
         zero_fn = (
             union_df.withColumn(
-                "is_member", is_member_sharded(spark, upd_f, "key")
+                "is_member", is_member(spark, upd_f, "key")
             )
             .filter(~F.col("is_member"))
             .limit(1)
@@ -10080,7 +10069,7 @@ def entry(spark: SparkSession) -> DataFrame:
     sf0.001 transcripts — XOR16 build + vectorized probe, per-role counts."""
     sf_dir = "/root/testdata/sf0.001"
     t = with_membership_key(load_transcripts(spark, sf_dir))
-    xf = build_xor_filter(t, "key", width=16, seed=12345)
+    xf = build_filter(t, "key", width=16, seed=12345)
     probed = probe(t, xf, "key")
     return (
         probed.groupBy("role")

@@ -25,8 +25,9 @@ own documented deterministic chain (splitmix64 lanes off one attempt seed),
 not a bit-copy of any C implementation.
 
 Like the XOR core, this is pure NumPy over deduplicated 128-bit digests —
-no Spark dependency; the Spark build/probe wiring lives in
-``spark_build.py`` (shared digest pipeline, broadcast probe).
+no Spark dependency; the Spark build/probe wiring is the family-agnostic
+layer in ``spark_build.py``, which reaches this family through the
+``probe_params`` / ``slot_index`` hook.
 """
 
 from __future__ import annotations
@@ -35,6 +36,7 @@ import json
 import math
 import time
 from dataclasses import dataclass, field
+from typing import ClassVar
 
 import numpy as np
 
@@ -52,9 +54,8 @@ from .xor_core import (
     MAX_RETRIES,
     RETRIES_BEFORE_RESIZE,
     XorConstructionError,
-    digest_fingerprint,
     fill_slots,
-    sqlhash_fingerprint,
+    fingerprint,
     try_peel,
 )
 
@@ -91,74 +92,58 @@ def fuse_layout(n: int, capacity: int | None = None) -> tuple[int, int, int]:
     return segment_length, segment_count, array_length
 
 
-def _fuse_idx(
-    d0: np.ndarray, seed: np.uint64, segment_length: int, segment_count: int
-) -> np.ndarray:
-    """(n, 3) slot indices: window segment by fastrange on the high 32 bits,
-    then one splitmix64 lane per in-segment offset. The three slots are in
-    DISTINCT consecutive segments, so they are always pairwise distinct
-    (the 3-uniform hypergraph needs no dedup per edge)."""
-    h = splitmix64(d0.astype(_U64) ^ seed)
-    q = ((h >> _U64(32)) * _U64(segment_count)) >> _U64(32)
-    mask = _U64(segment_length - 1)
-    sl = np.int64(segment_length)
-    cols = []
-    for j in range(ARITY):
-        lane = splitmix64(h ^ _U64((0x9E3779B97F4A7C15 * (j + 1)) & 0xFFFFFFFFFFFFFFFF))
-        cols.append(
-            (q.astype(np.int64) + j) * sl + (lane & mask).astype(np.int64)
-        )
-    return np.stack(cols, axis=1)
-
-
 _SQL_SEED = _U64(SPARK_XXHASH64_DEFAULT_SEED)
 
 
-def _fuse_idx_sqlhash(
-    d0: np.ndarray, seed: np.uint64, segment_length: int, segment_count: int
-) -> np.ndarray:
-    """(n, 3) slot indices in ``sqlhash`` addressing: every hash step is a
-    Spark-SQL-recomputable builtin chain so the probe can run with ZERO
-    Python (``fuse_spark.probe_sql_fuse``), mirroring the XOR core's
-    sqlhash mode (SURVEY §7 D9):
+# -- family hook of the sharded layer (filters/spark_build.py) --------------
+
+def probe_params(meta: dict) -> dict:
+    """``slot_index`` parameters of one filter, from its artifact meta (or
+    ``vars(filter)``): attempt seed, segment length and segment count."""
+    return {k: _U64(meta[k]) for k in ("seed", "segment_length", "segment_count")}
+
+
+def slot_index(d0: np.ndarray, p: dict, mode: str) -> np.ndarray:
+    """(n, 3) slot indices: window segment by fastrange on the high 32 bits
+    of one per-key hash ``h``, then one hash lane per in-segment offset.
+    The three slots are in DISTINCT consecutive segments, so they are
+    always pairwise distinct (the 3-uniform hypergraph needs no dedup per
+    edge). ``p`` holds one filter's ``probe_params`` (scalars), or per-key
+    arrays of them (the flat sharded probe).
+
+    ``mode='digest'``: ``h = splitmix64(d0 ^ seed)``, lanes are splitmix64
+    of ``h`` xor a per-lane constant. ``mode='sqlhash'``: every step is a
+    Spark-SQL builtin chain, so the probe runs with ZERO Python
+    (``spark_build.probe_sql``), mirroring the XOR core's sqlhash mode
+    (SURVEY §7 D9):
 
     - ``h   = xxhash64(d0, seed)``       (two-column builtin chain)
-    - window segment by fastrange on the high 32 bits of ``h`` —
-      ``q = ((h >>> 32) * segment_count) >> 32`` stays below 2^63, so the
+    - ``q = ((h >>> 32) * segment_count) >> 32`` stays below 2^63, so the
       SQL side needs no unsigned-mod correction at all;
     - ``lane_j = xxhash64(h, j+1)``; the in-segment offset is
       ``lane_j & (segment_length - 1)`` — segment_length is a power of
       two, so the mask works identically on signed longs.
     """
-    h = xxh64_long(seed, xxh64_long(d0.astype(_U64), _SQL_SEED))
-    q = ((h >> _U64(32)) * _U64(segment_count)) >> _U64(32)
-    hh = xxh64_long(h, _SQL_SEED)
-    mask = _U64(segment_length - 1)
-    sl = np.int64(segment_length)
+    seed, sl = p["seed"], p["segment_length"]
+    if mode == "sqlhash":
+        h = xxh64_long(seed, xxh64_long(d0.astype(_U64), _SQL_SEED))
+        hh = xxh64_long(h, _SQL_SEED)
+    else:
+        h = splitmix64(d0.astype(_U64) ^ seed)
+    q = ((h >> _U64(32)) * p["segment_count"]) >> _U64(32)
     cols = []
     for j in range(ARITY):
-        lane = xxh64_long(_U64(j + 1), hh)
+        if mode == "sqlhash":
+            lane = xxh64_long(_U64(j + 1), hh)
+        else:
+            lane = splitmix64(
+                h ^ _U64((0x9E3779B97F4A7C15 * (j + 1)) & 0xFFFFFFFFFFFFFFFF)
+            )
         cols.append(
-            (q.astype(np.int64) + j) * sl + (lane & mask).astype(np.int64)
+            (q.astype(np.int64) + j) * sl.astype(np.int64)
+            + (lane & (sl - _U64(1))).astype(np.int64)
         )
     return np.stack(cols, axis=1)
-
-
-def fuse_idx(
-    d0: np.ndarray,
-    seed: np.uint64,
-    segment_length: int,
-    segment_count: int,
-    mode: str = "digest",
-) -> np.ndarray:
-    fn = _fuse_idx_sqlhash if mode == "sqlhash" else _fuse_idx
-    return fn(d0, seed, segment_length, segment_count)
-
-
-def fuse_fingerprint(d1: np.ndarray, width: int, mode: str = "digest") -> np.ndarray:
-    if mode == "sqlhash":
-        return sqlhash_fingerprint(d1.astype(_U64), width)
-    return digest_fingerprint(d1.astype(_U64), width)
 
 
 @dataclass
@@ -176,28 +161,25 @@ class FuseFilter:
     metrics: dict = field(default_factory=dict)
     kind: str = "fuse3"
     mode: str = "digest"  # slot addressing: 'digest' (splitmix) | 'sqlhash'
+    # meta of a 3-slot stand-in for the sharded layer's keyless shards
+    ABSENT_META: ClassVar[dict] = {"seed": 0, "segment_length": 1, "segment_count": 1}
 
     def contains_digests(self, d0: np.ndarray, d1: np.ndarray) -> np.ndarray:
-        idx = fuse_idx(
-            d0.astype(_U64),
-            self.seed,
-            self.segment_length,
-            self.segment_count,
-            self.mode,
-        )
+        idx = slot_index(d0, probe_params(vars(self)), self.mode)
         got = (
             self.slots[idx[:, 0]].astype(_U64)
             ^ self.slots[idx[:, 1]].astype(_U64)
             ^ self.slots[idx[:, 2]].astype(_U64)
         )
-        return got == fuse_fingerprint(d1, self.width, self.mode)
+        return got == fingerprint(d1.astype(_U64), self.width, self.mode)
 
     def contains_bytes(self, values) -> np.ndarray:
         buf, lens = pack_bytes(values)
         d0, d1 = digest128(buf, lens)
         return self.contains_digests(d0, d1)
 
-    def to_dict(self) -> dict:
+    def meta(self) -> dict:
+        """Everything but the slot table (a shard row keeps slots binary)."""
         return {
             "kind": self.kind,
             "width": self.width,
@@ -205,21 +187,23 @@ class FuseFilter:
             "segment_length": self.segment_length,
             "segment_count": self.segment_count,
             "seed": int(self.seed),
-            "slots_hex": self.slots.tobytes().hex(),
             "user_seed": self.user_seed,
             "attempts": self.attempts,
             "metrics": self.metrics,
             "mode": self.mode,
         }
 
+    def to_dict(self) -> dict:
+        return {**self.meta(), "slots_hex": self.slots.tobytes().hex()}
+
     def to_json(self) -> str:
         return json.dumps(self.to_dict())
 
     @classmethod
-    def from_dict(cls, d: dict) -> "FuseFilter":
-        slots = np.frombuffer(
-            bytes.fromhex(d["slots_hex"]), dtype=_DTYPES[d["width"]]
-        ).copy()
+    def from_dict(cls, d: dict, slots: bytes | None = None) -> "FuseFilter":
+        """From ``to_dict`` output, or from ``meta()`` plus raw slot bytes."""
+        raw = bytes.fromhex(d["slots_hex"]) if slots is None else slots
+        slots = np.frombuffer(raw, dtype=_DTYPES[d["width"]]).copy()
         return cls(
             width=d["width"],
             size=d["size"],
@@ -269,7 +253,7 @@ def build_fuse_from_digests(
     t0 = time.perf_counter()
     segment_length, segment_count, array_length = fuse_layout(n)
     capacity = array_length
-    fp = fuse_fingerprint(d1u, width, mode)
+    fp = fingerprint(d1u, width, mode)
     for attempt in range(MAX_RETRIES):
         if attempt > 0 and attempt % RETRIES_BEFORE_RESIZE == 0:
             capacity = math.ceil(capacity * GROWTH)
@@ -277,7 +261,11 @@ def build_fuse_from_digests(
                 n, capacity=capacity
             )
         aseed = derive_attempt_seeds(seed, attempt)[0]
-        idx = fuse_idx(d0u, aseed, segment_length, segment_count, mode)
+        p = probe_params(
+            {"seed": aseed, "segment_length": segment_length,
+             "segment_count": segment_count}
+        )
+        idx = slot_index(d0u, p, mode)
         rounds = try_peel(idx, array_length)
         if rounds is not None:
             slots = fill_slots(rounds, idx, fp, array_length, width)

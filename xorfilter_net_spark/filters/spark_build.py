@@ -1,29 +1,37 @@
-"""Distributed XOR-filter construction and probing over Spark DataFrames.
+"""Distributed static-filter construction and probing over Spark DataFrames.
 
-Pipeline (SURVEY.md §3.1, re-architecting ``BaseXorFilter.cs`` ctor for a
+One family-agnostic layer for the XOR, binary fuse and ribbon filters
+(SURVEY.md §3.1, re-architecting ``BaseXorFilter.cs`` ctor for a
 1000-executor cluster):
 
   scan (Parquet/Iceberg, Catalyst prunes columns)
     -> mapInPandas: vectorized 128-bit key digests (Arrow batches, NumPy
-       murmur lanes — no per-row Python)
+       murmur lanes — no per-row Python), or JVM xxhash64 lanes in codegen
     -> dropDuplicates on (d0, d1): distributed partial+final hash aggregate.
        NOTE on skew: we deduplicate *digests*, not raw keys — digests are
        uniform by construction, so the dedup shuffle cannot skew no matter
        how hot a conv_id is. This is the salt-free equivalent of the
        "salt-aware repartition" the north_star asks for: hashing IS the salt.
-    -> driver: NumPy peel over 16-byte digests only (O(n_unique), tiny vs
-       corpus; the one intentionally non-distributed stage — SURVEY §7 D4)
+    -> driver: NumPy peel (or ribbon solve) over 16-byte digests only
+       (O(n_unique), tiny vs corpus; the one intentionally non-distributed
+       stage — SURVEY §7 D4)
     -> broadcast artifact; probes are map-only vectorized pandas UDFs.
 
 For key sets too large for a single driver peel (10^9+ unique keys), the
 sharded variant keeps construction fully executor-side: digests are
-hash-partitioned into shards, one independent XOR filter is peeled per
-shard inside ``applyInPandas``, and probes route by the same shard hash.
+hash-partitioned into shards, one independent filter is peeled per shard
+inside ``applyInPandas``, and probes route by the same shard hash.
 Construction becomes embarrassingly parallel and merge-free; the price is
-one extra filter lookup indirection and ~the same total memory.
+one extra filter lookup indirection and ~the same total memory. The
+sharded layer reaches a family (XOR, fuse) only through the hook in its
+core module: ``probe_params`` (per-shard parameters from an artifact's
+meta) and ``slot_index`` (the vectorized three-slot addressing); its SQL
+counterparts live in ``_SQL_FAMILIES`` below.
 """
 
 from __future__ import annotations
+
+import json
 
 import numpy as np
 import pandas as pd
@@ -33,26 +41,34 @@ from pyspark.sql.functions import pandas_udf
 
 from ..kernels.column import digest_series as _digest_batch
 from ..kernels.column import series_to_bytes as _series_to_bytes
-from ..kernels.hashes import SPARK_XXHASH64_DEFAULT_SEED, splitmix64, xxh64_long
-from .xor_core import (
-    FP_SEED_SIGNED,
-    XorFilter,
-    block_bounds,
-    build_from_digests,
-    digest_fingerprint,
-    sqlhash_fingerprint,
-)
+from . import fuse_core, xor_core
+from .fuse_core import FuseFilter, build_fuse_from_digests
+from .ribbon import RibbonFilter, build_ribbon_from_digests
+from .xor_core import FP_SEED_SIGNED, XorFilter, build_from_digests, fingerprint
 
 __all__ = [
     "key_digests",
-    "build_xor_filter",
+    "key_digests_jvm",
+    "build_filter",
     "is_member",
     "probe",
     "probe_sql",
-    "ShardedXorFilter",
-    "build_sharded_xor_filter",
-    "is_member_sharded",
+    "ShardedFilter",
+    "build_sharded_filter",
+    "shard_frame",
 ]
+
+# artifact ``kind`` -> (filter class, build from digests, sharded-layer hook
+# module). A missing ``kind`` means XOR; ribbon has only the global path.
+_FAMILIES = {
+    "xor": (XorFilter, build_from_digests, xor_core),
+    "fuse3": (FuseFilter, build_fuse_from_digests, fuse_core),
+    "ribbon64": (RibbonFilter, build_ribbon_from_digests, None),
+}
+
+
+def _u64(s: pd.Series) -> np.ndarray:
+    return s.to_numpy(dtype=np.int64).view(np.uint64)
 
 
 def key_digests(df: DataFrame, key_col: str) -> DataFrame:
@@ -91,73 +107,122 @@ def key_digests_jvm(df: DataFrame, key_col: str) -> DataFrame:
     return df.select(d0.alias("d0"), d1.alias("d1"))
 
 
-def build_xor_filter(
-    df: DataFrame, key_col: str, width: int = 8, seed: int = 0
-) -> XorFilter:
-    """Global filter: distributed digest+dedup, driver peel (SURVEY §3.1)."""
+def build_filter(
+    df: DataFrame, key_col: str, width: int = 8, seed: int = 0, kind: str = "xor"
+):
+    """Global filter of family ``kind``: distributed digest+dedup, driver
+    peel or solve (SURVEY §3.1)."""
     uniq = key_digests(df, key_col).dropDuplicates(["d0", "d1"])
     pdf = uniq.toPandas()  # 16 bytes per *unique* key — the only collect
-    d0 = pdf["d0"].to_numpy(dtype=np.int64).view(np.uint64)
-    d1 = pdf["d1"].to_numpy(dtype=np.int64).view(np.uint64)
-    return build_from_digests(d0, d1, width=width, seed=seed)
+    build = _FAMILIES[kind][1]
+    return build(_u64(pdf["d0"]), _u64(pdf["d1"]), width=width, seed=seed)
 
 
-_FILTER_CACHE: dict[int, tuple[object, XorFilter]] = {}
+def _decode(art: dict):
+    """Artifact dict -> filter object, dispatching on its ``kind``."""
+    if "shards" in art:
+        return ShardedFilter.from_dict(art)
+    return _FAMILIES[art.get("kind", "xor")][0].from_dict(art)
 
 
-def _cached_filter(art: dict) -> XorFilter:
-    """Per-worker rebuild cache keyed by the broadcast value's identity."""
+def _shard_filter(meta_json: str, slots: bytes):
+    """One ``SHARD_SCHEMA`` row (meta JSON, slot bytes) -> filter object."""
+    d = json.loads(meta_json)
+    return _FAMILIES[d.get("kind", "xor")][0].from_dict(d, slots)
+
+
+_DECODED: dict[int, tuple[object, object]] = {}
+
+
+def _decoded(art: dict):
+    """Per-worker decode cache keyed by the broadcast value's identity;
+    holds a few artifacts so a plan probing several filters does not
+    decode on every batch."""
     k = id(art)
-    hit = _FILTER_CACHE.get(k)
+    hit = _DECODED.get(k)
     if hit is None or hit[0] is not art:
-        _FILTER_CACHE.clear()
-        _FILTER_CACHE[k] = (art, XorFilter.from_dict(art))
-    return _FILTER_CACHE[k][1]
+        if len(_DECODED) >= 4:
+            _DECODED.pop(next(iter(_DECODED)))
+        _DECODED[k] = hit = (art, _decode(art))
+    return hit[1]
 
 
-def is_member(spark: SparkSession, xf: XorFilter, col: Column | str) -> Column:
-    """Vectorized membership probe column against a broadcast filter.
+def is_member(spark: SparkSession, f, col: Column | str) -> Column:
+    """Vectorized membership probe column against a broadcast filter: any
+    family, global or sharded.
 
     ``fingerprint(key) == slots[h0]^slots[h1]^slots[h2]``
     (BaseXorFilter.cs:98-108) over Arrow batches; the slot table ships to
-    executors once via ``SparkContext.broadcast``.
+    executors once via ``SparkContext.broadcast``. For 'xxhash64jvm'
+    filters the (d0, d1) digests are computed in whole-stage codegen and
+    only two int64 columns cross the Arrow boundary; otherwise the Python
+    kernel re-digests the raw keys (byte-parity path), or an XOR
+    ``mode='exact'`` filter hashes the key bytes themselves.
     """
-    bc = spark.sparkContext.broadcast(xf.to_dict())
+    bc = spark.sparkContext.broadcast(f.to_dict())
+
+    if getattr(f, "digest_kind", "murmur") == "xxhash64jvm":
+
+        @pandas_udf("boolean")
+        def _probe_jvm(d0: pd.Series, d1: pd.Series) -> pd.Series:
+            g = _decoded(bc.value)
+            return pd.Series(g.contains_digests(_u64(d0), _u64(d1)))
+
+        return _probe_jvm(*jvm_digest_cols(col))
 
     @pandas_udf("boolean")
     def _probe(s: pd.Series) -> pd.Series:
-        f = _cached_filter(bc.value)
-        if f.mode == "digest":
-            d0, d1 = _digest_batch(s)
-            return pd.Series(f.contains_digests(d0, d1))
-        return pd.Series(f.contains_bytes(_series_to_bytes(s)))
+        g = _decoded(bc.value)
+        if getattr(g, "mode", "digest") == "exact":
+            return pd.Series(g.contains_bytes(_series_to_bytes(s)))
+        return pd.Series(g.contains_digests(*_digest_batch(s)))
 
     return _probe(F.col(col) if isinstance(col, str) else col)
 
 
-def probe(
-    df: DataFrame, xf: XorFilter, key_col: str, out: str = "is_member"
-) -> DataFrame:
-    return df.withColumn(out, is_member(df.sparkSession, xf, key_col))
+def probe(df: DataFrame, f, key_col: str, out: str = "is_member") -> DataFrame:
+    return df.withColumn(out, is_member(df.sparkSession, f, key_col))
 
 
-class ShardedXorFilter:
-    """A bank of independent XOR filters addressed by digest shard.
+def _flat_params(kind: str, metas: dict, num_shards: int) -> dict:
+    """Per-shard probe parameters stacked over shard ids 0..num_shards-1
+    from each present shard's meta (or ``vars(filter)``): the family
+    hook's ``probe_params``, the shard's offset into the concatenated slot
+    table, and a present flag. Keyless shards take the family's 3-slot
+    stand-in at offset 0, so their indexes stay in bounds; ``present``
+    masks their answers to False."""
+    cls, _, hook = _FAMILIES[kind]
+    per = [hook.probe_params(metas.get(s, cls.ABSENT_META)) for s in range(num_shards)]
+    present = np.zeros(num_shards, dtype=bool)
+    sizes = np.zeros(num_shards, dtype=np.int64)
+    for sid, m in metas.items():
+        present[sid], sizes[sid] = True, m["size"]
+    offsets = np.where(present, np.cumsum(sizes) - sizes, 0)
+    return {
+        "params": {k: np.stack([p[k] for p in per]) for k in per[0]},
+        "offsets": offsets,
+        "present": present,
+    }
+
+
+class ShardedFilter:
+    """A bank of independent filters of one family addressed by digest shard.
 
     Scale path for key sets whose unique-digest array exceeds driver
     memory: every shard is built executor-side in applyInPandas; no global
     peel, no driver collect of keys. Shard routing: ``d0 % num_shards``
-    (uniform — d0 is a murmur lane).
+    (uniform — d0 is a hash lane).
     """
 
     def __init__(
         self,
         width: int,
         seed: int,
-        shards: dict[int, XorFilter],
+        shards: dict,
         num_shards: int,
         digest_kind: str = "murmur",
         mode: str = "digest",
+        kind: str = "xor",
     ):
         self.width = width
         self.seed = seed
@@ -172,6 +237,7 @@ class ShardedXorFilter:
         # parity) or 'xxhash64jvm' (JVM codegen, scale path) — probes MUST
         # recompute keys with the same source
         self.digest_kind = digest_kind
+        self.kind = kind  # filter family of every shard ('xor' | 'fuse3')
 
     @staticmethod
     def route(d0: np.ndarray, num_shards: int) -> np.ndarray:
@@ -183,71 +249,38 @@ class ShardedXorFilter:
 
     def _flat(self) -> dict:
         """Flattened probe tables: every shard's slot array concatenated,
-        with per-shard (offset, block starts/widths, seeds, present)
-        lookup arrays. Lets the probe be ONE vectorized pass with
-        per-row gathers — no per-shard Python loop (which would cost
-        O(num_shards x batch) masking per Arrow batch)."""
+        plus ``_flat_params``'s per-shard lookup arrays. Lets the probe be
+        ONE vectorized pass with per-row gathers — no per-shard Python
+        loop (which would cost O(num_shards x batch) masking per Arrow
+        batch)."""
         fl = getattr(self, "_flat_cache", None)
-        if fl is not None:
-            return fl
-        ns = self.num_shards
-        offsets = np.zeros(ns, dtype=np.int64)
-        seeds = np.zeros((ns, 3), dtype=np.uint64)
-        starts = np.zeros((ns, 3), dtype=np.int64)
-        widths = np.ones((ns, 3), dtype=np.uint64)  # 1s: absent-shard div guard
-        present = np.zeros(ns, dtype=bool)
-        parts, off = [], 0
-        for sid in range(ns):
-            f = self.shards.get(sid)
-            if f is None:
-                continue
-            present[sid] = True
-            offsets[sid] = off
-            seeds[sid] = f.seeds
-            st, wd = block_bounds(f.size)
-            starts[sid] = st
-            widths[sid] = wd.astype(np.uint64)
-            parts.append(f.slots)
-            off += f.size
-        slots = (
-            np.concatenate(parts)
-            if parts
-            else np.zeros(1, dtype=np.uint8)
-        )
-        fl = {
-            "slots": slots,
-            "offsets": offsets,
-            "seeds": seeds,
-            "starts": starts,
-            "widths": widths,
-            "present": present,
-        }
-        self._flat_cache = fl
+        if fl is None:
+            fl = _flat_params(
+                self.kind, {s: vars(f) for s, f in self.shards.items()}, self.num_shards
+            )
+            parts = [self.shards[s].slots for s in sorted(self.shards)]
+            fl["slots"] = np.concatenate(parts) if parts else np.zeros(3, np.uint8)
+            self._flat_cache = fl
         return fl
 
     def contains_digests(self, d0: np.ndarray, d1: np.ndarray) -> np.ndarray:
         fl = self._flat()
         shard = self.route(d0, self.num_shards)
-        base = fl["offsets"][shard, None] + fl["starts"][shard]  # (n, 3) int64
-        acc = np.zeros(d0.shape[0], dtype=np.uint64)
-        sql = self.mode == "sqlhash"
-        if sql:
-            h0 = xxh64_long(d0, np.uint64(SPARK_XXHASH64_DEFAULT_SEED))
-        for j in range(3):
-            if sql:
-                mix = xxh64_long(fl["seeds"][shard, j], h0)
-            else:
-                mix = splitmix64(d0 ^ fl["seeds"][shard, j])
-            idx = base[:, j] + (mix % fl["widths"][shard, j]).astype(np.int64)
-            acc ^= fl["slots"][idx].astype(np.uint64)
-        if sql:
-            fp = sqlhash_fingerprint(d1, self.width)
-        else:
-            fp = digest_fingerprint(d1, self.width)
+        p = {k: v[shard] for k, v in fl["params"].items()}
+        idx = _FAMILIES[self.kind][2].slot_index(d0, p, self.mode)
+        idx += fl["offsets"][shard, None]
+        slots = fl["slots"]
+        acc = (
+            slots[idx[:, 0]].astype(np.uint64)
+            ^ slots[idx[:, 1]].astype(np.uint64)
+            ^ slots[idx[:, 2]].astype(np.uint64)
+        )
+        fp = fingerprint(d1, self.width, self.mode)
         return (acc == fp) & fl["present"][shard]
 
     def to_dict(self) -> dict:
         return {
+            "kind": self.kind,
             "width": self.width,
             "seed": self.seed,
             "num_shards": self.num_shards,
@@ -257,22 +290,28 @@ class ShardedXorFilter:
         }
 
     @classmethod
-    def from_dict(cls, d: dict) -> "ShardedXorFilter":
+    def from_dict(cls, d: dict) -> "ShardedFilter":
+        kind = d.get("kind", "xor")
+        fcls = _FAMILIES[kind][0]
         return cls(
             d["width"],
             d["seed"],
-            {int(k): XorFilter.from_dict(v) for k, v in d["shards"].items()},
+            {int(k): fcls.from_dict(v) for k, v in d["shards"].items()},
             d["num_shards"],
             d.get("digest_kind", "murmur"),
             d.get("mode", "digest"),
+            kind,
         )
 
     @property
     def metrics(self) -> dict:
+        n = sum(f.metrics.get("n_keys", 0) for f in self.shards.values())
+        size = sum(f.size for f in self.shards.values())
         return {
             "num_shards": self.num_shards,
-            "n_keys": sum(f.metrics.get("n_keys", 0) for f in self.shards.values()),
-            "table_size": sum(f.size for f in self.shards.values()),
+            "n_keys": n,
+            "table_size": size,
+            "bits_per_key": size * self.width / max(n, 1),
             "max_attempts": max(f.attempts for f in self.shards.values()),
         }
 
@@ -287,114 +326,77 @@ def _dedup_digests(d0: np.ndarray, d1: np.ndarray) -> tuple[np.ndarray, np.ndarr
     return d0s[keep], d1s[keep]
 
 
+# one row per built shard: meta JSON (``filter.meta()``) and the slot table
+# as Arrow-native binary — collecting/writing the artifact moves zero-copy
+# batches, not 2-bytes-per-char hex through py4j rows
 SHARD_SCHEMA = "shard int, meta string, slots binary"
-BLOB_SCHEMA = "shard int, blob binary"
 
 
-def _artifact_row(sid: int, f: XorFilter) -> pd.DataFrame:
-    import json as _json
-
-    meta = f.to_dict()
-    meta.pop("slots_hex")
-    # slot table as Arrow-native binary: collecting/writing the artifact
-    # moves zero-copy batches, not 2-bytes-per-char hex through py4j rows
-    return pd.DataFrame(
-        {"shard": [sid], "meta": [_json.dumps(meta)], "slots": [f.slots.tobytes()]}
-    )
-
-
-def pack_digest_blobs(dig: DataFrame, num_shards: int) -> DataFrame:
-    """Map-side combine for the construction shuffle: pack each input
-    partition's (d0, d1) pairs into ONE binary blob per shard.
-
-    The row-transport shuffle moves one UnsafeRow per key (~30B of row
-    machinery around 16B of payload) and re-crosses the Arrow boundary
-    row-wise on the reduce side. Packing turns that into
-    O(num_shards x input_partitions) blob rows carrying the same 16
-    bytes/key — shuffle row count drops ~10^4x, and both sides handle
-    the payload as whole NumPy buffers.
-    """
-
-    def fn(batches):
-        parts: dict[int, list[bytes]] = {}
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            d0 = pdf["d0"].to_numpy(dtype=np.int64)
-            d1 = pdf["d1"].to_numpy(dtype=np.int64)
-            sh = d0 % num_shards  # pmod: match F.pmod routing
-            sh = np.where(sh < 0, sh + num_shards, sh).astype(np.int32)
-            order = np.argsort(sh, kind="stable")
-            ss = sh[order]
-            packed = np.empty((d0.shape[0], 2), dtype=np.int64)
-            packed[:, 0] = d0[order]
-            packed[:, 1] = d1[order]
-            bounds = np.flatnonzero(ss[1:] != ss[:-1]) + 1
-            starts = np.concatenate([[0], bounds])
-            ends = np.concatenate([bounds, [ss.shape[0]]])
-            for a, b in zip(starts, ends):
-                parts.setdefault(int(ss[a]), []).append(packed[a:b].tobytes())
-        if parts:
-            yield pd.DataFrame(
-                {
-                    "shard": np.fromiter(
-                        parts.keys(), dtype=np.int32, count=len(parts)
-                    ),
-                    "blob": [b"".join(v) for v in parts.values()],
-                }
-            )
-
-    return dig.mapInPandas(fn, schema=BLOB_SCHEMA)
-
-
-def shard_build_kernel_blobs(width: int, seed: int, addressing: str):
-    """Blob-transport variant of ``shard_build_kernel``: one group of
-    packed blobs -> one artifact row. Dedup is always in-shard (blobs
-    carry raw multiplicity); ``_dedup_digests`` canonicalizes order, so
-    artifacts are byte-identical to the row-transport build."""
+def shard_build_kernel(
+    width: int, seed: int, addressing: str, dedup: str, kind: str = "xor"
+):
+    """applyInPandas kernel: one (d0, d1, shard) group -> one
+    ``SHARD_SCHEMA`` row. Every sharded build (collected, table,
+    checkpointed) runs it, so all produce bit-identical shards. The row
+    is a pure function of the shard's unique digest SET, so a shard
+    rebuilt from any ordering or partitioning of the same digests (the
+    checkpointed update) is byte-identical."""
+    build = _FAMILIES[kind][1]
 
     def build_one(pdf: pd.DataFrame) -> pd.DataFrame:
         sid = int(pdf["shard"].iloc[0])
-        raw = b"".join(bytes(b) for b in pdf["blob"])
-        arr = np.frombuffer(raw, dtype=np.int64).reshape(-1, 2)
-        d0 = np.ascontiguousarray(arr[:, 0]).view(np.uint64)
-        d1 = np.ascontiguousarray(arr[:, 1]).view(np.uint64)
-        d0, d1 = _dedup_digests(d0, d1)
-        f = build_from_digests(
-            d0, d1, width=width, seed=seed ^ (sid * 0x9E37), mode=addressing,
-            assume_unique=True,
-        )
-        return _artifact_row(sid, f)
-
-    return build_one
-
-
-def shard_build_kernel(width: int, seed: int, addressing: str, dedup: str):
-    """applyInPandas kernel: one (d0, d1, shard) group -> one artifact row
-    ``(shard, meta json, slots binary)``. Shared by the driver-collected
-    build (`build_sharded_xor_filter`) and the distributed-artifact build
-    (`table.build_xor_filter_table`) so both produce bit-identical shards."""
-
-    def build_one(pdf: pd.DataFrame) -> pd.DataFrame:
-        sid = int(pdf["shard"].iloc[0])
-        d0 = pdf["d0"].to_numpy(dtype=np.int64).view(np.uint64)
-        d1 = pdf["d1"].to_numpy(dtype=np.int64).view(np.uint64)
+        d0, d1 = _u64(pdf["d0"]), _u64(pdf["d1"])
         unique = dedup == "in_shard"
         if unique:
             # lexsorted unique (d0, d1) — the canonical order the build
             # kernel would otherwise re-derive, so it can skip its sort
             d0, d1 = _dedup_digests(d0, d1)
         # per-shard deterministic seed => rebuild-stable across runs
-        f = build_from_digests(
+        f = build(
             d0, d1, width=width, seed=seed ^ (sid * 0x9E37), mode=addressing,
             assume_unique=unique,
         )
-        return _artifact_row(sid, f)
+        return pd.DataFrame(
+            {"shard": [sid], "meta": [json.dumps(f.meta())], "slots": [f.slots.tobytes()]}
+        )
 
     return build_one
 
 
-def build_sharded_xor_filter(
+def shard_frame(
+    dig: DataFrame,
+    num_shards: int,
+    width: int,
+    seed: int,
+    addressing: str,
+    dedup: str = "in_shard",
+    kind: str = "xor",
+) -> DataFrame:
+    """(d0, d1) digest rows -> one ``SHARD_SCHEMA`` row per non-empty shard.
+
+    ``dedup='in_shard'`` (default): one shuffle — duplicates share d0,
+    hence a shard, so each shard kernel dedups locally (lexsort mask)
+    before peeling. ``dedup='shuffle'``: a distinct-aggregate shuffle
+    first (map-side partial dedup) — cheaper when the corpus is highly
+    duplicated, since the shard shuffle then carries only unique digests.
+    """
+    dig = dig.withColumn("shard", F.pmod(F.col("d0"), F.lit(num_shards)).cast("int"))
+    src = dig if dedup == "in_shard" else dig.dropDuplicates(["d0", "d1"])
+    # explicit hash-repartition on the grouping key: it satisfies the
+    # groupBy's distribution (no second exchange) and pins the peel
+    # stage's parallelism to num_shards. Left to AQE, coalescing sizes
+    # the reduce side by shuffle BYTES (~64MB advisory) — but the peel is
+    # CPU-heavy per byte, so byte-sized coalescing starves it of cores
+    # (measured 1.5x construction slowdown at local[8]).
+    kernel = shard_build_kernel(width, seed, addressing, dedup, kind)
+    return (
+        src.repartition(num_shards, "shard")
+        .groupBy("shard")
+        .applyInPandas(kernel, schema=SHARD_SCHEMA)
+    )
+
+
+def build_sharded_filter(
     df: DataFrame,
     key_col: str,
     num_shards: int = 32,
@@ -403,12 +405,10 @@ def build_sharded_xor_filter(
     jvm_digests: bool = False,
     dedup: str = "in_shard",
     addressing: str | None = None,
-) -> ShardedXorFilter:
-    """``dedup='in_shard'`` (default): one shuffle — duplicates share d0,
-    hence a shard, so each shard kernel dedups locally (lexsort mask)
-    before peeling. ``dedup='shuffle'``: a distinct-aggregate shuffle
-    first (map-side partial dedup) — cheaper when the corpus is highly
-    duplicated, since the shard shuffle then carries only unique digests.
+    kind: str = "xor",
+) -> ShardedFilter:
+    """Sharded filter of family ``kind`` (see ``shard_frame``), collected
+    to the driver.
 
     ``addressing``: slot-addressing mode. Defaults to 'sqlhash' for
     jvm-digest builds (making the filter probe-able with zero Python via
@@ -416,93 +416,21 @@ def build_sharded_xor_filter(
     """
     if addressing is None:
         addressing = "sqlhash" if jvm_digests else "digest"
-    digest_fn = key_digests_jvm if jvm_digests else key_digests
-    dig = digest_fn(df, key_col).withColumn(
-        "shard", F.pmod(F.col("d0"), F.lit(num_shards)).cast("int")
-    )
-
-    build_one = shard_build_kernel(width, seed, addressing, dedup)
-
-    src = dig if dedup == "in_shard" else dig.dropDuplicates(["d0", "d1"])
-    # explicit hash-repartition on the grouping key: it satisfies the
-    # groupBy's distribution (no second exchange) and pins the peel
-    # stage's parallelism to num_shards. Left to AQE, coalescing sizes
-    # the reduce side by shuffle BYTES (~64MB advisory) — but the peel is
-    # CPU-heavy per byte, so byte-sized coalescing starves it of cores
-    # (measured 1.5x construction slowdown at local[8]).
-    res = (
-        src.repartition(num_shards, "shard")
-        .groupBy("shard")
-        .applyInPandas(build_one, schema="shard int, meta string, slots binary")
-        .toPandas()
-    )
-    import json as _json
-
-    shards = {}
-    for r in res.itertuples(index=False):
-        d = _json.loads(r.meta)
-        shards[int(r.shard)] = XorFilter(
-            width=d["width"],
-            size=d["size"],
-            seeds=np.array(d["seeds"], dtype=np.uint64),
-            slots=np.frombuffer(r.slots, dtype=_SLOT_DTYPES[d["width"]]).copy(),
-            mode=d["mode"],
-            user_seed=d["user_seed"],
-            attempts=d.get("attempts", 1),
-            metrics=d.get("metrics", {}),
-        )
-    return ShardedXorFilter(
+    dig = (key_digests_jvm if jvm_digests else key_digests)(df, key_col)
+    rows = shard_frame(dig, num_shards, width, seed, addressing, dedup, kind)
+    shards = {
+        int(r.shard): _shard_filter(r.meta, r.slots)
+        for r in rows.toPandas().itertuples(index=False)
+    }
+    return ShardedFilter(
         width, seed, shards, num_shards,
         "xxhash64jvm" if jvm_digests else "murmur",
-        addressing,
+        addressing, kind,
     )
-
-
-_SLOT_DTYPES = {8: np.uint8, 16: np.uint16, 32: np.uint32}
-
-
-def is_member_sharded(
-    spark: SparkSession, sxf: ShardedXorFilter, col: Column | str
-) -> Column:
-    """Membership probe column. For 'xxhash64jvm' filters the (d0, d1)
-    digests are computed in whole-stage codegen and only two int64
-    columns cross the Arrow boundary; for 'murmur' filters the Python
-    kernel re-digests the raw keys (byte-parity path)."""
-    bc = spark.sparkContext.broadcast(sxf.to_dict())
-    cache: dict[int, tuple[object, ShardedXorFilter]] = {}
-
-    def _get(art) -> ShardedXorFilter:
-        hit = cache.get(0)
-        if hit is None or hit[0] is not art:
-            cache[0] = (art, ShardedXorFilter.from_dict(art))
-        return cache[0][1]
-
-    if sxf.digest_kind == "xxhash64jvm":
-
-        @pandas_udf("boolean")
-        def _probe_jvm(d0: pd.Series, d1: pd.Series) -> pd.Series:
-            f = _get(bc.value)
-            return pd.Series(
-                f.contains_digests(
-                    d0.to_numpy(dtype=np.int64).view(np.uint64),
-                    d1.to_numpy(dtype=np.int64).view(np.uint64),
-                )
-            )
-
-        c0, c1 = jvm_digest_cols(col)
-        return _probe_jvm(c0, c1)
-
-    @pandas_udf("boolean")
-    def _probe(s: pd.Series) -> pd.Series:
-        f = _get(bc.value)
-        d0, d1 = _digest_batch(s)
-        return pd.Series(f.contains_digests(d0, d1))
-
-    return _probe(F.col(col) if isinstance(col, str) else col)
 
 
 def probe_sql(
-    sxf: ShardedXorFilter,
+    sxf: ShardedFilter,
     df: DataFrame,
     key_col: str,
     out_col: str = "is_member",
@@ -512,46 +440,120 @@ def probe_sql(
     Requires a filter built with ``jvm_digests=True`` (digests are
     ``xxhash64`` of the key) and ``addressing='sqlhash'`` (slot mixing is
     ``xxhash64(d0, seed_j)`` — the exact builtin the JVM can recompute).
-    The plan is: per-row shard/seed/block parameters from small literal
-    arrays, three slot indexes computed with ANSI-safe long arithmetic
-    (builtins wrap internally; the only explicit mod is ``pmod`` on
-    non-negative operands), then three BROADCAST hash joins against the
-    flattened slot table. No Arrow boundary, no Python workers — probe
-    throughput is whatever the scan + codegen can sustain, and on a
-    cluster it scales with executors (the slot table broadcasts once).
-
-    Unsigned-mod note: the kernel reduces the uint64 mix by the block
-    width.  In SQL the same value lives in a *signed* long, so
-    ``u64 mod w = pmod(pmod(x, w) + (2^64 mod w), w)`` when ``x < 0``;
-    the per-shard correction constants ``2^64 mod w_j`` are precomputed
-    into the literal arrays.
+    The plan is: per-row shard parameters from a small broadcast table,
+    three slot indexes computed with ANSI-safe long arithmetic (the
+    family's ``_SQL_FAMILIES`` entry), then three BROADCAST hash joins
+    against the flattened slot table. No Arrow boundary, no Python
+    workers — probe throughput is whatever the scan + codegen can
+    sustain, and on a cluster it scales with executors (the slot table
+    broadcasts once).
 
     Reuse note: Spark caches each BroadcastExchange's hash relation per
     physical-plan *instance*, so keep and reuse the returned DataFrame
     (or a derived plan) across actions — re-calling ``probe_sql`` per
     action rebuilds the three slot-table broadcasts serially each time.
     Sizing note: the broadcast is ~the filter itself (1.23 x n_keys x
-    width bits + join-key overhead). For filters beyond broadcastable
-    size (≈10^8+ slots) use ``is_member_sharded`` — the Arrow path keeps
-    the table on executors and never joins.
+    width bits + join-key overhead for XOR). For filters beyond
+    broadcastable size (≈10^8+ slots) use ``is_member`` — the Arrow path
+    keeps the table on executors and never joins.
     """
     if sxf.digest_kind != "xxhash64jvm" or sxf.mode != "sqlhash":
         raise ValueError(
             "probe_sql requires a filter built with jvm_digests=True and "
             f"addressing='sqlhash' (got digest_kind={sxf.digest_kind!r}, "
-            f"mode={sxf.mode!r}); use is_member_sharded for other filters"
+            f"mode={sxf.mode!r}); use is_member for other filters"
         )
-    spark = df.sparkSession
+    params_df, slots_df = _probe_frames(df.sparkSession, sxf)
     return sql_probe_plan(
         df,
         key_col,
         out_col,
-        params_df=_params_frame(spark, sxf),
-        slots_df=_slots_frame(spark, sxf),
+        params_df=params_df,
+        slots_df=slots_df,
         num_shards=sxf.num_shards,
         width=sxf.width,
         broadcast_slots=True,
+        kind=sxf.kind,
     )
+
+
+_T = "__xorsql_"  # prefix of the probe plan's internal columns
+
+
+def _u64mod(x: Column, w: Column, c: Column) -> Column:
+    """Unsigned ``x mod w`` of a signed long: the kernel reduces the uint64
+    mix by the block width, and ``u64 mod w = pmod(pmod(x, w) + (2^64 mod
+    w), w)`` when ``x < 0``; ``c`` holds the precomputed ``2^64 mod w``."""
+    return F.when(x >= 0, F.pmod(x, w)).otherwise(F.pmod(F.pmod(x, w) + c, w))
+
+
+def _xor_sql_params(p: dict, offsets: np.ndarray) -> dict:
+    """Flat-table block offsets (slot offset + block start folded
+    together), attempt seeds, block widths and ``2^64 mod w``."""
+    cols = {}
+    for j in range(3):
+        cols[f"off{j}"] = offsets + p["starts"][:, j]
+        cols[f"sd{j}"] = p["seeds"][:, j].view(np.int64)
+        cols[f"w{j}"] = p["widths"][:, j].view(np.int64)
+        cols[f"c{j}"] = np.array(
+            [(1 << 64) % int(w) for w in p["widths"][:, j]], dtype=np.int64
+        )
+    return cols
+
+
+def _xor_sql_index(base: DataFrame) -> DataFrame:
+    c = lambda n: F.col(_T + n)  # noqa: E731
+    return base.withColumns(
+        {
+            f"{_T}i{j}": c(f"off{j}")
+            + _u64mod(F.xxhash64(c("d0"), c(f"sd{j}")), c(f"w{j}"), c(f"c{j}"))
+            for j in range(3)
+        }
+    )
+
+
+def _fuse_sql_params(p: dict, offsets: np.ndarray) -> dict:
+    """Flat-table offset, attempt seed (signed view), segment count,
+    segment length and its power-of-two mask."""
+    sl = p["segment_length"].view(np.int64)
+    return {
+        "off": offsets,
+        "sd": p["seed"].view(np.int64),
+        "sc": p["segment_count"].view(np.int64),
+        "sl": sl,
+        "slm": sl - 1,
+    }
+
+
+def _fuse_sql_index(base: DataFrame) -> DataFrame:
+    """Fuse addressing is *simpler* in SQL than XOR's: the window segment
+    is fastrange on the high 32 bits (no unsigned-mod correction) and
+    in-segment offsets are power-of-two masks. The three slots live in
+    consecutive segments, preserving the paper's locality argument even
+    through the join's hash relation (arXiv:2201.01174 §3)."""
+    c = lambda n: F.col(_T + n)  # noqa: E731
+    # h = xxhash64(d0, seed): the one hash every slot index derives from
+    base = base.withColumn(f"{_T}h", F.xxhash64(c("d0"), c("sd")))
+    q = F.shiftright(F.shiftrightunsigned(c("h"), 32) * c("sc"), 32)
+    return base.withColumns(
+        {
+            # the lane literal MUST be a long: xxhash64 of an int column
+            # takes Spark's 4-byte hashInt path, not the hashLong the
+            # NumPy build kernel replicates
+            f"{_T}i{j}": c("off")
+            + (q + F.lit(j)) * c("sl")
+            + F.xxhash64(c("h"), F.lit(j + 1).cast("long")).bitwiseAND(c("slm"))
+            for j in range(3)
+        }
+    )
+
+
+# SQL counterpart of each family's hook: per-shard parameter columns from
+# the stacked ``probe_params``, and the three slot-index columns over them
+_SQL_FAMILIES = {
+    "xor": (_xor_sql_params, _xor_sql_index),
+    "fuse3": (_fuse_sql_params, _fuse_sql_index),
+}
 
 
 def sql_probe_plan(
@@ -563,6 +565,7 @@ def sql_probe_plan(
     num_shards: int,
     width: int,
     broadcast_slots: bool,
+    kind: str = "xor",
 ) -> DataFrame:
     """Shared zero-Python probe plan (see ``probe_sql`` for semantics).
 
@@ -572,48 +575,27 @@ def sql_probe_plan(
     works when the slot table is a distributed artifact larger than any
     broadcast (three shuffles of the probe corpus, zero Python either
     way)."""
-    ns = num_shards
-    t = "__xorsql_"
+    t = _T
 
     # stage 1: digests + shard id as materialized columns (join keys)
-    key = F.col(key_col)
-    base = df.withColumns(
-        {
-            f"{t}d0": F.xxhash64(key),
-            f"{t}d1": F.xxhash64(key, F.lit(_JVM_D1_SALT)),
-        }
-    ).withColumn(f"{t}sh", F.pmod(F.col(f"{t}d0"), F.lit(ns)).cast("int"))
+    d0, d1 = jvm_digest_cols(key_col)
+    base = df.withColumns({f"{t}d0": d0, f"{t}d1": d1}).withColumn(
+        f"{t}sh", F.pmod(F.col(f"{t}d0"), F.lit(num_shards)).cast("int")
+    )
 
     # stage 2: per-shard parameters via a tiny (num_shards-row) broadcast
     # join. Parameters as COLUMNS keep the slot-index expressions small —
     # num_shards-sized literal arrays inline into every expression copy
     # and blow past codegen's method-size limits, demoting the whole
     # stage to interpreted evaluation (~100x slower).
-    base = base.join(F.broadcast(params_df), f"{t}sh")
-
-    def u64mod(x: Column, w: Column, c: Column) -> Column:
-        return F.when(x >= 0, F.pmod(x, w)).otherwise(
-            F.pmod(F.pmod(x, w) + c, w)
-        )
-
-    d0 = F.col(f"{t}d0")
-    base = base.withColumns(
-        {
-            f"{t}i{j}": F.col(f"{t}off{j}")
-            + u64mod(
-                F.xxhash64(d0, F.col(f"{t}sd{j}")),
-                F.col(f"{t}w{j}"),
-                F.col(f"{t}c{j}"),
-            )
-            for j in range(3)
-        }
-    ).withColumn(
+    base = _SQL_FAMILIES[kind][1](base.join(F.broadcast(params_df), f"{t}sh"))
+    base = base.withColumn(
         f"{t}fp",
         F.xxhash64(F.col(f"{t}d1"), F.lit(FP_SEED_SIGNED)).bitwiseAND(
-            F.lit(int(_MASK_BITS[width]))
+            F.lit((1 << width) - 1)
         ),
     )
-    # prune before the joins: the digests, shard id and the 13 parameter
+    # prune before the joins: the digests, shard id and the parameter
     # columns are dead past this point, and in the shuffled-join path
     # every surviving column rides THREE shuffles of the probe corpus
     base = base.select(
@@ -644,50 +626,33 @@ def sql_probe_plan(
     return base.withColumn(out_col, member).select(*df.columns, out_col)
 
 
-_MASK_BITS = {8: 0xFF, 16: 0xFFFF, 32: 0xFFFFFFFF}
+def params_pdf(kind: str, fl: dict, num_shards: int) -> pd.DataFrame:
+    """Per-shard probe-parameter rows (one per shard id) from a
+    ``_flat_params``-shaped dict (``slots`` not required)."""
+    cols = _SQL_FAMILIES[kind][0](fl["params"], fl["offsets"])
+    return pd.DataFrame(
+        {
+            f"{_T}sh": np.arange(num_shards, dtype=np.int32),
+            **{_T + k: v for k, v in cols.items()},
+            f"{_T}pres": fl["present"],
+        }
+    )
 
 
-def _params_frame(spark: SparkSession, sxf: ShardedXorFilter) -> DataFrame:
-    """Per-shard probe parameters, one row per shard id: flat-table block
-    offsets (slot offset + block start folded together), attempt seeds,
-    block widths, unsigned-mod correction constants ``2^64 mod w``, and
-    the present flag. Cached per (session, artifact)."""
-    cached = getattr(sxf, "_params_df_cache", None)
-    if cached is not None and cached[0] is spark:
-        return cached[1]
-    sdf = spark.createDataFrame(params_pdf_from_flat(sxf._flat(), sxf.num_shards))
-    sxf._params_df_cache = (spark, sdf)
-    return sdf
+def _probe_frames(spark: SparkSession, sxf: ShardedFilter) -> tuple:
+    """(``params_pdf``, (sidx, sval) over the flattened slot table)
+    DataFrames of a sharded filter, cached per (session, artifact) so
+    repeated probes reuse one Arrow upload.
 
-
-def params_pdf_from_flat(fl: dict, ns: int) -> pd.DataFrame:
-    """Per-shard probe-parameter rows from a ``_flat()``-shaped dict
-    (``offsets/starts/seeds/widths/present`` — ``slots`` not required)."""
-    t = "__xorsql_"
-    cols: dict[str, object] = {f"{t}sh": np.arange(ns, dtype=np.int32)}
-    for j in range(3):
-        cols[f"{t}off{j}"] = fl["offsets"] + fl["starts"][:, j]
-        cols[f"{t}sd{j}"] = fl["seeds"][:, j].view(np.int64)
-        cols[f"{t}w{j}"] = fl["widths"][:, j].view(np.int64)
-        cols[f"{t}c{j}"] = np.array(
-            [(1 << 64) % int(w) for w in fl["widths"][:, j]], dtype=np.int64
-        )
-    cols[f"{t}pres"] = fl["present"]
-    return pd.DataFrame(cols)
-
-
-def _slots_frame(spark: SparkSession, sxf: ShardedXorFilter) -> DataFrame:
-    """(sidx, sval) DataFrame over the flattened slot table, cached per
-    (session, artifact) so repeated probes reuse one Arrow upload.
-
-    Persisted + materialized: a BroadcastExchange over a LocalTableScan
-    re-converts all the Arrow rows single-threaded on EVERY new query
-    plan; over the in-memory columnar cache the rebuild is a parallel
-    cached scan + the (serial) hash-relation insert only."""
-    cached = getattr(sxf, "_slots_df_cache", None)
+    The slot frame is persisted + materialized: a BroadcastExchange over
+    a LocalTableScan re-converts all the Arrow rows single-threaded on
+    EVERY new query plan; over the in-memory columnar cache the rebuild
+    is a parallel cached scan + the (serial) hash-relation insert only."""
+    cached = getattr(sxf, "_probe_frames_cache", None)
     if cached is not None and cached[0] is spark:
         return cached[1]
     fl = sxf._flat()
+    params_df = spark.createDataFrame(params_pdf(sxf.kind, fl, sxf.num_shards))
     pdf = pd.DataFrame(
         {
             "sidx": np.arange(fl["slots"].shape[0], dtype=np.int64),
@@ -695,7 +660,11 @@ def _slots_frame(spark: SparkSession, sxf: ShardedXorFilter) -> DataFrame:
         }
     )
     n_part = max(4, fl["slots"].shape[0] // 2_000_000)
-    sdf = spark.createDataFrame(pdf).repartition(n_part).persist()
-    sdf.count()
-    sxf._slots_df_cache = (spark, sdf)
-    return sdf
+    slots_df = spark.createDataFrame(pdf).repartition(n_part).persist()
+    slots_df.count()
+    sxf._probe_frames_cache = (spark, (params_df, slots_df))
+    return params_df, slots_df
+
+
+# the XOR name of the sharded filter, kept for callers that load XOR artifacts
+ShardedXorFilter = ShardedFilter

@@ -1,6 +1,6 @@
 """Distributed XOR-filter artifact persisted as a table (the 10^12-key path).
 
-``build_sharded_xor_filter`` collects every shard's slot table to the
+``build_sharded_filter`` collects every shard's slot table to the
 driver. That is fine up to ~10^8 keys, but at the mandated 10^12-turn
 scale the artifact itself is terabytes (1.23 x n x L bits — ~2.5 TB for
 XOR16): no driver holds it and no broadcast ships it. This module keeps
@@ -29,8 +29,8 @@ probe (``XorFilterTable.probe``)
     exceeds both driver memory and the broadcast threshold.
 
 For filters that DO fit on the driver, ``XorFilterTable.to_sharded()``
-loads the artifact into a :class:`ShardedXorFilter`, after which the
-broadcast paths (``is_member_sharded``, zero-Python ``probe_sql``)
+loads the artifact into a :class:`ShardedFilter`, after which the
+broadcast paths (``is_member``, zero-Python ``probe_sql``)
 apply unchanged — at bench scale those are faster because they avoid
 the probe-side shuffle entirely.
 """
@@ -49,13 +49,18 @@ from pyspark.sql.types import BooleanType, StructField, StructType
 
 from ..kernels.column import digest_series as _digest_batch
 from .spark_build import (
-    _SLOT_DTYPES,
-    SHARD_SCHEMA,
-    ShardedXorFilter,
+    ShardedFilter,
+    _flat_params,
+    _shard_filter,
+    _u64,
     jvm_digest_cols,
-    shard_build_kernel,
+    key_digests,
+    key_digests_jvm,
+    params_pdf,
+    shard_frame,
+    sql_probe_plan,
 )
-from .xor_core import XorFilter
+from .xor_core import _DTYPES
 
 __all__ = ["XorFilterTable", "build_xor_filter_table"]
 
@@ -111,13 +116,14 @@ class XorFilterTable:
     def shards_df(self) -> DataFrame:
         return self.spark.read.parquet(os.path.join(self.path, _SHARDS_DIR))
 
-    def to_sharded(self) -> ShardedXorFilter:
+    def to_sharded(self) -> ShardedFilter:
         """Load the artifact into driver memory (only when it fits —
-        enables the broadcast probes ``is_member_sharded``/``probe_sql``)."""
-        shards: dict[int, XorFilter] = {}
-        for r in self.shards_df().toPandas().itertuples(index=False):
-            shards[int(r.shard)] = _shard_filter(r.meta, r.slots)
-        return ShardedXorFilter(
+        enables the broadcast probes ``is_member``/``probe_sql``)."""
+        shards = {
+            int(r.shard): _shard_filter(r.meta, r.slots)
+            for r in self.shards_df().toPandas().itertuples(index=False)
+        }
+        return ShardedFilter(
             self.width, self.seed, shards, self.num_shards,
             self.digest_kind, self.mode,
         )
@@ -134,10 +140,9 @@ class XorFilterTable:
         """
         t = "__xortab_"
         ns = self.num_shards
-        width, mode, digest_kind = self.width, self.mode, self.digest_kind
         out_cols = list(df.columns)
 
-        if digest_kind == "xxhash64jvm":
+        if self.digest_kind == "xxhash64jvm":
             d0c, d1c = jvm_digest_cols(key_col)
             base = df.withColumns({f"{t}d0": d0c, f"{t}d1": d1c})
         else:
@@ -177,8 +182,7 @@ class XorFilterTable:
             else:
                 f = _shard_filter(art["meta"].iloc[0], art["slots"].iloc[0])
                 member = f.contains_digests(
-                    probes[f"{t}d0"].to_numpy(dtype=np.int64).view(np.uint64),
-                    probes[f"{t}d1"].to_numpy(dtype=np.int64).view(np.uint64),
+                    _u64(probes[f"{t}d0"]), _u64(probes[f"{t}d1"])
                 )
             out = probes[out_cols].copy()
             out[out_col] = member
@@ -206,9 +210,6 @@ class XorFilterTable:
         the filter is terabytes: three shuffles of the probe corpus
         against a distributed, persisted slot table. Requires a
         ``jvm_digests=True`` + ``addressing='sqlhash'`` build."""
-        from .spark_build import params_pdf_from_flat, sql_probe_plan
-        from .xor_core import block_bounds
-
         if self.digest_kind != "xxhash64jvm" or self.mode != "sqlhash":
             raise ValueError(
                 "probe_sql requires a table built with jvm_digests=True "
@@ -224,37 +225,18 @@ class XorFilterTable:
                 int(r["shard"]): json.loads(r["meta"])
                 for r in self.shards_df().select("shard", "meta").collect()
             }
-            ns = self.num_shards
-            offsets = np.zeros(ns, dtype=np.int64)
-            seeds = np.zeros((ns, 3), dtype=np.uint64)
-            starts = np.zeros((ns, 3), dtype=np.int64)
-            widths = np.ones((ns, 3), dtype=np.uint64)
-            present = np.zeros(ns, dtype=bool)
-            off = 0
-            for sid in sorted(metas):
-                m = metas[sid]
-                present[sid] = True
-                offsets[sid] = off
-                seeds[sid] = np.array(m["seeds"], dtype=np.uint64)
-                st, wd = block_bounds(m["size"])
-                starts[sid], widths[sid] = st, wd.astype(np.uint64)
-                off += m["size"]
-            fl = {
-                "offsets": offsets,
-                "seeds": seeds,
-                "starts": starts,
-                "widths": widths,
-                "present": present,
-            }
-            params_df = spark.createDataFrame(params_pdf_from_flat(fl, ns))
+            fl = _flat_params("xor", metas, self.num_shards)
+            params_df = spark.createDataFrame(
+                params_pdf("xor", fl, self.num_shards)
+            )
 
             # decode shard blobs -> (sidx, sval) rows, executor-side; the
             # shard->global-offset map is tiny closure state
-            off_map = {sid: int(offsets[sid]) for sid in metas}
+            off_map = {sid: int(fl["offsets"][sid]) for sid in metas}
             width = self.width
 
             def decode(batches):
-                dt = _SLOT_DTYPES[width]
+                dt = _DTYPES[width]
                 for pdf in batches:
                     for shard, blob in zip(pdf["shard"], pdf["slots"]):
                         vals = np.frombuffer(blob, dtype=dt).astype(np.int64)
@@ -281,9 +263,9 @@ class XorFilterTable:
                 # action) reuse one decode pass
                 .persist()
             )
-            if not metas:
+            if not metas:  # slots of the 3-slot stand-in of keyless shards
                 slots_df = spark.createDataFrame(
-                    pd.DataFrame({"sidx": [np.int64(0)], "sval": [np.int64(0)]})
+                    pd.DataFrame({"sidx": np.arange(3), "sval": np.zeros(3, np.int64)})
                 )
             self._sqlprobe_cache = (params_df, slots_df)
         params_df, slots_df = self._sqlprobe_cache
@@ -299,20 +281,6 @@ class XorFilterTable:
         )
 
 
-def _shard_filter(meta_json: str, slots: bytes) -> XorFilter:
-    d = json.loads(meta_json)
-    return XorFilter(
-        width=d["width"],
-        size=d["size"],
-        seeds=np.array(d["seeds"], dtype=np.uint64),
-        slots=np.frombuffer(slots, dtype=_SLOT_DTYPES[d["width"]]).copy(),
-        mode=d["mode"],
-        user_seed=d["user_seed"],
-        attempts=d.get("attempts", 1),
-        metrics=d.get("metrics", {}),
-    )
-
-
 def build_xor_filter_table(
     df: DataFrame,
     key_col: str,
@@ -323,52 +291,21 @@ def build_xor_filter_table(
     jvm_digests: bool = False,
     dedup: str = "in_shard",
     addressing: str | None = None,
-    transport: str = "rows",
 ) -> XorFilterTable:
     """Build a sharded XOR filter and persist it as a distributed table.
 
-    Identical construction semantics (and bit-identical per-shard
-    artifacts — same kernel, same per-shard seeds) as
-    ``build_sharded_xor_filter``; the difference is the sink: shard rows
-    are written to parquet by the executors instead of collected, so the
-    build has NO per-key serial stage and the artifact size is bounded by
-    storage, not driver memory.
+    The same shard DataFrame as ``build_sharded_filter`` (same kernel,
+    same per-shard seeds: bit-identical per-shard artifacts); the
+    difference is the sink: shard rows are written to parquet by the
+    executors instead of collected, so the build has NO per-key serial
+    stage and the artifact size is bounded by storage, not driver memory.
     """
     if addressing is None:
         addressing = "sqlhash" if jvm_digests else "digest"
-    from .spark_build import (
-        key_digests,
-        key_digests_jvm,
-        pack_digest_blobs,
-        shard_build_kernel_blobs,
-    )
-
-    digest_fn = key_digests_jvm if jvm_digests else key_digests
-    shards_path = os.path.join(path, _SHARDS_DIR)
-    if transport == "blob":
-        # map-side combine: one blob per (input partition, shard) crosses
-        # the shuffle instead of one row per key (see pack_digest_blobs);
-        # dedup is inherently in-shard. Artifacts are byte-identical.
-        if dedup != "in_shard":
-            raise ValueError("transport='blob' requires dedup='in_shard'")
-        src = pack_digest_blobs(digest_fn(df, key_col), num_shards)
-        kernel = shard_build_kernel_blobs(width, seed, addressing)
-    else:
-        dig = digest_fn(df, key_col).withColumn(
-            "shard", F.pmod(F.col("d0"), F.lit(num_shards)).cast("int")
-        )
-        src = dig if dedup == "in_shard" else dig.dropDuplicates(["d0", "d1"])
-        kernel = shard_build_kernel(width, seed, addressing, dedup)
-    (
-        # explicit hash-repartition pins peel parallelism to num_shards
-        # (same rationale as build_sharded_xor_filter: AQE's byte-sized
-        # coalescing starves the CPU-heavy peel of cores)
-        src.repartition(num_shards, "shard")
-        .groupBy("shard")
-        .applyInPandas(kernel, SHARD_SCHEMA)
-        .write.mode("overwrite")
-        .parquet(shards_path)
-    )
+    dig = (key_digests_jvm if jvm_digests else key_digests)(df, key_col)
+    shard_frame(dig, num_shards, width, seed, addressing, dedup).write.mode(
+        "overwrite"
+    ).parquet(os.path.join(path, _SHARDS_DIR))
 
     spark = df.sparkSession
     # structural metadata only: aggregate metrics are computed lazily on

@@ -28,6 +28,7 @@ import json
 import math
 import time
 from dataclasses import dataclass, field
+from typing import ClassVar
 
 import numpy as np
 
@@ -79,6 +80,13 @@ def sqlhash_fingerprint(d1: np.ndarray, width: int) -> np.ndarray:
     return xxh64_long(_FP_SEED, xxh64_long(d1, _SQL_SEED)) & _MASKS[width]
 
 
+def fingerprint(d1: np.ndarray, width: int, mode: str) -> np.ndarray:
+    """L-bit fingerprint of the second digest lane in ``mode``'s hashing."""
+    if mode == "sqlhash":
+        return sqlhash_fingerprint(d1, width)
+    return digest_fingerprint(d1, width)
+
+
 def block_bounds(size: int) -> tuple[np.ndarray, np.ndarray]:
     """Three disjoint blocks covering [0, size), remainder spread left."""
     base, rem = divmod(size, 3)
@@ -88,6 +96,40 @@ def block_bounds(size: int) -> tuple[np.ndarray, np.ndarray]:
     )
     starts = np.array([0, widths[0], widths[0] + widths[1]], dtype=np.int64)
     return starts, widths
+
+
+# -- family hook of the sharded layer (filters/spark_build.py) --------------
+
+def probe_params(meta: dict) -> dict:
+    """``slot_index`` parameters of one filter, from its artifact meta (or
+    ``vars(filter)``): attempt seeds plus the three block starts/widths."""
+    starts, widths = block_bounds(meta["size"])
+    return {
+        "seeds": np.asarray(meta["seeds"], dtype=_U64),
+        "starts": starts,
+        "widths": widths.astype(_U64),
+    }
+
+
+def slot_index(d0: np.ndarray, p: dict, mode: str, h=None) -> np.ndarray:
+    """(n, 3) slot indices in digest or sqlhash addressing. ``p`` holds
+    one filter's ``probe_params`` ((3,) arrays), or (n, 3) arrays giving
+    each key its own filter's parameters (the flat sharded probe). ``h``:
+    the attempt-invariant sqlhash lane ``xxhash64(d0)``, if precomputed."""
+    if mode == "sqlhash" and h is None:
+        h = xxh64_long(d0, _SQL_SEED)
+    elif mode != "sqlhash":
+        h = d0
+    cols = []
+    for j in range(3):
+        if mode == "sqlhash":
+            mix = xxh64_long(p["seeds"][..., j], h)
+        else:
+            mix = splitmix64(h ^ p["seeds"][..., j])
+        cols.append(
+            (mix % p["widths"][..., j]).astype(np.int64) + p["starts"][..., j]
+        )
+    return np.stack(cols, axis=1)
 
 
 @dataclass
@@ -112,18 +154,12 @@ class XorFilter:
     user_seed: int = 0
     attempts: int = 1
     metrics: dict = field(default_factory=dict)
+    # meta of a 3-slot stand-in for the sharded layer's keyless shards
+    ABSENT_META: ClassVar[dict] = {"size": 3, "seeds": [0, 0, 0]}
 
     # -- addressing ---------------------------------------------------------
     def _slot_idx_digest(self, d0: np.ndarray) -> np.ndarray:
-        starts, widths = block_bounds(self.size)
-        cols = []
-        for j in range(3):
-            if self.mode == "sqlhash":
-                mix = xxh64_long(self.seeds[j], xxh64_long(d0, _SQL_SEED))
-            else:
-                mix = splitmix64(d0 ^ self.seeds[j])
-            cols.append((mix % _U64(widths[j])).astype(np.int64) + starts[j])
-        return np.stack(cols, axis=1)
+        return slot_index(d0, probe_params(vars(self)), self.mode)
 
     def _slot_idx_exact(self, buf: np.ndarray, lens: np.ndarray) -> np.ndarray:
         starts, widths = block_bounds(self.size)
@@ -134,9 +170,7 @@ class XorFilter:
         return np.stack(cols, axis=1)
 
     def _fingerprint_digest(self, d1: np.ndarray) -> np.ndarray:
-        if self.mode == "sqlhash":
-            return sqlhash_fingerprint(d1, self.width)
-        return digest_fingerprint(d1, self.width)
+        return fingerprint(d1, self.width, self.mode)
 
     def _fingerprint_exact(self, buf: np.ndarray, lens: np.ndarray) -> np.ndarray:
         return crc32(buf, lens).astype(_U64) & _MASKS[self.width]
@@ -165,26 +199,29 @@ class XorFilter:
         return got == self._fingerprint_exact(buf, lens)
 
     # -- (de)serialization --------------------------------------------------
-    def to_dict(self) -> dict:
+    def meta(self) -> dict:
+        """Everything but the slot table (a shard row keeps slots binary)."""
         return {
             "width": self.width,
             "size": self.size,
             "seeds": [int(s) for s in self.seeds],
-            "slots_hex": self.slots.tobytes().hex(),
             "mode": self.mode,
             "user_seed": self.user_seed,
             "attempts": self.attempts,
             "metrics": self.metrics,
         }
 
+    def to_dict(self) -> dict:
+        return {**self.meta(), "slots_hex": self.slots.tobytes().hex()}
+
     def to_json(self) -> str:
         return json.dumps(self.to_dict())
 
     @classmethod
-    def from_dict(cls, d: dict) -> "XorFilter":
-        slots = np.frombuffer(
-            bytes.fromhex(d["slots_hex"]), dtype=_DTYPES[d["width"]]
-        ).copy()
+    def from_dict(cls, d: dict, slots: bytes | None = None) -> "XorFilter":
+        """From ``to_dict`` output, or from ``meta()`` plus raw slot bytes."""
+        raw = bytes.fromhex(d["slots_hex"]) if slots is None else slots
+        slots = np.frombuffer(raw, dtype=_DTYPES[d["width"]]).copy()
         return cls(
             width=d["width"],
             size=d["size"],
@@ -332,34 +369,18 @@ def build_from_digests(
         pairs = np.stack([d0.astype(_U64), d1.astype(_U64)], axis=1)
         pairs = np.unique(pairs, axis=0)
         d0u, d1u = pairs[:, 0], pairs[:, 1]
-    n = d0u.shape[0]
-    mask = _MASKS[width]
+    if width not in _DTYPES:
+        raise ValueError(f"unsupported fingerprint width {width}; use 8, 16 or 32")
 
-    if mode == "sqlhash":
-        # the per-row inner hash is attempt-invariant: precompute once
-        h0 = xxh64_long(d0u, _SQL_SEED)
-
-        def make_idx(seeds, size):
-            starts, widths = block_bounds(size)
-            cols = []
-            for j in range(3):
-                mix = xxh64_long(seeds[j], h0)
-                cols.append((mix % _U64(widths[j])).astype(np.int64) + starts[j])
-            return np.stack(cols, axis=1)
-
-        fp = sqlhash_fingerprint(d1u, width)
-        return _build(n, width, seed, make_idx, fp, "sqlhash")
+    # the sqlhash lane is attempt-invariant: hash it once, not per retry
+    h = xxh64_long(d0u, _SQL_SEED) if mode == "sqlhash" else None
 
     def make_idx(seeds, size):
-        starts, widths = block_bounds(size)
-        cols = []
-        for j in range(3):
-            mix = splitmix64(d0u ^ seeds[j])
-            cols.append((mix % _U64(widths[j])).astype(np.int64) + starts[j])
-        return np.stack(cols, axis=1)
+        p = probe_params({"seeds": seeds, "size": size})
+        return slot_index(d0u, p, mode, h)
 
-    fp = splitmix64(d1u ^ _FP_SEED) & mask
-    return _build(n, width, seed, make_idx, fp, "digest")
+    fp = fingerprint(d1u, width, mode)
+    return _build(d0u.shape[0], width, seed, make_idx, fp, mode)
 
 
 def build_from_bytes(

@@ -32,8 +32,14 @@ from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 
-from ..filters.spark_build import ShardedXorFilter, key_digests
-from ..filters.xor_core import XorFilter
+from ..filters.spark_build import (
+    SHARD_SCHEMA,
+    ShardedXorFilter,
+    _shard_filter,
+    key_digests,
+    key_digests_jvm,
+    shard_frame,
+)
 
 
 def artifact_canonical_json(sxf: ShardedXorFilter) -> str:
@@ -145,43 +151,16 @@ class BuildRun:
         return artifact
 
 
-_SHARD_SCHEMA = (
-    "shard int, artifact string, n_keys long, table_size long, attempts int"
-)
-
-
-def _shard_artifact_kernel(width: int, seed: int, addressing: str):
-    """applyInPandas kernel: one shard's digest rows -> one artifact row.
-
-    Pure function of the shard's unique digest SET (the peel kernel
-    lexsorts + dedups internally), so a shard rebuilt from any
-    row-ordering / partitioning of the same digests yields a byte-identical
-    artifact — the property incremental updates rely on."""
-    import numpy as np
-    import pandas as pd
-
-    from ..filters.xor_core import build_from_digests
-
-    def build_one(pdf: pd.DataFrame) -> pd.DataFrame:
-        sid = int(pdf["shard"].iloc[0])
-        d0 = pdf["d0"].to_numpy(dtype=np.int64).view(np.uint64)
-        d1 = pdf["d1"].to_numpy(dtype=np.int64).view(np.uint64)
-        f = build_from_digests(
-            d0, d1, width=width, seed=seed ^ (sid * 0x9E37),
-            mode=addressing,
-        )
-        met = f.metrics
-        return pd.DataFrame(
-            {
-                "shard": [sid],
-                "artifact": [f.to_json()],
-                "n_keys": [met.get("n_keys", len(d0))],
-                "table_size": [f.size],
-                "attempts": [f.attempts],
-            }
-        )
-
-    return build_one
+def _assemble(
+    shards_df: DataFrame, width, seed, num_shards, digest_kind, addressing
+) -> dict:
+    """Collected ``SHARD_SCHEMA`` rows -> the filter artifact dict."""
+    shards = {
+        r["shard"]: _shard_filter(r["meta"], r["slots"]) for r in shards_df.collect()
+    }
+    return ShardedXorFilter(
+        width, seed, shards, num_shards, digest_kind, addressing
+    ).to_dict()
 
 
 def build_xor_filter_checkpointed(
@@ -204,15 +183,11 @@ def build_xor_filter_checkpointed(
     ``input_token`` should identify the input dataset (e.g. its path +
     snapshot id); it chains into every stage fingerprint.
 
-    ``jvm_digests``/``addressing`` mirror ``build_sharded_xor_filter``:
+    ``jvm_digests``/``addressing`` mirror ``build_sharded_filter``:
     the scale path (xxhash64 digests in codegen, sqlhash addressing)
     yields a checkpointed filter that ``probe_sql`` can evaluate with
     zero Python.
     """
-    from pyspark.sql import functions as F
-
-    from ..filters.spark_build import key_digests_jvm
-
     if addressing is None:
         addressing = "sqlhash" if jvm_digests else "digest"
     digest_kind = "xxhash64jvm" if jvm_digests else "murmur"
@@ -243,41 +218,25 @@ def build_xor_filter_checkpointed(
             "width": width,
             "seed": seed,
             "addressing": addressing,
+            # the shard row format: a run dir written in an older format
+            # rebuilds this stage instead of misreading it
+            "format": SHARD_SCHEMA,
         }
     )
-
-    build_one = _shard_artifact_kernel(width, seed, addressing)
-
-    def produce_shards() -> DataFrame:
-        return (
-            digests.withColumn(
-                "shard", F.pmod(F.col("d0"), F.lit(num_shards)).cast("int")
-            )
-            .groupBy("shard")
-            .applyInPandas(
-                build_one,
-                schema=(
-                    "shard int, artifact string, n_keys long, "
-                    "table_size long, attempts int"
-                ),
-            )
-        )
-
-    shards_df = run.dataframe_stage("shards", fp_shards, produce_shards)
+    shards_df = run.dataframe_stage(
+        "shards",
+        fp_shards,
+        lambda: shard_frame(digests, num_shards, width, seed, addressing),
+    )
 
     fp_filter = _fingerprint({"stage": "filter", "up": fp_shards})
-
-    def assemble() -> dict:
-        rows = shards_df.collect()
-        shards = {
-            r["shard"]: XorFilter.from_json(r["artifact"]) for r in rows
-        }
-        sxf = ShardedXorFilter(
-            width, seed, shards, num_shards, digest_kind, addressing
-        )
-        return sxf.to_dict()
-
-    art = run.json_stage("filter", fp_filter, assemble)
+    art = run.json_stage(
+        "filter",
+        fp_filter,
+        lambda: _assemble(
+            shards_df, width, seed, num_shards, digest_kind, addressing
+        ),
+    )
     return ShardedXorFilter.from_dict(art), run.metrics
 
 
@@ -335,8 +294,6 @@ def update_xor_filter_checkpointed(
     """
     from pyspark.sql import functions as F
 
-    from ..filters.spark_build import key_digests_jvm
-
     spark = delta_df.sparkSession
 
     with open(os.path.join(base_run_dir, "filter.json")) as f:
@@ -347,6 +304,13 @@ def update_xor_filter_checkpointed(
     digest_kind = base_art.get("digest_kind", "murmur")
     addressing = base_art.get("mode", "digest")
     digest_fn = key_digests_jvm if digest_kind == "xxhash64jvm" else key_digests
+
+    base_fp = BuildRun(spark, base_run_dir)._load_manifest("shards") or {}
+    if json.loads(base_fp.get("fingerprint", "{}")).get("format") != SHARD_SCHEMA:
+        raise ValueError(
+            f"base run {base_run_dir!r} holds shards in another row format; "
+            "rebuild it with build_xor_filter_checkpointed first"
+        )
 
     run = BuildRun(spark, run_dir)
     meta_p = os.path.join(run_dir, "update.json")
@@ -392,6 +356,7 @@ def update_xor_filter_checkpointed(
             "width": width,
             "seed": seed,
             "addressing": addressing,
+            "format": SHARD_SCHEMA,
         }
     )
 
@@ -399,15 +364,12 @@ def update_xor_filter_checkpointed(
         base_shards = spark.read.parquet(os.path.join(base_run_dir, "shards"))
         if not affected:
             return base_shards
-        build_one = _shard_artifact_kernel(width, seed, addressing)
         all_digests = spark.read.parquet(
             *_digest_dirs(base_run_dir)
         ).unionAll(new_digests)
-        rebuilt = (
-            all_digests.withColumn("shard", shard_col)
-            .filter(F.col("shard").isin([int(s) for s in affected]))
-            .groupBy("shard")
-            .applyInPandas(build_one, schema=_SHARD_SCHEMA)
+        rebuilt = shard_frame(
+            all_digests.filter(shard_col.isin([int(s) for s in affected])),
+            num_shards, width, seed, addressing,
         )
         kept = base_shards.filter(
             ~F.col("shard").isin([int(s) for s in affected])
@@ -417,18 +379,13 @@ def update_xor_filter_checkpointed(
     shards_df = run.dataframe_stage("shards", fp_shards, produce_shards)
 
     fp_filter = _fingerprint({"stage": "filter", "up": fp_shards})
-
-    def assemble() -> dict:
-        rows = shards_df.collect()
-        shards = {
-            r["shard"]: XorFilter.from_json(r["artifact"]) for r in rows
-        }
-        sxf = ShardedXorFilter(
-            width, seed, shards, num_shards, digest_kind, addressing
-        )
-        return sxf.to_dict()
-
-    art = run.json_stage("filter", fp_filter, assemble)
+    art = run.json_stage(
+        "filter",
+        fp_filter,
+        lambda: _assemble(
+            shards_df, width, seed, num_shards, digest_kind, addressing
+        ),
+    )
     run.metrics["update"] = {
         "shards_rebuilt": len(affected),
         "shards_total": num_shards,

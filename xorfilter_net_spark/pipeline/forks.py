@@ -10,8 +10,10 @@ leak). This operator finds every fork point: a (depth, prefix) shared
 by >= 2 conversations whose next turns differ.
 
 Method, fully relational:
-1. per turn, a 32-hex fingerprint ``md5(role || '|' || text)`` —
-   map-only codegen; RAW TEXT NEVER SHUFFLES after this point;
+1. per turn, a 32-hex fingerprint ``md5(md5(role) || md5(text))`` —
+   each field hashed to a fixed width first, so no separator inside a
+   field can move a field boundary (``('a|b', 'c')`` and ``('a', 'b|c')``
+   differ) — map-only codegen; RAW TEXT NEVER SHUFFLES after this point;
 2. one conv_id-keyed aggregate assembles each conversation's ordered
    fingerprint chain (state = the conversation's own turns, the same
    bound as conversation assembly);
@@ -54,15 +56,13 @@ def fork_points(
     shared by >= 2 conversations with >= 2 distinct continuations."""
     if max_depth < 1:
         raise ValueError(f"max_depth must be >= 1, got {max_depth}")
-    # both fields null-coalesced BEFORE the join: concat_ws silently
-    # drops NULL args (no separator), while the oracle's || nulls out —
-    # coalescing on both sides keeps the two programs identical on
-    # malformed rows
+    # both fields null-coalesced BEFORE hashing: md5 of NULL is NULL on
+    # both engines — coalescing on both sides keeps the two programs
+    # identical on malformed rows
     fp = F.md5(
-        F.concat_ws(
-            "|",
-            F.coalesce(F.col(role_col).cast("string"), F.lit("")),
-            F.coalesce(F.col(text_col), F.lit("")),
+        F.concat(
+            F.md5(F.coalesce(F.col(role_col).cast("string"), F.lit(""))),
+            F.md5(F.coalesce(F.col(text_col), F.lit(""))),
         )
     )
     chains = (
@@ -128,8 +128,8 @@ def fork_oracle_sql(src: str = "transcripts", max_depth: int = 8) -> str:
                    list(fp order by turn_idx nulls first, fp) as fps
             from (
                 select conv_id, turn_idx,
-                       md5(coalesce(role, '') || '|' ||
-                           coalesce(text, '')) as fp
+                       md5(md5(coalesce(role, '')) ||
+                           md5(coalesce(text, ''))) as fp
                 from {src})
             group by conv_id
         ), unnest(range(1, least(len(fps), {max_depth}) + 1)) as u(k)

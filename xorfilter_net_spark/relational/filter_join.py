@@ -28,7 +28,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..filters.spark_build import build_sharded_xor_filter, probe_sql
+from ..filters.spark_build import build_sharded_filter, probe_sql
 
 _SAFE_HOW = {"inner", "left_semi", "leftsemi", "semi"}
 
@@ -56,7 +56,7 @@ def filter_pruned_join(
             f"filter_pruned_join only supports {sorted(_SAFE_HOW)} joins, got {how!r}:"
             " pruning the fact side would drop outer-join null extensions"
         )
-    sxf = build_sharded_xor_filter(
+    sxf = build_sharded_filter(
         dim.select(dim_key).dropDuplicates(),
         dim_key,
         num_shards=num_shards,
@@ -79,7 +79,7 @@ def prune_stats(
 ) -> dict:
     """Measure the pruning power on a concrete pair (for tests/bench):
     rows before/after the probe and the exact match count."""
-    sxf = build_sharded_xor_filter(
+    sxf = build_sharded_filter(
         dim.select(dim_key).dropDuplicates(), dim_key,
         num_shards=kw.get("num_shards", 32), width=kw.get("width", 16),
         seed=kw.get("seed", 0), jvm_digests=True,

@@ -236,5 +236,25 @@ class SyntheticTranscriptsDataSource(DataSource):
         return SyntheticTranscriptsStreamReader(self.options)
 
 
+class _NoPushdownReader(SyntheticTranscriptsReader):
+    # the base class's pushFilters: Spark leaves every filter to itself
+    pushFilters = DataSourceReader.pushFilters
+
+
+class _NoPushdownDataSource(SyntheticTranscriptsDataSource):
+    def reader(self, schema) -> SyntheticTranscriptsReader:
+        return _NoPushdownReader(self.options)
+
+
 def register(spark) -> None:
-    spark.dataSource.register(SyntheticTranscriptsDataSource)
+    """Register ``synthetic_transcripts`` for the session's current conf.
+
+    Spark 4 rejects a reader that implements ``pushFilters()`` while
+    ``spark.sql.python.filterPushdown.enabled`` is false, so under that
+    conf the registered reader has none: same rows, conv_id predicates
+    evaluated after the scan. Call it again after changing the conf."""
+    conf = spark.conf.get("spark.sql.python.filterPushdown.enabled", "false")
+    pushdown = conf.strip().lower() == "true"
+    spark.dataSource.register(
+        SyntheticTranscriptsDataSource if pushdown else _NoPushdownDataSource
+    )
