@@ -99,11 +99,8 @@ _RECHECK = {
 # 50-query round. Names already green in a prior round drop out
 # naturally.
 _FRONT_R05 = [
-    # never-sampled: the strengthened unigram pair first (r04 verdict
-    # item 5), then the validation/rolling families the verdict ranked
+    # never-sampled: the validation/rolling families the verdict ranked
     # highest, then the relational/graph tail
-    "unigram_pieces_documents",
-    "unigram_encode_stats",
     "data_validation_report",
     "data_validation_suggested",
     "rolling_distinct_users",
@@ -210,12 +207,10 @@ _FRONT = _FRONT_R05 + [
     "phash_near_dup_media",
     "media_resize_stats",
     "drift_report_ok",
-    # dedup stragglers + the strengthened unigram pair
+    # dedup stragglers
     "editdist_near_dup_pairs",
     "simhash_separation_gates",
     "span_index_incremental",
-    "unigram_pieces_documents",
-    "unigram_encode_stats",
     # validation / profiling / IVM
     "data_validation_report",
     "data_validation_suggested",

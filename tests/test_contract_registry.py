@@ -39,20 +39,13 @@ def test_every_oracle_names_a_query(registry):
 
 def test_rows_only_queries_are_the_documented_iterative_set(registry):
     queries, oracles = registry
-    rows_only = set(queries) - set(oracles)
-    # The surviving rows-only pair is the unigram-LM tokenizer: its
-    # training is EM (forward-backward lattice sums of float log-probs
-    # whose VALUES depend on float addition order) and its encode is a
-    # Viterbi argmax over those trained log-probs — there is no
-    # integer-state formulation to replay, unlike every other iterative
-    # operator here (pagerank/hits/kcore/kmeans/bpe/wordpiece all moved
-    # off this list in r2-r3 via chained materialized-CTE unrolls of
-    # integer or single-IEEE-op recurrences). Strong check: the
-    # single-machine replay differential in tests/test_unigram_lm.py.
-    assert rows_only == {
-        "unigram_pieces_documents",
-        "unigram_encode_stats",
-    }
+    # Every registered query has an oracle: a rows-only query has no
+    # value check, so it can never be certified. The unigram-LM
+    # pieces/encode pair (EM over float lattice sums, no integer-state
+    # replay) was the last such pair and is no longer registered;
+    # ``unigram_invariants_ok`` value-checks the family, and
+    # tests/test_unigram_lm.py replays the EM numbers single-machine.
+    assert set(queries) - set(oracles) == set()
 
 
 def test_all_oracles_bind_in_duckdb(registry, duck):

@@ -12,7 +12,6 @@ import os
 import time
 from datetime import datetime
 
-import pytest
 from pyspark.sql import functions as F
 
 from xorfilter_net_spark.sketches.hll import HllSketch
@@ -331,126 +330,6 @@ class TestStreamStreamJoin:
         ).collect()
         rows = {(r["click_id"], r["view_id"]) for r in out}
         assert rows == {(100, 11), (200, None)}
-
-
-class TestStatefulGroupSketchTws:
-    """transformWithStateInPandas variant: same semantics as the
-    applyInPandasWithState operator, on the Spark 4 successor API with
-    the RocksDB state store provider."""
-
-    def test_tws_plan_and_schema(self, spark, sf_tiny):
-        # plan construction needs no protobuf; pin the output schema
-        from xorfilter_net_spark.streaming.windowed import (
-            stateful_group_sketch_tws,
-        )
-
-        ev = spark.read.parquet(f"{sf_tiny}/events.parquet")
-        sk = HllSketch(p=12, key_col="user_id")
-        out = stateful_group_sketch_tws(
-            ev.select("event_type", "user_id"), "event_type", ["user_id"],
-            sk, finish=lambda s, st: s.estimate(st),
-        )
-        assert out.schema.simpleString() == (
-            "struct<group:string,estimate:bigint,n_rows:bigint>"
-        )
-
-    def test_tws_running_hll_matches_batch(self, spark, sf_tiny, tmp_path):
-        from xorfilter_net_spark.streaming.windowed import (
-            stateful_group_sketch_tws,
-            tws_available,
-        )
-
-        if not tws_available():
-            pytest.skip(
-                "transformWithStateInPandas needs protobuf (absent here); "
-                "stateful_group_sketch covers identical semantics"
-            )
-
-        ev = spark.read.parquet(f"{sf_tiny}/events.parquet")
-        base = time.time() - 3600
-        slices = [
-            ev.filter(f"event_id % 3 = {i}").select("event_type", "user_id")
-            for i in range(3)
-        ]
-        for i, s in enumerate(slices):
-            _write_slice(s, str(tmp_path / f"t{i}"), base + 10 * i)
-
-        prev = spark.conf.get(
-            "spark.sql.streaming.stateStore.providerClass", None
-        )
-        spark.conf.set(
-            "spark.sql.streaming.stateStore.providerClass",
-            "org.apache.spark.sql.execution.streaming."
-            "state.RocksDBStateStoreProvider",
-        )
-        try:
-            stream = (
-                spark.readStream.schema(slices[0].schema)
-                .option("maxFilesPerTrigger", "1")
-                .parquet(str(tmp_path / "t*"))
-            )
-            sk = HllSketch(p=12, key_col="user_id")
-            out = stateful_group_sketch_tws(
-                stream, "event_type", ["user_id"], sk,
-                finish=lambda s, st: s.estimate(st),
-            )
-            q = (
-                out.writeStream.format("memory")
-                .queryName("tws_state_test")
-                .outputMode("update")
-                .trigger(availableNow=True)
-                .start()
-            )
-            q.awaitTermination()
-        finally:
-            if prev is None:
-                spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-            else:
-                spark.conf.set(
-                    "spark.sql.streaming.stateStore.providerClass", prev
-                )
-        pdf = spark.sql("select * from tws_state_test").toPandas()
-        final = pdf.sort_values("n_rows").groupby("group").last()["estimate"]
-
-        from xorfilter_net_spark.sketches.base import aggregate_by_group
-
-        batch_states = {
-            r["event_type"]: sk.estimate(sk.deserialize(bytes(r["state"])))
-            for r in aggregate_by_group(
-                ev, ["event_type"], ["user_id"], sk
-            ).collect()
-        }
-        assert set(final.index) == set(batch_states)
-        for g, est in final.items():
-            # stream == batch: merge associativity across micro-batches
-            assert est == int(batch_states[g])
-        # state survived micro-batches: final n_rows == full group counts
-        totals = pdf.groupby("group")["n_rows"].max()
-        counts = {
-            r["event_type"]: r["c"]
-            for r in ev.groupBy("event_type")
-            .agg(F.count(F.lit(1)).alias("c"))
-            .collect()
-        }
-        for g, n in totals.items():
-            assert n == counts[g]
-
-    def test_tws_gate_reason_pinned(self):
-        """When the TWS path is gated off, the reason must be exactly
-        the documented one — protobuf (the state-API client's wire
-        format) is unimportable — so the skip above is a verified
-        environment fact, not a silent rot path. In environments WITH
-        protobuf this asserts the gate opens (and the real test above
-        runs)."""
-        from xorfilter_net_spark.streaming.windowed import tws_available
-
-        try:
-            import google.protobuf  # noqa: F401
-
-            have_protobuf = True
-        except ImportError:
-            have_protobuf = False
-        assert tws_available() == have_protobuf
 
 
 class TestStreamingSessionize:

@@ -53,6 +53,9 @@ def centroid_pairs(
         .select("grp", "dim", q.alias("q"))
         .groupBy("grp", "dim")
         .agg(F.sum("q").alias("s"), F.count(F.lit(1)).alias("cnt"))
+        # the guard below is an action; persisting lets the pair stage
+        # read the g x d table instead of re-running the corpus aggregate
+        .persist()
     )
     # int64 guard on the g x d table (tiny — one scalar collect, the
     # kmeans-state pattern): the pair stage sums d products of

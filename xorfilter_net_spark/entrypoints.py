@@ -5970,91 +5970,6 @@ def _postings_oracle() -> None:
 _postings_oracle()
 
 
-_UNIGRAM_CACHE: dict = {}
-
-
-def _unigram_model(spark: SparkSession, sf_dir: str) -> dict:
-    """Deterministic (corpus, hyperparams) -> model; memoized so the two
-    contract queries train once per session."""
-    if sf_dir not in _UNIGRAM_CACHE:
-        from .text.unigram_lm import train_unigram
-
-        docs = load_table(spark, sf_dir, "documents")
-        _UNIGRAM_CACHE[sf_dir] = train_unigram(
-            docs, vocab_size=48, max_piece_len=5, max_seed=180,
-            em_iters=2, prune_frac=0.3,
-        )
-    return _UNIGRAM_CACHE[sf_dir]
-
-
-def _assert_unigram_model_invariants(logp: dict) -> None:
-    """Model-table invariants that must hold for ANY corpus (raised
-    loudly so the rows-only driver gate's green means 'ran AND the
-    invariants held', not just 'returned rows'): log-probs are
-    non-positive (each is log of a ratio <= 1), total piece mass stays
-    in the unit band (EM normalizes; pruning only removes mass; the
-    char-coverage floor adds <= n*1e-9), and no piece exceeds the seed
-    length cap."""
-    import math
-
-    bad_lp = [p for p, lp in logp.items() if lp > 0.0]
-    if bad_lp:
-        raise AssertionError(f"unigram: positive log-probs for {bad_lp[:5]}")
-    mass = sum(math.exp(lp) for lp in logp.values())
-    if not (0.0 < mass <= 1.0 + 1e-6):
-        raise AssertionError(f"unigram: piece mass {mass} outside (0, 1]")
-    too_long = [p for p in logp if len(p) > 5]
-    if too_long:
-        raise AssertionError(f"unigram: pieces over max_len: {too_long[:5]}")
-
-
-@query("unigram_pieces_documents", None)
-def q_unigram_pieces(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Unigram-LM tokenizer training (text/unigram_lm.py, Kudo ACL'18):
-    EM over the word table with forward-backward lattice E-steps,
-    pruned to 48 pieces. Iterative float lattice -> rows-only gate, but
-    strengthened (r03 verdict item 3): the query RAISES unless the
-    model invariants hold (non-positive log-probs, unit-band piece
-    mass, length cap), and the value-oracled sibling
-    ``unigram_invariants_ok`` checks the corpus-derivable facts against
-    SQL truth. The value-exact check for the EM numbers themselves is
-    the single-machine replay differential in tests/test_unigram_lm.py."""
-    logp = _unigram_model(spark, sf_dir)
-    _assert_unigram_model_invariants(logp)
-    return spark.createDataFrame(
-        sorted((p, lp) for p, lp in logp.items()),
-        "piece string, log_prob double",
-    )
-
-
-@query("unigram_encode_stats", None)
-def q_unigram_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Viterbi encoding with the trained unigram vocabulary — map-only
-    Arrow kernel; per-doc piece counts. Rows-only gate (iterative
-    upstream), strengthened (r03 verdict item 3): a distributed
-    character-conservation check runs over EVERY document (a Viterbi
-    segmentation concatenates back to the word, so per-doc summed piece
-    length must equal the doc's non-space char count) and the query
-    RAISES on any violation; the Viterbi argmax property itself is
-    spot-verified per-word in ``unigram_invariants_ok``."""
-    from .text.unigram_lm import encode_unigram
-
-    docs = load_table(spark, sf_dir, "documents")
-    logp = _unigram_model(spark, sf_dir)
-    enc = encode_unigram(docs.select("doc_id", "text"), logp, max_piece_len=5)
-    bad = enc.filter(
-        F.expr("aggregate(pieces, 0, (a, p) -> a + length(p))")
-        != F.length(F.regexp_replace(F.coalesce("text", F.lit("")), " ", ""))
-    ).count()
-    if bad:
-        raise AssertionError(
-            f"unigram encode: {bad} docs fail char conservation"
-        )
-    # enc is a map-only kernel over the doc scan — recomputing it for
-    # the returned projection is one extra cheap pass, no persist needed
-    return enc.select("doc_id", F.size("pieces").alias("n_pieces"))
-
-
 @query(
     "unigram_invariants_ok",
     # the corpus-derivable facts are SQL truth: the single-char piece
@@ -6095,10 +6010,13 @@ def q_unigram_invariants(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     import math
 
-    from .text.unigram_lm import encode_unigram, word_counts
+    from .text.unigram_lm import encode_unigram, train_unigram, word_counts
 
     docs = load_table(spark, sf_dir, "documents")
-    logp = _unigram_model(spark, sf_dir)
+    logp = train_unigram(
+        docs, vocab_size=48, max_piece_len=5, max_seed=180,
+        em_iters=2, prune_frac=0.3,
+    )
 
     n_singles = sum(1 for p in logp if len(p) == 1)
     vocab_le = len(logp) <= max(48, n_singles)
@@ -7422,9 +7340,12 @@ def q_rolling_distinct_hll(spark: SparkSession, sf_dir: str) -> DataFrame:
     in-query boolean that the HLL estimate lands within the 6-sigma
     HLL++ band of that exact answer. A period anchored by only one of
     the two runs shows up as a row-count mismatch."""
-    from .sketches.base import aggregate_by_group
     from .sketches.hll import HllSketch
-    from .sketches.rolling import rolling_distinct_exact, rolling_state_window
+    from .sketches.rolling import (
+        _period_states,
+        rolling_distinct_exact,
+        rolling_state_window,
+    )
 
     ev = load_table(spark, sf_dir, "events")
     exact = {
@@ -7434,12 +7355,7 @@ def q_rolling_distinct_hll(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).collect()
     }
     sk = HllSketch(p=12, key_col="__k")
-    e = ev.selectExpr(
-        "cast(floor(unix_micros(cast(ts as timestamp)) / 86400000000) "
-        "as bigint) as period",
-        "user_id as __k",
-    ).filter("__k is not null and period is not null")
-    states = aggregate_by_group(e, ["period"], ["__k"], sk)
+    states = _period_states(ev, F.col("user_id"), "ts", 86400, sk)
     approx = {
         r["period"]: r["n_rolling"]
         for r in rolling_state_window(

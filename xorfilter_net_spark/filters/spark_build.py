@@ -107,6 +107,17 @@ def key_digests_jvm(df: DataFrame, key_col: str) -> DataFrame:
     return df.select(d0.alias("d0"), d1.alias("d1"))
 
 
+def _digest_lane(jvm_digests: bool):
+    """(digest function, digest_kind, addressing) of a sharded build.
+    JVM xxhash64 digests pair with 'sqlhash' slot addressing, so the
+    filter is probe-able with zero Python (``probe_sql``); the Arrow
+    murmur kernel pairs with 'digest' addressing (byte parity with the
+    Python probe)."""
+    if jvm_digests:
+        return key_digests_jvm, "xxhash64jvm", "sqlhash"
+    return key_digests, "murmur", "digest"
+
+
 def build_filter(
     df: DataFrame, key_col: str, width: int = 8, seed: int = 0, kind: str = "xor"
 ):
@@ -305,15 +316,23 @@ class ShardedFilter:
 
     @property
     def metrics(self) -> dict:
-        n = sum(f.metrics.get("n_keys", 0) for f in self.shards.values())
-        size = sum(f.size for f in self.shards.values())
+        s = _shard_summary(f.meta() for f in self.shards.values())
         return {
             "num_shards": self.num_shards,
-            "n_keys": n,
-            "table_size": size,
-            "bits_per_key": size * self.width / max(n, 1),
-            "max_attempts": max(f.attempts for f in self.shards.values()),
+            **s,
+            "bits_per_key": s["table_size"] * self.width / max(s["n_keys"], 1),
         }
+
+
+def _shard_summary(metas) -> dict:
+    """n_keys, table_size and max_attempts over shard metas (the
+    ``filter.meta()`` dicts a ``SHARD_SCHEMA`` row carries as JSON)."""
+    metas = list(metas)
+    return {
+        "n_keys": sum(m["metrics"].get("n_keys", 0) for m in metas),
+        "table_size": sum(m["size"] for m in metas),
+        "max_attempts": max((m.get("attempts", 1) for m in metas), default=0),
+    }
 
 
 def _dedup_digests(d0: np.ndarray, d1: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
@@ -404,28 +423,23 @@ def build_sharded_filter(
     seed: int = 0,
     jvm_digests: bool = False,
     dedup: str = "in_shard",
-    addressing: str | None = None,
     kind: str = "xor",
 ) -> ShardedFilter:
     """Sharded filter of family ``kind`` (see ``shard_frame``), collected
-    to the driver.
-
-    ``addressing``: slot-addressing mode. Defaults to 'sqlhash' for
-    jvm-digest builds (making the filter probe-able with zero Python via
-    ``probe_sql``) and 'digest' for the murmur byte-parity path.
+    to the driver. ``jvm_digests=True`` builds with 'sqlhash' slot
+    addressing, probe-able with zero Python via ``probe_sql``; the
+    default murmur path uses 'digest' addressing (see ``_digest_lane``).
     """
-    if addressing is None:
-        addressing = "sqlhash" if jvm_digests else "digest"
-    dig = (key_digests_jvm if jvm_digests else key_digests)(df, key_col)
-    rows = shard_frame(dig, num_shards, width, seed, addressing, dedup, kind)
+    digest_fn, digest_kind, addressing = _digest_lane(jvm_digests)
+    rows = shard_frame(
+        digest_fn(df, key_col), num_shards, width, seed, addressing, dedup, kind
+    )
     shards = {
         int(r.shard): _shard_filter(r.meta, r.slots)
         for r in rows.toPandas().itertuples(index=False)
     }
     return ShardedFilter(
-        width, seed, shards, num_shards,
-        "xxhash64jvm" if jvm_digests else "murmur",
-        addressing, kind,
+        width, seed, shards, num_shards, digest_kind, addressing, kind
     )
 
 
@@ -437,9 +451,10 @@ def probe_sql(
 ) -> DataFrame:
     """Zero-Python membership probe, fully inside whole-stage codegen.
 
-    Requires a filter built with ``jvm_digests=True`` (digests are
-    ``xxhash64`` of the key) and ``addressing='sqlhash'`` (slot mixing is
-    ``xxhash64(d0, seed_j)`` — the exact builtin the JVM can recompute).
+    Requires a filter built with ``jvm_digests=True``: digests are
+    ``xxhash64`` of the key and the addressing mode is 'sqlhash' (slot
+    mixing is ``xxhash64(d0, seed_j)`` — the exact builtin the JVM can
+    recompute).
     The plan is: per-row shard parameters from a small broadcast table,
     three slot indexes computed with ANSI-safe long arithmetic (the
     family's ``_SQL_FAMILIES`` entry), then three BROADCAST hash joins
@@ -459,8 +474,8 @@ def probe_sql(
     """
     if sxf.digest_kind != "xxhash64jvm" or sxf.mode != "sqlhash":
         raise ValueError(
-            "probe_sql requires a filter built with jvm_digests=True and "
-            f"addressing='sqlhash' (got digest_kind={sxf.digest_kind!r}, "
+            "probe_sql requires a filter built with jvm_digests=True, "
+            f"i.e. sqlhash addressing (got digest_kind={sxf.digest_kind!r}, "
             f"mode={sxf.mode!r}); use is_member for other filters"
         )
     params_df, slots_df = _probe_frames(df.sparkSession, sxf)

@@ -50,12 +50,12 @@ from pyspark.sql.types import BooleanType, StructField, StructType
 from ..kernels.column import digest_series as _digest_batch
 from .spark_build import (
     ShardedFilter,
+    _digest_lane,
     _flat_params,
     _shard_filter,
+    _shard_summary,
     _u64,
     jvm_digest_cols,
-    key_digests,
-    key_digests_jvm,
     params_pdf,
     shard_frame,
     sql_probe_plan,
@@ -99,11 +99,7 @@ class XorFilterTable:
             ]
             self._metrics = {
                 "num_shards_built": len(metas),
-                "n_keys": sum(m["metrics"].get("n_keys", 0) for m in metas),
-                "table_size": sum(m["size"] for m in metas),
-                "max_attempts": max(
-                    (m.get("attempts", 1) for m in metas), default=0
-                ),
+                **_shard_summary(metas),
             }
         return self._metrics
 
@@ -209,11 +205,11 @@ class XorFilterTable:
         ``hint("shuffle_hash")`` — the strategy that still works when
         the filter is terabytes: three shuffles of the probe corpus
         against a distributed, persisted slot table. Requires a
-        ``jvm_digests=True`` + ``addressing='sqlhash'`` build."""
+        ``jvm_digests=True`` (sqlhash-addressed) build."""
         if self.digest_kind != "xxhash64jvm" or self.mode != "sqlhash":
             raise ValueError(
-                "probe_sql requires a table built with jvm_digests=True "
-                f"and addressing='sqlhash' (got {self.digest_kind!r}, "
+                "probe_sql requires a table built with jvm_digests=True, "
+                f"i.e. sqlhash addressing (got {self.digest_kind!r}, "
                 f"{self.mode!r}); use XorFilterTable.probe instead"
             )
         spark = self.spark
@@ -290,7 +286,6 @@ def build_xor_filter_table(
     seed: int = 0,
     jvm_digests: bool = False,
     dedup: str = "in_shard",
-    addressing: str | None = None,
 ) -> XorFilterTable:
     """Build a sharded XOR filter and persist it as a distributed table.
 
@@ -300,12 +295,10 @@ def build_xor_filter_table(
     executors instead of collected, so the build has NO per-key serial
     stage and the artifact size is bounded by storage, not driver memory.
     """
-    if addressing is None:
-        addressing = "sqlhash" if jvm_digests else "digest"
-    dig = (key_digests_jvm if jvm_digests else key_digests)(df, key_col)
-    shard_frame(dig, num_shards, width, seed, addressing, dedup).write.mode(
-        "overwrite"
-    ).parquet(os.path.join(path, _SHARDS_DIR))
+    digest_fn, digest_kind, addressing = _digest_lane(jvm_digests)
+    shard_frame(
+        digest_fn(df, key_col), num_shards, width, seed, addressing, dedup
+    ).write.mode("overwrite").parquet(os.path.join(path, _SHARDS_DIR))
 
     spark = df.sparkSession
     # structural metadata only: aggregate metrics are computed lazily on
@@ -317,7 +310,7 @@ def build_xor_filter_table(
         "width": width,
         "seed": seed,
         "num_shards": num_shards,
-        "digest_kind": "xxhash64jvm" if jvm_digests else "murmur",
+        "digest_kind": digest_kind,
         "mode": addressing,
     }
     tmp = os.path.join(path, _META_FILE + ".tmp")

@@ -35,9 +35,8 @@ from pyspark.sql import DataFrame, SparkSession
 from ..filters.spark_build import (
     SHARD_SCHEMA,
     ShardedXorFilter,
+    _digest_lane,
     _shard_filter,
-    key_digests,
-    key_digests_jvm,
     shard_frame,
 )
 
@@ -172,7 +171,6 @@ def build_xor_filter_checkpointed(
     seed: int = 0,
     input_token: str = "",
     jvm_digests: bool = False,
-    addressing: str | None = None,
 ) -> tuple[ShardedXorFilter, dict]:
     """Checkpointed sharded XOR-filter build.
 
@@ -183,15 +181,11 @@ def build_xor_filter_checkpointed(
     ``input_token`` should identify the input dataset (e.g. its path +
     snapshot id); it chains into every stage fingerprint.
 
-    ``jvm_digests``/``addressing`` mirror ``build_sharded_filter``:
-    the scale path (xxhash64 digests in codegen, sqlhash addressing)
-    yields a checkpointed filter that ``probe_sql`` can evaluate with
-    zero Python.
+    ``jvm_digests`` mirrors ``build_sharded_filter``: the scale path
+    (xxhash64 digests in codegen, sqlhash addressing) yields a
+    checkpointed filter that ``probe_sql`` can evaluate with zero Python.
     """
-    if addressing is None:
-        addressing = "sqlhash" if jvm_digests else "digest"
-    digest_kind = "xxhash64jvm" if jvm_digests else "murmur"
-    digest_fn = key_digests_jvm if jvm_digests else key_digests
+    digest_fn, digest_kind, addressing = _digest_lane(jvm_digests)
 
     spark = df.sparkSession
     run = BuildRun(spark, run_dir)
@@ -303,7 +297,7 @@ def update_xor_filter_checkpointed(
     num_shards = base_art["num_shards"]
     digest_kind = base_art.get("digest_kind", "murmur")
     addressing = base_art.get("mode", "digest")
-    digest_fn = key_digests_jvm if digest_kind == "xxhash64jvm" else key_digests
+    digest_fn = _digest_lane(digest_kind == "xxhash64jvm")[0]
 
     base_fp = BuildRun(spark, base_run_dir)._load_manifest("shards") or {}
     if json.loads(base_fp.get("fingerprint", "{}")).get("format") != SHARD_SCHEMA:

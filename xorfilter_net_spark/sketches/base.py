@@ -45,10 +45,20 @@ class MergeableSketch(Protocol):
     def deserialize(self, blob: bytes) -> Any: ...
 
 
-def aggregate(
-    df: DataFrame, cols: list[str], sketch: MergeableSketch, depth: int = 2
-):
-    """Fold ``df[cols]`` into one sketch state (two-phase, log-depth merge)."""
+def merge_serialized(sketch: MergeableSketch, blobs) -> Any:
+    """Merge an iterable of serialized states into one state — the one
+    merge-a-column loop every state-table operator (rollups, trailing
+    windows, the streaming period store) runs per group."""
+    st = sketch.zero()
+    for blob in blobs:
+        st = sketch.merge(st, sketch.deserialize(bytes(blob)))
+    return st
+
+
+def _partition_states(
+    df: DataFrame, cols: list[str], sketch: MergeableSketch
+) -> DataFrame:
+    """Phase 1: one serialized state per non-empty input partition."""
 
     def partials(batches):
         st = sketch.zero()
@@ -59,10 +69,21 @@ def aggregate(
         if n:
             yield pd.DataFrame({"state": [sketch.serialize(st)]})
 
-    states = df.select(*cols).mapInPandas(partials, schema="state binary")
+    return df.select(*cols).mapInPandas(partials, schema="state binary")
+
+
+def _tree_merge(states: DataFrame, sketch: MergeableSketch, depth: int):
+    """Phase 2: log-depth merge of a ``state binary`` column."""
     rdd = states.rdd.map(lambda r: sketch.deserialize(bytes(r["state"])))
     zero = sketch.zero()
     return rdd.treeAggregate(zero, sketch.merge, sketch.merge, depth=depth)
+
+
+def aggregate(
+    df: DataFrame, cols: list[str], sketch: MergeableSketch, depth: int = 2
+):
+    """Fold ``df[cols]`` into one sketch state (two-phase, log-depth merge)."""
+    return _tree_merge(_partition_states(df, cols, sketch), sketch, depth)
 
 
 def aggregate_checkpointed(
@@ -104,26 +125,14 @@ def aggregate_checkpointed(
             "params": params or {},
         }
     )
-
-    def produce_partials() -> DataFrame:
-        def partials(batches):
-            st = sketch.zero()
-            n = 0
-            for pdf in batches:
-                st = sketch.update(st, pdf)
-                n += len(pdf)
-            if n:
-                yield pd.DataFrame({"state": [sketch.serialize(st)]})
-
-        return df.select(*cols).mapInPandas(partials, schema="state binary")
-
-    states = run.dataframe_stage("partials", fp_partials, produce_partials)
+    states = run.dataframe_stage(
+        "partials", fp_partials, lambda: _partition_states(df, cols, sketch)
+    )
 
     fp_merged = _fingerprint({"stage": "sketch_merged", "upstream": fp_partials})
 
     def produce_merged() -> dict:
-        rdd = states.rdd.map(lambda r: sketch.deserialize(bytes(r["state"])))
-        merged = rdd.treeAggregate(sketch.zero(), sketch.merge, sketch.merge, depth=depth)
+        merged = _tree_merge(states, sketch, depth)
         return {"state_b64": base64.b64encode(sketch.serialize(merged)).decode()}
 
     artifact = run.json_stage("merged", fp_merged, produce_merged)

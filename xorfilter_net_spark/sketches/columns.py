@@ -35,7 +35,7 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql.functions import pandas_udf
 
-from .base import MergeableSketch
+from .base import MergeableSketch, merge_serialized
 
 
 def _group_fields(df: DataFrame, group_cols: list[str]) -> str:
@@ -101,9 +101,7 @@ def merge_states(
     fields = _group_fields(states, group_cols)
 
     def per_group(keys, pdf: pd.DataFrame) -> pd.DataFrame:
-        st = sketch.zero()
-        for blob in pdf[state_col]:
-            st = sketch.merge(st, sketch.deserialize(bytes(blob)))
+        st = merge_serialized(sketch, pdf[state_col])
         row: dict[str, list] = {c: [k] for c, k in zip(group_cols, keys)}
         row["state"] = [sketch.serialize(st)]
         return pd.DataFrame(row)

@@ -8,14 +8,13 @@ per-item weight w^age; with half-life = one period the weight is
 arithmetic end to end (the repo's micro-int convention: no float pow,
 no cross-engine ulp).
 
-Shape: reuses the per-period Misra-Gries state table (ONE corpus pass,
-``aggregate_by_group`` — map-side combine, only k-bounded states cross
-the wire), restricts to the trailing ``window`` periods, and reduces
-the ≤ k×window surviving (period, key, count) entries with integer
-weights. The sweep is O(k × window) regardless of corpus size, and the
-states are the SAME materialized table the rolling family maintains —
-at 100 TB the decayed answer costs one tiny state-table scan, not a
-corpus pass.
+Shape: reuses the per-period Misra-Gries state table (ONE corpus pass
+through the rolling family's period fold), restricts to the trailing
+``window`` periods, and reduces the ≤ k×window surviving (period, key,
+count) entries with integer weights. The sweep is O(k × window)
+regardless of corpus size, and the states are the SAME materialized
+table the rolling family maintains — at 100 TB the decayed answer costs
+one tiny state-table scan, not a corpus pass.
 
 Exactness contract (the registered query's regime): when distinct keys
 per period never exceed k, every MG table is exact, so the decayed
@@ -33,7 +32,7 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .base import aggregate_by_group
+from .rolling import _period_states
 
 
 def decayed_topk_mg(
@@ -57,23 +56,10 @@ def decayed_topk_mg(
     """
     from .misra_gries import MisraGriesSketch
 
-    if period_seconds <= 0:
-        raise ValueError("period_seconds must be positive")
-    if not 1 <= window <= 62:
-        # weights alone are 2^(window-1) <= 2^61; the full score
-        # (sum of count x weight) is overflow-CHECKED at sweep time —
-        # Python ints are exact, so a score past int64 raises loudly
-        # instead of wrapping in the Arrow long column
-        raise ValueError("window must be in [1, 62]")
     sk = MisraGriesSketch(k=k, key_col="__k")
-    e = events.select(
-        F.floor(
-            F.unix_micros(F.col(ts_col).cast("timestamp"))
-            / F.lit(period_seconds * 1_000_000)
-        ).alias("period"),
-        F.col(key_col).cast("string").alias("__k"),
-    ).filter(F.col("__k").isNotNull() & F.col("period").isNotNull())
-    states = aggregate_by_group(e, ["period"], ["__k"], sk)
+    states = _period_states(
+        events, F.col(key_col).cast("string"), ts_col, period_seconds, sk
+    )
     return decayed_scores_from_states(
         events.sparkSession, states, sk, window=window, top=top
     )
@@ -91,6 +77,10 @@ def decayed_scores_from_states(
     (streaming/rolling.py maintains the identical table shape), so
     stream == batch is the contract by construction."""
     if not 1 <= window <= 62:
+        # weights alone are 2^(window-1) <= 2^61; the full score
+        # (sum of count x weight) is overflow-CHECKED at sweep time —
+        # Python ints are exact, so a score past int64 raises loudly
+        # instead of wrapping in the Arrow long column
         raise ValueError("window must be in [1, 62]")
     # one scalar to the driver: the as-of period (same convention as the
     # graph family's convergence scalars)

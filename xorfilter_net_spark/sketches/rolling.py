@@ -30,10 +30,10 @@ engine).
 from __future__ import annotations
 
 import pandas as pd
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from .base import MergeableSketch, aggregate_by_group
+from .base import MergeableSketch, aggregate_by_group, merge_serialized
 from .bitmap import BitmapSketch
 
 __all__ = [
@@ -42,6 +42,80 @@ __all__ = [
     "rolling_topk_mg",
     "rolling_quantile_kll",
 ]
+
+
+def _period_states(
+    events: DataFrame,
+    value: Column,
+    ts_col: str,
+    period_seconds: int,
+    sketch: MergeableSketch,
+    group_cols: list[str] | None = None,
+) -> DataFrame:
+    """(group..., period, state) — one ``sketch`` state per (group,
+    period) from ONE pass over ``events``. ``value`` is exposed to the
+    sketch as ``__k``; ``period = floor(unix_micros(ts) / period_us)``,
+    the bucketing every oracle replays as ``floor(epoch_us(ts) / ...)``.
+    Rows with a null value, timestamp or group key are dropped."""
+    if period_seconds <= 0:
+        raise ValueError("period_seconds must be positive")
+    gcols = list(group_cols or [])
+    e = events.select(
+        *gcols,
+        F.floor(
+            F.unix_micros(F.col(ts_col).cast("timestamp"))
+            / F.lit(period_seconds * 1_000_000)
+        ).alias("period"),
+        value.alias("__k"),
+    )
+    keep = F.col("__k").isNotNull() & F.col("period").isNotNull()
+    for g in gcols:
+        keep = keep & F.col(g).isNotNull()
+    return aggregate_by_group(e.filter(keep), gcols + ["period"], ["__k"], sketch)
+
+
+def _window_merge(
+    states: DataFrame,
+    sketch: MergeableSketch,
+    window: int,
+    finish,
+    out_schema: str,
+    group_cols: list[str] | None = None,
+    period_col: str = "period",
+) -> DataFrame:
+    """(group..., period_col, out columns) for every period present in
+    the (group..., period_col, state) table: ``finish(merge(states of
+    [period-window+1, period]))`` per group. ``finish`` maps the merged
+    state to the output columns (name -> list, any common length, so a
+    window may answer with a whole table). A (group, period) state fans
+    out to the group's next ``window`` windows; a semi-join keeps only
+    windows anchored at a period that exists for the group."""
+    if window < 1:
+        raise ValueError("window must be >= 1")
+    gcols = list(group_cols or [])
+    p = F.col(period_col)
+    contrib = states.select(
+        *gcols,
+        F.explode(F.sequence(p, p + (window - 1))).alias("__target"),
+        "state",
+    )
+    anchors = states.select(*gcols, p.alias("__target")).distinct()
+    src = contrib.join(anchors, gcols + ["__target"], "left_semi")
+    fields = "".join(
+        f"{g} {states.schema[g].dataType.simpleString()}, " for g in gcols
+    )
+
+    def per_window(keys, pdf: pd.DataFrame) -> pd.DataFrame:
+        cols = finish(merge_serialized(sketch, pdf["state"]))
+        n = len(next(iter(cols.values())))
+        row = {c: [k] * n for c, k in zip(gcols, keys)}
+        row[period_col] = [keys[-1]] * n
+        row.update(cols)
+        return pd.DataFrame(row)
+
+    return src.groupBy(*gcols, "__target").applyInPandas(
+        per_window, schema=f"{fields}{period_col} long, {out_schema}"
+    )
 
 
 def rolling_state_window(
@@ -56,32 +130,10 @@ def rolling_state_window(
     (a ``(period, state binary)`` table): ``finish(merge(states of
     [period-window+1, period]))``. Trailing windows at the start of the
     data contain fewer periods, as a trailing window should."""
-    if window < 1:
-        raise ValueError("window must be >= 1")
-    contrib = period_states.select(
-        F.explode(
-            F.sequence(
-                F.col(period_col), F.col(period_col) + (window - 1)
-            )
-        ).alias("__target"),
-        "state",
-    )
-    # only emit windows anchored at a period that actually exists
-    anchors = period_states.select(
-        F.col(period_col).alias("__target")
-    ).distinct()
-    src = contrib.join(anchors, "__target", "left_semi")
-
-    def merge_group(keys, pdf: pd.DataFrame) -> pd.DataFrame:
-        st = sketch.zero()
-        for blob in pdf["state"]:
-            st = sketch.merge(st, sketch.deserialize(bytes(blob)))
-        return pd.DataFrame(
-            {period_col: [keys[0]], out_col: [finish(st)]}
-        )
-
-    return src.groupBy("__target").applyInPandas(
-        merge_group, schema=f"{period_col} long, {out_col} long"
+    return _window_merge(
+        period_states, sketch, window,
+        lambda st: {out_col: [finish(st)]}, f"{out_col} long",
+        period_col=period_col,
     )
 
 
@@ -109,47 +161,22 @@ def rolling_topk_mg(
     keys (count desc, key asc — deterministic)."""
     from .misra_gries import MisraGriesSketch
 
-    if period_seconds <= 0:
-        raise ValueError("period_seconds must be positive")
-    if window < 1:
-        raise ValueError("window must be >= 1")
     sk = MisraGriesSketch(k=k, key_col="__k")
-    e = events.select(
-        F.floor(
-            F.unix_micros(F.col(ts_col).cast("timestamp"))
-            / F.lit(period_seconds * 1_000_000)
-        ).alias("period"),
-        F.col(key_col).cast("string").alias("__k"),
-    ).filter(F.col("__k").isNotNull() & F.col("period").isNotNull())
-    states = aggregate_by_group(e, ["period"], ["__k"], sk)
-    contrib = states.select(
-        F.explode(
-            F.sequence(F.col("period"), F.col("period") + (window - 1))
-        ).alias("__target"),
-        "state",
+    states = _period_states(
+        events, F.col(key_col).cast("string"), ts_col, period_seconds, sk
     )
-    anchors = states.select(F.col("period").alias("__target")).distinct()
-    src = contrib.join(anchors, "__target", "left_semi")
 
-    def merge_group(keys, pdf: pd.DataFrame) -> pd.DataFrame:
-        st = sk.zero()
-        for blob in pdf["state"]:
-            st = sk.merge(st, sk.deserialize(bytes(blob)))
+    def finish(st) -> dict:
         items = sorted(
             sk.finish(st).items(), key=lambda kv: (-kv[1], str(kv[0]))
-        )
-        if top is not None:
-            items = items[:top]
-        return pd.DataFrame(
-            {
-                "period": [keys[0]] * len(items),
-                "key": [str(key) for key, _ in items],
-                "est_count": [int(c) for _, c in items],
-            }
-        )
+        )[:top]
+        return {
+            "key": [str(key) for key, _ in items],
+            "est_count": [int(c) for _, c in items],
+        }
 
-    return src.groupBy("__target").applyInPandas(
-        merge_group, schema="period long, key string, est_count long"
+    return _window_merge(
+        states, sk, window, finish, "key string, est_count long"
     )
 
 
@@ -166,57 +193,14 @@ def rolling_distinct_exact(
     values in the trailing ``window`` periods ending at each of the
     group's active periods, via per-(group, period) bitmap states.
     ``group_cols=None`` gives the global roll-up (one state stream)."""
-    if period_seconds <= 0:
-        raise ValueError("period_seconds must be positive")
-    if window < 1:
-        raise ValueError("window must be >= 1")
-    gcols = list(group_cols or [])
     sk = BitmapSketch(capacity, key_col="__k")
-    e = events.select(
-        *gcols,
-        F.floor(
-            F.unix_micros(F.col(ts_col).cast("timestamp"))
-            / F.lit(period_seconds * 1_000_000)
-        ).alias("period"),
-        F.col(key_col).alias("__k"),
-    ).filter(F.col("__k").isNotNull() & F.col("period").isNotNull())
-    for g in gcols:
-        e = e.filter(F.col(g).isNotNull())
-    states = aggregate_by_group(e, gcols + ["period"], ["__k"], sk)
-    if not gcols:
-        return rolling_state_window(
-            states, sk, sk.estimate, window, out_col="n_rolling"
-        )
-    # grouped fan-out: a (group, period) state serves the group's own
-    # next W windows; anchors are the group's active periods
-    contrib = states.select(
-        *gcols,
-        F.explode(
-            F.sequence(F.col("period"), F.col("period") + (window - 1))
-        ).alias("__target"),
-        "state",
+    states = _period_states(
+        events, F.col(key_col), ts_col, period_seconds, sk, group_cols
     )
-    anchors = states.select(
-        *gcols, F.col("period").alias("__target")
-    ).distinct()
-    src = contrib.join(anchors, gcols + ["__target"], "left_semi")
-    gschema = ", ".join(
-        f"{f.name} {f.dataType.simpleString()}"
-        for f in states.select(*gcols).schema.fields
-    )
-
-    def merge_group(keys, pdf: pd.DataFrame) -> pd.DataFrame:
-        st = sk.zero()
-        for blob in pdf["state"]:
-            st = sk.merge(st, sk.deserialize(bytes(blob)))
-        row = {c: [k] for c, k in zip(gcols, keys[:-1])}
-        row["period"] = [keys[-1]]
-        row["n_rolling"] = [sk.estimate(st)]
-        return pd.DataFrame(row)
-
-    return src.groupBy(*gcols, "__target").applyInPandas(
-        merge_group,
-        schema=f"{gschema}, period long, n_rolling long",
+    return _window_merge(
+        states, sk, window,
+        lambda st: {"n_rolling": [sk.estimate(st)]}, "n_rolling long",
+        group_cols,
     )
 
 
@@ -239,41 +223,16 @@ def rolling_quantile_kll(
     query's rank-band referee checks per window."""
     from .kll import KllSketch
 
-    if period_seconds <= 0:
-        raise ValueError("period_seconds must be positive")
-    if window < 1:
-        raise ValueError("window must be >= 1")
-    sk = KllSketch(k=k, value_col="__v")
-    e = events.select(
-        F.floor(
-            F.unix_micros(F.col(ts_col).cast("timestamp"))
-            / F.lit(period_seconds * 1_000_000)
-        ).alias("period"),
-        F.col(value_col).cast("double").alias("__v"),
-    ).filter(F.col("__v").isNotNull() & F.col("period").isNotNull())
-    states = aggregate_by_group(e, ["period"], ["__v"], sk)
-    contrib = states.select(
-        F.explode(
-            F.sequence(F.col("period"), F.col("period") + (window - 1))
-        ).alias("__target"),
-        "state",
+    sk = KllSketch(k=k, value_col="__k")
+    states = _period_states(
+        events, F.col(value_col).cast("double"), ts_col, period_seconds, sk
     )
-    anchors = states.select(F.col("period").alias("__target")).distinct()
-    src = contrib.join(anchors, "__target", "left_semi")
     q_list = [float(q) for q in qs]
-
-    def merge_group(keys, pdf: pd.DataFrame) -> pd.DataFrame:
-        st = sk.zero()
-        for blob in pdf["state"]:
-            st = sk.merge(st, sk.deserialize(bytes(blob)))
-        return pd.DataFrame(
-            {
-                "period": [keys[0]] * len(q_list),
-                "q_e6": [int(round(q * 1_000_000)) for q in q_list],
-                "est_value": [float(sk.quantile(st, q)) for q in q_list],
-            }
-        )
-
-    return src.groupBy("__target").applyInPandas(
-        merge_group, schema="period long, q_e6 long, est_value double"
+    return _window_merge(
+        states, sk, window,
+        lambda st: {
+            "q_e6": [int(round(q * 1_000_000)) for q in q_list],
+            "est_value": [float(sk.quantile(st, q)) for q in q_list],
+        },
+        "q_e6 long, est_value double",
     )

@@ -27,6 +27,7 @@ from __future__ import annotations
 import json
 import os
 import shutil
+from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -40,6 +41,12 @@ __all__ = [
     "view_meta",
 ]
 
+# The versioned store shared by the IVM view and the streaming period
+# store (streaming/rolling.py): ``data_v{n}`` parquet dirs plus a
+# ``view.json`` pointer {current, applied_batches} written LAST via
+# atomic rename. A crash before the pointer flips leaves the old version
+# current and the batch unledgered, so its redelivery rewrites
+# ``data_v{n+1}`` and commits exactly once.
 _META = "view.json"
 
 
@@ -48,9 +55,57 @@ def view_meta(view_dir: str) -> dict:
         return json.load(fh)
 
 
+def _data_dir(store_dir: str, version: int) -> str:
+    return os.path.join(store_dir, f"data_v{version}")
+
+
+def _commit(store_dir: str, meta: dict) -> None:
+    tmp = os.path.join(store_dir, _META + ".tmp")
+    with open(tmp, "w") as fh:
+        json.dump(meta, fh, indent=1)
+    os.replace(tmp, os.path.join(store_dir, _META))
+
+
+def _init_store(store_dir: str, data: DataFrame) -> None:
+    """Version 0 of a store holding ``data``, with an empty ledger."""
+    os.makedirs(store_dir, exist_ok=True)
+    data.write.mode("overwrite").parquet(_data_dir(store_dir, 0))
+    _commit(store_dir, {"current": 0, "applied_batches": []})
+
+
+def _apply_to_store(
+    spark: SparkSession,
+    store_dir: str,
+    batch_id: int,
+    step: Callable[[DataFrame], DataFrame],
+) -> dict:
+    """Write ``step(current data)`` as the next version and ledger
+    ``batch_id`` in the same pointer commit. Replayed batch ids are
+    skipped (exactly-once); all but the last two versions are pruned
+    after the pointer moves."""
+    m = view_meta(store_dir)
+    if batch_id in m["applied_batches"]:
+        return {"skipped_replay": True, "batch_id": batch_id}
+    cur = m["current"]
+    step(spark.read.parquet(_data_dir(store_dir, cur))).write.mode(
+        "overwrite"
+    ).parquet(_data_dir(store_dir, cur + 1))
+    _commit(
+        store_dir,
+        {
+            "current": cur + 1,
+            "applied_batches": sorted(set(m["applied_batches"]) | {batch_id}),
+        },
+    )
+    for d in os.listdir(store_dir):
+        if d.startswith("data_v") and int(d[6:]) < cur:
+            shutil.rmtree(os.path.join(store_dir, d), ignore_errors=True)
+    return {"batch_id": batch_id, "version": cur + 1}
+
+
 def read_view(spark: SparkSession, view_dir: str) -> DataFrame:
-    m = view_meta(view_dir)
-    return spark.read.parquet(os.path.join(view_dir, f"data_v{m['current']}"))
+    """The current version of a store (the view, or a period store)."""
+    return spark.read.parquet(_data_dir(view_dir, view_meta(view_dir)["current"]))
 
 
 def init_view(
@@ -58,18 +113,7 @@ def init_view(
 ) -> None:
     """Materialize the view's initial state (version 0) from a base
     snapshot (may be an empty frame for a from-scratch stream)."""
-    os.makedirs(view_dir, exist_ok=True)
-    agg_view(base, group_cols, sum_cols).write.mode("overwrite").parquet(
-        os.path.join(view_dir, "data_v0")
-    )
-    _commit(view_dir, {"current": 0, "applied_batches": []})
-
-
-def _commit(view_dir: str, meta: dict) -> None:
-    tmp = os.path.join(view_dir, _META + ".tmp")
-    with open(tmp, "w") as fh:
-        json.dump(meta, fh, indent=1)
-    os.replace(tmp, os.path.join(view_dir, _META))
+    _init_store(view_dir, agg_view(base, group_cols, sum_cols))
 
 
 def apply_batch(
@@ -82,27 +126,10 @@ def apply_batch(
 ) -> dict:
     """Fold one change micro-batch into the persisted view. Replayed
     batch ids are skipped (exactly-once)."""
-    m = view_meta(view_dir)
-    if batch_id in m["applied_batches"]:
-        return {"skipped_replay": True, "batch_id": batch_id}
-    cur = m["current"]
-    view = spark.read.parquet(os.path.join(view_dir, f"data_v{cur}"))
-    new = apply_changes(view, changes, group_cols, sum_cols)
-    new.write.mode("overwrite").parquet(
-        os.path.join(view_dir, f"data_v{cur + 1}")
+    return _apply_to_store(
+        spark, view_dir, batch_id,
+        lambda view: apply_changes(view, changes, group_cols, sum_cols),
     )
-    _commit(
-        view_dir,
-        {
-            "current": cur + 1,
-            "applied_batches": sorted(set(m["applied_batches"]) | {batch_id}),
-        },
-    )
-    # prune all but the last two versions (the pointer already moved)
-    for d in os.listdir(view_dir):
-        if d.startswith("data_v") and int(d[6:]) < cur:
-            shutil.rmtree(os.path.join(view_dir, d), ignore_errors=True)
-    return {"batch_id": batch_id, "version": cur + 1}
 
 
 def stream_maintain_agg_view(

@@ -3,14 +3,15 @@ state table (sketches/rolling.py) under an event stream, exactly once,
 and answer "distinct keys in the trailing W periods" at any moment
 without ever re-reading history.
 
-Each micro-batch aggregates to per-period partial states (one corpus
-pass over the BATCH only), which OR-merge into the persisted
-(period, state) table — the same idempotent commit discipline as
-streaming/ivm.py: versioned ``data_v{n}`` dirs, a ``view.json`` pointer
-written LAST via atomic rename, the applied-batch ledger inside the
-pointer (replayed foreachBatch ids skip; retries never double-apply —
-and bitmap OR is idempotent anyway, a belt under the braces). State
-table size is periods x state bytes, independent of event count.
+Each micro-batch aggregates to per-period partial states (the batch
+operators' period fold, over the BATCH only), which merge into the
+persisted (period, state) table (``merge_states``). The table lives in
+the versioned store streaming/ivm.py keeps for its view: versioned
+dirs, a ``view.json`` pointer written LAST via atomic rename, the
+applied-batch ledger inside the pointer (replayed foreachBatch ids
+skip; retries never double-apply — and bitmap OR is idempotent anyway,
+a belt under the braces). State table size is periods x state bytes,
+independent of event count.
 
 The rolling answer is then pure state algebra over the maintained table
 (``rolling_state_window``), identical to what the batch operator
@@ -23,17 +24,14 @@ the north_rule's mergeable-UDAF contract with the streaming ledger).
 
 from __future__ import annotations
 
-import json
-import os
-import shutil
-
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..sketches.base import MergeableSketch, aggregate_by_group
+from ..sketches.base import MergeableSketch
 from ..sketches.bitmap import BitmapSketch
-from ..sketches.rolling import rolling_state_window
+from ..sketches.columns import merge_states
+from ..sketches.rolling import _period_states, rolling_state_window
+from .ivm import _apply_to_store, _init_store, read_view
 
 __all__ = [
     "init_period_store",
@@ -43,52 +41,16 @@ __all__ = [
     "moment_anomalies_from_store",
 ]
 
-_META = "view.json"
-
-
-def _meta(store_dir: str) -> dict:
-    with open(os.path.join(store_dir, _META)) as fh:
-        return json.load(fh)
-
-
-def _commit(store_dir: str, meta: dict) -> None:
-    tmp = os.path.join(store_dir, _META + ".tmp")
-    with open(tmp, "w") as fh:
-        json.dump(meta, fh, indent=1)
-    os.replace(tmp, os.path.join(store_dir, _META))
-
 
 def init_period_store(spark: SparkSession, store_dir: str) -> None:
     """Empty (period, state) store, version 0."""
-    os.makedirs(store_dir, exist_ok=True)
-    spark.createDataFrame([], "period long, state binary").write.mode(
-        "overwrite"
-    ).parquet(os.path.join(store_dir, "data_v0"))
-    _commit(store_dir, {"current": 0, "applied_batches": []})
-
-
-def read_period_states(spark: SparkSession, store_dir: str) -> DataFrame:
-    m = _meta(store_dir)
-    return spark.read.parquet(
-        os.path.join(store_dir, f"data_v{m['current']}")
+    _init_store(
+        store_dir, spark.createDataFrame([], "period long, state binary")
     )
 
 
-def _period_partials(
-    batch: DataFrame,
-    sketch: MergeableSketch,
-    key_col: str,
-    ts_col: str,
-    period_seconds: int,
-) -> DataFrame:
-    e = batch.select(
-        F.floor(
-            F.unix_micros(F.col(ts_col).cast("timestamp"))
-            / F.lit(period_seconds * 1_000_000)
-        ).alias("period"),
-        F.col(key_col).alias("__k"),
-    ).filter(F.col("__k").isNotNull() & F.col("period").isNotNull())
-    return aggregate_by_group(e, ["period"], ["__k"], sketch)
+def read_period_states(spark: SparkSession, store_dir: str) -> DataFrame:
+    return read_view(spark, store_dir)
 
 
 def apply_batch(
@@ -101,42 +63,15 @@ def apply_batch(
     ts_col: str,
     period_seconds: int,
 ) -> dict:
-    m = _meta(store_dir)
-    if batch_id in m["applied_batches"]:
-        return {"skipped_replay": True, "batch_id": batch_id}
-    cur = m["current"]
-    old = spark.read.parquet(os.path.join(store_dir, f"data_v{cur}"))
-    new_partials = _period_partials(
-        batch, sketch, key_col, ts_col, period_seconds
+    """Merge one event micro-batch's per-period states into the store.
+    Replayed batch ids are skipped (exactly-once)."""
+    new = _period_states(
+        batch, F.col(key_col), ts_col, period_seconds, sketch
     )
-
-    def merge_group(keys, pdf: pd.DataFrame) -> pd.DataFrame:
-        st = sketch.zero()
-        for blob in pdf["state"]:
-            st = sketch.merge(st, sketch.deserialize(bytes(blob)))
-        return pd.DataFrame(
-            {"period": [keys[0]], "state": [sketch.serialize(st)]}
-        )
-
-    merged = (
-        old.unionByName(new_partials)
-        .groupBy("period")
-        .applyInPandas(merge_group, schema="period long, state binary")
+    return _apply_to_store(
+        spark, store_dir, batch_id,
+        lambda old: merge_states(old.unionByName(new), ["period"], sketch),
     )
-    merged.write.mode("overwrite").parquet(
-        os.path.join(store_dir, f"data_v{cur + 1}")
-    )
-    _commit(
-        store_dir,
-        {
-            "current": cur + 1,
-            "applied_batches": sorted(set(m["applied_batches"]) | {batch_id}),
-        },
-    )
-    for d in os.listdir(store_dir):
-        if d.startswith("data_v") and int(d[6:]) < cur:
-            shutil.rmtree(os.path.join(store_dir, d), ignore_errors=True)
-    return {"batch_id": batch_id, "version": cur + 1}
 
 
 def stream_update_period_states(

@@ -46,8 +46,6 @@ __all__ = [
     "windowed_agg",
     "windowed_distinct",
     "stateful_group_sketch",
-    "stateful_group_sketch_tws",
-    "tws_available",
     "streaming_dedup",
 ]
 
@@ -178,96 +176,5 @@ def stateful_group_sketch(
             stateStructType="blob binary, n_rows long",
             outputMode=output_mode,
             timeoutConf=GroupStateTimeout.NoTimeout,
-        )
-    )
-
-
-def tws_available() -> bool:
-    """True iff transformWithStateInPandas can actually run here (its
-    state-API client requires the ``protobuf`` package)."""
-    try:
-        import google.protobuf  # noqa: F401
-
-        return True
-    except ImportError:
-        return False
-
-
-class _SketchStatefulProcessor:
-    """``StatefulProcessor`` for transformWithStateInPandas — defined
-    lazily (the base class import lives in pyspark >= 4.0 only)."""
-
-    def __new__(cls, sketch: MergeableSketch, finish):
-        from pyspark.sql.streaming.stateful_processor import StatefulProcessor
-
-        class _P(StatefulProcessor):
-            def init(self, handle) -> None:
-                self._state = handle.getValueState(
-                    "sketch", "blob binary, n_rows long"
-                )
-
-            def handleInputRows(self, key, rows, timer_values):
-                if self._state.exists():
-                    blob, n_rows = self._state.get()
-                    st: Any = sketch.deserialize(bytes(blob))
-                    n_rows = int(n_rows)
-                else:
-                    st, n_rows = sketch.zero(), 0
-                for pdf in rows:
-                    st = sketch.update(st, pdf)
-                    n_rows += len(pdf)
-                self._state.update((sketch.serialize(st), n_rows))
-                yield pd.DataFrame(
-                    {
-                        "group": [key[0]],
-                        "estimate": [int(finish(sketch, st))],
-                        "n_rows": [int(n_rows)],
-                    }
-                )
-
-            def close(self) -> None:
-                pass
-
-        return _P()
-
-
-def stateful_group_sketch_tws(
-    stream_df: DataFrame,
-    group_col: str,
-    value_cols: list[str],
-    sketch: MergeableSketch,
-    finish,
-    output_mode: str = "update",
-) -> DataFrame:
-    """Running per-group sketch on the ``transformWithStateInPandas``
-    API (Spark 4, SPARK-49560) — same semantics and output schema as
-    ``stateful_group_sketch``, on the successor engine:
-
-    - state lives in named typed handles (``getValueState``) instead of
-      one opaque tuple, so follow-on work can add timers/TTL (e.g. evict
-      idle conversations) without re-encoding the whole state;
-    - requires the RocksDB state store provider (changelog-checkpointed,
-      the provider that actually scales to 10^8 group keys per executor:
-      state is on local SSD + incremental upload, not executor heap like
-      the default HDFS-backed provider).
-
-    Set ``spark.sql.streaming.stateStore.providerClass`` to
-    ``...state.RocksDBStateStoreProvider`` before starting the query.
-
-    Runtime dependency: the TWS state-API client speaks protobuf
-    (``pyspark.sql.streaming.proto``), so ``protobuf`` must be installed
-    on driver + executors (standard on real clusters via
-    ``pyspark[connect]``; absent in some minimal sandboxes — probe with
-    ``tws_available()`` and fall back to ``stateful_group_sketch``,
-    which has no extra dependency and identical output).
-    """
-    return (
-        stream_df.select(group_col, *value_cols)
-        .groupBy(group_col)
-        .transformWithStateInPandas(
-            _SketchStatefulProcessor(sketch, finish),
-            outputStructType="group string, estimate long, n_rows long",
-            outputMode=output_mode,
-            timeMode="None",
         )
     )
