@@ -4,7 +4,8 @@
 Times, with a fresh JVM per invocation (run via subprocess once per
 parallelism level):
   digest   — corpus scan + JVM xxhash64 digests, map-only noop sink
-  shuffle  — digests + hash repartition on shard, noop sink
+  shuffle  — digests + the library's shard exchange
+             (``spark_build._shard_exchange``), noop sink
   build    — the full build_xor_filter_table (adds per-shard Arrow
              dedup+peel+fill and the parquet artifact write)
 
@@ -30,10 +31,8 @@ def main() -> None:
     import shutil
     import tempfile
 
-    from pyspark.sql import functions as F
-
     from bench import make_spark, scaled_corpus
-    from xorfilter_net_spark.filters.spark_build import key_digests_jvm
+    from xorfilter_net_spark.filters.spark_build import _shard_exchange, key_digests_jvm
     from xorfilter_net_spark.filters.table import build_xor_filter_table
 
     spark = make_spark(CPUS)
@@ -61,13 +60,7 @@ def main() -> None:
         ("digest", lambda: noop(key_digests_jvm(corpus, "key"))),
         (
             "shuffle",
-            lambda: noop(
-                key_digests_jvm(corpus, "key")
-                .withColumn(
-                    "shard", F.pmod(F.col("d0"), F.lit(SHARDS)).cast("int")
-                )
-                .repartition(SHARDS, "shard")
-            ),
+            lambda: noop(_shard_exchange(key_digests_jvm(corpus, "key"), SHARDS)),
         ),
         (
             "build",

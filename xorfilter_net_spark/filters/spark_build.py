@@ -399,20 +399,34 @@ def shard_frame(
     first (map-side partial dedup) — cheaper when the corpus is highly
     duplicated, since the shard shuffle then carries only unique digests.
     """
-    dig = dig.withColumn("shard", F.pmod(F.col("d0"), F.lit(num_shards)).cast("int"))
     src = dig if dedup == "in_shard" else dig.dropDuplicates(["d0", "d1"])
-    # explicit hash-repartition on the grouping key: it satisfies the
-    # groupBy's distribution (no second exchange) and pins the peel
-    # stage's parallelism to num_shards. Left to AQE, coalescing sizes
-    # the reduce side by shuffle BYTES (~64MB advisory) — but the peel is
-    # CPU-heavy per byte, so byte-sized coalescing starves it of cores
-    # (measured 1.5x construction slowdown at local[8]).
     kernel = shard_build_kernel(width, seed, addressing, dedup, kind)
     return (
-        src.repartition(num_shards, "shard")
+        _shard_exchange(src, num_shards)
         .groupBy("shard")
         .applyInPandas(kernel, schema=SHARD_SCHEMA)
     )
+
+
+def _shard_exchange(dig: DataFrame, num_shards: int) -> DataFrame:
+    """(d0, d1) digest rows -> (d0, d1, shard) rows after the build's one
+    exchange: shard ``s`` goes to task ``s mod T``, with
+    ``T = min(num_shards, spark.sql.shuffle.partitions)``.
+
+    Each task runs one Python runner for all of its shards (groups reach
+    the kernel one shard at a time), so the fixed per-task runner cost is
+    paid T times, not num_shards times; and ``s mod T`` spreads the
+    shards evenly (at most ceil(num_shards / T) per task), which a hash of
+    the shard ids does not. The exchange's partitioning is the grouping
+    key itself, so the groupBy adds no second exchange. The count is
+    explicit, so AQE does not coalesce the stage: it would size the reduce
+    side by shuffle BYTES (~64MB advisory), but the peel is CPU-heavy per
+    byte, and byte-sized coalescing starves it of cores (measured 1.5x
+    construction slowdown at local[8])."""
+    parts = int(dig.sparkSession.conf.get("spark.sql.shuffle.partitions"))
+    return dig.withColumn(
+        "shard", F.pmod(F.col("d0"), F.lit(num_shards)).cast("int")
+    ).repartitionById(min(num_shards, parts), "shard")
 
 
 def build_sharded_filter(

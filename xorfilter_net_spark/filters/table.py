@@ -10,9 +10,12 @@ when one machine cannot hold it:
 
 build (``build_xor_filter_table``)
     digests (JVM ``xxhash64`` codegen, or the Arrow murmur kernel)
-    -> ONE hash shuffle on ``pmod(d0, num_shards)`` (uniform: d0 is a
-       hash lane, so conv_id skew cannot reach this exchange)
-    -> per-shard dedup + peel + fill in ``applyInPandas``
+    -> ONE exchange on the shard id ``s = pmod(d0, num_shards)``
+       (uniform: d0 is a hash lane, so conv_id skew cannot reach it):
+       shard ``s`` goes to task ``s mod T``, ``T = min(num_shards,
+       spark.sql.shuffle.partitions)``
+    -> per-shard dedup + peel + fill in ``applyInPandas``: each task
+       runs one Python runner and builds its shards one at a time
     -> parquet write of ``(shard, meta, slots)`` rows, executor-parallel.
     Summary metrics are assembled lazily on first ``.metrics`` access,
     reading ONLY the pruned ``meta`` column (bytes per shard, not per
