@@ -72,24 +72,71 @@ def _already_green() -> tuple[set[str], set[str]]:
 # clears the recheck — once the driver has certified the new contract
 # these names fall back to the verified block, so the set does not
 # permanently occupy front slots in later rounds.
-_RECHECK_AS_OF_ROUND = 4
+_RECHECK_AS_OF_ROUND = 5
 _RECHECK = {
-    # r05 ADVICE fixes: deterministic (idx, ts) window tiebreak + NULL
-    # turn_idx role-violation contract (both programs changed)
-    "conversation_lint_report",
-    # r05 ADVICE fix: explicit ROWS cumsum frame + (idx, role, text)
-    # tiebreak + oracle string_agg ordering
-    "q_merge_consecutive_turns",
-    # r05 ADVICE fix: prefix-free per-field md5 row encoding (both the
-    # Spark digest and the DuckDB replay changed)
-    "reconcile_tables_documents",
-    # r05 gate conversions: `select true` -> oracle-derived exact-
-    # baseline counts (ANN recall denominators) / stage-count values
-    # (checkpoint resume arithmetic)
-    "ann_lsh_recall_ok",
-    "ann_ivf_recall_ok",
-    "ann_pq_recall_ok",
+    # sharded static filters: one shard kernel and probe layer, the shard
+    # exchange, and one JVM digest lane for every sharded build
+    "fuse_sharded_zero_false_negatives",
+    "fuse_sql_probe_zero_false_negatives",
+    "xor_sharded_zero_false_negatives",
+    "xor_jvm_digest_zero_false_negatives",
+    "xor_sql_probe_zero_false_negatives",
+    "xor_table_cogroup_zero_false_negatives",
+    "q_filter_pruned_join",
+    "contamination_xor_pruned_documents",
+    # global filters: one build_filter / is_member for every family
+    "xor16_zero_false_negatives",
+    "xor8_fpr_within_bound",
+    "xor32_membership_semijoin",
+    "fuse16_zero_false_negatives",
+    "fuse8_space_fpr_ok",
+    "ribbon16_zero_false_negatives",
+    "ribbon_space_fpr_ok",
+    # checkpointed build and incremental update (JVM lane, shard rows)
+    "xor_incremental_update_ok",
+    "incremental_update_ok",
     "checkpoint_resume_ok",
+    # other code changed by the sharded-layer refactor
+    "synthetic_source_role_stats",
+    "fork_points_transcripts",
+    "centroid_pairs_embeddings",
+    # the mergeable-state layer: one period fold, window merge and
+    # versioned store for the rolling, decayed and streaming operators
+    "rolling_distinct_users",
+    "rolling_distinct_by_type",
+    "rolling_distinct_hll_ok",
+    "rolling_topk_event_types",
+    "rolling_quantile_event_values",
+    "decayed_topk_event_types",
+    "streaming_rolling_distinct",
+    "streaming_rolling_anomaly",
+    "streaming_decayed_topk",
+    "streaming_ivm_view",
+    "ivm_agg_view_documents",
+    "hll_rollup_events_ok",
+    "ddsketch_rollup_events_ok",
+    "unigram_invariants_ok",
+    # shared two-phase aggregate / state-column merge users
+    "bloom_zero_false_negatives",
+    "cbf_delete_semantics_ok",
+    "cms_event_type_counts",
+    "countsketch_event_type_counts",
+    "countsketch_f2_users_ok",
+    "countsketch_join_size_ok",
+    "fd_embeddings_ok",
+    "mg_heavy_hitters_event_types",
+    "bitmap_set_ops_users",
+    "hash_embed_ann_ok",
+    "streaming_sessionize_events",
+    # the sketch accumulator's single meta commit
+    "streaming_incremental_sketch_ok",
+    "streaming_topk_tools",
+    # the time-travel table's atomic pointer commit
+    "streaming_merge_versions",
+    "table_changes_v0_v2",
+    "timetravel_version_states",
+    "gdpr_purge_ok",
+    "dv_delete_semantics_ok",
 }
 
 # r05 ordering: close the registry. The 30 never-sampled names (every

@@ -281,7 +281,7 @@ def bench_filter_throughput(
         t0 = time.perf_counter()
         tab = build_xor_filter_table(
             corpus, "key", f"{art_root}/{tag}", num_shards=BENCH_SHARDS,
-            width=16, seed=12345, jvm_digests=True,
+            width=16, seed=12345,
         )
         t_build = time.perf_counter() - t0
 
@@ -290,53 +290,31 @@ def bench_filter_throughput(
         extras["artifact_load_sec"] = round(time.perf_counter() - t0, 3)
 
         if include_cogroup and tag == "main" and "probe_cogroup_keys_per_sec" not in extras:
-            # beyond-broadcast probe paths (the filter never loads on the
+            # the beyond-broadcast probe: the shard-cogrouped Arrow probe
+            # of the persisted artifact (the filter never loads on the
             # driver and never broadcasts). Each pass builds a fresh plan
-            # (shuffles cannot be skip-reused); min-of-2 per strategy —
-            # this VM's hypervisor steal makes single shots noisy by 3x
-            # (see BASELINE.md probe-crossover section).
-            def _timed_min(fn, reps=2):
-                best = None
-                for _ in range(reps):
-                    t0 = time.perf_counter()
-                    n = fn()
-                    dt = time.perf_counter() - t0
-                    assert n == n_probe, f"false negatives: {n_probe - n}"
-                    best = dt if best is None else min(best, dt)
-                return best
-
-            def _count(df):
-                return (
-                    df.agg(
-                        F.sum(F.col("is_member").cast("long")).alias("n")
-                    ).collect()[0]["n"]
+            # (shuffles cannot be skip-reused); min-of-2 — this VM's
+            # hypervisor steal makes single shots noisy by 3x (see
+            # BASELINE.md probe-crossover section).
+            best = None
+            for _ in range(2):
+                t0 = time.perf_counter()
+                n = (
+                    tab.probe(probe_df, "key")
+                    .agg(F.sum(F.col("is_member").cast("long")).alias("n"))
+                    .collect()[0]["n"]
                 )
-
-            # (a) zero-Python shuffled-hash-join probe over the persisted
-            #     distributed artifact. The first pass pays the one-time
-            #     artifact decode + persist of the flattened slot table —
-            #     reported as the cold cost; steady state is what a
-            #     deployment amortizes to (the decoded table is reused
-            #     for the artifact's lifetime)
-            dt = _timed_min(
-                lambda: _count(tab.probe_sql(probe_df, "key")), reps=1
-            )
-            extras["probe_table_sql_cold_sec"] = round(dt, 3)
-            extras["probe_table_sql_cold_keys_per_sec"] = int(n_probe / dt)
-            dt = _timed_min(lambda: _count(tab.probe_sql(probe_df, "key")))
-            extras["probe_table_sql_sec"] = round(dt, 3)
-            extras["probe_table_sql_keys_per_sec"] = int(n_probe / dt)
-            # (b) shard-cogrouped Arrow probe (the byte-parity fallback
-            #     for murmur-digest filters)
-            dt = _timed_min(lambda: _count(tab.probe(probe_df, "key")))
-            extras["probe_cogroup_sec"] = round(dt, 3)
-            extras["probe_cogroup_keys_per_sec"] = int(n_probe / dt)
+                dt = time.perf_counter() - t0
+                assert n == n_probe, f"false negatives: {n_probe - n}"
+                best = dt if best is None else min(best, dt)
+            extras["probe_cogroup_sec"] = round(best, 3)
+            extras["probe_cogroup_keys_per_sec"] = int(n_probe / best)
 
         if tag == "main" and "fuse_construction_keys_per_sec" not in extras:
             # fuse-family comparison point (one pass, not min-of-rounds):
             # same corpus, same shard shuffle shape; probe is the
-            # zero-Python SQL path (sqlhash addressing, the jvm-digest
-            # default — same plan shape as the XOR probe_sql), timed at
+            # zero-Python SQL path (sqlhash addressing, as every sharded
+            # build — same plan shape as the XOR probe_sql), timed at
             # steady state via plan re-execution like the main probe below
             from xorfilter_net_spark.filters.spark_build import (
                 build_sharded_filter,
@@ -345,7 +323,7 @@ def bench_filter_throughput(
             t0 = time.perf_counter()
             sff = build_sharded_filter(
                 corpus, "key", num_shards=BENCH_SHARDS, width=16,
-                seed=12345, jvm_digests=True, kind="fuse3",
+                seed=12345, kind="fuse3",
             )
             dt = time.perf_counter() - t0
             extras["fuse_construction_sec"] = round(dt, 3)

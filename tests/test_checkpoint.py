@@ -109,18 +109,70 @@ def test_checkpointed_jvm_sqlhash_build_sql_probe_and_resume(
     assert sxf1.to_dict() == sxf2.to_dict()
 
 
+def _as_murmur_run(run_dir: str) -> None:
+    """Rewrite a run dir's stage fingerprints and filter artifact the way
+    the removed murmur lane wrote them: digest kind 'murmur', 'digest'
+    addressing."""
+    from xorfilter_net_spark.pipeline.checkpoint import _fingerprint
+
+    up = None
+    for stage, field, value in (
+        ("digests", "digest_kind", "murmur"),
+        ("shards", "addressing", "digest"),
+        ("filter", None, None),
+    ):
+        man_p = os.path.join(run_dir, f"{stage}.manifest.json")
+        man = json.load(open(man_p))
+        fp = json.loads(man["fingerprint"])
+        if field:
+            fp[field] = value
+        if up is not None:
+            fp["up"] = up
+        man["fingerprint"] = up = _fingerprint(fp)
+        json.dump(man, open(man_p, "w"))
+    art_p = os.path.join(run_dir, "filter.json")
+    art = json.load(open(art_p))
+    art.update(digest_kind="murmur", mode="digest")
+    json.dump(art, open(art_p, "w"))
+
+
 def test_digest_kind_change_invalidates_digests_stage(spark, sf_tiny, tmp_path):
+    """A run dir written by the murmur lane resumes nothing: its digests
+    stage fingerprint names another digest kind, so digests, shards and
+    filter all rebuild on the JVM lane."""
     df = _keyed(spark, sf_tiny)
     run_dir = str(tmp_path / "run_kind")
-    _, m1 = build_xor_filter_checkpointed(
-        df, "key", run_dir, num_shards=4, width=8, seed=1, input_token="t"
-    )
-    _, m2 = build_xor_filter_checkpointed(
-        df, "key", run_dir, num_shards=4, width=8, seed=1, input_token="t",
-        jvm_digests=True,
-    )
+    kw = dict(num_shards=4, width=8, seed=1, input_token="t")
+    build_xor_filter_checkpointed(df, "key", run_dir, **kw)
+    _as_murmur_run(run_dir)
+    sxf, m2 = build_xor_filter_checkpointed(df, "key", run_dir, **kw)
     assert not m2["digests"]["resumed"]
     assert not m2["shards"]["resumed"]
+    assert not m2["filter"]["resumed"]
+    assert (sxf.digest_kind, sxf.mode) == ("xxhash64jvm", "sqlhash")
+
+
+def test_murmur_base_run_is_refused_by_update(spark, sf_tiny, tmp_path):
+    import pytest
+
+    from xorfilter_net_spark.pipeline.checkpoint import (
+        update_xor_filter_checkpointed,
+    )
+
+    df = _keyed(spark, sf_tiny)
+    base = str(tmp_path / "base")
+    build_xor_filter_checkpointed(
+        df, "key", base, num_shards=4, width=8, seed=1, input_token="t"
+    )
+    _as_murmur_run(base)
+    with pytest.raises(ValueError, match="rebuild"):
+        update_xor_filter_checkpointed(
+            df.limit(5), "key", base, str(tmp_path / "upd"), input_token="d"
+        )
+    with pytest.raises(ValueError, match="murmur"):
+        build_xor_filter_checkpointed(
+            df, "key", str(tmp_path / "lane"), jvm_digests=False
+        )
 
 
 def test_sketch_aggregate_checkpointed_resumes_identically(spark, sf_tiny, tmp_path):

@@ -38,7 +38,6 @@ def test_cli_build_probe_sketch_roundtrip(spark, sf_tiny, tmp_path, cli_out):
             "--width", "16",
             "--seed", "12345",
             "--num-shards", "4",
-            "--jvm-digests",
         ]
     )
     n_docs = spark.read.parquet(docs).count()
@@ -68,7 +67,6 @@ def test_cli_build_probe_sketch_roundtrip(spark, sf_tiny, tmp_path, cli_out):
             "--width", "16",
             "--seed", "12345",
             "--num-shards", "4",
-            "--jvm-digests",
         ]
     )
     assert resumed["n_keys"] == n_docs

@@ -48,6 +48,17 @@ def test_rows_only_queries_are_the_documented_iterative_set(registry):
     assert set(queries) - set(oracles) == set()
 
 
+def test_ordering_lists_name_registered_queries(registry):
+    """Every name the registry ordering lists (``_FRONT``, ``_RECHECK``)
+    is a registered query: a deregistered query left in a list would be
+    silently ignored."""
+    import __spark_entry__ as e
+
+    queries, _ = registry
+    assert set(e._FRONT) - set(queries) == set()
+    assert e._RECHECK - set(queries) == set()
+
+
 def test_all_oracles_bind_in_duckdb(registry, duck):
     _, oracles = registry
     bad = {}

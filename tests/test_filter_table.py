@@ -13,6 +13,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from xorfilter_net_spark.filters.spark_build import (
+    ShardedFilter,
     build_sharded_filter,
     is_member,
     key_digests_jvm,
@@ -33,9 +34,7 @@ def test_table_build_bit_identical_to_collected_build(spark, keyed, tmp_path):
         keyed, "key", str(tmp_path / "art"), num_shards=8, width=16,
         seed=42, jvm_digests=True,
     )
-    mem = build_sharded_filter(
-        keyed, "key", num_shards=8, width=16, seed=42, jvm_digests=True
-    )
+    mem = build_sharded_filter(keyed, "key", num_shards=8, width=16, seed=42)
     loaded = tab.to_sharded()
     assert set(loaded.shards) == set(mem.shards)
     for sid, f in mem.shards.items():
@@ -79,21 +78,6 @@ def test_cogroup_probe_matches_broadcast_probe_rowwise(spark, keyed, tmp_path):
         ).collect()
     }
     assert via_table == via_bcast
-
-
-def test_murmur_digest_mode_table(spark, keyed, tmp_path):
-    tab = build_xor_filter_table(
-        keyed, "key", str(tmp_path / "art"), num_shards=4, width=16,
-        seed=9, jvm_digests=False,
-    )
-    n = keyed.count()
-    probed = tab.probe(keyed, "key")
-    assert probed.columns == ["key", "is_member"]
-    assert (
-        probed.agg(F.sum(F.col("is_member").cast("long")).alias("n"))
-        .collect()[0]["n"]
-        == n
-    )
 
 
 def test_absent_shards_probe_false_not_error(spark, tmp_path):
@@ -140,32 +124,54 @@ def test_load_roundtrip(spark, keyed, tmp_path):
     )
 
 
-def test_table_probe_sql_shuffle_matches_cogroup_rowwise(spark, keyed, tmp_path):
-    """The zero-Python shuffled-hash-join probe over the distributed
-    artifact agrees row-for-row (incl. false positives) with the
-    cogrouped Arrow probe of the SAME artifact."""
-    tab = build_xor_filter_table(
-        keyed, "key", str(tmp_path / "art"), num_shards=8, width=8,
-        seed=3, jvm_digests=True,
-    )
-    mixed = keyed.union(keyed.selectExpr("'nm:' || key as key"))
-    via_sql = {
-        r["key"]: r["is_member"] for r in tab.probe_sql(mixed, "key").collect()
-    }
-    via_cog = {
-        r["key"]: r["is_member"] for r in tab.probe(mixed, "key").collect()
-    }
-    assert via_sql == via_cog
-    # all true members found (zero false negatives)
-    assert all(via_sql[r["key"]] for r in keyed.collect())
+def test_murmur_table_dir_is_refused(spark, tmp_path):
+    """A table dir written by the murmur sharded lane fails loudly on load
+    and on construction instead of probing with the wrong digests."""
+    path = tmp_path / "art"
+    (path / "shards").mkdir(parents=True)
+    meta = {"width": 16, "seed": 9, "num_shards": 4, "digest_kind": "murmur",
+            "mode": "digest"}
+    (path / "filter.json").write_text(json.dumps(meta))
+    with pytest.raises(ValueError, match="rebuild"):
+        XorFilterTable.load(spark, str(path))
+    with pytest.raises(ValueError, match="rebuild"):
+        XorFilterTable(spark, str(path), meta)
 
 
-def test_table_probe_sql_requires_sqlhash(spark, keyed, tmp_path):
-    tab = build_xor_filter_table(
-        keyed, "key", str(tmp_path / "art"), num_shards=4, width=16, seed=5,
-    )
-    with pytest.raises(ValueError, match="jvm_digests"):
-        tab.probe_sql(keyed, "key")
+def test_murmur_lane_build_is_refused(spark, keyed, tmp_path):
+    with pytest.raises(ValueError, match="murmur"):
+        build_xor_filter_table(
+            keyed, "key", str(tmp_path / "art"), num_shards=4, jvm_digests=False
+        )
+
+
+def test_murmur_sharded_json_still_probes_via_is_member(spark):
+    """Sharded-filter JSON written by older murmur builds (e.g. ``cli
+    build-xor``: Python murmur digests, 'digest' addressing, per-shard
+    seed ``seed ^ (sid * 0x9E37)``) still probes correctly through
+    ``is_member``."""
+    import pandas as pd
+
+    from xorfilter_net_spark.filters.xor_core import build_from_digests
+    from xorfilter_net_spark.kernels.column import digest_series
+
+    keys = [f"k-{i}" for i in range(3_000)]
+    d0, d1 = digest_series(pd.Series(keys))
+    route = ShardedFilter.route(d0, 4)
+    shards = {
+        s: build_from_digests(
+            d0[route == s], d1[route == s], width=16, seed=9 ^ (s * 0x9E37)
+        )
+        for s in range(4)
+    }
+    old = ShardedFilter(16, 9, shards, 4, "murmur", "digest")
+    sxf = ShardedFilter.from_dict(json.loads(json.dumps(old.to_dict())))
+    assert (sxf.digest_kind, sxf.mode) == ("murmur", "digest")
+    df = spark.createDataFrame([(k,) for k in keys], "key string")
+    found = df.where(is_member(spark, sxf, "key")).count()
+    assert found == len(keys)
+    non = spark.createDataFrame([(f"nm-{i}",) for i in range(3_000)], "key string")
+    assert non.where(is_member(spark, sxf, "key")).count() <= 2
 
 
 def _without_timings(meta: dict) -> dict:
@@ -233,8 +239,7 @@ def test_all_keys_in_one_shard(spark, one_shard_keys, tmp_path):
         width=16, seed=11, jvm_digests=True,
     )
     mem = build_sharded_filter(
-        one_shard_keys, "key", num_shards=16, width=16, seed=11,
-        jvm_digests=True,
+        one_shard_keys, "key", num_shards=16, width=16, seed=11
     )
     assert tab.metrics["num_shards_built"] == 1
     assert _shard_rows(tab) == {

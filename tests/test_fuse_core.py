@@ -133,8 +133,7 @@ class TestCoreInvariants:
 
 
 class TestShardedFuse:
-    @pytest.mark.parametrize("jvm", [False, True])
-    def test_sharded_build_zero_fn_and_space(self, spark, jvm):
+    def test_sharded_build_zero_fn_and_space(self, spark):
         from pyspark.sql import functions as F
 
         from xorfilter_net_spark.filters.spark_build import (
@@ -145,8 +144,7 @@ class TestShardedFuse:
         rows = [(f"k-{i}",) for i in range(20_000)]
         df = spark.createDataFrame(rows, "key string")
         sff = build_sharded_filter(
-            df, "key", num_shards=8, width=16, seed=9, jvm_digests=jvm,
-            kind="fuse3",
+            df, "key", num_shards=8, width=16, seed=9, kind="fuse3"
         )
         assert len(sff.shards) == 8
         # zero false negatives through the distributed probe
@@ -236,8 +234,7 @@ class TestFuseSqlProbe:
         rows = [(f"k-{i}",) for i in range(20_000)]
         df = spark.createDataFrame(rows, "key string")
         sff = build_sharded_filter(
-            df, "key", num_shards=8, width=16, seed=9, jvm_digests=True,
-            kind="fuse3",
+            df, "key", num_shards=8, width=16, seed=9, kind="fuse3"
         )
         assert sff.mode == "sqlhash"
         # members + guaranteed non-members through both probe paths
@@ -267,14 +264,21 @@ class TestFuseSqlProbe:
         assert "MapInPandas" not in plan
 
     def test_sql_probe_rejects_digest_mode(self, spark):
-        from xorfilter_net_spark.filters.spark_build import (
-            build_sharded_filter,
-            probe_sql,
-        )
+        """A murmur-digest, 'digest'-addressed sharded fuse artifact (the
+        shape older builds wrote) has no SQL probe: probe_sql refuses it."""
+        from xorfilter_net_spark.filters.spark_build import ShardedFilter, probe_sql
 
-        df = spark.createDataFrame([(f"k-{i}",) for i in range(500)], "key string")
-        sff = build_sharded_filter(
-            df, "key", num_shards=2, width=8, seed=1, kind="fuse3"
+        rng = np.random.default_rng(1)
+        d0 = rng.integers(0, 2**63, 500, dtype=np.int64).view(np.uint64)
+        d1 = rng.integers(0, 2**63, 500, dtype=np.int64).view(np.uint64)
+        route = ShardedFilter.route(d0, 2)
+        shards = {
+            s: build_fuse_from_digests(d0[route == s], d1[route == s], width=8, seed=s)
+            for s in (0, 1)
+        }
+        sff = ShardedFilter.from_dict(
+            ShardedFilter(8, 1, shards, 2, "murmur", "digest", "fuse3").to_dict()
         )
+        df = spark.createDataFrame([(f"k-{i}",) for i in range(500)], "key string")
         with pytest.raises(ValueError):
             probe_sql(sff, df, "key")

@@ -183,7 +183,7 @@ class TestJvmDigestPath:
         members = t.select("key").distinct().persist()
         n = members.count()
         sxf = build_sharded_filter(
-            members, "key", num_shards=8, width=16, seed=9, jvm_digests=True
+            members, "key", num_shards=8, width=16, seed=9
         )
         assert sxf.digest_kind == "xxhash64jvm"
         found = (
@@ -215,12 +215,10 @@ class TestJvmDigestPath:
         # triple the input (duplicates) - dedup strategies must agree
         tripled = t.unionAll(t).unionAll(t)
         a = build_sharded_filter(
-            tripled, "key", num_shards=4, width=16, seed=5,
-            jvm_digests=True, dedup="in_shard",
+            tripled, "key", num_shards=4, width=16, seed=5, dedup="in_shard",
         )
         b = build_sharded_filter(
-            tripled, "key", num_shards=4, width=16, seed=5,
-            jvm_digests=True, dedup="shuffle",
+            tripled, "key", num_shards=4, width=16, seed=5, dedup="shuffle",
         )
         da, db = a.to_dict(), b.to_dict()
         for d in (da, db):  # metrics carry wall times; artifact bits must match
@@ -272,7 +270,7 @@ class TestSqlProbe:
         members = t.select("key").distinct().persist()
         n = members.count()
         sxf = build_sharded_filter(
-            members, "key", num_shards=32, width=8, seed=77, jvm_digests=True
+            members, "key", num_shards=32, width=8, seed=77
         )
         assert sxf.mode == "sqlhash"
         mixed = members.unionAll(
@@ -315,7 +313,7 @@ class TestSqlProbe:
             [(f"k{i}",) for i in range(5)], "key string"
         )
         sxf = build_sharded_filter(
-            few, "key", num_shards=64, width=16, seed=2, jvm_digests=True
+            few, "key", num_shards=64, width=16, seed=2
         )
         assert len(sxf.shards) < 64
         probes = spark.createDataFrame(

@@ -45,6 +45,44 @@ def test_create_and_read_roundtrip(spark, tmp_path):
     assert current_version(path) == 0
 
 
+def test_torn_pointer_write_keeps_previous_version(spark, tmp_path, monkeypatch):
+    """A failure while the ``_current`` pointer is being written (after its
+    file is opened for writing) leaves the previous version readable."""
+    from xorfilter_net_spark.sources import timetravel
+
+    class _Crash(RuntimeError):
+        pass
+
+    class _TornFile:
+        def __init__(self, f):
+            self.f = f
+
+        def __enter__(self):
+            return self
+
+        def __exit__(self, *exc):
+            self.f.close()
+
+        def write(self, text):
+            raise _Crash("crash while writing the pointer")
+
+    def torn_open(file, mode="r", *args, **kwargs):
+        f = open(file, mode, *args, **kwargs)
+        if "w" in mode and os.path.basename(str(file)).startswith("_current"):
+            return _TornFile(f)
+        return f
+
+    path = str(tmp_path / "t")
+    df = _docs(spark)
+    create_table(df, path, "k", n_buckets=8)
+    monkeypatch.setattr(timetravel, "open", torn_open, raising=False)
+    with pytest.raises(_Crash):
+        merge_into(spark, path, df.filter("k < 5").withColumn("text", F.lit("x")))
+    monkeypatch.undo()
+    assert current_version(path) == 0
+    assert _rows(read_table(spark, path)) == _rows(df)
+
+
 def test_merge_and_time_travel(spark, tmp_path):
     path = str(tmp_path / "t")
     df = _docs(spark)

@@ -2,7 +2,8 @@
 streaming period store (streaming/rolling.py): a crash between writing
 ``data_v{n+1}`` and committing the pointer leaves the batch unapplied,
 and redelivering the same batch id applies it exactly once — the store
-ends equal to a run that never crashed."""
+ends equal to a run that never crashed. The streaming sketch accumulator
+(streaming/incremental.py) keeps the same contract with one meta commit."""
 
 from __future__ import annotations
 
@@ -128,3 +129,75 @@ def test_period_store_crash_before_commit_applies_once(spark, monkeypatch):
     assert ivm.view_meta(crashed) == ivm.view_meta(clean)
     assert states(crashed) == states(clean)
     assert sum(sk.deserialize(b)[0] for _, b in states(crashed)) == len(rows)
+
+
+def test_sketch_accumulator_crash_before_meta_commit_applies_once(
+    spark, monkeypatch, tmp_path
+):
+    """The accumulator's meta.json replace raises once, after the new
+    state file is written; the redelivered batch merges once, so CMS
+    counts (a non-idempotent merge) equal a run that never crashed."""
+    import numpy as np
+
+    from xorfilter_net_spark.sketches.cms import CmsSketch
+    from xorfilter_net_spark.streaming.incremental import SketchAccumulator
+
+    sk = CmsSketch(d=3, w=256, key_col="k")
+    batches = [
+        spark.range(lo, lo + 60).selectExpr("cast(id % 7 as string) as k")
+        for lo in (0, 60)
+    ]
+    clean = SketchAccumulator(sk, str(tmp_path / "clean"))
+    crashed = SketchAccumulator(sk, str(tmp_path / "crashed"))
+    for i, b in enumerate(batches):
+        clean.merge_batch(b, i, ["k"])
+
+    crashed.merge_batch(batches[0], 0, ["k"])
+    real_replace, fired = os.replace, []
+
+    def replace(src, dst):
+        if dst == crashed._meta_path and not fired:
+            fired.append(True)
+            raise _Crash("crash before the meta commit")
+        real_replace(src, dst)
+
+    monkeypatch.setattr(os, "replace", replace)
+    with pytest.raises(_Crash):
+        crashed.merge_batch(batches[1], 1, ["k"])
+    monkeypatch.undo()
+    assert crashed.load()[1]["rows"] == 60
+
+    crashed.merge_batch(batches[1], 1, ["k"])  # redelivery
+    crashed.merge_batch(batches[1], 1, ["k"])  # a second one skips
+    (got, got_meta), (want, want_meta) = crashed.load(), clean.load()
+    assert np.array_equal(got, want)
+    assert got_meta == want_meta
+    assert int(got.sum()) == 3 * 120
+    assert [f for f in os.listdir(crashed.state_dir) if f.endswith(".bin")] == [
+        got_meta["state"]
+    ]
+
+
+def test_sketch_accumulator_reads_single_state_file_dir(tmp_path):
+    """A state dir written by the two-rename store (``state.bin`` plus a
+    meta.json that does not name it) still loads, and the next store
+    moves it to the versioned layout."""
+    import json
+
+    import numpy as np
+
+    from xorfilter_net_spark.sketches.cms import CmsSketch
+    from xorfilter_net_spark.streaming.incremental import SketchAccumulator
+
+    sk = CmsSketch(d=3, w=64, key_col="k")
+    state = sk.zero()
+    state[0, 1] = 5
+    (tmp_path / "state.bin").write_bytes(sk.serialize(state))
+    meta = {"batches": [{"id": 0, "rows": 5}], "rows": 5}
+    (tmp_path / "meta.json").write_text(json.dumps(meta))
+    acc = SketchAccumulator(sk, str(tmp_path))
+    got, got_meta = acc.load()
+    assert np.array_equal(got, state) and got_meta == meta
+    acc.store(got, got_meta)
+    assert sorted(os.listdir(tmp_path)) == ["meta.json", "state_v1.bin"]
+    assert np.array_equal(acc.load()[0], state)

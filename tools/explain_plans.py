@@ -52,7 +52,7 @@ def main() -> None:
     )
     sections.append(
         (
-            "Construction digest stage (jvm_digests)",
+            "Construction digest stage (key_digests_jvm)",
             "xxhash64 digests in WholeStageCodegen directly over the scan; "
             "the only data that ever shuffles is (d0, d1, shard) = 20 "
             "bytes/row. No Python node before the per-shard peel kernel.",
@@ -60,9 +60,7 @@ def main() -> None:
         )
     )
 
-    sxf = build_sharded_filter(
-        t, "key", num_shards=32, width=16, seed=7, jvm_digests=True
-    )
+    sxf = build_sharded_filter(t, "key", num_shards=32, width=16, seed=7)
 
     # 2. zero-Python SQL probe
     probed = probe_sql(sxf, t.select("key").distinct(), "key")
@@ -292,8 +290,7 @@ def main() -> None:
 
     # 18. fuse SQL probe: zero Python, power-of-two masks (no mod math)
     sff = build_sharded_filter(
-        t, "key", num_shards=32, width=16, seed=7, jvm_digests=True,
-        kind="fuse3",
+        t, "key", num_shards=32, width=16, seed=7, kind="fuse3"
     )
     fuse_probed = probe_sql(sff, t.select("key").distinct(), "key")
     sections.append(

@@ -43,8 +43,7 @@ def main() -> None:
     warm.count()
     tmp = tempfile.mkdtemp(prefix="xorprof_")
     build_xor_filter_table(
-        warm, "key", f"{tmp}/warm", num_shards=SHARDS, width=16, seed=1,
-        jvm_digests=True,
+        warm, "key", f"{tmp}/warm", num_shards=SHARDS, width=16, seed=1
     )
     warm.unpersist()
 
@@ -66,7 +65,7 @@ def main() -> None:
             "build",
             lambda: build_xor_filter_table(
                 corpus, "key", f"{tmp}/full", num_shards=SHARDS, width=16,
-                seed=12345, jvm_digests=True,
+                seed=12345,
             ),
         ),
     ):

@@ -54,7 +54,6 @@ def cmd_build_xor(args: argparse.Namespace) -> dict:
         width=args.width,
         seed=args.seed,
         input_token=args.input,
-        jvm_digests=args.jvm_digests,
     )
     m = sxf.metrics
     return {
@@ -120,7 +119,7 @@ def cmd_probe(args: argparse.Namespace) -> dict:
     )
     if sxf.digest_kind == "xxhash64jvm" and sxf.mode == "sqlhash":
         probed = probe_sql(sxf, df, "key")  # zero-Python codegen path
-    else:
+    else:  # murmur JSON written by older builds
         probed = df.withColumn("is_member", is_member(spark, sxf, "key"))
     probed.write.mode("overwrite").parquet(args.output)
     n = spark.read.parquet(args.output).count()
@@ -846,12 +845,6 @@ def main(argv: list[str] | None = None) -> int:
     b.add_argument("--width", type=int, default=16, choices=(8, 16, 32))
     b.add_argument("--seed", type=int, default=0)
     b.add_argument("--num-shards", type=int, default=64)
-    b.add_argument(
-        "--jvm-digests",
-        action="store_true",
-        help="xxhash64 digests in codegen + sqlhash addressing "
-        "(SQL-probe-able scale path)",
-    )
     b.set_defaults(fn=cmd_build_xor)
 
     u = sub.add_parser(

@@ -263,8 +263,7 @@ def q_fuse_sharded(spark: SparkSession, sf_dir: str) -> DataFrame:
     the scale path for the smaller filter family."""
     t = with_membership_key(load_transcripts(spark, sf_dir))
     sff = build_sharded_filter(
-        t, "key", num_shards=16, width=16, seed=42, jvm_digests=True,
-        kind="fuse3",
+        t, "key", num_shards=16, width=16, seed=42, kind="fuse3"
     )
     r = t.select("key").distinct().withColumn(
         "is_member", is_member(spark, sff, "key")
@@ -284,8 +283,7 @@ def q_fuse_sql_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
     (tests/test_fuse_core.py::TestFuseSqlProbe)."""
     t = with_membership_key(load_transcripts(spark, sf_dir))
     sff = build_sharded_filter(
-        t, "key", num_shards=16, width=16, seed=42, jvm_digests=True,
-        kind="fuse3",
+        t, "key", num_shards=16, width=16, seed=42, kind="fuse3"
     )
     r = probe_sql(sff, t.select("key").distinct(), "key")
     return r.agg(F.sum(F.col("is_member").cast("long")).alias("n_members_found"))
@@ -296,9 +294,13 @@ def q_fuse_sql_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
     f"{_KEYED_CTE} select count(distinct key) as n_members_found from keyed",
 )
 def q_xor_sharded(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Fully executor-side construction path (per-shard applyInPandas peel)."""
+    """Fully executor-side construction path (per-shard applyInPandas
+    peel) with ``dedup='shuffle'``: a distinct-aggregate shuffle ahead of
+    the shard exchange instead of the in-shard dedup."""
     t = with_membership_key(load_transcripts(spark, sf_dir))
-    sxf = build_sharded_filter(t, "key", num_shards=16, width=16, seed=42)
+    sxf = build_sharded_filter(
+        t, "key", num_shards=16, width=16, seed=42, dedup="shuffle"
+    )
     r = t.select("key").distinct().withColumn(
         "is_member", is_member(spark, sxf, "key")
     )
@@ -314,9 +316,7 @@ def q_xor_jvm(spark: SparkSession, sf_dir: str) -> DataFrame:
     codegen, single shard shuffle, in-shard dedup — no Python sees a raw
     key anywhere in build OR probe."""
     t = with_membership_key(load_transcripts(spark, sf_dir))
-    sxf = build_sharded_filter(
-        t, "key", num_shards=16, width=16, seed=42, jvm_digests=True
-    )
+    sxf = build_sharded_filter(t, "key", num_shards=16, width=16, seed=42)
     r = t.select("key").distinct().withColumn(
         "is_member", is_member(spark, sxf, "key")
     )
@@ -334,9 +334,7 @@ def q_xor_sql_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
     flattened slot table — no Arrow boundary in build digesting OR
     probing. The scale headline path (see BENCH/BASELINE.md)."""
     t = with_membership_key(load_transcripts(spark, sf_dir))
-    sxf = build_sharded_filter(
-        t, "key", num_shards=16, width=16, seed=42, jvm_digests=True
-    )
+    sxf = build_sharded_filter(t, "key", num_shards=16, width=16, seed=42)
     r = probe_sql(sxf, t.select("key").distinct(), "key")
     return r.agg(F.sum(F.col("is_member").cast("long")).alias("n_members_found"))
 
@@ -361,43 +359,12 @@ def q_xor_table(spark: SparkSession, sf_dir: str) -> DataFrame:
     tmp = tempfile.mkdtemp(prefix="xorart_")
     try:
         tab = build_xor_filter_table(
-            t, "key", tmp, num_shards=16, width=16, seed=42, jvm_digests=True
+            t, "key", tmp, num_shards=16, width=16, seed=42
         )
         r = tab.probe(keys, "key").agg(
             F.sum(F.col("is_member").cast("long")).alias("n_members_found")
         )
         # materialize before the artifact dir is removed
-        rows = r.collect()
-        return spark.createDataFrame(rows, r.schema)
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
-
-
-@query(
-    "xor_table_sql_probe_zero_false_negatives",
-    f"{_KEYED_CTE} select count(distinct key) as n_members_found from keyed",
-)
-def q_xor_table_sql(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Beyond-broadcast zero-Python path: the persisted distributed
-    artifact is probed via three shuffled hash joins against the
-    executor-decoded slot table (XorFilterTable.probe_sql) — no driver
-    load, no broadcast, no Arrow boundary on the probe corpus. The
-    strategy that still works when the filter itself is terabytes."""
-    import shutil
-    import tempfile
-
-    from .filters.table import build_xor_filter_table
-
-    t = with_membership_key(load_transcripts(spark, sf_dir))
-    keys = t.select("key").distinct()
-    tmp = tempfile.mkdtemp(prefix="xorart_sql_")
-    try:
-        tab = build_xor_filter_table(
-            t, "key", tmp, num_shards=16, width=16, seed=42, jvm_digests=True
-        )
-        r = tab.probe_sql(keys, "key").agg(
-            F.sum(F.col("is_member").cast("long")).alias("n_members_found")
-        )
         rows = r.collect()
         return spark.createDataFrame(rows, r.schema)
     finally:
@@ -432,7 +399,7 @@ def q_xor_incremental_update(spark: SparkSession, sf_dir: str) -> DataFrame:
         "concat('d', cast(doc_id as string)) as key", "doc_id"
     )
     base, delta = docs.filter("doc_id >= 25"), docs.filter("doc_id < 25")
-    kw = dict(num_shards=64, width=16, seed=7, jvm_digests=True)
+    kw = dict(num_shards=64, width=16, seed=7)
 
     def canon(d: dict) -> str:
         d = _json.loads(_json.dumps(d))

@@ -2,31 +2,33 @@
 
 One family-agnostic layer for the XOR, binary fuse and ribbon filters
 (SURVEY.md §3.1, re-architecting ``BaseXorFilter.cs`` ctor for a
-1000-executor cluster):
+1000-executor cluster). Two regimes:
 
-  scan (Parquet/Iceberg, Catalyst prunes columns)
-    -> mapInPandas: vectorized 128-bit key digests (Arrow batches, NumPy
-       murmur lanes — no per-row Python), or JVM xxhash64 lanes in codegen
-    -> dropDuplicates on (d0, d1): distributed partial+final hash aggregate.
-       NOTE on skew: we deduplicate *digests*, not raw keys — digests are
-       uniform by construction, so the dedup shuffle cannot skew no matter
-       how hot a conv_id is. This is the salt-free equivalent of the
-       "salt-aware repartition" the north_star asks for: hashing IS the salt.
-    -> driver: NumPy peel (or ribbon solve) over 16-byte digests only
-       (O(n_unique), tiny vs corpus; the one intentionally non-distributed
-       stage — SURVEY §7 D4)
-    -> broadcast artifact; probes are map-only vectorized pandas UDFs.
+global (``build_filter``)
+    mapInPandas: vectorized 128-bit murmur key digests (Arrow batches,
+    NumPy lanes — no per-row Python) -> dropDuplicates on (d0, d1) ->
+    driver peel (or ribbon solve) over 16-byte digests only (O(n_unique),
+    the one intentionally non-distributed stage — SURVEY §7 D4). The
+    murmur digests keep the artifact byte-identical to the local cores.
 
-For key sets too large for a single driver peel (10^9+ unique keys), the
-sharded variant keeps construction fully executor-side: digests are
-hash-partitioned into shards, one independent filter is peeled per shard
-inside ``applyInPandas``, and probes route by the same shard hash.
-Construction becomes embarrassingly parallel and merge-free; the price is
-one extra filter lookup indirection and ~the same total memory. The
-sharded layer reaches a family (XOR, fuse) only through the hook in its
-core module: ``probe_params`` (per-shard parameters from an artifact's
-meta) and ``slot_index`` (the vectorized three-slot addressing); its SQL
-counterparts live in ``_SQL_FAMILIES`` below.
+sharded (``build_sharded_filter`` and every sharded build built on
+``shard_frame``)
+    JVM ``xxhash64`` digests in whole-stage codegen (``key_digests_jvm``;
+    no Python worker sees a raw key) -> ONE exchange on the shard id
+    ``pmod(d0, num_shards)`` -> one independent filter per shard, peeled
+    inside ``applyInPandas`` with 'sqlhash' slot addressing. NOTE on
+    skew: shards are routed by a digest lane, uniform by construction,
+    so no hot key can skew the exchange — hashing IS the salt.
+    Construction is embarrassingly parallel and merge-free.
+
+Probes: ``is_member`` (broadcast Arrow probe of any filter) and
+``probe_sql`` (zero-Python codegen probe of a sqlhash sharded filter);
+a persisted table artifact is probed shard-cogrouped
+(``table.XorFilterTable.probe``). The sharded layer reaches a family
+(XOR, fuse) only through the hook in its core module: ``probe_params``
+(per-shard parameters from an artifact's meta) and ``slot_index`` (the
+vectorized three-slot addressing); its SQL counterparts live in
+``_SQL_FAMILIES`` below.
 """
 
 from __future__ import annotations
@@ -107,17 +109,6 @@ def key_digests_jvm(df: DataFrame, key_col: str) -> DataFrame:
     return df.select(d0.alias("d0"), d1.alias("d1"))
 
 
-def _digest_lane(jvm_digests: bool):
-    """(digest function, digest_kind, addressing) of a sharded build.
-    JVM xxhash64 digests pair with 'sqlhash' slot addressing, so the
-    filter is probe-able with zero Python (``probe_sql``); the Arrow
-    murmur kernel pairs with 'digest' addressing (byte parity with the
-    Python probe)."""
-    if jvm_digests:
-        return key_digests_jvm, "xxhash64jvm", "sqlhash"
-    return key_digests, "murmur", "digest"
-
-
 def build_filter(
     df: DataFrame, key_col: str, width: int = 8, seed: int = 0, kind: str = "xor"
 ):
@@ -167,7 +158,8 @@ def is_member(spark: SparkSession, f, col: Column | str) -> Column:
     executors once via ``SparkContext.broadcast``. For 'xxhash64jvm'
     filters the (d0, d1) digests are computed in whole-stage codegen and
     only two int64 columns cross the Arrow boundary; otherwise the Python
-    kernel re-digests the raw keys (byte-parity path), or an XOR
+    kernel re-digests the raw keys (global filters, and sharded JSON
+    written by older murmur builds), or an XOR
     ``mode='exact'`` filter hashes the key bytes themselves.
     """
     bc = spark.sparkContext.broadcast(f.to_dict())
@@ -193,27 +185,6 @@ def is_member(spark: SparkSession, f, col: Column | str) -> Column:
 
 def probe(df: DataFrame, f, key_col: str, out: str = "is_member") -> DataFrame:
     return df.withColumn(out, is_member(df.sparkSession, f, key_col))
-
-
-def _flat_params(kind: str, metas: dict, num_shards: int) -> dict:
-    """Per-shard probe parameters stacked over shard ids 0..num_shards-1
-    from each present shard's meta (or ``vars(filter)``): the family
-    hook's ``probe_params``, the shard's offset into the concatenated slot
-    table, and a present flag. Keyless shards take the family's 3-slot
-    stand-in at offset 0, so their indexes stay in bounds; ``present``
-    masks their answers to False."""
-    cls, _, hook = _FAMILIES[kind]
-    per = [hook.probe_params(metas.get(s, cls.ABSENT_META)) for s in range(num_shards)]
-    present = np.zeros(num_shards, dtype=bool)
-    sizes = np.zeros(num_shards, dtype=np.int64)
-    for sid, m in metas.items():
-        present[sid], sizes[sid] = True, m["size"]
-    offsets = np.where(present, np.cumsum(sizes) - sizes, 0)
-    return {
-        "params": {k: np.stack([p[k] for p in per]) for k in per[0]},
-        "offsets": offsets,
-        "present": present,
-    }
 
 
 class ShardedFilter:
@@ -244,9 +215,9 @@ class ShardedFilter:
         # routing modulus = the build-time shard count, NOT len(shards):
         # shards that received no keys are simply absent (probe -> False)
         self.num_shards = num_shards
-        # which digest produced (d0, d1): 'murmur' (python kernel, byte
-        # parity) or 'xxhash64jvm' (JVM codegen, scale path) — probes MUST
-        # recompute keys with the same source
+        # which digest produced (d0, d1): 'xxhash64jvm' (JVM codegen, every
+        # sharded build) or 'murmur' (the Python kernel of JSON written by
+        # older builds) — probes MUST recompute keys with the same source
         self.digest_kind = digest_kind
         self.kind = kind  # filter family of every shard ('xor' | 'fuse3')
 
@@ -260,18 +231,31 @@ class ShardedFilter:
 
     def _flat(self) -> dict:
         """Flattened probe tables: every shard's slot array concatenated,
-        plus ``_flat_params``'s per-shard lookup arrays. Lets the probe be
-        ONE vectorized pass with per-row gathers — no per-shard Python
-        loop (which would cost O(num_shards x batch) masking per Arrow
-        batch)."""
+        plus per-shard lookup arrays stacked over shard ids
+        0..num_shards-1 — the family hook's ``probe_params``, the shard's
+        offset into the concatenated slots, and a present flag. Keyless
+        shards take the family's 3-slot stand-in at offset 0, so their
+        indexes stay in bounds; ``present`` masks their answers to False.
+        Lets the probe be ONE vectorized pass with per-row gathers — no
+        per-shard Python loop (which would cost O(num_shards x batch)
+        masking per Arrow batch)."""
         fl = getattr(self, "_flat_cache", None)
         if fl is None:
-            fl = _flat_params(
-                self.kind, {s: vars(f) for s, f in self.shards.items()}, self.num_shards
-            )
+            cls, _, hook = _FAMILIES[self.kind]
+            ns = self.num_shards
+            metas = {s: vars(f) for s, f in self.shards.items()}
+            per = [hook.probe_params(metas.get(s, cls.ABSENT_META)) for s in range(ns)]
+            present = np.zeros(ns, dtype=bool)
+            sizes = np.zeros(ns, dtype=np.int64)
+            for sid, f in self.shards.items():
+                present[sid], sizes[sid] = True, f.size
             parts = [self.shards[s].slots for s in sorted(self.shards)]
-            fl["slots"] = np.concatenate(parts) if parts else np.zeros(3, np.uint8)
-            self._flat_cache = fl
+            fl = self._flat_cache = {
+                "params": {k: np.stack([p[k] for p in per]) for k in per[0]},
+                "offsets": np.where(present, np.cumsum(sizes) - sizes, 0),
+                "present": present,
+                "slots": np.concatenate(parts) if parts else np.zeros(3, np.uint8),
+            }
         return fl
 
     def contains_digests(self, d0: np.ndarray, d1: np.ndarray) -> np.ndarray:
@@ -435,25 +419,22 @@ def build_sharded_filter(
     num_shards: int = 32,
     width: int = 8,
     seed: int = 0,
-    jvm_digests: bool = False,
     dedup: str = "in_shard",
     kind: str = "xor",
 ) -> ShardedFilter:
-    """Sharded filter of family ``kind`` (see ``shard_frame``), collected
-    to the driver. ``jvm_digests=True`` builds with 'sqlhash' slot
-    addressing, probe-able with zero Python via ``probe_sql``; the
-    default murmur path uses 'digest' addressing (see ``_digest_lane``).
-    """
-    digest_fn, digest_kind, addressing = _digest_lane(jvm_digests)
+    """Sharded filter of family ``kind`` (see ``shard_frame``) over JVM
+    xxhash64 digests with 'sqlhash' slot addressing, collected to the
+    driver; probe it with ``is_member`` or, with zero Python,
+    ``probe_sql``."""
     rows = shard_frame(
-        digest_fn(df, key_col), num_shards, width, seed, addressing, dedup, kind
+        key_digests_jvm(df, key_col), num_shards, width, seed, "sqlhash", dedup, kind
     )
     shards = {
         int(r.shard): _shard_filter(r.meta, r.slots)
         for r in rows.toPandas().itertuples(index=False)
     }
     return ShardedFilter(
-        width, seed, shards, num_shards, digest_kind, addressing, kind
+        width, seed, shards, num_shards, "xxhash64jvm", "sqlhash", kind
     )
 
 
@@ -465,10 +446,10 @@ def probe_sql(
 ) -> DataFrame:
     """Zero-Python membership probe, fully inside whole-stage codegen.
 
-    Requires a filter built with ``jvm_digests=True``: digests are
-    ``xxhash64`` of the key and the addressing mode is 'sqlhash' (slot
-    mixing is ``xxhash64(d0, seed_j)`` — the exact builtin the JVM can
-    recompute).
+    Requires a sharded filter over JVM digests (every
+    ``build_sharded_filter`` build): digests are ``xxhash64`` of the key
+    and the addressing mode is 'sqlhash' (slot mixing is
+    ``xxhash64(d0, seed_j)`` — the exact builtin the JVM can recompute).
     The plan is: per-row shard parameters from a small broadcast table,
     three slot indexes computed with ANSI-safe long arithmetic (the
     family's ``_SQL_FAMILIES`` entry), then three BROADCAST hash joins
@@ -481,29 +462,63 @@ def probe_sql(
     physical-plan *instance*, so keep and reuse the returned DataFrame
     (or a derived plan) across actions — re-calling ``probe_sql`` per
     action rebuilds the three slot-table broadcasts serially each time.
-    Sizing note: the broadcast is ~the filter itself (1.23 x n_keys x
-    width bits + join-key overhead for XOR). For filters beyond
-    broadcastable size (≈10^8+ slots) use ``is_member`` — the Arrow path
-    keeps the table on executors and never joins.
+    Sizing note: the broadcast carries two longs per slot plus the hash
+    relation. For filters beyond broadcastable size (≈10^8+ slots) use
+    ``is_member``, or persist the filter as a table
+    (``table.build_xor_filter_table``) and probe it shard-cogrouped with
+    ``XorFilterTable.probe``.
     """
     if sxf.digest_kind != "xxhash64jvm" or sxf.mode != "sqlhash":
         raise ValueError(
-            "probe_sql requires a filter built with jvm_digests=True, "
-            f"i.e. sqlhash addressing (got digest_kind={sxf.digest_kind!r}, "
-            f"mode={sxf.mode!r}); use is_member for other filters"
+            "probe_sql requires JVM digests with sqlhash addressing (got "
+            f"digest_kind={sxf.digest_kind!r}, mode={sxf.mode!r}); use "
+            "is_member for other filters"
         )
     params_df, slots_df = _probe_frames(df.sparkSession, sxf)
-    return sql_probe_plan(
-        df,
-        key_col,
-        out_col,
-        params_df=params_df,
-        slots_df=slots_df,
-        num_shards=sxf.num_shards,
-        width=sxf.width,
-        broadcast_slots=True,
-        kind=sxf.kind,
+    t = _T
+
+    # stage 1: digests + shard id as materialized columns (join keys)
+    d0, d1 = jvm_digest_cols(key_col)
+    base = df.withColumns({f"{t}d0": d0, f"{t}d1": d1}).withColumn(
+        f"{t}sh", F.pmod(F.col(f"{t}d0"), F.lit(sxf.num_shards)).cast("int")
     )
+
+    # stage 2: per-shard parameters via a tiny (num_shards-row) broadcast
+    # join. Parameters as COLUMNS keep the slot-index expressions small —
+    # num_shards-sized literal arrays inline into every expression copy
+    # and blow past codegen's method-size limits, demoting the whole
+    # stage to interpreted evaluation (~100x slower).
+    base = _SQL_FAMILIES[sxf.kind][1](base.join(F.broadcast(params_df), f"{t}sh"))
+    base = base.withColumn(
+        f"{t}fp",
+        F.xxhash64(F.col(f"{t}d1"), F.lit(FP_SEED_SIGNED)).bitwiseAND(
+            F.lit((1 << sxf.width) - 1)
+        ),
+    )
+    # prune before the joins: the digests, shard id and the parameter
+    # columns are dead past this point
+    base = base.select(
+        *df.columns,
+        *[f"{t}i{j}" for j in range(3)],
+        f"{t}fp",
+        f"{t}pres",
+    )
+
+    # stage 3: three name-based broadcast hash joins against the
+    # flattened slot table (one-time hash-relation build per plan; reuse
+    # the returned DataFrame across actions, see note above)
+    for j in range(3):
+        sj = slots_df.select(
+            F.col("sidx").alias(f"{t}i{j}"), F.col("sval").alias(f"{t}v{j}")
+        )
+        base = base.join(F.broadcast(sj), f"{t}i{j}")
+    member = (
+        F.col(f"{t}v0")
+        .bitwiseXOR(F.col(f"{t}v1"))
+        .bitwiseXOR(F.col(f"{t}v2"))
+        == F.col(f"{t}fp")
+    ) & F.col(f"{t}pres")
+    return base.withColumn(out_col, member).select(*df.columns, out_col)
 
 
 _T = "__xorsql_"  # prefix of the probe plan's internal columns
@@ -585,92 +600,9 @@ _SQL_FAMILIES = {
 }
 
 
-def sql_probe_plan(
-    df: DataFrame,
-    key_col: str,
-    out_col: str,
-    params_df: DataFrame,
-    slots_df: DataFrame,
-    num_shards: int,
-    width: int,
-    broadcast_slots: bool,
-    kind: str = "xor",
-) -> DataFrame:
-    """Shared zero-Python probe plan (see ``probe_sql`` for semantics).
-
-    ``broadcast_slots=True`` joins the flattened slot table via three
-    broadcast hash joins (filter fits executor memory — map-only probe);
-    ``False`` uses shuffled hash joins instead, the strategy that still
-    works when the slot table is a distributed artifact larger than any
-    broadcast (three shuffles of the probe corpus, zero Python either
-    way)."""
-    t = _T
-
-    # stage 1: digests + shard id as materialized columns (join keys)
-    d0, d1 = jvm_digest_cols(key_col)
-    base = df.withColumns({f"{t}d0": d0, f"{t}d1": d1}).withColumn(
-        f"{t}sh", F.pmod(F.col(f"{t}d0"), F.lit(num_shards)).cast("int")
-    )
-
-    # stage 2: per-shard parameters via a tiny (num_shards-row) broadcast
-    # join. Parameters as COLUMNS keep the slot-index expressions small —
-    # num_shards-sized literal arrays inline into every expression copy
-    # and blow past codegen's method-size limits, demoting the whole
-    # stage to interpreted evaluation (~100x slower).
-    base = _SQL_FAMILIES[kind][1](base.join(F.broadcast(params_df), f"{t}sh"))
-    base = base.withColumn(
-        f"{t}fp",
-        F.xxhash64(F.col(f"{t}d1"), F.lit(FP_SEED_SIGNED)).bitwiseAND(
-            F.lit((1 << width) - 1)
-        ),
-    )
-    # prune before the joins: the digests, shard id and the parameter
-    # columns are dead past this point, and in the shuffled-join path
-    # every surviving column rides THREE shuffles of the probe corpus
-    base = base.select(
-        *df.columns,
-        *[f"{t}i{j}" for j in range(3)],
-        f"{t}fp",
-        f"{t}pres",
-    )
-
-    # stage 3: three name-based equi-joins against the flattened slot
-    # table — broadcast hash joins (one-time hash-relation build per
-    # plan; reuse the returned DataFrame across actions, see note above)
-    # or shuffled hash joins for beyond-broadcast artifacts
-    for j in range(3):
-        sj = slots_df.select(
-            F.col("sidx").alias(f"{t}i{j}"), F.col("sval").alias(f"{t}v{j}")
-        )
-        if broadcast_slots:
-            base = base.join(F.broadcast(sj), f"{t}i{j}")
-        else:
-            base = base.join(sj.hint("shuffle_hash"), f"{t}i{j}")
-    member = (
-        F.col(f"{t}v0")
-        .bitwiseXOR(F.col(f"{t}v1"))
-        .bitwiseXOR(F.col(f"{t}v2"))
-        == F.col(f"{t}fp")
-    ) & F.col(f"{t}pres")
-    return base.withColumn(out_col, member).select(*df.columns, out_col)
-
-
-def params_pdf(kind: str, fl: dict, num_shards: int) -> pd.DataFrame:
-    """Per-shard probe-parameter rows (one per shard id) from a
-    ``_flat_params``-shaped dict (``slots`` not required)."""
-    cols = _SQL_FAMILIES[kind][0](fl["params"], fl["offsets"])
-    return pd.DataFrame(
-        {
-            f"{_T}sh": np.arange(num_shards, dtype=np.int32),
-            **{_T + k: v for k, v in cols.items()},
-            f"{_T}pres": fl["present"],
-        }
-    )
-
-
 def _probe_frames(spark: SparkSession, sxf: ShardedFilter) -> tuple:
-    """(``params_pdf``, (sidx, sval) over the flattened slot table)
-    DataFrames of a sharded filter, cached per (session, artifact) so
+    """(per-shard probe parameters, (sidx, sval) over the flattened slot
+    table) DataFrames of a sharded filter, cached per (session, artifact) so
     repeated probes reuse one Arrow upload.
 
     The slot frame is persisted + materialized: a BroadcastExchange over
@@ -681,7 +613,16 @@ def _probe_frames(spark: SparkSession, sxf: ShardedFilter) -> tuple:
     if cached is not None and cached[0] is spark:
         return cached[1]
     fl = sxf._flat()
-    params_df = spark.createDataFrame(params_pdf(sxf.kind, fl, sxf.num_shards))
+    cols = _SQL_FAMILIES[sxf.kind][0](fl["params"], fl["offsets"])
+    params_df = spark.createDataFrame(
+        pd.DataFrame(
+            {
+                f"{_T}sh": np.arange(sxf.num_shards, dtype=np.int32),
+                **{_T + k: v for k, v in cols.items()},
+                f"{_T}pres": fl["present"],
+            }
+        )
+    )
     pdf = pd.DataFrame(
         {
             "sidx": np.arange(fl["slots"].shape[0], dtype=np.int64),

@@ -9,7 +9,7 @@ in-memory ``T[] _tableSlots`` (``BaseXorFilter.cs:13``) must be re-homed
 when one machine cannot hold it:
 
 build (``build_xor_filter_table``)
-    digests (JVM ``xxhash64`` codegen, or the Arrow murmur kernel)
+    JVM ``xxhash64`` digests in whole-stage codegen
     -> ONE exchange on the shard id ``s = pmod(d0, num_shards)``
        (uniform: d0 is a hash lane, so conv_id skew cannot reach it):
        shard ``s`` goes to task ``s mod T``, ``T = min(num_shards,
@@ -24,18 +24,22 @@ build (``build_xor_filter_table``)
     executors all the way through the sink.
 
 probe (``XorFilterTable.probe``)
-    shard-cogrouped join: probes shuffle ONCE on the same routing hash,
-    and each task probes its group against that shard's slot blob with
-    the vectorized NumPy kernel. Peak memory per task = one shard's
-    filter + one probe group; nothing global, nothing driver-side. This
-    is the membership-probe strategy that still works when the filter
-    exceeds both driver memory and the broadcast threshold.
+    shard-cogrouped join: the probe corpus's JVM digests shuffle ONCE on
+    the same routing hash, and each task probes its group against that
+    shard's slot blob with the vectorized NumPy kernel. Peak memory per
+    task = one shard's filter + one probe group; nothing global, nothing
+    driver-side. It is the one probe of a persisted artifact, and it
+    still works when the filter exceeds both driver memory and the
+    broadcast threshold.
 
 For filters that DO fit on the driver, ``XorFilterTable.to_sharded()``
 loads the artifact into a :class:`ShardedFilter`, after which the
 broadcast paths (``is_member``, zero-Python ``probe_sql``)
 apply unchanged — at bench scale those are faster because they avoid
 the probe-side shuffle entirely.
+
+Artifacts carry their digest kind in ``filter.json``; one written by the
+older Python-murmur lane is refused (rebuild it).
 """
 
 from __future__ import annotations
@@ -47,23 +51,17 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.functions import pandas_udf
 from pyspark.sql.types import BooleanType, StructField, StructType
 
-from ..kernels.column import digest_series as _digest_batch
 from .spark_build import (
     ShardedFilter,
-    _digest_lane,
-    _flat_params,
     _shard_filter,
     _shard_summary,
     _u64,
     jvm_digest_cols,
-    params_pdf,
+    key_digests_jvm,
     shard_frame,
-    sql_probe_plan,
 )
-from .xor_core import _DTYPES
 
 __all__ = ["XorFilterTable", "build_xor_filter_table"]
 
@@ -79,6 +77,12 @@ class XorFilterTable:
     """
 
     def __init__(self, spark: SparkSession, path: str, meta: dict):
+        if meta["digest_kind"] != "xxhash64jvm":
+            raise ValueError(
+                f"filter table {path!r} holds {meta['digest_kind']!r} digests, "
+                "which no probe reads any more; rebuild it with "
+                "build_xor_filter_table"
+            )
         self.spark = spark
         self.path = path
         self.width = meta["width"]
@@ -141,32 +145,8 @@ class XorFilterTable:
         ns = self.num_shards
         out_cols = list(df.columns)
 
-        if self.digest_kind == "xxhash64jvm":
-            d0c, d1c = jvm_digest_cols(key_col)
-            base = df.withColumns({f"{t}d0": d0c, f"{t}d1": d1c})
-        else:
-            # murmur digests need the Python kernel; one struct-returning
-            # pandas UDF computes both lanes in a single Arrow pass (the
-            # struct is materialized as its own column first so the UDF
-            # is evaluated once, then split into the two lane columns)
-            @pandas_udf("d0 long, d1 long")
-            def _dig(s: pd.Series) -> pd.DataFrame:
-                d0, d1 = _digest_batch(s)
-                return pd.DataFrame(
-                    {"d0": d0.view(np.int64), "d1": d1.view(np.int64)}
-                )
-
-            base = (
-                df.withColumn(f"{t}dg", _dig(F.col(key_col)))
-                .withColumns(
-                    {
-                        f"{t}d0": F.col(f"{t}dg").getField("d0"),
-                        f"{t}d1": F.col(f"{t}dg").getField("d1"),
-                    }
-                )
-                .drop(f"{t}dg")
-            )
-        base = base.withColumn(
+        d0c, d1c = jvm_digest_cols(key_col)
+        base = df.withColumns({f"{t}d0": d0c, f"{t}d1": d1c}).withColumn(
             f"{t}sh", F.pmod(F.col(f"{t}d0"), F.lit(ns)).cast("int")
         )
         out_schema = StructType(
@@ -193,92 +173,6 @@ class XorFilterTable:
             .applyInPandas(kernel, schema=out_schema)
         )
 
-    def probe_sql(
-        self, df: DataFrame, key_col: str, out_col: str = "is_member"
-    ) -> DataFrame:
-        """Zero-Python probe of the DISTRIBUTED artifact via shuffled
-        hash joins (no driver load, no broadcast, no Arrow boundary on
-        the probe corpus).
-
-        Same whole-stage-codegen plan as ``spark_build.probe_sql``
-        (digests, per-shard params broadcast, three slot-table
-        equi-joins), except the flattened slot table is decoded from the
-        artifact parquet by a tiny ``mapInPandas`` over the SHARD BLOBS
-        (Python cost is O(artifact), never O(probes)) and joined with
-        ``hint("shuffle_hash")`` — the strategy that still works when
-        the filter is terabytes: three shuffles of the probe corpus
-        against a distributed, persisted slot table. Requires a
-        ``jvm_digests=True`` (sqlhash-addressed) build."""
-        if self.digest_kind != "xxhash64jvm" or self.mode != "sqlhash":
-            raise ValueError(
-                "probe_sql requires a table built with jvm_digests=True, "
-                f"i.e. sqlhash addressing (got {self.digest_kind!r}, "
-                f"{self.mode!r}); use XorFilterTable.probe instead"
-            )
-        spark = self.spark
-        cached = getattr(self, "_sqlprobe_cache", None)
-        if cached is None:
-            # per-shard metadata only crosses to the driver (bytes per
-            # shard); slots stay in executor-side parquet
-            metas = {
-                int(r["shard"]): json.loads(r["meta"])
-                for r in self.shards_df().select("shard", "meta").collect()
-            }
-            fl = _flat_params("xor", metas, self.num_shards)
-            params_df = spark.createDataFrame(
-                params_pdf("xor", fl, self.num_shards)
-            )
-
-            # decode shard blobs -> (sidx, sval) rows, executor-side; the
-            # shard->global-offset map is tiny closure state
-            off_map = {sid: int(fl["offsets"][sid]) for sid in metas}
-            width = self.width
-
-            def decode(batches):
-                dt = _DTYPES[width]
-                for pdf in batches:
-                    for shard, blob in zip(pdf["shard"], pdf["slots"]):
-                        vals = np.frombuffer(blob, dtype=dt).astype(np.int64)
-                        base_off = off_map[int(shard)]
-                        yield pd.DataFrame(
-                            {
-                                "sidx": base_off
-                                + np.arange(vals.shape[0], dtype=np.int64),
-                                "sval": vals,
-                            }
-                        )
-
-            slots_df = (
-                self.shards_df()
-                .select("shard", "slots")
-                # spread the (tiny) shard blob rows BEFORE decoding:
-                # parallelizes the decode across cores and leaves the
-                # decoded table already partitioned — repartitioning the
-                # 10^7-row decoded output instead cost a full extra
-                # shuffle on the cold path
-                .repartition(max(4, min(len(metas) or 1, 64)))
-                .mapInPandas(decode, schema="sidx long, sval long")
-                # persist the decoded table: three joins (and every probe
-                # action) reuse one decode pass
-                .persist()
-            )
-            if not metas:  # slots of the 3-slot stand-in of keyless shards
-                slots_df = spark.createDataFrame(
-                    pd.DataFrame({"sidx": np.arange(3), "sval": np.zeros(3, np.int64)})
-                )
-            self._sqlprobe_cache = (params_df, slots_df)
-        params_df, slots_df = self._sqlprobe_cache
-        return sql_probe_plan(
-            df,
-            key_col,
-            out_col,
-            params_df=params_df,
-            slots_df=slots_df,
-            num_shards=self.num_shards,
-            width=self.width,
-            broadcast_slots=False,
-        )
-
 
 def build_xor_filter_table(
     df: DataFrame,
@@ -287,7 +181,7 @@ def build_xor_filter_table(
     num_shards: int = 32,
     width: int = 8,
     seed: int = 0,
-    jvm_digests: bool = False,
+    jvm_digests: bool = True,
     dedup: str = "in_shard",
 ) -> XorFilterTable:
     """Build a sharded XOR filter and persist it as a distributed table.
@@ -298,9 +192,11 @@ def build_xor_filter_table(
     executors instead of collected, so the build has NO per-key serial
     stage and the artifact size is bounded by storage, not driver memory.
     """
-    digest_fn, digest_kind, addressing = _digest_lane(jvm_digests)
+    # kept only because the benchmark passes it; the next benchmark change drops it
+    if not jvm_digests:
+        raise ValueError("the murmur sharded lane is gone; jvm_digests must be True")
     shard_frame(
-        digest_fn(df, key_col), num_shards, width, seed, addressing, dedup
+        key_digests_jvm(df, key_col), num_shards, width, seed, "sqlhash", dedup
     ).write.mode("overwrite").parquet(os.path.join(path, _SHARDS_DIR))
 
     spark = df.sparkSession
@@ -313,8 +209,8 @@ def build_xor_filter_table(
         "width": width,
         "seed": seed,
         "num_shards": num_shards,
-        "digest_kind": digest_kind,
-        "mode": addressing,
+        "digest_kind": "xxhash64jvm",
+        "mode": "sqlhash",
     }
     tmp = os.path.join(path, _META_FILE + ".tmp")
     with open(tmp, "w") as f:

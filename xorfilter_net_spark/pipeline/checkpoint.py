@@ -35,8 +35,8 @@ from pyspark.sql import DataFrame, SparkSession
 from ..filters.spark_build import (
     SHARD_SCHEMA,
     ShardedXorFilter,
-    _digest_lane,
     _shard_filter,
+    key_digests_jvm,
     shard_frame,
 )
 
@@ -150,15 +150,13 @@ class BuildRun:
         return artifact
 
 
-def _assemble(
-    shards_df: DataFrame, width, seed, num_shards, digest_kind, addressing
-) -> dict:
+def _assemble(shards_df: DataFrame, width, seed, num_shards) -> dict:
     """Collected ``SHARD_SCHEMA`` rows -> the filter artifact dict."""
     shards = {
         r["shard"]: _shard_filter(r["meta"], r["slots"]) for r in shards_df.collect()
     }
     return ShardedXorFilter(
-        width, seed, shards, num_shards, digest_kind, addressing
+        width, seed, shards, num_shards, "xxhash64jvm", "sqlhash"
     ).to_dict()
 
 
@@ -170,22 +168,22 @@ def build_xor_filter_checkpointed(
     width: int = 8,
     seed: int = 0,
     input_token: str = "",
-    jvm_digests: bool = False,
+    jvm_digests: bool = True,
 ) -> tuple[ShardedXorFilter, dict]:
     """Checkpointed sharded XOR-filter build.
 
-    Stages: digests (distributed hash+dedup, parquet) -> shards
-    (per-shard peel in applyInPandas, parquet of artifacts) -> filter
-    (assembled ShardedXorFilter JSON). Returns (filter, stage metrics).
+    Stages: digests (JVM xxhash64 digests + distributed dedup, parquet)
+    -> shards (per-shard peel in applyInPandas with sqlhash addressing,
+    parquet of artifacts) -> filter (assembled ShardedXorFilter JSON,
+    probe-able with zero Python by ``probe_sql``). Returns (filter,
+    stage metrics).
 
     ``input_token`` should identify the input dataset (e.g. its path +
     snapshot id); it chains into every stage fingerprint.
-
-    ``jvm_digests`` mirrors ``build_sharded_filter``: the scale path
-    (xxhash64 digests in codegen, sqlhash addressing) yields a
-    checkpointed filter that ``probe_sql`` can evaluate with zero Python.
     """
-    digest_fn, digest_kind, addressing = _digest_lane(jvm_digests)
+    # kept only because the benchmark passes it; the next benchmark change drops it
+    if not jvm_digests:
+        raise ValueError("the murmur sharded lane is gone; jvm_digests must be True")
 
     spark = df.sparkSession
     run = BuildRun(spark, run_dir)
@@ -195,13 +193,13 @@ def build_xor_filter_checkpointed(
             "stage": "digests",
             "key_col": key_col,
             "input": input_token,
-            "digest_kind": digest_kind,
+            "digest_kind": "xxhash64jvm",
         }
     )
     digests = run.dataframe_stage(
         "digests",
         fp_digests,
-        lambda: digest_fn(df, key_col).dropDuplicates(["d0", "d1"]),
+        lambda: key_digests_jvm(df, key_col).dropDuplicates(["d0", "d1"]),
     )
 
     fp_shards = _fingerprint(
@@ -211,7 +209,7 @@ def build_xor_filter_checkpointed(
             "num_shards": num_shards,
             "width": width,
             "seed": seed,
-            "addressing": addressing,
+            "addressing": "sqlhash",
             # the shard row format: a run dir written in an older format
             # rebuilds this stage instead of misreading it
             "format": SHARD_SCHEMA,
@@ -220,16 +218,14 @@ def build_xor_filter_checkpointed(
     shards_df = run.dataframe_stage(
         "shards",
         fp_shards,
-        lambda: shard_frame(digests, num_shards, width, seed, addressing),
+        lambda: shard_frame(digests, num_shards, width, seed, "sqlhash"),
     )
 
     fp_filter = _fingerprint({"stage": "filter", "up": fp_shards})
     art = run.json_stage(
         "filter",
         fp_filter,
-        lambda: _assemble(
-            shards_df, width, seed, num_shards, digest_kind, addressing
-        ),
+        lambda: _assemble(shards_df, width, seed, num_shards),
     )
     return ShardedXorFilter.from_dict(art), run.metrics
 
@@ -275,12 +271,12 @@ def update_xor_filter_checkpointed(
          the digest chain filtered to those shards,
       4. copies every other shard's artifact verbatim from the base run.
 
-    All build parameters (width, seed, num_shards, digest kind,
-    addressing) come from the base run's filter artifact — an update can
-    never silently fork the configuration. The result is byte-identical
-    to a fresh full build over (base corpus ∪ delta) (asserted in
-    tests/test_checkpoint.py): per-shard construction is a pure function
-    of the shard's unique digest set.
+    The build parameters (width, seed, num_shards) come from the base
+    run's filter artifact — an update can never silently fork the
+    configuration; a base run built on murmur digests is refused. The
+    result is byte-identical to a fresh full build over (base corpus ∪
+    delta) (asserted in tests/test_checkpoint.py): per-shard
+    construction is a pure function of the shard's unique digest set.
 
     Updates chain: ``run_dir`` records its base in ``update.json``, so a
     later update may use this run as ITS base (digest dirs accumulate;
@@ -295,9 +291,12 @@ def update_xor_filter_checkpointed(
     width = base_art["width"]
     seed = base_art["seed"]
     num_shards = base_art["num_shards"]
-    digest_kind = base_art.get("digest_kind", "murmur")
-    addressing = base_art.get("mode", "digest")
-    digest_fn = _digest_lane(digest_kind == "xxhash64jvm")[0]
+    if base_art.get("digest_kind", "murmur") != "xxhash64jvm":
+        raise ValueError(
+            f"base run {base_run_dir!r} holds murmur digests, which no "
+            "sharded build reads any more; rebuild it with "
+            "build_xor_filter_checkpointed first"
+        )
 
     base_fp = BuildRun(spark, base_run_dir)._load_manifest("shards") or {}
     if json.loads(base_fp.get("fingerprint", "{}")).get("format") != SHARD_SCHEMA:
@@ -320,7 +319,7 @@ def update_xor_filter_checkpointed(
             "base": base_run_dir,
             "key_col": key_col,
             "input": input_token,
-            "digest_kind": digest_kind,
+            "digest_kind": "xxhash64jvm",
         }
     )
     # this run's digests stage holds ONLY the genuinely-new digests —
@@ -328,7 +327,7 @@ def update_xor_filter_checkpointed(
     new_digests = run.dataframe_stage(
         "digests",
         fp_digests,
-        lambda: digest_fn(delta_df, key_col)
+        lambda: key_digests_jvm(delta_df, key_col)
         .dropDuplicates(["d0", "d1"])
         .join(base_digests, ["d0", "d1"], "left_anti"),
     )
@@ -349,7 +348,7 @@ def update_xor_filter_checkpointed(
             "num_shards": num_shards,
             "width": width,
             "seed": seed,
-            "addressing": addressing,
+            "addressing": "sqlhash",
             "format": SHARD_SCHEMA,
         }
     )
@@ -363,7 +362,7 @@ def update_xor_filter_checkpointed(
         ).unionAll(new_digests)
         rebuilt = shard_frame(
             all_digests.filter(shard_col.isin([int(s) for s in affected])),
-            num_shards, width, seed, addressing,
+            num_shards, width, seed, "sqlhash",
         )
         kept = base_shards.filter(
             ~F.col("shard").isin([int(s) for s in affected])
@@ -376,9 +375,7 @@ def update_xor_filter_checkpointed(
     art = run.json_stage(
         "filter",
         fp_filter,
-        lambda: _assemble(
-            shards_df, width, seed, num_shards, digest_kind, addressing
-        ),
+        lambda: _assemble(shards_df, width, seed, num_shards),
     )
     run.metrics["update"] = {
         "shards_rebuilt": len(affected),

@@ -62,7 +62,6 @@ def filter_pruned_join(
         num_shards=num_shards,
         width=width,
         seed=seed,
-        jvm_digests=True,  # codegen digests + sqlhash addressing -> SQL probe
     )
     pruned = (
         probe_sql(sxf, fact, fact_key, out_col="__xf_member")
@@ -82,7 +81,7 @@ def prune_stats(
     sxf = build_sharded_filter(
         dim.select(dim_key).dropDuplicates(), dim_key,
         num_shards=kw.get("num_shards", 32), width=kw.get("width", 16),
-        seed=kw.get("seed", 0), jvm_digests=True,
+        seed=kw.get("seed", 0),
     )
     probed = probe_sql(sxf, fact, fact_key, out_col="__m")
     agg = probed.agg(

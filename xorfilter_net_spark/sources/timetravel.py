@@ -78,13 +78,20 @@ def _manifest_path(path: str, version: int) -> str:
     return os.path.join(path, "_versions", f"v{version}.json")
 
 
+def _replace_text(dst: str, text: str) -> None:
+    """Write ``dst`` through a tmp file + ``os.replace``: readers see the
+    old content or the new one, never a truncated file."""
+    tmp = dst + ".tmp"
+    with open(tmp, "w") as f:
+        f.write(text)
+    os.replace(tmp, dst)
+
+
 def _write_manifest(path: str, version: int, m: dict) -> None:
     os.makedirs(os.path.join(path, "_versions"), exist_ok=True)
-    with open(_manifest_path(path, version), "w") as f:
-        json.dump(m, f)
+    _replace_text(_manifest_path(path, version), json.dumps(m))
     # the commit point: readers resolve versions through this pointer
-    with open(os.path.join(path, "_current"), "w") as f:
-        f.write(str(version))
+    _replace_text(os.path.join(path, "_current"), str(version))
 
 
 def read_manifest(path: str, version: int | None = None) -> dict:
@@ -559,10 +566,9 @@ def fsck(path: str, repair: bool = False) -> dict:
         not exist (real corruption — storage loss or manual deletion;
         NEVER auto-repaired, the affected versions are unreadable),
       - ``danglers``: manifest files for versions newer than the
-        ``_current`` pointer (a crash between manifest write and pointer
-        flip cannot produce these — the manifest write and pointer write
-        are one ``_write_manifest`` call — so they too indicate manual
-        tampering; reported, not touched).
+        ``_current`` pointer (a crash between the manifest write and the
+        pointer flip leaves one; no reader resolves it; reported, not
+        touched).
 
     The Iceberg analog is ``remove_orphan_files``.
     """

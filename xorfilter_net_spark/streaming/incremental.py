@@ -10,16 +10,19 @@ by tests/test_streaming.py.
 Shape::
 
     readStream -> foreachBatch(
-        batch -> aggregate(batch, cols, sketch)   # executor-parallel
-              -> merge into <state_dir>/state.bin # driver, tiny
-              -> append metrics row               # per-batch lineage
+        batch -> aggregate(batch, cols, sketch)         # executor-parallel
+              -> write <state_dir>/state_v{n+1}.bin     # driver, tiny
+              -> commit meta.json (state file + ledger) # one atomic rename
     )
 
-State writes are atomic (tmp+rename) so a crashed job resumes from the
-last completed micro-batch; Spark's own checkpointLocation handles
-source offsets, giving end-to-end exactly-once state updates for
-idempotent re-merges (each micro-batch id is recorded and re-application
-of an already-merged batch is skipped).
+The meta commit is the one commit point: it names the state file and
+carries the batch ledger, so state and ledger can never disagree. A
+crash before it leaves the previous version current and the batch
+unapplied; the redelivered batch then merges exactly once (each
+micro-batch id is recorded and re-application of an already-merged
+batch is skipped). Spark's own checkpointLocation handles source
+offsets, giving end-to-end exactly-once state updates even for
+non-idempotent merges (CMS, count-sketch, moments).
 """
 
 from __future__ import annotations
@@ -40,28 +43,32 @@ class SketchAccumulator:
         self.sketch = sketch
         self.state_dir = state_dir
         os.makedirs(state_dir, exist_ok=True)
-        self._state_path = os.path.join(state_dir, "state.bin")
         self._meta_path = os.path.join(state_dir, "meta.json")
 
     def load(self) -> tuple[Any, dict]:
-        if os.path.exists(self._state_path):
-            with open(self._state_path, "rb") as f:
-                state = self.sketch.deserialize(f.read())
-            with open(self._meta_path) as f:
-                meta = json.load(f)
-        else:
-            state, meta = self.sketch.zero(), {"batches": [], "rows": 0}
-        return state, meta
+        if not os.path.exists(self._meta_path):
+            return self.sketch.zero(), {"batches": [], "rows": 0}
+        with open(self._meta_path) as f:
+            meta = json.load(f)
+        # a meta.json without "state" was written by the two-rename store
+        # that kept a single state.bin
+        state_path = os.path.join(self.state_dir, meta.get("state", "state.bin"))
+        with open(state_path, "rb") as f:
+            return self.sketch.deserialize(f.read()), meta
 
     def store(self, state: Any, meta: dict) -> None:
-        tmp = self._state_path + ".tmp"
-        with open(tmp, "wb") as f:
+        version = meta.get("version", 0) + 1
+        name = f"state_v{version}.bin"
+        with open(os.path.join(self.state_dir, name), "wb") as f:
             f.write(self.sketch.serialize(state))
-        os.replace(tmp, self._state_path)
+        meta = {**meta, "version": version, "state": name}
         tmp = self._meta_path + ".tmp"
         with open(tmp, "w") as f:
             json.dump(meta, f)
-        os.replace(tmp, self._meta_path)
+        os.replace(tmp, self._meta_path)  # the commit point
+        for old in os.listdir(self.state_dir):
+            if old.endswith(".bin") and old != name:
+                os.remove(os.path.join(self.state_dir, old))
 
     def merge_batch(self, batch_df: DataFrame, batch_id: int, cols: list[str]):
         state, meta = self.load()
