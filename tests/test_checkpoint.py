@@ -425,3 +425,40 @@ def test_previous_format_run_dir_rebuilds_shards(spark, sf_tiny, tmp_path):
     assert not m["shards"]["resumed"] and not m["filter"]["resumed"]
     assert artifact_canonical_json(resumed) == artifact_canonical_json(fresh)
     assert spark.read.parquet(shards_dir).columns == ["shard", "meta", "slots"]
+
+
+def test_crash_in_rerun_with_new_params_does_not_resume_its_output(
+    spark, tmp_path, monkeypatch
+):
+    """A run dir holds a finished run; a rerun with other parameters dies
+    after writing a stage's output but before its manifest. Going back to
+    the first parameters must recompute that stage, not resume the
+    other run's output under the old manifest."""
+    import numpy as np
+    import pytest
+
+    from xorfilter_net_spark.sketches.base import aggregate_checkpointed
+    from xorfilter_net_spark.sketches.cms import CmsSketch
+
+    df = spark.range(60).selectExpr("cast(id % 13 as string) as k")
+    run_dir = str(tmp_path / "run")
+
+    def run(w):
+        sk = CmsSketch(d=2, w=w, key_col="k")
+        return aggregate_checkpointed(df, ["k"], sk, run_dir, params={"w": w})[0]
+
+    first = run(32)
+
+    real_replace = os.replace
+
+    def replace(src, dst):
+        real_replace(src, dst)
+        if os.path.basename(dst) == "merged.json":
+            raise RuntimeError("crash before the merged manifest")
+
+    monkeypatch.setattr(os, "replace", replace)
+    with pytest.raises(RuntimeError):
+        run(64)
+    monkeypatch.undo()
+    again = run(32)
+    assert again.shape == first.shape and np.array_equal(again, first)

@@ -5,6 +5,7 @@ from __future__ import annotations
 import os
 import time
 
+import pytest
 from pyspark.sql import functions as F
 
 from xorfilter_net_spark.sketches.drift import drift_report
@@ -83,3 +84,69 @@ def test_replayed_batch_skipped_and_monotone_log(spark, tmp_path):
     # re-merging the SAME rows leaves distinct estimate unchanged
     assert abs(second["distinct_a"] - first["distinct_a"]) < 1e-9
     assert len(mon.metrics()) == 2
+
+
+def _monitor(spark, state_dir):
+    from xorfilter_net_spark.sketches.drift import snapshot_states
+
+    mon = DriftMonitor(
+        ref_states=None, key_col="k", num_col="v", cat_col="c",
+        state_dir=state_dir,
+    )
+    mon.ref = snapshot_states(
+        _snap(spark, 40), "k", "v", "c", mon.theta, mon.kll, mon.mg
+    )
+    return mon
+
+
+def test_crash_after_state_commit_keeps_drift_row(spark, tmp_path, monkeypatch):
+    """A crash right after the rename that ledgers the batch, then the
+    batch redelivered: the drift log still holds the batch's row, as in a
+    run that never crashed."""
+    batches = [_snap(spark, 30, key_off=100 * i, val_scale=i + 1.0) for i in (1, 2)]
+    clean = _monitor(spark, str(tmp_path / "clean"))
+    for i, b in enumerate(batches):
+        clean.merge_batch(b, i)
+
+    mon = _monitor(spark, str(tmp_path / "crashed"))
+    mon.merge_batch(batches[0], 0)
+    real_replace, fired = os.replace, []
+
+    def replace(src, dst):
+        real_replace(src, dst)
+        if not fired and 1 in mon.load()[1]:
+            fired.append(True)
+            raise RuntimeError("crash after the state commit")
+
+    monkeypatch.setattr(os, "replace", replace)
+    with pytest.raises(RuntimeError, match="after the state commit"):
+        mon.merge_batch(batches[1], 1)
+    monkeypatch.undo()
+
+    assert mon.merge_batch(batches[1], 1) is None  # redelivery skips
+    assert mon.metrics() == clean.metrics()
+    assert [r["batch_id"] for r in mon.metrics()] == [0, 1]
+    assert mon.load()[1] == clean.load()[1] == {0, 1}
+
+
+def test_reads_single_states_file_dir(spark, tmp_path):
+    """A state dir holding one ``states.pkl`` (states + ledger) and a
+    ``metrics.jsonl`` drift log still loads; the next batch moves it to
+    the versioned layout and keeps the old rows."""
+    import json
+    import pickle
+
+    mon = _monitor(spark, str(tmp_path))
+    states = {"theta": mon.theta.zero(), "kll": mon.kll.zero(), "mg": mon.mg.zero()}
+    (tmp_path / "states.pkl").write_bytes(
+        pickle.dumps({"states": states, "applied": [0]})
+    )
+    row = {"batch_id": 0, "distinct_a": 0.0}
+    (tmp_path / "metrics.jsonl").write_text(json.dumps(row) + "\n")
+
+    assert mon.metrics() == [row]
+    assert mon.load()[1] == {0}
+    assert mon.merge_batch(_snap(spark, 10), 0) is None
+    second = mon.merge_batch(_snap(spark, 10), 1)
+    assert mon.metrics() == [row, second]
+    assert "states.pkl" not in os.listdir(tmp_path)

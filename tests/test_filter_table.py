@@ -7,6 +7,7 @@ shards; reference determinism contract, DeterministicIntegrationTests.cs:13-34).
 """
 
 import json
+import os
 
 import numpy as np
 import pytest
@@ -283,3 +284,26 @@ def test_duplicate_heavy_keys_give_the_unique_artifact(spark, one_shard_keys, tm
             seed=11, jvm_digests=True, dedup=dedup,
         ))
         assert got == want
+
+
+def test_crashed_rebuild_leaves_no_stale_meta(spark, tmp_path, monkeypatch):
+    """A rebuild into an existing table dir that dies after overwriting
+    the shards but before publishing its meta leaves no meta at all, so
+    loading fails instead of probing the new shards with the old
+    parameters (which misses members)."""
+    from xorfilter_net_spark import commit
+
+    keys = spark.range(300).selectExpr("concat('k', cast(id as string)) as key")
+    path = str(tmp_path / "t")
+    build_xor_filter_table(keys, "key", path, num_shards=4, width=8, seed=1)
+
+    def crash_point(step, p):
+        if (step, os.path.basename(p)) == ("publish", "filter.json"):
+            raise RuntimeError("crash before the meta publish")
+
+    monkeypatch.setattr(commit, "_crash_point", crash_point)
+    with pytest.raises(RuntimeError):
+        build_xor_filter_table(keys, "key", path, num_shards=8, width=8, seed=2)
+    monkeypatch.undo()
+    with pytest.raises(FileNotFoundError):
+        XorFilterTable.load(spark, path)

@@ -48,7 +48,7 @@ def test_create_and_read_roundtrip(spark, tmp_path):
 def test_torn_pointer_write_keeps_previous_version(spark, tmp_path, monkeypatch):
     """A failure while the ``_current`` pointer is being written (after its
     file is opened for writing) leaves the previous version readable."""
-    from xorfilter_net_spark.sources import timetravel
+    from xorfilter_net_spark import commit
 
     class _Crash(RuntimeError):
         pass
@@ -75,7 +75,7 @@ def test_torn_pointer_write_keeps_previous_version(spark, tmp_path, monkeypatch)
     path = str(tmp_path / "t")
     df = _docs(spark)
     create_table(df, path, "k", n_buckets=8)
-    monkeypatch.setattr(timetravel, "open", torn_open, raising=False)
+    monkeypatch.setattr(commit, "open", torn_open, raising=False)
     with pytest.raises(_Crash):
         merge_into(spark, path, df.filter("k < 5").withColumn("text", F.lit("x")))
     monkeypatch.undo()

@@ -1,181 +1,315 @@
-"""The versioned store shared by the IVM view (streaming/ivm.py) and the
-streaming period store (streaming/rolling.py): a crash between writing
-``data_v{n+1}`` and committing the pointer leaves the batch unapplied,
-and redelivering the same batch id applies it exactly once — the store
-ends equal to a run that never crashed. The streaming sketch accumulator
-(streaming/incremental.py) keeps the same contract with one meta commit."""
+"""The one commit protocol (xorfilter_net_spark/commit.py) under crashes.
+
+Every durable writer is crashed once at each protocol step — after the
+data write, during the pointer publish, and after the publish but before
+pruning — through commit.py's one crash point. The batch is then
+redelivered twice (a second redelivery must skip), the run goes on, and
+the writer must equal a run that never crashed: same data, same ledger,
+same files on disk."""
 
 from __future__ import annotations
 
 import datetime as dt
 import os
-import tempfile
+import shutil
 
 import pytest
 
-from xorfilter_net_spark.streaming import ivm
+from xorfilter_net_spark import commit
 
 
 class _Crash(RuntimeError):
     pass
 
 
-def _crash_commit_once(monkeypatch, version: int) -> None:
-    """Make the pointer commit of ``version`` raise once, after checking
-    that the version's data dir is already written."""
-    real = ivm._commit
+def _listing(root: str) -> list[str]:
+    return sorted(
+        os.path.relpath(os.path.join(d, n), root)
+        for d, dirs, files in os.walk(root)
+        for n in dirs + files
+        if "data_v" not in d
+        and "=" not in d
+        and not n.startswith((".", "part-", "_SUCCESS"))
+    )
+
+
+class _Store:
+    """A ``VersionedStore`` writer: three batches, the second crashes."""
+
+    n_batches, crash_batch = 3, 1
+    pointer = ""
+
+    def target(self, root: str, step: str) -> tuple[str, str]:
+        p = os.path.join(root, self.pointer)
+        return {
+            "after_data": ("data", p),
+            "during_publish": ("publish", p),
+            "before_prune": ("published", p),
+        }[step]
+
+
+class _IvmView(_Store):
+    pointer = "view.json"
+
+    def setup(self, spark, root):
+        from xorfilter_net_spark.streaming import ivm
+
+        base = spark.createDataFrame(
+            [(1, "a", 10), (2, "b", 5)], "id long, g string, v long"
+        )
+        ivm.init_view(base, root, ["g"], ["v"])
+
+    def batch(self, spark, root, i):
+        from xorfilter_net_spark.streaming import ivm
+
+        changes = [("a", 7 + i, "insert"), (f"c{i}", 1, "insert"), ("b", 5, "delete")]
+        ch = spark.createDataFrame(
+            changes[: i + 1], "g string, v long, change_type string"
+        )
+        return ivm.apply_batch(spark, root, ch, i, ["g"], ["v"])
+
+    def snapshot(self, spark, root):
+        from xorfilter_net_spark.streaming import ivm
+
+        rows = sorted(tuple(r) for r in ivm.read_view(spark, root).collect())
+        return rows, ivm.view_meta(root), _listing(root)
+
+
+class _PeriodStore(_Store):
+    pointer = "view.json"
+
+    def setup(self, spark, root):
+        from xorfilter_net_spark.streaming.rolling import init_period_store
+
+        init_period_store(spark, root)
+
+    def batch(self, spark, root, i):
+        from xorfilter_net_spark.sketches.moments import MomentSketch
+        from xorfilter_net_spark.streaming.rolling import apply_batch
+
+        # moment merge is addition, so a double-applied batch would show
+        rows = [
+            (float(j % 7), dt.datetime(2024, 1, 1 + (i + j) % 3, 12))
+            for j in range(8)
+        ]
+        events = spark.createDataFrame(rows, "value double, ts timestamp")
+        sk = MomentSketch(quant=1000, value_col="__k")
+        return apply_batch(spark, root, events, i, sk, "value", "ts", 86400)
+
+    def snapshot(self, spark, root):
+        from xorfilter_net_spark.streaming import ivm
+        from xorfilter_net_spark.streaming.rolling import read_period_states
+
+        states = sorted(
+            (r["period"], bytes(r["state"]))
+            for r in read_period_states(spark, root).collect()
+        )
+        return states, ivm.view_meta(root), _listing(root)
+
+
+class _Accumulator(_Store):
+    pointer = "meta.json"
+
+    def _acc(self, root):
+        from xorfilter_net_spark.sketches.cms import CmsSketch
+        from xorfilter_net_spark.streaming.incremental import SketchAccumulator
+
+        # CMS merge is addition, so a double-applied batch would show
+        return SketchAccumulator(CmsSketch(d=3, w=64, key_col="k"), root)
+
+    def setup(self, spark, root):
+        self._acc(root)
+
+    def batch(self, spark, root, i):
+        df = spark.range(10 * i, 10 * i + 12).selectExpr(
+            "cast(id % 5 as string) as k"
+        )
+        return self._acc(root).merge_batch(df, i, ["k"])
+
+    def snapshot(self, spark, root):
+        acc = self._acc(root)
+        state, meta = acc.load()
+        return acc.sketch.serialize(state), meta, _listing(root)
+
+
+class _DriftMonitor(_Store):
+    pointer = "monitor.json"
+    _ref = None
+
+    def _mon(self, spark, root):
+        from xorfilter_net_spark.sketches.drift import snapshot_states
+        from xorfilter_net_spark.streaming.drift_monitor import DriftMonitor
+
+        mon = DriftMonitor(
+            None, "k", "v", "c", root, theta_k=64, kll_k=16, mg_k=8
+        )
+        if _DriftMonitor._ref is None:
+            _DriftMonitor._ref = snapshot_states(
+                _events(spark, 0), "k", "v", "c", mon.theta, mon.kll, mon.mg
+            )
+        mon.ref = _DriftMonitor._ref
+        return mon
+
+    def setup(self, spark, root):
+        self._mon(spark, root)
+
+    def batch(self, spark, root, i):
+        return self._mon(spark, root).merge_batch(_events(spark, i + 1), i)
+
+    def snapshot(self, spark, root):
+        mon = self._mon(spark, root)
+        return mon.metrics(), sorted(mon.load()[1]), _listing(root)
+
+
+def _events(spark, i):
+    from pyspark.sql import functions as F
+
+    return spark.range(12).select(
+        (F.col("id") + 5 * i).alias("k"),
+        (F.col("id").cast("double") * (i + 1)).alias("v"),
+        F.when(F.col("id") % 3 == i % 3, "a").otherwise("b").alias("c"),
+    )
+
+
+class _TableSink:
+    """The streaming MERGE sink on the time-travel table: two batches,
+    the second crashes while committing version 2."""
+
+    n_batches, crash_batch = 2, 1
+
+    def target(self, root, step):
+        return {
+            "after_data": ("publish", os.path.join(root, "_versions", "v2.json")),
+            "during_publish": ("publish", os.path.join(root, "_current")),
+            "before_prune": ("published", os.path.join(root, "_current")),
+        }[step]
+
+    def setup(self, spark, root):
+        from xorfilter_net_spark.sources.timetravel import create_table
+
+        base = spark.createDataFrame(
+            [(k, f"b{k}") for k in range(6)], "k long, v string"
+        )
+        create_table(base, root, "k", n_buckets=2)
+
+    def batch(self, spark, root, i):
+        from xorfilter_net_spark.streaming.table_sink import _merge_batch
+
+        d = spark.createDataFrame(
+            [(i, f"u{i}"), (10 + i, "new")], "k long, v string"
+        )
+        return _merge_batch(spark, root, d, i, None)
+
+    def snapshot(self, spark, root):
+        from xorfilter_net_spark.sources import timetravel
+        from xorfilter_net_spark.streaming.table_sink import applied_batches
+
+        rows = sorted(
+            tuple(r) for r in timetravel.read_table(spark, root).collect()
+        )
+        fsck = timetravel.fsck(root)
+        return rows, sorted(applied_batches(root)), fsck, _listing(root)
+
+
+class _CheckpointStages:
+    """A checkpointed run (``BuildRun`` stages via the resumable sketch
+    aggregate): the crash hits the final JSON stage; the rerun is the
+    redelivery."""
+
+    n_batches, crash_batch = 1, 0
+
+    def target(self, root, step):
+        return {
+            "after_data": ("published", os.path.join(root, "merged.json")),
+            "during_publish": ("publish", os.path.join(root, "merged.manifest.json")),
+            "before_prune": ("published", os.path.join(root, "merged.manifest.json")),
+        }[step]
+
+    def setup(self, spark, root):
+        os.makedirs(root)
+
+    def batch(self, spark, root, i):
+        from xorfilter_net_spark.sketches.base import aggregate_checkpointed
+        from xorfilter_net_spark.sketches.hll import HllSketch
+
+        df = spark.range(40).selectExpr("cast(id % 17 as string) as k")
+        sk = HllSketch(p=8, key_col="k")
+        st, _ = aggregate_checkpointed(df, ["k"], sk, root, params={"p": 8})
+        return sk.serialize(st)
+
+    def snapshot(self, spark, root):
+        import json
+
+        fps = {}
+        for stage in ("partials", "merged"):
+            with open(os.path.join(root, f"{stage}.manifest.json")) as f:
+                m = json.load(f)
+            fps[stage] = (m["fingerprint"], m.get("rows"))
+        return self.batch(spark, root, 0), fps, _listing(root)
+
+
+WRITERS = {
+    "ivm_view": _IvmView(),
+    "period_store": _PeriodStore(),
+    "accumulator": _Accumulator(),
+    "drift_monitor": _DriftMonitor(),
+    "table_sink": _TableSink(),
+    "checkpoint_stages": _CheckpointStages(),
+}
+STEPS = ["after_data", "during_publish", "before_prune"]
+_BEFORE_CRASH: dict[str, str] = {}
+_CLEAN: dict[str, object] = {}
+
+
+def _before_crash(spark, tmp_path_factory, name: str, root: str) -> None:
+    """Copy the writer's dir as it stands before the crashing batch (built
+    once per writer) to ``root``."""
+    w = WRITERS[name]
+    if name not in _BEFORE_CRASH:
+        pre = str(tmp_path_factory.mktemp(f"pre_{name}") / "d")
+        w.setup(spark, pre)
+        for i in range(w.crash_batch):
+            w.batch(spark, pre, i)
+        _BEFORE_CRASH[name] = pre
+    shutil.copytree(_BEFORE_CRASH[name], root)
+
+
+def _clean_snapshot(spark, tmp_path_factory, name):
+    if name not in _CLEAN:
+        w, root = WRITERS[name], str(tmp_path_factory.mktemp(f"clean_{name}") / "d")
+        _before_crash(spark, tmp_path_factory, name, root)
+        for i in range(w.crash_batch, w.n_batches):
+            w.batch(spark, root, i)
+        _CLEAN[name] = w.snapshot(spark, root)
+    return _CLEAN[name]
+
+
+@pytest.mark.parametrize("step", STEPS)
+@pytest.mark.parametrize("writer", list(WRITERS))
+def test_crash_then_redelivery_equals_clean_run(
+    spark, tmp_path, tmp_path_factory, monkeypatch, writer, step
+):
+    w, root = WRITERS[writer], str(tmp_path / "crashed")
+    _before_crash(spark, tmp_path_factory, writer, root)
+    at = w.target(root, step)
     fired = []
 
-    def commit(store_dir: str, meta: dict) -> None:
-        if meta["current"] == version and not fired:
+    def crash_point(s: str, path: str) -> None:
+        if (s, path) == at and not fired:
             fired.append(True)
-            assert os.path.isdir(ivm._data_dir(store_dir, version))
-            raise _Crash("crash before the pointer commit")
-        real(store_dir, meta)
+            raise _Crash(f"crash at {s} {path}")
 
-    monkeypatch.setattr(ivm, "_commit", commit)
-
-
-def _view_rows(spark, view_dir):
-    return sorted(tuple(r) for r in ivm.read_view(spark, view_dir).collect())
-
-
-def test_ivm_view_crash_before_commit_applies_once(spark, monkeypatch):
-    base = spark.createDataFrame(
-        [(1, "a", 10), (2, "b", 5)], "id long, g string, v long"
-    )
-    batches = [
-        spark.createDataFrame(
-            [("a", 7, "insert"), ("c", 1, "insert")],
-            "g string, v long, change_type string",
-        ),
-        spark.createDataFrame(
-            [("a", 3, "insert"), ("b", 5, "delete")],
-            "g string, v long, change_type string",
-        ),
-    ]
-    clean, crashed = (
-        os.path.join(tempfile.mkdtemp(prefix="vstore_"), "v") for _ in range(2)
-    )
-    for view in (clean, crashed):
-        ivm.init_view(base, view, ["g"], ["v"])
-    for i, ch in enumerate(batches):
-        ivm.apply_batch(spark, clean, ch, i, ["g"], ["v"])
-
-    ivm.apply_batch(spark, crashed, batches[0], 0, ["g"], ["v"])
-    _crash_commit_once(monkeypatch, version=2)
+    monkeypatch.setattr(commit, "_crash_point", crash_point)
     with pytest.raises(_Crash):
-        ivm.apply_batch(spark, crashed, batches[1], 1, ["g"], ["v"])
-    assert ivm.view_meta(crashed) == {"current": 1, "applied_batches": [0]}
-
-    # redelivery after the crash applies the batch; a second one skips
-    assert ivm.apply_batch(spark, crashed, batches[1], 1, ["g"], ["v"]) == {
-        "batch_id": 1,
-        "version": 2,
-    }
-    assert ivm.apply_batch(spark, crashed, batches[1], 1, ["g"], ["v"])[
-        "skipped_replay"
-    ]
-    assert ivm.view_meta(crashed) == ivm.view_meta(clean)
-    assert _view_rows(spark, crashed) == _view_rows(spark, clean)
-    assert dict(
-        (g, (n, s)) for g, n, s in _view_rows(spark, crashed)
-    ) == {"a": (3, 20), "c": (1, 1)}
-
-
-def test_period_store_crash_before_commit_applies_once(spark, monkeypatch):
-    from xorfilter_net_spark.sketches.moments import MomentSketch
-    from xorfilter_net_spark.streaming.rolling import (
-        apply_batch,
-        init_period_store,
-        read_period_states,
-    )
-
-    # moment merge is addition, so a double-applied batch would show
-    sk = MomentSketch(quant=1000, value_col="__k")
-    rows = [
-        (float(i % 7), dt.datetime(2024, 1, 1 + i % 4, 12)) for i in range(40)
-    ]
-    batches = [
-        spark.createDataFrame(part, "value double, ts timestamp")
-        for part in (rows[:15], rows[15:])
-    ]
-    clean, crashed = (tempfile.mkdtemp(prefix="pstore_") for _ in range(2))
-
-    def apply(store, i):
-        return apply_batch(
-            spark, store, batches[i], i, sk, "value", "ts", 86400
-        )
-
-    for store in (clean, crashed):
-        init_period_store(spark, store)
-    apply(clean, 0)
-    apply(clean, 1)
-
-    apply(crashed, 0)
-    _crash_commit_once(monkeypatch, version=2)
-    with pytest.raises(_Crash):
-        apply(crashed, 1)
-    assert ivm.view_meta(crashed) == {"current": 1, "applied_batches": [0]}
-    assert apply(crashed, 1) == {"batch_id": 1, "version": 2}
-    assert apply(crashed, 1)["skipped_replay"]
-
-    def states(store):
-        return sorted(
-            (r["period"], bytes(r["state"]))
-            for r in read_period_states(spark, store).collect()
-        )
-
-    assert ivm.view_meta(crashed) == ivm.view_meta(clean)
-    assert states(crashed) == states(clean)
-    assert sum(sk.deserialize(b)[0] for _, b in states(crashed)) == len(rows)
-
-
-def test_sketch_accumulator_crash_before_meta_commit_applies_once(
-    spark, monkeypatch, tmp_path
-):
-    """The accumulator's meta.json replace raises once, after the new
-    state file is written; the redelivered batch merges once, so CMS
-    counts (a non-idempotent merge) equal a run that never crashed."""
-    import numpy as np
-
-    from xorfilter_net_spark.sketches.cms import CmsSketch
-    from xorfilter_net_spark.streaming.incremental import SketchAccumulator
-
-    sk = CmsSketch(d=3, w=256, key_col="k")
-    batches = [
-        spark.range(lo, lo + 60).selectExpr("cast(id % 7 as string) as k")
-        for lo in (0, 60)
-    ]
-    clean = SketchAccumulator(sk, str(tmp_path / "clean"))
-    crashed = SketchAccumulator(sk, str(tmp_path / "crashed"))
-    for i, b in enumerate(batches):
-        clean.merge_batch(b, i, ["k"])
-
-    crashed.merge_batch(batches[0], 0, ["k"])
-    real_replace, fired = os.replace, []
-
-    def replace(src, dst):
-        if dst == crashed._meta_path and not fired:
-            fired.append(True)
-            raise _Crash("crash before the meta commit")
-        real_replace(src, dst)
-
-    monkeypatch.setattr(os, "replace", replace)
-    with pytest.raises(_Crash):
-        crashed.merge_batch(batches[1], 1, ["k"])
+        w.batch(spark, root, w.crash_batch)
     monkeypatch.undo()
-    assert crashed.load()[1]["rows"] == 60
 
-    crashed.merge_batch(batches[1], 1, ["k"])  # redelivery
-    crashed.merge_batch(batches[1], 1, ["k"])  # a second one skips
-    (got, got_meta), (want, want_meta) = crashed.load(), clean.load()
-    assert np.array_equal(got, want)
-    assert got_meta == want_meta
-    assert int(got.sum()) == 3 * 120
-    assert [f for f in os.listdir(crashed.state_dir) if f.endswith(".bin")] == [
-        got_meta["state"]
-    ]
+    w.batch(spark, root, w.crash_batch)  # redelivery
+    w.batch(spark, root, w.crash_batch)  # a second one changes nothing
+    for i in range(w.crash_batch + 1, w.n_batches):
+        w.batch(spark, root, i)
+    clean = _clean_snapshot(spark, tmp_path_factory, writer)
+    assert w.snapshot(spark, root) == clean
 
 
 def test_sketch_accumulator_reads_single_state_file_dir(tmp_path):
@@ -201,3 +335,30 @@ def test_sketch_accumulator_reads_single_state_file_dir(tmp_path):
     acc.store(got, got_meta)
     assert sorted(os.listdir(tmp_path)) == ["meta.json", "state_v1.bin"]
     assert np.array_equal(acc.load()[0], state)
+
+
+def test_sketch_accumulator_reads_version_named_meta_dir(tmp_path):
+    """A state dir whose meta.json names its version and state file
+    (``version``/``state``) loads, and the next store prunes that file."""
+    import json
+
+    import numpy as np
+
+    from xorfilter_net_spark.sketches.cms import CmsSketch
+    from xorfilter_net_spark.streaming.incremental import SketchAccumulator
+
+    sk = CmsSketch(d=3, w=64, key_col="k")
+    state = sk.zero()
+    state[1, 2] = 7
+    (tmp_path / "state_v4.bin").write_bytes(sk.serialize(state))
+    meta = {"batches": [{"id": 3, "rows": 7}], "rows": 7, "version": 4,
+            "state": "state_v4.bin"}
+    (tmp_path / "meta.json").write_text(json.dumps(meta))
+    acc = SketchAccumulator(sk, str(tmp_path))
+    got, got_meta = acc.load()
+    assert np.array_equal(got, state) and got_meta["batches"] == meta["batches"]
+    acc.store(got, got_meta)
+    assert sorted(os.listdir(tmp_path)) == ["meta.json", "state_v5.bin"]
+    got, got_meta = acc.load()
+    assert np.array_equal(got, state)
+    assert (got_meta["batches"], got_meta["rows"]) == (meta["batches"], 7)

@@ -158,16 +158,17 @@ def cmd_sketch(args: argparse.Namespace) -> dict:
             "estimate": sk.estimate(st),
         }
     if args.kind == "bloom":
+        from .commit import publish
         from .sketches.bloom import BloomSketch
 
         n = df.select(args.column).distinct().count()
         sk = BloomSketch.for_capacity(n, fpp=args.fpp, key_col=args.column)
         st = aggregate(df, [args.column], sk)
         out = args.output or (args.input.rstrip("/") + ".bloom.json")
-        with open(out, "w") as f:
-            json.dump(
-                {"m": sk.m, "k": sk.k, "state": sk.serialize(st).hex()}, f
-            )
+        publish(
+            out,
+            json.dumps({"m": sk.m, "k": sk.k, "state": sk.serialize(st).hex()}),
+        )
         return {"command": "sketch", "kind": "bloom", "artifact": out, "m": sk.m}
     raise SystemExit(f"unknown sketch kind: {args.kind}")
 

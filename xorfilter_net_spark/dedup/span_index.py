@@ -29,6 +29,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..commit import ledgered, publish, replayed, run_batches
 from .spans import _gram_stream
 
 BUCKET_COL = "bucket"
@@ -60,19 +61,17 @@ def create_gram_index(
     k: int = 10,
     n_buckets: int = 64,
 ) -> None:
-    spark = docs.sparkSession
     _bucketed(_gram_counts(docs, id_col, text_col, k), n_buckets).write.mode(
         "overwrite"
     ).partitionBy(BUCKET_COL).parquet(path)
-    with open(os.path.join(path, _META), "w") as f:
-        json.dump({"k": k, "n_buckets": n_buckets}, f)
-    _ = spark  # session flows through docs
+    publish(
+        os.path.join(path, _META), json.dumps({"k": k, "n_buckets": n_buckets})
+    )
 
 
-def _meta(path: str) -> tuple[int, int]:
+def _meta(path: str) -> dict:
     with open(os.path.join(path, _META)) as f:
-        m = json.load(f)
-    return int(m["k"]), int(m["n_buckets"])
+        return json.load(f)
 
 
 def update_gram_index(
@@ -92,51 +91,39 @@ def update_gram_index(
     would re-apply one batch — closing that window needs versioned
     bucket dirs as in sources/timetravel.py, which is the right
     upgrade path if ingest crash-consistency ever binds.)"""
-    with open(os.path.join(path, _META)) as f:
-        meta = json.load(f)
-    if batch_id is not None and batch_id in set(meta.get("applied", [])):
+    meta = _meta(path)
+    if replayed(meta.get("applied", []), batch_id):
         return {"skipped_replay": True, "batch_id": batch_id}
-    k, n_buckets = _meta(path)
+    k, n_buckets = int(meta["k"]), int(meta["n_buckets"])
     d = _bucketed(
         _gram_counts(delta_docs, id_col, text_col, k), n_buckets
     ).persist()
     touched = sorted(
         r[BUCKET_COL] for r in d.select(BUCKET_COL).distinct().collect()
     )
-    if not touched:
-        d.unpersist()
-        _record_batch(path, meta, batch_id)
-        return {"buckets_touched": 0, "n_buckets": n_buckets}
-    base = spark.read.parquet(path).filter(
-        F.col(BUCKET_COL).isin(touched)
-    )
-    merged = (
-        base.select("gram", "cnt", BUCKET_COL)
-        .unionByName(d.select("gram", "cnt", BUCKET_COL))
-        .groupBy("gram", BUCKET_COL)
-        .agg(F.sum("cnt").alias("cnt"))
-        .select("gram", "cnt", BUCKET_COL)
-        .repartition(max(len(touched) // 4, 1), BUCKET_COL)
-    )
-    prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try:
-        merged.write.mode("overwrite").partitionBy(BUCKET_COL).parquet(path)
-    finally:
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
+    if touched:
+        base = spark.read.parquet(path).filter(
+            F.col(BUCKET_COL).isin(touched)
+        )
+        merged = (
+            base.select("gram", "cnt", BUCKET_COL)
+            .unionByName(d.select("gram", "cnt", BUCKET_COL))
+            .groupBy("gram", BUCKET_COL)
+            .agg(F.sum("cnt").alias("cnt"))
+            .select("gram", "cnt", BUCKET_COL)
+            .repartition(max(len(touched) // 4, 1), BUCKET_COL)
+        )
+        prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
+        spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
+        try:
+            merged.write.mode("overwrite").partitionBy(BUCKET_COL).parquet(path)
+        finally:
+            spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
     d.unpersist()
-    _record_batch(path, meta, batch_id)
+    if batch_id is not None:
+        meta["applied"] = ledgered(meta.get("applied", []), batch_id)
+        publish(os.path.join(path, _META), json.dumps(meta))
     return {"buckets_touched": len(touched), "n_buckets": n_buckets}
-
-
-def _record_batch(path: str, meta: dict, batch_id: int | None) -> None:
-    if batch_id is None:
-        return
-    meta["applied"] = sorted(set(meta.get("applied", [])) | {batch_id})
-    tmp = os.path.join(path, _META + ".tmp")
-    with open(tmp, "w") as f:
-        json.dump(meta, f)
-    os.replace(tmp, os.path.join(path, _META))
 
 
 def stream_update_gram_index(
@@ -151,18 +138,12 @@ def stream_update_gram_index(
     update per micro-batch, replayed batch ids skipped via the meta
     ledger — the online-ExactSubstr ingest path."""
     spark = stream_docs.sparkSession
-
-    def for_each(batch_df: DataFrame, batch_id: int) -> None:
-        update_gram_index(
-            spark, path, batch_df, id_col, text_col, batch_id=batch_id
-        )
-
-    writer = stream_docs.writeStream.foreachBatch(for_each).option(
-        "checkpointLocation", checkpoint_dir
+    return run_batches(
+        stream_docs,
+        checkpoint_dir,
+        lambda df, i: update_gram_index(spark, path, df, id_col, text_col, i),
+        trigger_once,
     )
-    if trigger_once:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 def spans_against_index(
@@ -175,7 +156,7 @@ def spans_against_index(
 ) -> DataFrame:
     """Maximal spans of ``docs`` whose k-grams reach ``min_count`` in
     the INDEX — same hit-join + interval-union as the batch operator."""
-    k, _ = _meta(path)
+    k = int(_meta(path)["k"])
     grams = _gram_stream(docs, id_col, text_col, k)
     dup = (
         spark.read.parquet(path)

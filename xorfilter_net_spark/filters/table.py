@@ -53,6 +53,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import BooleanType, StructField, StructType
 
+from ..commit import publish, retract
 from .spark_build import (
     ShardedFilter,
     _shard_filter,
@@ -195,6 +196,7 @@ def build_xor_filter_table(
     # kept only because the benchmark passes it; the next benchmark change drops it
     if not jvm_digests:
         raise ValueError("the murmur sharded lane is gone; jvm_digests must be True")
+    retract(os.path.join(path, _META_FILE))  # the shards are overwritten in place
     shard_frame(
         key_digests_jvm(df, key_col), num_shards, width, seed, "sqlhash", dedup
     ).write.mode("overwrite").parquet(os.path.join(path, _SHARDS_DIR))
@@ -212,8 +214,5 @@ def build_xor_filter_table(
         "digest_kind": "xxhash64jvm",
         "mode": "sqlhash",
     }
-    tmp = os.path.join(path, _META_FILE + ".tmp")
-    with open(tmp, "w") as f:
-        json.dump(meta, f, indent=1)
-    os.replace(tmp, os.path.join(path, _META_FILE))
+    publish(os.path.join(path, _META_FILE), json.dumps(meta, indent=1))
     return XorFilterTable(spark, path, meta)

@@ -32,6 +32,7 @@ from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 
+from ..commit import publish, retract
 from ..filters.spark_build import (
     SHARD_SCHEMA,
     ShardedXorFilter,
@@ -54,13 +55,6 @@ def artifact_canonical_json(sxf: ShardedXorFilter) -> str:
 
 def _fingerprint(d: dict) -> str:
     return json.dumps(d, sort_keys=True, separators=(",", ":"))
-
-
-def _write_manifest(path: str, manifest: dict) -> None:
-    tmp = path + ".tmp"
-    with open(tmp, "w") as f:
-        json.dump(manifest, f, indent=1, sort_keys=True)
-    os.replace(tmp, path)  # atomic: a manifest is either absent or complete
 
 
 def _partition_lineage(spark: SparkSession, parquet_dir: str) -> list[dict]:
@@ -94,9 +88,16 @@ class BuildRun:
                 return json.load(f)
         return None
 
-    def is_complete(self, stage: str, fingerprint: str) -> bool:
+    def _resumed(self, stage: str, fingerprint: str) -> bool:
+        """Whether ``stage`` completed with ``fingerprint`` (recorded as
+        resumed in the metrics)."""
         m = self._load_manifest(stage)
-        return m is not None and m.get("fingerprint") == fingerprint
+        if m is not None and m.get("fingerprint") == fingerprint:
+            self.metrics[stage] = {**m, "resumed": True}
+            return True
+        # the stage output is about to be overwritten in place
+        retract(self._manifest_path(stage))
+        return False
 
     def dataframe_stage(
         self,
@@ -106,22 +107,17 @@ class BuildRun:
     ) -> DataFrame:
         """Run-or-reload a stage whose output is a parquet DataFrame."""
         out_dir = os.path.join(self.run_dir, stage)
-        m = self._load_manifest(stage)
-        if m is not None and m.get("fingerprint") == fingerprint:
-            self.metrics[stage] = {**m, "resumed": True}
-            return self.spark.read.parquet(out_dir)
-        t0 = time.time()
-        produce().write.mode("overwrite").parquet(out_dir)
-        lineage = _partition_lineage(self.spark, out_dir)
-        manifest = {
-            "stage": stage,
-            "fingerprint": fingerprint,
-            "wall_sec": round(time.time() - t0, 3),
-            "rows": sum(p["rows"] for p in lineage),
-            "partitions": lineage,
-        }
-        _write_manifest(self._manifest_path(stage), manifest)
-        self.metrics[stage] = {**manifest, "resumed": False}
+        if not self._resumed(stage, fingerprint):
+            t0 = time.time()
+            produce().write.mode("overwrite").parquet(out_dir)
+            lineage = _partition_lineage(self.spark, out_dir)
+            self._commit(
+                stage,
+                fingerprint,
+                t0,
+                rows=sum(p["rows"] for p in lineage),
+                partitions=lineage,
+            )
         return self.spark.read.parquet(out_dir)
 
     def json_stage(
@@ -129,35 +125,48 @@ class BuildRun:
     ) -> dict:
         """Run-or-reload a stage whose output is a single JSON artifact."""
         out_path = os.path.join(self.run_dir, f"{stage}.json")
-        m = self._load_manifest(stage)
-        if m is not None and m.get("fingerprint") == fingerprint:
-            self.metrics[stage] = {**m, "resumed": True}
+        if self._resumed(stage, fingerprint):
             with open(out_path) as f:
                 return json.load(f)
         t0 = time.time()
         artifact = produce()
-        tmp = out_path + ".tmp"
-        with open(tmp, "w") as f:
-            json.dump(artifact, f)
-        os.replace(tmp, out_path)
+        publish(out_path, json.dumps(artifact))
+        self._commit(stage, fingerprint, t0)
+        return artifact
+
+    def _commit(self, stage: str, fingerprint: str, t0: float, **fields) -> None:
+        """A stage is complete once its manifest is published (after its
+        output): a manifest is either absent or complete."""
         manifest = {
             "stage": stage,
             "fingerprint": fingerprint,
             "wall_sec": round(time.time() - t0, 3),
+            **fields,
         }
-        _write_manifest(self._manifest_path(stage), manifest)
+        publish(
+            self._manifest_path(stage),
+            json.dumps(manifest, indent=1, sort_keys=True),
+        )
         self.metrics[stage] = {**manifest, "resumed": False}
-        return artifact
 
 
-def _assemble(shards_df: DataFrame, width, seed, num_shards) -> dict:
-    """Collected ``SHARD_SCHEMA`` rows -> the filter artifact dict."""
-    shards = {
-        r["shard"]: _shard_filter(r["meta"], r["slots"]) for r in shards_df.collect()
-    }
-    return ShardedXorFilter(
-        width, seed, shards, num_shards, "xxhash64jvm", "sqlhash"
-    ).to_dict()
+def _filter_stage(
+    run: BuildRun, fp_shards: str, shards_df: DataFrame, width, seed, num_shards
+) -> ShardedXorFilter:
+    """The final JSON stage: collected ``SHARD_SCHEMA`` rows -> the filter
+    artifact."""
+
+    def assemble() -> dict:
+        shards = {
+            r["shard"]: _shard_filter(r["meta"], r["slots"])
+            for r in shards_df.collect()
+        }
+        return ShardedXorFilter(
+            width, seed, shards, num_shards, "xxhash64jvm", "sqlhash"
+        ).to_dict()
+
+    fp = _fingerprint({"stage": "filter", "up": fp_shards})
+    return ShardedXorFilter.from_dict(run.json_stage("filter", fp, assemble))
 
 
 def build_xor_filter_checkpointed(
@@ -221,13 +230,8 @@ def build_xor_filter_checkpointed(
         lambda: shard_frame(digests, num_shards, width, seed, "sqlhash"),
     )
 
-    fp_filter = _fingerprint({"stage": "filter", "up": fp_shards})
-    art = run.json_stage(
-        "filter",
-        fp_filter,
-        lambda: _assemble(shards_df, width, seed, num_shards),
-    )
-    return ShardedXorFilter.from_dict(art), run.metrics
+    sxf = _filter_stage(run, fp_shards, shards_df, width, seed, num_shards)
+    return sxf, run.metrics
 
 
 def _digest_dirs(run_dir: str) -> list[str]:
@@ -306,10 +310,10 @@ def update_xor_filter_checkpointed(
         )
 
     run = BuildRun(spark, run_dir)
-    meta_p = os.path.join(run_dir, "update.json")
-    if not os.path.exists(meta_p):
-        with open(meta_p, "w") as f:
-            json.dump({"base_run_dir": base_run_dir}, f)
+    publish(
+        os.path.join(run_dir, "update.json"),
+        json.dumps({"base_run_dir": base_run_dir}),
+    )
 
     base_digests = spark.read.parquet(*_digest_dirs(base_run_dir))
 
@@ -371,14 +375,9 @@ def update_xor_filter_checkpointed(
 
     shards_df = run.dataframe_stage("shards", fp_shards, produce_shards)
 
-    fp_filter = _fingerprint({"stage": "filter", "up": fp_shards})
-    art = run.json_stage(
-        "filter",
-        fp_filter,
-        lambda: _assemble(shards_df, width, seed, num_shards),
-    )
+    sxf = _filter_stage(run, fp_shards, shards_df, width, seed, num_shards)
     run.metrics["update"] = {
         "shards_rebuilt": len(affected),
         "shards_total": num_shards,
     }
-    return ShardedXorFilter.from_dict(art), run.metrics
+    return sxf, run.metrics

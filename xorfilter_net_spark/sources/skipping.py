@@ -43,6 +43,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..commit import publish, retract
 from ..filters.spark_build import jvm_digest_cols
 from ..filters.table import _shard_filter
 from ..filters.xor_core import build_from_digests
@@ -88,6 +89,7 @@ def build_skip_index(
             }
         )
 
+    retract(os.path.join(index_path, _META_FILE))  # files/ is overwritten in place
     (
         tagged.groupBy("file")
         .applyInPandas(build_one, "file string, meta string, slots binary")
@@ -95,11 +97,7 @@ def build_skip_index(
         .parquet(os.path.join(index_path, _FILES_DIR))
     )
     meta = {"key_col": key_col, "width": width, "seed": seed}
-    tmp = os.path.join(index_path, _META_FILE + ".tmp")
-    os.makedirs(index_path, exist_ok=True)
-    with open(tmp, "w") as fh:
-        json.dump(meta, fh, indent=1)
-    os.replace(tmp, os.path.join(index_path, _META_FILE))
+    publish(os.path.join(index_path, _META_FILE), json.dumps(meta, indent=1))
     return meta
 
 

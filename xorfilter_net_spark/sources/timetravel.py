@@ -24,8 +24,9 @@ them back to one).
 
 Iceberg parallels, implemented from scratch on bare parquet:
 - snapshot isolation / commit point: data dirs are written first, the
-  manifest + ``_current`` pointer last — readers of version N never see
-  a half-written commit (Iceberg's metadata-pointer swap);
+  manifest + ``_current`` pointer last, each through commit.py's
+  ``publish`` — readers of version N never see a half-written commit
+  (Iceberg's metadata-pointer swap);
 - time travel: ``read_table(path, version=N)``;
 - ``expire_versions(keep_latest=K)``: drops manifests older than the
   kept window, then deletes commit dirs no kept manifest references
@@ -58,16 +59,8 @@ import shutil
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-BUCKET_COL = "bucket"
-
-
-def _bucketed(df: DataFrame, key_col: str, n_buckets: int) -> DataFrame:
-    return df.withColumn(
-        BUCKET_COL,
-        F.pmod(F.xxhash64(F.col(key_col).cast("string")), F.lit(n_buckets)).cast(
-            "int"
-        ),
-    )
+from ..commit import publish
+from .upsert import BUCKET_COL, _bucketed
 
 
 def _vdir(path: str, commit: int) -> str:
@@ -78,20 +71,20 @@ def _manifest_path(path: str, version: int) -> str:
     return os.path.join(path, "_versions", f"v{version}.json")
 
 
-def _replace_text(dst: str, text: str) -> None:
-    """Write ``dst`` through a tmp file + ``os.replace``: readers see the
-    old content or the new one, never a truncated file."""
-    tmp = dst + ".tmp"
-    with open(tmp, "w") as f:
-        f.write(text)
-    os.replace(tmp, dst)
-
-
-def _write_manifest(path: str, version: int, m: dict) -> None:
+def _commit(path: str, m: dict, **fields) -> int:
+    """Commit the version after manifest ``m`` (``m`` without a version:
+    version 0). The key, bucket count, owners, deletion vectors and
+    applied-batch ledger carry over unless ``fields`` override them.
+    Returns the new version."""
+    version = m.get("version", -1) + 1
+    carried = ("key_col", "n_buckets", "owners", "dvs", "applied_batches")
+    child = {k: m[k] for k in carried if k in m}
+    child.update(version=version, parent=m.get("version"), **fields)
     os.makedirs(os.path.join(path, "_versions"), exist_ok=True)
-    _replace_text(_manifest_path(path, version), json.dumps(m))
+    publish(_manifest_path(path, version), json.dumps(child))
     # the commit point: readers resolve versions through this pointer
-    _replace_text(os.path.join(path, "_current"), str(version))
+    publish(os.path.join(path, "_current"), str(version))
+    return version
 
 
 def read_manifest(path: str, version: int | None = None) -> dict:
@@ -175,19 +168,12 @@ def create_table(
     _bucketed(df, key_col, n_buckets).write.mode("overwrite").partitionBy(
         BUCKET_COL
     ).parquet(_vdir(path, 0))
-    _write_manifest(
+    return _commit(
         path,
-        0,
-        {
-            "version": 0,
-            "parent": None,
-            "key_col": key_col,
-            "n_buckets": n_buckets,
-            "owners": {b: 0 for b in range(n_buckets)},
-            "buckets_touched": n_buckets,
-        },
+        {"key_col": key_col, "n_buckets": n_buckets},
+        owners={b: 0 for b in range(n_buckets)},
+        buckets_touched=n_buckets,
     )
-    return 0
 
 
 def read_table(
@@ -230,22 +216,13 @@ def merge_into(
     m = read_manifest(path)
     key_col, n_buckets = m["key_col"], m["n_buckets"]
     new_version = m["version"] + 1
-    carry = {
-        k: m[k] for k in ("applied_batches",) if k in m
-    } | (extra_meta or {})
 
     d = _bucketed(delta.dropDuplicates([key_col]), key_col, n_buckets)
     touched = sorted(
         r[BUCKET_COL] for r in d.select(BUCKET_COL).distinct().collect()
     )
     if not touched:
-        _write_manifest(
-            path,
-            new_version,
-            {**m, **carry, "version": new_version, "parent": m["version"],
-             "owners": m["owners"], "dvs": m["dvs"],
-             "buckets_touched": 0},
-        )
+        _commit(path, m, buckets_touched=0, **(extra_meta or {}))
         return {"version": new_version, "buckets_touched": 0,
                 "n_buckets": n_buckets}
 
@@ -297,19 +274,9 @@ def merge_into(
         owners[b] = new_version
         # the rewrite materialized this bucket's deletes
         dvs.pop(b, None)
-    _write_manifest(
-        path,
-        new_version,
-        {
-            "version": new_version,
-            "parent": m["version"],
-            "key_col": key_col,
-            "n_buckets": n_buckets,
-            "owners": owners,
-            "dvs": dvs,
-            "buckets_touched": len(touched),
-            **carry,
-        },
+    _commit(
+        path, m, owners=owners, dvs=dvs, buckets_touched=len(touched),
+        **(extra_meta or {}),
     )
     return {
         "version": new_version,
@@ -335,7 +302,6 @@ def delete_where(
     m = read_manifest(path)
     key_col, n_buckets = m["key_col"], m["n_buckets"]
     new_version = m["version"] + 1
-    carry = {k: m[k] for k in ("applied_batches",) if k in m}
     d = _bucketed(
         keys.select(key_col).dropDuplicates([key_col]), key_col, n_buckets
     )
@@ -349,20 +315,8 @@ def delete_where(
         ).partitionBy(BUCKET_COL).parquet(_dvdir(path, new_version))
         for b in touched:
             dvs.setdefault(b, []).append(new_version)
-    _write_manifest(
-        path,
-        new_version,
-        {
-            "version": new_version,
-            "parent": m["version"],
-            "key_col": key_col,
-            "n_buckets": n_buckets,
-            "owners": m["owners"],
-            "dvs": dvs,
-            "buckets_touched": len(touched),
-            "dv_commit": True,
-            **carry,
-        },
+    _commit(
+        path, m, dvs=dvs, buckets_touched=len(touched), dv_commit=True
     )
     return {
         "version": new_version,
@@ -487,38 +441,48 @@ def list_versions(path: str) -> list[int]:
     )
 
 
+def _dirs(path: str, versions: list[int]) -> tuple[tuple, tuple]:
+    """((commit dirs, dv dirs) the manifests of ``versions`` reference,
+    (commit dirs, dv dirs) on disk)."""
+    commits: set[int] = set()
+    dvs: set[int] = set()
+    for v in versions:
+        m = read_manifest(path, v)
+        commits.update(m["owners"].values())
+        for layers in m["dvs"].values():
+            dvs.update(layers)
+    names = os.listdir(path)
+    on_disk = {
+        int(n[1:]) for n in names if n.startswith("v") and n[1:].isdigit()
+    }
+    dv_on_disk = {
+        int(n[2:]) for n in names if n.startswith("dv") and n[2:].isdigit()
+    }
+    return (commits, dvs), (on_disk, dv_on_disk)
+
+
+def _remove_dirs(path: str, commits: list[int], dvs: list[int]) -> None:
+    for c in commits:
+        shutil.rmtree(_vdir(path, c), ignore_errors=True)
+    for c in dvs:
+        shutil.rmtree(_dvdir(path, c), ignore_errors=True)
+
+
 def expire_versions(path: str, keep_latest: int = 1) -> dict:
     """Drop all but the newest ``keep_latest`` manifests, then delete
     commit dirs referenced by no kept manifest (refcounted GC)."""
     versions = list_versions(path)
     kept = versions[-keep_latest:]
     expired = [v for v in versions if v not in kept]
-    live_commits: set[int] = set()
-    live_dvs: set[int] = set()
-    for v in kept:
-        mk = read_manifest(path, v)
-        live_commits.update(mk["owners"].values())
-        for layers in mk["dvs"].values():
-            live_dvs.update(layers)
-    removed_dirs = []
-    removed_dv_dirs = []
+    (live, live_dvs), (on_disk, dv_on_disk) = _dirs(path, kept)
     for v in expired:
         os.remove(_manifest_path(path, v))
-    for name in os.listdir(path):
-        if name.startswith("dv") and name[2:].isdigit():
-            c = int(name[2:])
-            if c not in live_dvs:
-                shutil.rmtree(os.path.join(path, name))
-                removed_dv_dirs.append(c)
-        elif name.startswith("v") and name[1:].isdigit():
-            c = int(name[1:])
-            if c not in live_commits:
-                shutil.rmtree(os.path.join(path, name))
-                removed_dirs.append(c)
+    removed, removed_dvs = sorted(on_disk - live), sorted(dv_on_disk - live_dvs)
+    _remove_dirs(path, removed, removed_dvs)
     return {
         "expired_versions": expired,
-        "removed_commit_dirs": sorted(removed_dirs),
-        "removed_dv_dirs": sorted(removed_dv_dirs),
+        "removed_commit_dirs": removed,
+        "removed_dv_dirs": removed_dvs,
         "kept_versions": kept,
     }
 
@@ -533,22 +497,14 @@ def compact(spark: SparkSession, path: str) -> int:
     _bucketed(cur, m["key_col"], m["n_buckets"]).write.mode(
         "overwrite"
     ).partitionBy(BUCKET_COL).parquet(_vdir(path, new_version))
-    _write_manifest(
+    return _commit(
         path,
-        new_version,
-        {
-            "version": new_version,
-            "parent": m["version"],
-            "key_col": m["key_col"],
-            "n_buckets": m["n_buckets"],
-            "owners": {b: new_version for b in range(m["n_buckets"])},
-            # the full rewrite materialized every pending delete
-            "dvs": {},
-            "buckets_touched": m["n_buckets"],
-            **{k: m[k] for k in ("applied_batches",) if k in m},
-        },
+        m,
+        owners={b: new_version for b in range(m["n_buckets"])},
+        # the full rewrite materialized every pending delete
+        dvs={},
+        buckets_touched=m["n_buckets"],
     )
-    return new_version
 
 
 def fsck(path: str, repair: bool = False) -> dict:
@@ -573,35 +529,15 @@ def fsck(path: str, repair: bool = False) -> dict:
     The Iceberg analog is ``remove_orphan_files``.
     """
     versions = list_versions(path)
-    referenced: set[int] = set()
-    referenced_dvs: set[int] = set()
-    for v in versions:
-        mv = read_manifest(path, v)
-        referenced.update(mv["owners"].values())
-        for layers in mv["dvs"].values():
-            referenced_dvs.update(layers)
-    names = os.listdir(path)
-    on_disk = {
-        int(n[1:]) for n in names if n.startswith("v") and n[1:].isdigit()
-    }
-    dv_on_disk = {
-        int(n[2:]) for n in names if n.startswith("dv") and n[2:].isdigit()
-    }
+    (referenced, referenced_dvs), (on_disk, dv_on_disk) = _dirs(path, versions)
     orphans = sorted(on_disk - referenced)
     orphan_dvs = sorted(dv_on_disk - referenced_dvs)
     missing = sorted(referenced - on_disk)
     missing_dvs = sorted(referenced_dvs - dv_on_disk)
     current = current_version(path)
     danglers = sorted(v for v in versions if v > current)
-    removed = []
-    removed_dvs = []
     if repair:
-        for c in orphans:
-            shutil.rmtree(os.path.join(path, f"v{c}"), ignore_errors=True)
-            removed.append(c)
-        for c in orphan_dvs:
-            shutil.rmtree(os.path.join(path, f"dv{c}"), ignore_errors=True)
-            removed_dvs.append(c)
+        _remove_dirs(path, orphans, orphan_dvs)
     return {
         "versions": versions,
         "current": current,
@@ -610,6 +546,6 @@ def fsck(path: str, repair: bool = False) -> dict:
         "missing_dirs": missing,
         "missing_dv_dirs": missing_dvs,
         "danglers": danglers,
-        "removed_dirs": removed,
-        "removed_dv_dirs": removed_dvs,
+        "removed_dirs": orphans if repair else [],
+        "removed_dv_dirs": orphan_dvs if repair else [],
     }

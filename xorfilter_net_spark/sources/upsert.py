@@ -30,10 +30,13 @@ at 10^12 keys B ~ 10^5 keeps buckets in the GB range.
 
 from __future__ import annotations
 
+import json
 import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from ..commit import publish
 
 BUCKET_COL = "bucket"
 
@@ -116,15 +119,13 @@ _META = "_upsert_meta.json"
 
 
 def _write_meta(path: str, key_col: str, n_buckets: int) -> None:
-    import json
-
-    with open(os.path.join(path, _META), "w") as f:
-        json.dump({"key_col": key_col, "n_buckets": n_buckets}, f)
+    publish(
+        os.path.join(path, _META),
+        json.dumps({"key_col": key_col, "n_buckets": n_buckets}),
+    )
 
 
 def _read_meta(path: str) -> tuple[str, int]:
-    import json
-
     with open(os.path.join(path, _META)) as f:
         m = json.load(f)
     return m["key_col"], int(m["n_buckets"])

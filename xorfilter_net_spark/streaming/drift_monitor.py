@@ -6,13 +6,15 @@ RUNNING states and emit the drift numbers after each batch — data-drift
 alerting over an unbounded stream with O(sketch) state, no corpus
 retention, no re-reads.
 
-Mechanics (same discipline as ``streaming/incremental.py``):
+Mechanics (commit.py's ``VersionedStore``, as the sketch accumulator):
 - each micro-batch is aggregated DISTRIBUTED (the same two-phase
   mergeable aggregate as batch mode) and merged into the stored states;
-- states + the applied-batch ledger persist atomically (tmp+rename) per
-  batch, so a replayed ``batch_id`` after a crash is skipped — the
+- the states go to ``states_v{n}.pkl``, then one ``monitor.json`` pointer
+  publish commits them together with the applied-batch ledger and the
+  batch's drift row, so a crash at any step leaves states, ledger and
+  drift log agreeing, and a replayed ``batch_id`` is skipped — the
   running states are exactly-once;
-- a JSONL metrics log appends one drift row per applied batch — the
+- ``metrics()`` returns the drift rows, one per applied batch — the
   alerting surface.
 
 Batch==stream parity (tested): after consuming slices s0..sn, the
@@ -30,20 +32,13 @@ import pickle
 
 from pyspark.sql import DataFrame
 
+from ..commit import VersionedStore, ledgered, publish, replayed, run_batches
 from ..sketches.drift import drift_from_states
 from ..sketches.kll import KllSketch
 from ..sketches.misra_gries import MisraGriesSketch
 from ..sketches.theta import ThetaSketch
 
 __all__ = ["DriftMonitor", "run_drift_monitor"]
-
-
-def _atomic_write(path: str, blob: bytes) -> None:
-    """tmp+rename commit — the same discipline incremental.py uses."""
-    tmp = path + ".tmp"
-    with open(tmp, "wb") as f:
-        f.write(blob)
-    os.replace(tmp, path)
 
 
 class DriftMonitor:
@@ -65,40 +60,53 @@ class DriftMonitor:
         self.ref = ref_states
         self.state_dir = state_dir
         os.makedirs(state_dir, exist_ok=True)
-
-    # -- persistence ------------------------------------------------------
-    def _paths(self):
-        return (
-            os.path.join(self.state_dir, "states.pkl"),
-            os.path.join(self.state_dir, "metrics.jsonl"),
+        # before the shared store a monitor kept one states.pkl (read as
+        # version 0) with its ledger inside and its rows in metrics.jsonl
+        self._store = VersionedStore(
+            state_dir,
+            "monitor.json",
+            lambda n: f"states_v{n}.pkl" if n else "states.pkl",
+            keep=1,
         )
 
-    def load(self) -> tuple[dict, set]:
-        sp, _ = self._paths()
-        if not os.path.exists(sp):
-            return (
-                {
-                    "theta": self.theta.zero(),
-                    "kll": self.kll.zero(),
-                    "mg": self.mg.zero(),
-                },
-                set(),
-            )
-        with open(sp, "rb") as f:
-            blob = pickle.load(f)
-        return blob["states"], set(blob["applied"])
+    # -- persistence ------------------------------------------------------
+    def _meta(self) -> dict:
+        m = self._store.meta()
+        if m is not None:
+            return m
+        m = {"current": 0, "applied_batches": [], "metrics": []}
+        if os.path.exists(self._store.path(0)):
+            with open(self._store.path(0), "rb") as f:
+                m["applied_batches"] = pickle.load(f)["applied"]
+        rows = os.path.join(self.state_dir, "metrics.jsonl")
+        if os.path.exists(rows):
+            with open(rows) as f:
+                m["metrics"] = [json.loads(line) for line in f if line.strip()]
+        return m
 
-    def store(self, states: dict, applied: set) -> None:
-        sp, _ = self._paths()
-        _atomic_write(sp, pickle.dumps({"states": states, "applied": sorted(applied)}))
+    def _states(self, m: dict) -> dict:
+        path = self._store.path(m["current"])
+        if not os.path.exists(path):
+            return {
+                "theta": self.theta.zero(),
+                "kll": self.kll.zero(),
+                "mg": self.mg.zero(),
+            }
+        with open(path, "rb") as f:
+            return pickle.load(f)["states"]
+
+    def load(self) -> tuple[dict, set]:
+        m = self._meta()
+        return self._states(m), set(m["applied_batches"])
 
     # -- per-batch --------------------------------------------------------
     def merge_batch(self, batch_df: DataFrame, batch_id: int) -> dict | None:
         from ..sketches.drift import snapshot_states
 
-        states, applied = self.load()
-        if batch_id in applied:
+        m = self._meta()
+        if replayed(m["applied_batches"], batch_id):
             return None  # exactly-once on replay
+        states = self._states(m)
         part = snapshot_states(
             batch_df, *self.cols, self.theta, self.kll, self.mg
         )
@@ -111,19 +119,17 @@ class DriftMonitor:
             self.theta, self.kll, self.mg, states, self.ref
         )
         drift["batch_id"] = batch_id
-        applied.add(batch_id)
-        self.store(states, applied)
-        _, mp = self._paths()
-        with open(mp, "a") as f:
-            f.write(json.dumps(drift) + "\n")
+        blob = pickle.dumps({"states": states})
+        self._store.commit(
+            m,
+            lambda path: publish(path, blob),
+            applied_batches=ledgered(m["applied_batches"], batch_id),
+            metrics=m["metrics"] + [drift],
+        )
         return drift
 
     def metrics(self) -> list[dict]:
-        _, mp = self._paths()
-        if not os.path.exists(mp):
-            return []
-        with open(mp) as f:
-            return [json.loads(line) for line in f if line.strip()]
+        return self._meta()["metrics"]
 
 
 def run_drift_monitor(
@@ -149,12 +155,5 @@ def run_drift_monitor(
         reference_df, key_col, num_col, cat_col, mon.theta, mon.kll, mon.mg
     )
 
-    def for_each(batch_df: DataFrame, batch_id: int) -> None:
-        mon.merge_batch(batch_df, batch_id)
-
-    writer = stream_df.writeStream.foreachBatch(for_each).option(
-        "checkpointLocation", checkpoint_dir
-    )
-    if trigger_once:
-        writer = writer.trigger(availableNow=True)
-    return writer.start(), mon
+    q = run_batches(stream_df, checkpoint_dir, mon.merge_batch, trigger_once)
+    return q, mon

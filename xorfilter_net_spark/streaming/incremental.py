@@ -12,11 +12,12 @@ Shape::
     readStream -> foreachBatch(
         batch -> aggregate(batch, cols, sketch)         # executor-parallel
               -> write <state_dir>/state_v{n+1}.bin     # driver, tiny
-              -> commit meta.json (state file + ledger) # one atomic rename
+              -> publish meta.json (version + ledger)   # commit.py
     )
 
-The meta commit is the one commit point: it names the state file and
-carries the batch ledger, so state and ledger can never disagree. A
+The meta publish is the one commit point (commit.py's
+``VersionedStore``): it names the state version and carries the batch
+ledger, so state and ledger can never disagree. A
 crash before it leaves the previous version current and the batch
 unapplied; the redelivered batch then merges exactly once (each
 micro-batch id is recorded and re-application of an already-merged
@@ -27,52 +28,53 @@ non-idempotent merges (CMS, count-sketch, moments).
 
 from __future__ import annotations
 
-import json
 import os
 from typing import Any
 
 from pyspark.sql import DataFrame
 
+from ..commit import VersionedStore, publish, replayed, run_batches
 from ..sketches.base import MergeableSketch, aggregate
 
 
 class SketchAccumulator:
-    """Persisted sketch state + batch lineage under ``state_dir``."""
+    """Persisted sketch state + batch lineage under ``state_dir``: a
+    ``VersionedStore`` of ``state_v{n}.bin`` files whose ``meta.json``
+    pointer carries the ledger ``batches`` [{id, rows}] and ``rows``."""
 
     def __init__(self, sketch: MergeableSketch, state_dir: str):
         self.sketch = sketch
         self.state_dir = state_dir
         os.makedirs(state_dir, exist_ok=True)
-        self._meta_path = os.path.join(state_dir, "meta.json")
+        # the two-rename store kept a single state.bin: it is version 0
+        self._store = VersionedStore(
+            state_dir,
+            "meta.json",
+            lambda n: f"state_v{n}.bin" if n else "state.bin",
+            keep=1,
+        )
 
     def load(self) -> tuple[Any, dict]:
-        if not os.path.exists(self._meta_path):
+        meta = self._store.meta()
+        if meta is None:
             return self.sketch.zero(), {"batches": [], "rows": 0}
-        with open(self._meta_path) as f:
-            meta = json.load(f)
-        # a meta.json without "state" was written by the two-rename store
-        # that kept a single state.bin
-        state_path = os.path.join(self.state_dir, meta.get("state", "state.bin"))
-        with open(state_path, "rb") as f:
+        with open(self._store.path(_version(meta)), "rb") as f:
             return self.sketch.deserialize(f.read()), meta
 
     def store(self, state: Any, meta: dict) -> None:
-        version = meta.get("version", 0) + 1
-        name = f"state_v{version}.bin"
-        with open(os.path.join(self.state_dir, name), "wb") as f:
-            f.write(self.sketch.serialize(state))
-        meta = {**meta, "version": version, "state": name}
-        tmp = self._meta_path + ".tmp"
-        with open(tmp, "w") as f:
-            json.dump(meta, f)
-        os.replace(tmp, self._meta_path)  # the commit point
-        for old in os.listdir(self.state_dir):
-            if old.endswith(".bin") and old != name:
-                os.remove(os.path.join(self.state_dir, old))
+        blob = self.sketch.serialize(state)
+        self._store.commit(
+            {
+                "current": _version(meta),
+                "batches": meta["batches"],
+                "rows": meta["rows"],
+            },
+            lambda path: publish(path, blob),
+        )
 
     def merge_batch(self, batch_df: DataFrame, batch_id: int, cols: list[str]):
         state, meta = self.load()
-        if batch_id in {b["id"] for b in meta["batches"]}:
+        if replayed((b["id"] for b in meta["batches"]), batch_id):
             return state  # replayed micro-batch after restart: idempotent
         n = batch_df.count()
         if n:
@@ -82,6 +84,12 @@ class SketchAccumulator:
         meta["rows"] += n
         self.store(state, meta)
         return state
+
+
+def _version(meta: dict) -> int:
+    # meta.json before the shared store named it "version"; the
+    # two-rename store's named none (its state.bin is version 0)
+    return meta.get("current", meta.get("version", 0))
 
 
 def run_incremental_sketch(
@@ -99,18 +107,12 @@ def run_incremental_sketch(
     until the caller stops the query.
     """
     acc = SketchAccumulator(sketch, state_dir)
-
-    def for_each(batch_df: DataFrame, batch_id: int) -> None:
-        acc.merge_batch(batch_df, batch_id, cols)
-
-    writer = (
-        stream_df.writeStream.foreachBatch(for_each)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("append")
+    q = run_batches(
+        stream_df,
+        checkpoint_dir,
+        lambda df, i: acc.merge_batch(df, i, cols),
+        available_now,
     )
     if available_now:
-        q = writer.trigger(availableNow=True).start()
         q.awaitTermination()
-    else:
-        writer.start()
     return acc

@@ -7,7 +7,7 @@ Each micro-batch folds into the persisted view through
 ``pipeline/ivm.py::apply_changes`` — O(batch + touched groups); the base
 table behind the feed is NEVER read, or even reachable. The view is
 itself versioned on disk (``data_v{n}`` dirs + a ``view.json`` pointer
-written LAST via atomic rename — the timetravel commit discipline), and
+published LAST — commit.py's ``VersionedStore``), and
 the applied-batch ledger lives INSIDE that pointer, so a replayed
 ``foreachBatch`` id (Structured Streaming redelivers after crashes)
 skips without double-applying: idempotence rides the view's own commit,
@@ -24,13 +24,11 @@ No reference counterpart (beyond-reference streaming/warehouse family).
 
 from __future__ import annotations
 
-import json
-import os
-import shutil
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 
+from ..commit import VersionedStore, ledgered, replayed, run_batches
 from ..pipeline.ivm import agg_view, apply_changes
 
 __all__ = [
@@ -41,36 +39,24 @@ __all__ = [
     "view_meta",
 ]
 
-# The versioned store shared by the IVM view and the streaming period
-# store (streaming/rolling.py): ``data_v{n}`` parquet dirs plus a
-# ``view.json`` pointer {current, applied_batches} written LAST via
-# atomic rename. A crash before the pointer flips leaves the old version
-# current and the batch unledgered, so its redelivery rewrites
-# ``data_v{n+1}`` and commits exactly once.
-_META = "view.json"
+
+def _store(store_dir: str) -> VersionedStore:
+    """The store shared by the IVM view and the streaming period store
+    (streaming/rolling.py): ``data_v{n}`` parquet dirs plus a ``view.json``
+    pointer {current, applied_batches}."""
+    return VersionedStore(store_dir, "view.json", "data_v{}".format)
 
 
 def view_meta(view_dir: str) -> dict:
-    with open(os.path.join(view_dir, _META)) as fh:
-        return json.load(fh)
-
-
-def _data_dir(store_dir: str, version: int) -> str:
-    return os.path.join(store_dir, f"data_v{version}")
-
-
-def _commit(store_dir: str, meta: dict) -> None:
-    tmp = os.path.join(store_dir, _META + ".tmp")
-    with open(tmp, "w") as fh:
-        json.dump(meta, fh, indent=1)
-    os.replace(tmp, os.path.join(store_dir, _META))
+    return _store(view_dir).meta()
 
 
 def _init_store(store_dir: str, data: DataFrame) -> None:
     """Version 0 of a store holding ``data``, with an empty ledger."""
-    os.makedirs(store_dir, exist_ok=True)
-    data.write.mode("overwrite").parquet(_data_dir(store_dir, 0))
-    _commit(store_dir, {"current": 0, "applied_batches": []})
+    _store(store_dir).commit(
+        {"current": -1, "applied_batches": []},
+        data.write.mode("overwrite").parquet,
+    )
 
 
 def _apply_to_store(
@@ -81,31 +67,24 @@ def _apply_to_store(
 ) -> dict:
     """Write ``step(current data)`` as the next version and ledger
     ``batch_id`` in the same pointer commit. Replayed batch ids are
-    skipped (exactly-once); all but the last two versions are pruned
-    after the pointer moves."""
-    m = view_meta(store_dir)
-    if batch_id in m["applied_batches"]:
+    skipped (exactly-once)."""
+    store = _store(store_dir)
+    m = store.meta()
+    if replayed(m["applied_batches"], batch_id):
         return {"skipped_replay": True, "batch_id": batch_id}
-    cur = m["current"]
-    step(spark.read.parquet(_data_dir(store_dir, cur))).write.mode(
-        "overwrite"
-    ).parquet(_data_dir(store_dir, cur + 1))
-    _commit(
-        store_dir,
-        {
-            "current": cur + 1,
-            "applied_batches": sorted(set(m["applied_batches"]) | {batch_id}),
-        },
+    data = step(spark.read.parquet(store.path(m["current"])))
+    version = store.commit(
+        m,
+        data.write.mode("overwrite").parquet,
+        applied_batches=ledgered(m["applied_batches"], batch_id),
     )
-    for d in os.listdir(store_dir):
-        if d.startswith("data_v") and int(d[6:]) < cur:
-            shutil.rmtree(os.path.join(store_dir, d), ignore_errors=True)
-    return {"batch_id": batch_id, "version": cur + 1}
+    return {"batch_id": batch_id, "version": version}
 
 
 def read_view(spark: SparkSession, view_dir: str) -> DataFrame:
     """The current version of a store (the view, or a period store)."""
-    return spark.read.parquet(_data_dir(view_dir, view_meta(view_dir)["current"]))
+    store = _store(view_dir)
+    return spark.read.parquet(store.path(store.meta()["current"]))
 
 
 def init_view(
@@ -146,15 +125,9 @@ def stream_maintain_agg_view(
     ``table_changes(images='pre_post')`` slices). The view must already
     be initialized (``init_view``). Returns the streaming query."""
     spark = changes_stream.sparkSession
-
-    def for_each(batch_df: DataFrame, batch_id: int) -> None:
-        apply_batch(
-            spark, view_dir, batch_df, batch_id, group_cols, sum_cols
-        )
-
-    writer = changes_stream.writeStream.foreachBatch(for_each).option(
-        "checkpointLocation", checkpoint_dir
+    return run_batches(
+        changes_stream,
+        checkpoint_dir,
+        lambda df, i: apply_batch(spark, view_dir, df, i, group_cols, sum_cols),
+        trigger_once,
     )
-    if trigger_once:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()

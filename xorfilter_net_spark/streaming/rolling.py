@@ -6,9 +6,9 @@ without ever re-reading history.
 Each micro-batch aggregates to per-period partial states (the batch
 operators' period fold, over the BATCH only), which merge into the
 persisted (period, state) table (``merge_states``). The table lives in
-the versioned store streaming/ivm.py keeps for its view: versioned
-dirs, a ``view.json`` pointer written LAST via atomic rename, the
-applied-batch ledger inside the pointer (replayed foreachBatch ids
+the store streaming/ivm.py keeps for its view (commit.py's
+``VersionedStore``): versioned dirs, a ``view.json`` pointer published
+LAST, the applied-batch ledger inside the pointer (replayed foreachBatch ids
 skip; retries never double-apply — and bitmap OR is idempotent anyway,
 a belt under the braces). State table size is periods x state bytes,
 independent of event count.
@@ -27,6 +27,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..commit import run_batches
 from ..sketches.base import MergeableSketch
 from ..sketches.bitmap import BitmapSketch
 from ..sketches.columns import merge_states
@@ -93,18 +94,14 @@ def stream_update_period_states(
     spark = events_stream.sparkSession
     sk = sketch if sketch is not None else BitmapSketch(capacity, key_col="__k")
 
-    def for_each(batch_df: DataFrame, batch_id: int) -> None:
-        apply_batch(
-            spark, store_dir, batch_df, batch_id, sk,
-            key_col, ts_col, period_seconds,
-        )
-
-    writer = events_stream.writeStream.foreachBatch(for_each).option(
-        "checkpointLocation", checkpoint_dir
+    return run_batches(
+        events_stream,
+        checkpoint_dir,
+        lambda df, i: apply_batch(
+            spark, store_dir, df, i, sk, key_col, ts_col, period_seconds
+        ),
+        trigger_once,
     )
-    if trigger_once:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 def rolling_from_store(

@@ -12,8 +12,8 @@ after a crash. The sink records each applied batch_id inside the
 version manifest (the same atomic commit point as the data); a replayed
 batch_id is recognized and skipped, so retries never double-apply —
 idempotence rides the table's own transaction, no side ledger that
-could drift from the data. (Same discipline as
-``streaming/incremental.py``'s sketch accumulator, lifted to a table.)
+could drift from the data. (The replay check and the publish are
+commit.py's, as for every other durable writer.)
 
 State story at scale: the sink itself is stateless (dedup of delivery
 is by batch_id, not by row), merge cost per micro-batch is
@@ -25,6 +25,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
+from ..commit import ledgered, replayed, run_batches
 from ..sources.timetravel import merge_into, read_manifest
 
 
@@ -49,16 +50,12 @@ def stream_merge_into(
     micro-batches.
     """
     spark = stream_df.sparkSession
-
-    def for_each(batch_df: DataFrame, batch_id: int) -> None:
-        _merge_batch(spark, path, batch_df, batch_id, deleted_col)
-
-    writer = stream_df.writeStream.foreachBatch(for_each).option(
-        "checkpointLocation", checkpoint_dir
+    return run_batches(
+        stream_df,
+        checkpoint_dir,
+        lambda df, i: _merge_batch(spark, path, df, i, deleted_col),
+        trigger_once,
     )
-    if trigger_once:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 def _merge_batch(
@@ -68,16 +65,15 @@ def _merge_batch(
     batch_id: int,
     deleted_col: str | None,
 ) -> dict:
-    m = read_manifest(path)
-    applied = set(m.get("applied_batches", []))
-    if batch_id in applied:
+    applied = applied_batches(path)
+    if replayed(applied, batch_id):
         return {"skipped_replay": True, "batch_id": batch_id}
     info = merge_into(
         spark,
         path,
         batch_df,
         deleted_col=deleted_col,
-        extra_meta={"applied_batches": sorted(applied | {batch_id})},
+        extra_meta={"applied_batches": ledgered(applied, batch_id)},
     )
     info["batch_id"] = batch_id
     return info

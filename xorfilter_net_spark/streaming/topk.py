@@ -9,8 +9,9 @@ Composes two existing contracts:
   into a running state equal the one-shot batch sketch over the same
   rows — stream == batch by algebra, not by luck;
 - the persisted accumulator with per-batch ledger
-  (streaming/incremental.py): atomic tmp+rename state commits, replayed
-  micro-batch ids skip, so a crashed/restarted query never double-counts.
+  (streaming/incremental.py): state commits through commit.py's
+  ``VersionedStore``, replayed micro-batch ids skip, so a
+  crashed/restarted query never double-counts.
 
 State size is O(k) regardless of stream length. With fewer than k
 distinct keys the MG state is EXACT (no shrink ever fires), which the
