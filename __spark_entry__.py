@@ -143,6 +143,17 @@ _RECHECK = {
     "skip_index_point_lookup",
     "streaming_drift_monitor_ok",
     "span_index_incremental",
+    # two-phase sketch aggregates now merge on the driver from one Arrow
+    # collect (sketches/base.py); the users of aggregate not listed above
+    "bottomk_sample_users",
+    "bottomk_weighted_docs",
+    "ddsketch_event_value_quantiles_ok",
+    "drift_report_ok",
+    "fd_projection_ok",
+    "kll_event_value_quantiles_ok",
+    "q_skew_aware_join",
+    "quantile_bins_documents_ok",
+    "tdigest_event_value_quantiles_ok",
 }
 
 # r05 ordering: close the registry. The 30 never-sampled names (every

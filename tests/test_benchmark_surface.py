@@ -12,7 +12,14 @@ import numpy as np
 import pandas as pd
 
 from xorfilter_net_spark.filters import spark_build, table, xor_core
+from xorfilter_net_spark.kernels import column, hashes
 from xorfilter_net_spark.pipeline import checkpoint
+from xorfilter_net_spark.sketches import base, columns
+from xorfilter_net_spark.sketches.bloom import BloomSketch
+from xorfilter_net_spark.sketches.cms import CmsSketch
+from xorfilter_net_spark.sketches.hll import HllSketch
+from xorfilter_net_spark.sketches.kll import KllSketch
+from xorfilter_net_spark.sketches.tdigest import TDigestSketch
 
 
 def test_benchmark_names_importable_with_their_call_shapes():
@@ -92,3 +99,38 @@ def test_sharded_filter_reads_json_without_kind():
     del d["kind"]
     back = spark_build.ShardedXorFilter.from_dict(json.loads(json.dumps(d)))
     assert back.kind == "xor" and back.contains_digests(d0, d1).all()
+
+
+def test_sketch_surface_call_shapes():
+    """The sketch_aggregate workload: ``aggregate`` with three positional
+    arguments, the rollup's state-column pair, the key digest and the
+    five sketches built and queried as the workload builds and checks
+    them."""
+    inspect.signature(base.aggregate).bind("df", ["key", "value"], "five")
+    inspect.signature(columns.partial_states).bind("df", ["role", "tool"], ["key"], "hll")
+    inspect.signature(columns.merge_states).bind("states", ["role"], "hll")
+
+    keys = pd.Series([f"k{i % 300}" for i in range(1_000)])
+    d0, d1 = column.digest_series(keys)
+    assert d0.dtype == np.uint64 and d1.dtype == np.uint64 and len(d0) == len(keys)
+    buf, lens = hashes.pack_bytes(column.series_to_bytes(keys))
+    assert all(np.array_equal(a, b) for a, b in zip(hashes.digest128(buf, lens), (d0, d1)))
+
+    n = len(keys)
+    pdf = pd.DataFrame({"key": keys, "value": np.log1p(np.arange(n, dtype=np.float64))})
+    five = {
+        "hll": HllSketch(14, key_col="key"),
+        "bloom": BloomSketch.for_capacity(n, 0.01, key_col="key"),
+        "cms": CmsSketch(key_col="key"),
+        "kll": KllSketch(200, value_col="value"),
+        "tdigest": TDigestSketch(200.0, value_col="value"),
+    }
+    st = {}
+    for name, sk in five.items():
+        st[name] = sk.deserialize(sk.serialize(sk.merge(sk.zero(), sk.update(sk.zero(), pdf))))
+    hll, bloom, cms = five["hll"], five["bloom"], five["cms"]
+    assert hll.m == 2**14 and abs(hll.estimate(st["hll"]) - 300) < 15
+    assert (cms.estimate_series(st["cms"], keys.iloc[:5]) >= 3).all() and cms.w > 0
+    assert bloom.contains_series(st["bloom"], keys).all() and bloom.k > 0 and bloom.m > 0
+    for name in ("kll", "tdigest"):
+        assert 0.0 <= five[name].quantile(st[name], 0.5) <= pdf["value"].max()

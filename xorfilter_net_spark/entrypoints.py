@@ -448,8 +448,8 @@ def q_xor_incremental_update(spark: SparkSession, sf_dir: str) -> DataFrame:
     f"{_KEYED_CTE} select count(distinct key) as n_members_found from keyed",
 )
 def q_bloom_zero_fn(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Two-phase mergeable Bloom build (mapInPandas partials +
-    treeAggregate), then vectorized probe of the member set — a Bloom
+    """Two-phase mergeable Bloom build (mapInPandas partials + driver
+    merge), then vectorized probe of the member set — a Bloom
     filter can never miss an inserted key."""
     import pandas as pd
 
@@ -943,7 +943,7 @@ def q_countsketch_join_size(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_fd_embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Frequent Directions gate over the embedding corpus: the mergeable
     ell-row matrix sketch B (two-phase aggregate, one <=2*ell-row state
-    per partition crossing the shuffle) must satisfy the published
+    per partition collected to the driver) must satisfy the published
     deterministic guarantee vs the exact Gram matrix A'A (itself
     computed DISTRIBUTIVELY: per-partition d x d partial sums via
     mapInPandas — numPartitions x d^2 floats cross the wire, never the
@@ -1411,8 +1411,8 @@ def q_theta_set_ops(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q_bottomk_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Mergeable bottom-k uniform sample (sketches/bottomk.py): the 60
-    md5-smallest distinct user_ids, built as a two-phase aggregate whose
-    shuffle carries one <=60-row state per partition. Deterministic and
+    md5-smallest distinct user_ids, built as a two-phase aggregate that
+    collects one <=60-row state per partition. Deterministic and
     engine-portable by construction, so the oracle reproduces the exact
     sample: order by md5(key), key limit k."""
     from .sketches.bottomk import bottomk_sample

@@ -6,7 +6,7 @@ substitute is a two-pass split:
 
 1. one cheap corpus pass folds ``col`` into a mergeable KLL quantile
    sketch (``sketches/kll.py``; two-phase ``mapInPandas`` partials +
-   ``treeAggregate`` merge — the same shape as every sketch here), whose
+   driver merge — the same shape as every sketch here), whose
    1/k .. (k-1)/k quantile estimates become the bin cutpoints;
 2. a map-only codegen pass assigns ``bucket = 1 + sum(col > cut_i)`` —
    a flat chain of comparisons, zero shuffle, zero Python, trivially

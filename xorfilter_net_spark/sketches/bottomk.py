@@ -12,9 +12,9 @@ sample of distinct keys* — eval/holdout row sets, spot-check panels,
   byte-for-byte: ``order by md5(key), key limit k``);
 - **mergeable**: ``merge(a, b)`` keeps the k hash-smallest distinct
   keys of the union — associative, commutative, idempotent, so the
-  two-phase ``mapInPandas`` partial → ``treeAggregate`` shape of
-  ``sketches/base.py`` applies unchanged and the shuffle carries one
-  ≤k-row state per partition, never the corpus;
+  two-phase ``mapInPandas`` partial → driver merge shape of
+  ``sketches/base.py`` applies unchanged and only one ≤k-row state per
+  partition leaves an executor, never the corpus;
 - **uniform over distinct keys**: md5 is uniform on key content, so the
   k retained keys are a simple random sample of the distinct-key set
   (the KMV argument — Beyer et al., SIGMOD'07 — applied to the sample
@@ -157,12 +157,11 @@ def bottomk_weighted(
     k: int,
     payload_cols: list[str] | None = None,
     w_max: int = 64,
-    depth: int = 2,
 ) -> pd.DataFrame:
     """Two-phase fixed-size WEIGHTED sample of distinct keys: inclusion
     probability rises with ``weight_col`` (ticket-min scheme above).
     Same mergeable state shape as :func:`bottomk_sample` — one ≤k-row
-    state per partition crosses the shuffle.
+    state per partition reaches the driver.
 
     Note: a duplicated key must carry the same weight for the ranking to
     be well-defined; with conflicting weights the min ticket across
@@ -172,7 +171,7 @@ def bottomk_weighted(
     sk = BottomKSample(k, key_col)
     cols = [BottomKSample.HASH_COL, key_col, *(payload_cols or [])]
     hashed = with_weighted_hash(df, key_col, weight_col, w_max)
-    state = aggregate(hashed, cols, sk, depth=depth)
+    state = aggregate(hashed, cols, sk)
     return sk.finish(state)
 
 
@@ -181,11 +180,10 @@ def bottomk_sample(
     key_col: str,
     k: int,
     payload_cols: list[str] | None = None,
-    depth: int = 2,
 ) -> pd.DataFrame:
     """Two-phase fixed-size uniform sample of distinct ``key_col`` values.
 
-    Map-side combine (one ≤k-row state per partition) → log-depth tree
+    Map-side combine (one ≤k-row state per partition) → one driver-side
     merge; returns a pandas DataFrame of ≤k rows sorted by the sample
     hash. Cost at any scale: one corpus scan + O(partitions · k) merge.
     """
@@ -194,5 +192,5 @@ def bottomk_sample(
     sk = BottomKSample(k, key_col)
     cols = [BottomKSample.HASH_COL, key_col, *(payload_cols or [])]
     hashed = with_sample_hash(df, key_col)
-    state = aggregate(hashed, cols, sk, depth=depth)
+    state = aggregate(hashed, cols, sk)
     return sk.finish(state)

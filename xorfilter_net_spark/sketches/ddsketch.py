@@ -9,7 +9,7 @@ only agree with a single-pass state *within the error bound*, a DDSketch
 merge is plain bucket-count addition — associative, commutative, and
 **bit-identical under any partitioning** (property-tested), which makes
 it the best-behaved member of the quantile family for the two-phase
-mapInPandas -> treeAggregate execution shape (sketches/base.py).
+mapInPandas -> driver-merge execution shape (sketches/base.py).
 
 Published guarantee (validation target, tests/test_sketches.py):
 |quantile(q) - x_q| <= a * x_q for every q whose rank item landed in a

@@ -19,7 +19,7 @@ Published error contract (validated in tests/test_sketches.py):
 
 Like the other sketches this is dict-arithmetic per BATCH (pandas
 ``value_counts`` is the vectorized inner loop), one state per partition
-crossing the shuffle, log-depth ``treeAggregate`` merge.
+collected to the driver and merged there (``sketches/base.py``).
 """
 
 from __future__ import annotations

@@ -10,10 +10,10 @@ that operator in pure Spark + NumPy:
   ``array<double>`` per doc, standardized by corpus mean/std from ONE
   aggregate pass — all codegen until the final assembly;
 - **train**: full-batch gradient descent, each iteration ONE
-  ``mapInPandas`` partial-gradient pass + ``treeAggregate`` sum over a
-  CACHED feature table (the classic distributed-GD shape: the corpus
-  never moves, ``O(d)`` floats per partition cross the wire per
-  iteration). No sampling, no RNG: deterministic up to float summation
+  ``mapInPandas`` partial-gradient pass over a CACHED feature table,
+  collected and summed on the driver (the classic distributed-GD shape:
+  the corpus never moves, ``O(d)`` floats per partition cross the wire
+  per iteration). No sampling, no RNG: deterministic up to float summation
   order, verified against a single-machine NumPy reference;
 - **score**: broadcast weights, map-only sigmoid.
 
