@@ -48,15 +48,15 @@ def test_rows_only_queries_are_the_documented_iterative_set(registry):
     assert set(queries) - set(oracles) == set()
 
 
-def test_ordering_lists_name_registered_queries(registry):
-    """Every name the registry ordering lists (``_FRONT``, ``_RECHECK``)
-    is a registered query: a deregistered query left in a list would be
-    silently ignored."""
-    import __spark_entry__ as e
+def test_uncertified_queries_come_first(registry):
+    """A driver sampling a prefix of ``queries()`` reaches every query
+    whose fingerprint is not in tools/certified.json before any that is."""
+    from xorfilter_net_spark import certify
 
     queries, _ = registry
-    assert set(e._FRONT) - set(queries) == set()
-    assert e._RECHECK - set(queries) == set()
+    done = certify.certified()
+    flags = [n in done for n in queries]
+    assert flags == sorted(flags)
 
 
 def test_all_oracles_bind_in_duckdb(registry, duck):

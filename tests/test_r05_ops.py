@@ -355,21 +355,6 @@ def test_vocab_coverage_literal_delim(spark):
     assert got["n_tokens"] == 4 and got["n_oov"] == 1
 
 
-def test_rotation_unlisted_sorts_after_listed_tail():
-    """Unlisted unverified names must sort AFTER every _FRONT name (the
-    unique-count sentinel used to beat the last listed entries)."""
-    import importlib
-    import sys as _sys
-
-    _sys.path.insert(0, "/root/repo")
-    se = importlib.import_module("__spark_entry__")
-    front: dict[str, int] = {}
-    for i, n in enumerate(se._FRONT):
-        front.setdefault(n, i)
-    sentinel = len(se._FRONT)
-    assert all(v < sentinel for v in front.values())
-
-
 # ------------------------------------ ragged / zero-norm / boundary guards
 def test_centroid_pairs_rejects_ragged_vectors(spark):
     emb = spark.createDataFrame(

@@ -146,3 +146,54 @@ def test_streaming_updates_with_replay_skip(spark, tmp_path):
     assert info == {"skipped_replay": True, "batch_id": 0}
     after = _spans_set(spans_against_index(union, spark, path, min_count=2))
     assert after == before
+
+
+def _gram_count(spark, path, gram):
+    from xorfilter_net_spark.dedup.span_index import _read
+
+    return _read(spark, path).filter(f"gram = '{gram}'").collect()[0]["cnt"]
+
+
+def test_crash_before_ledger_then_redelivery_counts_once(
+    spark, tmp_path, monkeypatch
+):
+    """A crash after the bucket rewrite but before the ledger publish:
+    the redelivered batch finds its buckets stamped and skips them."""
+    import pytest
+
+    from xorfilter_net_spark import commit
+
+    path = str(tmp_path / "gidx")
+    text = " ".join(f"w{j}" for j in range(K))
+    create_gram_index(_docs(spark, [(1, text)]), path, k=K, n_buckets=4)
+
+    def crash(step, p):
+        if step == "publish" and p.endswith("_gram_index_meta.json"):
+            raise RuntimeError("crash at the ledger publish")
+
+    monkeypatch.setattr(commit, "_crash_point", crash)
+    with pytest.raises(RuntimeError, match="ledger publish"):
+        update_gram_index(spark, path, _docs(spark, [(2, text)]), batch_id=0)
+    monkeypatch.undo()
+    info = update_gram_index(spark, path, _docs(spark, [(2, text)]), batch_id=0)
+    assert info["buckets_touched"] == 0
+    assert _gram_count(spark, path, text) == 2
+    update_gram_index(spark, path, _docs(spark, [(3, text)]), batch_id=1)
+    assert _gram_count(spark, path, text) == 3
+
+
+def test_index_without_stamp_column_loads_as_unstamped(spark, tmp_path):
+    """An index written before buckets carried a batch stamp still reads,
+    and a batch folds into its (unstamped) buckets."""
+    import json
+
+    from xorfilter_net_spark.dedup.span_index import _META
+
+    path = str(tmp_path / "gidx")
+    text = " ".join(f"w{j}" for j in range(K))
+    old = spark.createDataFrame([(text, 1, 0)], "gram string, cnt long, bucket int")
+    old.write.partitionBy("bucket").parquet(path)
+    with open(os.path.join(path, _META), "w") as f:
+        json.dump({"k": K, "n_buckets": 1}, f)
+    update_gram_index(spark, path, _docs(spark, [(2, text)]), batch_id=0)
+    assert _gram_count(spark, path, text) == 2

@@ -6,6 +6,9 @@ compares row count, sorted column names, and order-insensitive values.
 
 Usage:
     python tools/check_contract.py            # all queries + entry smoke
+    python tools/check_contract.py --stale    # the uncertified prefix of
+                                              # queries(): what the driver
+                                              # certifies next
     python tools/check_contract.py name ...   # subset
 """
 
@@ -71,6 +74,7 @@ def compare(name: str, spark_pdf: pd.DataFrame, duck_pdf: pd.DataFrame) -> list[
 
 def main() -> int:
     import __spark_entry__ as se
+    from xorfilter_net_spark import certify
     from xorfilter_net_spark.sources.session import get_spark
 
     spark = get_spark(master="local[8]")
@@ -81,8 +85,13 @@ def main() -> int:
             f"create view {t} as select * from read_parquet('{SF_DIR}/{t}.parquet')"
         )
 
-    names = sys.argv[1:] or list(se.queries().keys())
+    args = sys.argv[1:]
     qs, oracles = se.queries(), se.oracle_sql()
+    if args == ["--stale"]:
+        done = certify.certified()
+        names = [n for n in qs if n not in done]
+    else:
+        names = args or list(qs)
     failed = []
     for name in names:
         t0 = time.time()
@@ -91,9 +100,6 @@ def main() -> int:
         except Exception as e:
             print(f"FAIL  {name}: spark raised {type(e).__name__}: {e}")
             failed.append(name)
-            continue
-        if name not in oracles:
-            print(f"rows-only  {name}: {len(spdf)} rows  ({time.time()-t0:.1f}s)")
             continue
         try:
             dpdf = con.execute(oracles[name]).df()
@@ -108,7 +114,7 @@ def main() -> int:
         else:
             print(f"OK    {name}: {len(spdf)} rows match  ({time.time()-t0:.1f}s)")
 
-    if not sys.argv[1:]:
+    if not args:
         edf = se.entry(spark)
         n = edf.count()
         print(f"entry() -> {n} rows, schema {edf.schema.simpleString()}")

@@ -127,7 +127,7 @@ def run_parity(spark, con, names=None) -> dict[str, list[str]]:
     import __spark_entry__ as se
 
     qs, oracles = se.queries(), se.oracle_sql()
-    names = names or [n for n in qs if n in oracles]
+    names = names or list(qs)
     out: dict[str, list[str]] = {}
     for name in names:
         try:

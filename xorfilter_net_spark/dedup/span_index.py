@@ -12,6 +12,10 @@ a MAINTAINED STATE so each batch costs O(delta):
   — unlike upsert's replace): delta gram counts, read ONLY their
   buckets, full-outer sum, dynamic-partition-overwrite those dirs.
   Untouched buckets are never read or written;
+- each rewritten bucket's rows carry the id of the batch that rewrote
+  them (``batch``, null for a write without one), so a batch redelivered
+  after a crash between its rewrite and its ledger skips the buckets it
+  already folded in;
 - ``spans_against_index`` runs the same hit-join + interval-union
   windows as the batch operator, but against the persisted counts.
 
@@ -33,7 +37,10 @@ from ..commit import ledgered, publish, replayed, run_batches
 from .spans import _gram_stream
 
 BUCKET_COL = "bucket"
+STAMP_COL = "batch"
 _META = "_gram_index_meta.json"
+# explicit, so an index written before the stamp column reads it as null
+_SCHEMA = f"gram string, cnt long, {STAMP_COL} long, {BUCKET_COL} int"
 
 __all__ = ["create_gram_index", "update_gram_index", "spans_against_index"]
 
@@ -44,6 +51,10 @@ def _gram_counts(docs: DataFrame, id_col: str, text_col: str, k: int):
         .groupBy("gram")
         .agg(F.count(F.lit(1)).alias("cnt"))
     )
+
+
+def _read(spark: SparkSession, path: str) -> DataFrame:
+    return spark.read.schema(_SCHEMA).parquet(path)
 
 
 def _bucketed(df: DataFrame, n_buckets: int) -> DataFrame:
@@ -61,9 +72,9 @@ def create_gram_index(
     k: int = 10,
     n_buckets: int = 64,
 ) -> None:
-    _bucketed(_gram_counts(docs, id_col, text_col, k), n_buckets).write.mode(
-        "overwrite"
-    ).partitionBy(BUCKET_COL).parquet(path)
+    _bucketed(_gram_counts(docs, id_col, text_col, k), n_buckets).withColumn(
+        STAMP_COL, F.lit(None).cast("long")
+    ).write.mode("overwrite").partitionBy(BUCKET_COL).parquet(path)
     publish(
         os.path.join(path, _META), json.dumps({"k": k, "n_buckets": n_buckets})
     )
@@ -84,13 +95,12 @@ def update_gram_index(
 ) -> dict:
     """Fold a delta corpus into the index: O(delta + touched buckets).
 
-    ``batch_id`` (streaming): applied ids are recorded in the meta file
-    AFTER the bucket rewrite commits, and a seen id is skipped — so
-    micro-batch replays never double-count. (The meta write is the
-    ledger's commit point; a crash in the window between data and meta
-    would re-apply one batch — closing that window needs versioned
-    bucket dirs as in sources/timetravel.py, which is the right
-    upgrade path if ingest crash-consistency ever binds.)"""
+    ``batch_id`` (streaming; foreachBatch ids only grow): the id is
+    recorded in the meta file after the bucket rewrite, and a recorded
+    id is skipped. A crash between the two leaves the id unrecorded but
+    its buckets stamped with it, so the redelivered batch skips every
+    touched bucket whose stamp is >= ``batch_id`` and never counts a
+    gram twice. A bucket without a stamp (null) is always folded."""
     meta = _meta(path)
     if replayed(meta.get("applied", []), batch_id):
         return {"skipped_replay": True, "batch_id": batch_id}
@@ -101,16 +111,21 @@ def update_gram_index(
     touched = sorted(
         r[BUCKET_COL] for r in d.select(BUCKET_COL).distinct().collect()
     )
+    if touched and batch_id is not None:
+        stamped = _read(spark, path).filter(F.col(STAMP_COL) >= batch_id)
+        done = stamped.filter(F.col(BUCKET_COL).isin(touched)).select(BUCKET_COL)
+        touched = sorted(set(touched) - {r[0] for r in done.distinct().collect()})
     if touched:
-        base = spark.read.parquet(path).filter(
-            F.col(BUCKET_COL).isin(touched)
-        )
+        in_touched = F.col(BUCKET_COL).isin(touched)
+        stamp = F.lit(batch_id).cast("long").alias(STAMP_COL)
         merged = (
-            base.select("gram", "cnt", BUCKET_COL)
-            .unionByName(d.select("gram", "cnt", BUCKET_COL))
+            _read(spark, path)
+            .filter(in_touched)
+            .select("gram", "cnt", BUCKET_COL)
+            .unionByName(d.filter(in_touched).select("gram", "cnt", BUCKET_COL))
             .groupBy("gram", BUCKET_COL)
             .agg(F.sum("cnt").alias("cnt"))
-            .select("gram", "cnt", BUCKET_COL)
+            .select("gram", "cnt", stamp, BUCKET_COL)
             .repartition(max(len(touched) // 4, 1), BUCKET_COL)
         )
         prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
@@ -159,7 +174,7 @@ def spans_against_index(
     k = int(_meta(path)["k"])
     grams = _gram_stream(docs, id_col, text_col, k)
     dup = (
-        spark.read.parquet(path)
+        _read(spark, path)
         .filter(F.col("cnt") >= min_count)
         .select("gram")
     )
