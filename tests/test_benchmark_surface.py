@@ -84,23 +84,6 @@ def test_shard_kernel_row_decodes_and_replays():
     assert np.array_equal(slots, f.slots)
 
 
-def test_sharded_filter_reads_json_without_kind():
-    """Sharded-filter JSON written before the family field existed (e.g.
-    ``cli build-xor`` output) has no ``kind``: it reads as XOR."""
-    rng = np.random.default_rng(4)
-    d0 = rng.integers(0, 2**63, 500, dtype=np.int64).view(np.uint64)
-    d1 = rng.integers(0, 2**63, 500, dtype=np.int64).view(np.uint64)
-    shard = spark_build.ShardedFilter.route(d0, 2)
-    shards = {
-        s: xor_core.build_from_digests(d0[shard == s], d1[shard == s], width=8, seed=s)
-        for s in (0, 1)
-    }
-    d = spark_build.ShardedXorFilter(8, 0, shards, 2).to_dict()
-    del d["kind"]
-    back = spark_build.ShardedXorFilter.from_dict(json.loads(json.dumps(d)))
-    assert back.kind == "xor" and back.contains_digests(d0, d1).all()
-
-
 def test_sketch_surface_call_shapes():
     """The sketch_aggregate workload: ``aggregate`` with three positional
     arguments, the rollup's state-column pair, the key digest and the

@@ -3,7 +3,11 @@
 import json
 import os
 
+import pytest
+
+from xorfilter_net_spark.filters.table import XorFilterTable
 from xorfilter_net_spark.pipeline.checkpoint import (
+    artifact_canonical_json,
     build_xor_filter_checkpointed,
 )
 from xorfilter_net_spark.sources.transcripts import (
@@ -23,6 +27,9 @@ def test_fresh_build_then_resume_identical(spark, sf_tiny, tmp_path):
         df, "key", run_dir, num_shards=8, width=16, seed=42, input_token="sf_tiny"
     )
     assert all(not st["resumed"] for st in m1.values())
+    # the run dir is a filter table: filter.json is its small meta
+    assert os.path.getsize(os.path.join(run_dir, "filter.json")) < 1024
+    assert XorFilterTable.load(spark, run_dir).num_shards == 8
     # every stage leaves a manifest with lineage
     man = json.load(open(os.path.join(run_dir, "digests.manifest.json")))
     assert man["rows"] > 0 and len(man["partitions"]) >= 1
@@ -89,7 +96,6 @@ def test_checkpointed_jvm_sqlhash_build_sql_probe_and_resume(
         df, "key", run_dir, num_shards=8, width=16, seed=9,
         input_token="sf_tiny", jvm_digests=True,
     )
-    assert sxf1.digest_kind == "xxhash64jvm" and sxf1.mode == "sqlhash"
     assert all(not st["resumed"] for st in m1.values())
 
     members = df.distinct()
@@ -136,6 +142,117 @@ def _as_murmur_run(run_dir: str) -> None:
     json.dump(art, open(art_p, "w"))
 
 
+def _as_hex_json_run(run_dir: str, sxf, **fields) -> None:
+    """Rewrite a run dir's filter.json the way builds wrote it before it
+    became the table meta: the whole sharded filter, each shard's slots
+    hex-encoded, with its digest kind and addressing mode. ``fields``
+    override keys; None drops one (the oldest ``cli build-xor`` output has
+    no ``kind``)."""
+    art = {
+        "kind": "xor",
+        "width": sxf.width,
+        "seed": sxf.seed,
+        "num_shards": sxf.num_shards,
+        "digest_kind": "xxhash64jvm",
+        "mode": "sqlhash",
+        "shards": {str(k): f.to_dict() for k, f in sxf.shards.items()},
+        **fields,
+    }
+    with open(os.path.join(run_dir, "filter.json"), "w") as f:
+        json.dump({k: v for k, v in art.items() if v is not None}, f)
+
+
+def _string_keys(spark, n):
+    return spark.range(n).selectExpr("concat('k', cast(id as string)) as key")
+
+
+def _cli_probe(filter_json: str, input_dir: str, out_dir: str) -> None:
+    from xorfilter_net_spark.cli import main
+
+    assert main([
+        "probe", "--filter", filter_json, "--input", input_dir,
+        "--key-expr", "key", "--output", out_dir,
+    ]) == 0
+
+
+@pytest.mark.parametrize("kind", ["xor", None])
+def test_hex_json_run_dir_loads_probes_and_resumes(spark, tmp_path, kind):
+    """A run dir whose filter.json holds the whole hex-encoded filter
+    loads as a filter table, probes with zero false negatives through the
+    table, ``cli probe`` and an update on it, and resumes every stage."""
+    from xorfilter_net_spark.filters.spark_build import probe_sql
+    from xorfilter_net_spark.pipeline.checkpoint import update_xor_filter_checkpointed
+
+    keys = _string_keys(spark, 2_000)
+    run_dir = str(tmp_path / "run")
+    kw = dict(num_shards=4, width=16, seed=3, input_token="t")
+    fresh, _ = build_xor_filter_checkpointed(keys, "key", run_dir, **kw)
+    _as_hex_json_run(run_dir, fresh, kind=kind)
+
+    tab = XorFilterTable.load(spark, run_dir)
+    assert probe_sql(tab.to_sharded(), keys, "key").where("is_member").count() == 2_000
+    keys.write.parquet(str(tmp_path / "keys"))
+    _cli_probe(f"{run_dir}/filter.json", str(tmp_path / "keys"), str(tmp_path / "out"))
+    assert spark.read.parquet(str(tmp_path / "out")).where("is_member").count() == 2_000
+
+    upd, _ = update_xor_filter_checkpointed(
+        _string_keys(spark, 2_050), "key", run_dir, str(tmp_path / "upd"), input_token="d"
+    )
+    assert probe_sql(upd, _string_keys(spark, 2_050), "key").where("is_member").count() == 2_050
+
+    resumed, m = build_xor_filter_checkpointed(keys, "key", run_dir, **kw)
+    assert all(st["resumed"] for st in m.values())
+    assert artifact_canonical_json(resumed) == artifact_canonical_json(fresh)
+
+
+@pytest.mark.parametrize("digest_kind", ["murmur", None])
+def test_murmur_hex_json_run_dir_is_refused(spark, tmp_path, digest_kind):
+    """A hex-JSON run dir of the murmur lane, or one older than the digest
+    kind field (those were all murmur), is refused by the table load and
+    by ``cli probe`` instead of probed with the wrong digests."""
+    keys = _string_keys(spark, 200)
+    run_dir = str(tmp_path / "run")
+    fresh, _ = build_xor_filter_checkpointed(keys, "key", run_dir, num_shards=4)
+    _as_hex_json_run(run_dir, fresh, kind=None, digest_kind=digest_kind, mode="digest")
+    keys.write.parquet(str(tmp_path / "keys"))
+    with pytest.raises(ValueError, match="rebuild"):
+        XorFilterTable.load(spark, run_dir)
+    with pytest.raises(ValueError, match="rebuild"):
+        _cli_probe(f"{run_dir}/filter.json", str(tmp_path / "keys"), str(tmp_path / "out"))
+
+
+def test_crashed_shards_rerun_leaves_no_stale_meta(spark, tmp_path, monkeypatch):
+    """A rerun with a changed seed that dies after overwriting shards/
+    (before the shards manifest) leaves no table meta, so the run dir
+    refuses to load instead of probing the new shards with the old seed;
+    going back to the first seed then rebuilds shards and meta and equals
+    a fresh build."""
+    from xorfilter_net_spark import commit
+
+    keys = _string_keys(spark, 300)
+    run_dir = str(tmp_path / "run")
+    kw = dict(num_shards=4, width=8, input_token="t")
+    build_xor_filter_checkpointed(keys, "key", run_dir, seed=1, **kw)
+
+    def crash_point(step, p):
+        if (step, os.path.basename(p)) == ("publish", "shards.manifest.json"):
+            raise RuntimeError("crash after shards/ is overwritten")
+
+    monkeypatch.setattr(commit, "_crash_point", crash_point)
+    with pytest.raises(RuntimeError):
+        build_xor_filter_checkpointed(keys, "key", run_dir, seed=2, **kw)
+    monkeypatch.undo()
+    with pytest.raises(FileNotFoundError):
+        XorFilterTable.load(spark, run_dir)
+
+    again, m = build_xor_filter_checkpointed(keys, "key", run_dir, seed=1, **kw)
+    assert not m["shards"]["resumed"] and not m["filter"]["resumed"]
+    fresh, _ = build_xor_filter_checkpointed(
+        keys, "key", str(tmp_path / "fresh"), seed=1, **kw
+    )
+    assert artifact_canonical_json(again) == artifact_canonical_json(fresh)
+
+
 def test_digest_kind_change_invalidates_digests_stage(spark, sf_tiny, tmp_path):
     """A run dir written by the murmur lane resumes nothing: its digests
     stage fingerprint names another digest kind, so digests, shards and
@@ -145,15 +262,13 @@ def test_digest_kind_change_invalidates_digests_stage(spark, sf_tiny, tmp_path):
     kw = dict(num_shards=4, width=8, seed=1, input_token="t")
     build_xor_filter_checkpointed(df, "key", run_dir, **kw)
     _as_murmur_run(run_dir)
-    sxf, m2 = build_xor_filter_checkpointed(df, "key", run_dir, **kw)
+    _, m2 = build_xor_filter_checkpointed(df, "key", run_dir, **kw)
     assert not m2["digests"]["resumed"]
     assert not m2["shards"]["resumed"]
     assert not m2["filter"]["resumed"]
-    assert (sxf.digest_kind, sxf.mode) == ("xxhash64jvm", "sqlhash")
 
 
 def test_murmur_base_run_is_refused_by_update(spark, sf_tiny, tmp_path):
-    import pytest
 
     from xorfilter_net_spark.pipeline.checkpoint import (
         update_xor_filter_checkpointed,
@@ -250,7 +365,6 @@ class TestIncrementalUpdate:
     def test_only_affected_shards_repeel_and_membership(self, spark, tmp_path):
         import numpy as np
 
-        from xorfilter_net_spark.filters.spark_build import ShardedXorFilter
         from xorfilter_net_spark.pipeline.checkpoint import (
             update_xor_filter_checkpointed,
         )
@@ -267,9 +381,7 @@ class TestIncrementalUpdate:
             input_token="d1",
         )
         assert m["update"]["shards_rebuilt"] == 1
-        base_art = ShardedXorFilter.from_dict(
-            json.load(open(tmp_path / "base" / "filter.json"))
-        )
+        base_art = XorFilterTable.load(spark, str(tmp_path / "base")).to_sharded()
         same = sum(
             1
             for sid, f in upd.shards.items()
@@ -371,11 +483,9 @@ def test_previous_format_run_dir_rebuilds_shards(spark, sf_tiny, tmp_path):
 
     import pyarrow as pa
     import pyarrow.parquet as pq
-    import pytest
 
     from xorfilter_net_spark.pipeline.checkpoint import (
         _fingerprint,
-        artifact_canonical_json,
         update_xor_filter_checkpointed,
     )
 
@@ -411,9 +521,7 @@ def test_previous_format_run_dir_rebuilds_shards(spark, sf_tiny, tmp_path):
     fman = json.load(open(fman_p))
     fman["fingerprint"] = _fingerprint({"stage": "filter", "up": man["fingerprint"]})
     json.dump(fman, open(fman_p, "w"))
-    art = json.load(open(os.path.join(run_dir, "filter.json")))
-    del art["kind"]
-    json.dump(art, open(os.path.join(run_dir, "filter.json"), "w"))
+    _as_hex_json_run(run_dir, fresh, kind=None)
 
     with pytest.raises(ValueError, match="row format"):
         update_xor_filter_checkpointed(
@@ -435,7 +543,6 @@ def test_crash_in_rerun_with_new_params_does_not_resume_its_output(
     the first parameters must recompute that stage, not resume the
     other run's output under the old manifest."""
     import numpy as np
-    import pytest
 
     from xorfilter_net_spark.sketches.base import aggregate_checkpointed
     from xorfilter_net_spark.sketches.cms import CmsSketch

@@ -14,7 +14,6 @@ import pytest
 from pyspark.sql import functions as F
 
 from xorfilter_net_spark.filters.spark_build import (
-    ShardedFilter,
     build_sharded_filter,
     is_member,
     key_digests_jvm,
@@ -113,9 +112,7 @@ def test_load_roundtrip(spark, keyed, tmp_path):
         keyed, "key", path, num_shards=8, width=16, seed=42, jvm_digests=True
     )
     re = XorFilterTable.load(spark, path)
-    assert (re.width, re.seed, re.num_shards, re.digest_kind, re.mode) == (
-        tab.width, tab.seed, tab.num_shards, tab.digest_kind, tab.mode
-    )
+    assert (re.width, re.seed, re.num_shards) == (tab.width, tab.seed, tab.num_shards)
     n = keyed.count()
     assert (
         re.probe(keyed, "key")
@@ -146,35 +143,6 @@ def test_murmur_lane_build_is_refused(spark, keyed, tmp_path):
         )
 
 
-def test_murmur_sharded_json_still_probes_via_is_member(spark):
-    """Sharded-filter JSON written by older murmur builds (e.g. ``cli
-    build-xor``: Python murmur digests, 'digest' addressing, per-shard
-    seed ``seed ^ (sid * 0x9E37)``) still probes correctly through
-    ``is_member``."""
-    import pandas as pd
-
-    from xorfilter_net_spark.filters.xor_core import build_from_digests
-    from xorfilter_net_spark.kernels.column import digest_series
-
-    keys = [f"k-{i}" for i in range(3_000)]
-    d0, d1 = digest_series(pd.Series(keys))
-    route = ShardedFilter.route(d0, 4)
-    shards = {
-        s: build_from_digests(
-            d0[route == s], d1[route == s], width=16, seed=9 ^ (s * 0x9E37)
-        )
-        for s in range(4)
-    }
-    old = ShardedFilter(16, 9, shards, 4, "murmur", "digest")
-    sxf = ShardedFilter.from_dict(json.loads(json.dumps(old.to_dict())))
-    assert (sxf.digest_kind, sxf.mode) == ("murmur", "digest")
-    df = spark.createDataFrame([(k,) for k in keys], "key string")
-    found = df.where(is_member(spark, sxf, "key")).count()
-    assert found == len(keys)
-    non = spark.createDataFrame([(f"nm-{i}",) for i in range(3_000)], "key string")
-    assert non.where(is_member(spark, sxf, "key")).count() <= 2
-
-
 def _without_timings(meta: dict) -> dict:
     return {k: v for k, v in meta.items() if k != "metrics"}
 
@@ -203,9 +171,7 @@ def test_artifact_bytes_independent_of_task_layout(spark, keyed, tmp_path):
                     num_shards=num_shards, width=16, seed=42, jvm_digests=True,
                 )
                 seen.append(_shard_rows(tab))
-                stage = shard_frame(
-                    key_digests_jvm(keyed, "key"), num_shards, 16, 42, "sqlhash"
-                )
+                stage = shard_frame(key_digests_jvm(keyed, "key"), num_shards, 16, 42)
                 assert stage.rdd.getNumPartitions() == min(num_shards, parts)
             assert len(seen[0]) == num_shards
             assert seen[1] == seen[0] and seen[2] == seen[0]
@@ -217,7 +183,7 @@ def test_shard_build_has_one_exchange(spark):
     """Digests -> shard rows crosses exactly one exchange: the groupBy
     reuses the shard exchange's partitioning instead of adding its own."""
     keys = spark.range(1_000).selectExpr("cast(id AS string) AS key")
-    stage = shard_frame(key_digests_jvm(keys, "key"), 8, 16, 42, "sqlhash")
+    stage = shard_frame(key_digests_jvm(keys, "key"), 8, 16, 42)
     plan = stage._jdf.queryExecution().executedPlan().toString()
     assert plan.count("Exchange") == 1
     assert "FlatMapGroupsInPandas" in plan
@@ -267,8 +233,8 @@ def test_all_keys_in_one_shard(spark, one_shard_keys, tmp_path):
 
 
 def test_duplicate_heavy_keys_give_the_unique_artifact(spark, one_shard_keys, tmp_path):
-    """Each key 50x, in shuffled order: the shard kernel's dedup (or the
-    distinct shuffle) leaves the artifact equal to the unique keys'."""
+    """Each key 50x, in shuffled order: the shard kernel's dedup leaves the
+    artifact equal to the unique keys'."""
     dups = (
         one_shard_keys.crossJoin(spark.range(50))
         .orderBy(F.rand(5))
@@ -278,12 +244,11 @@ def test_duplicate_heavy_keys_give_the_unique_artifact(spark, one_shard_keys, tm
         one_shard_keys, "key", str(tmp_path / "unique"), num_shards=16,
         width=16, seed=11, jvm_digests=True,
     ))
-    for dedup in ("in_shard", "shuffle"):
-        got = _shard_rows(build_xor_filter_table(
-            dups, "key", str(tmp_path / dedup), num_shards=16, width=16,
-            seed=11, jvm_digests=True, dedup=dedup,
-        ))
-        assert got == want
+    got = _shard_rows(build_xor_filter_table(
+        dups, "key", str(tmp_path / "dups"), num_shards=16, width=16,
+        seed=11, jvm_digests=True,
+    ))
+    assert got == want
 
 
 def test_crashed_rebuild_leaves_no_stale_meta(spark, tmp_path, monkeypatch):

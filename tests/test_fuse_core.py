@@ -236,7 +236,6 @@ class TestFuseSqlProbe:
         sff = build_sharded_filter(
             df, "key", num_shards=8, width=16, seed=9, kind="fuse3"
         )
-        assert sff.mode == "sqlhash"
         # members + guaranteed non-members through both probe paths
         probes = df.union(
             spark.createDataFrame([(f"nm-{i}",) for i in range(20_000)], "key string")
@@ -262,23 +261,3 @@ class TestFuseSqlProbe:
         assert "ArrowEvalPython" not in plan
         assert "BatchEvalPython" not in plan
         assert "MapInPandas" not in plan
-
-    def test_sql_probe_rejects_digest_mode(self, spark):
-        """A murmur-digest, 'digest'-addressed sharded fuse artifact (the
-        shape older builds wrote) has no SQL probe: probe_sql refuses it."""
-        from xorfilter_net_spark.filters.spark_build import ShardedFilter, probe_sql
-
-        rng = np.random.default_rng(1)
-        d0 = rng.integers(0, 2**63, 500, dtype=np.int64).view(np.uint64)
-        d1 = rng.integers(0, 2**63, 500, dtype=np.int64).view(np.uint64)
-        route = ShardedFilter.route(d0, 2)
-        shards = {
-            s: build_fuse_from_digests(d0[route == s], d1[route == s], width=8, seed=s)
-            for s in (0, 1)
-        }
-        sff = ShardedFilter.from_dict(
-            ShardedFilter(8, 1, shards, 2, "murmur", "digest", "fuse3").to_dict()
-        )
-        df = spark.createDataFrame([(f"k-{i}",) for i in range(500)], "key string")
-        with pytest.raises(ValueError):
-            probe_sql(sff, df, "key")

@@ -14,6 +14,11 @@ must arrive via ``--py-files``)::
         probe --filter /ckpt/run42/filter.json \
         --input /data/candidates --key-expr key --output /out/probed
 
+A ``build-xor``/``update-xor`` run dir is a filter table
+(``filters/table.py``: ``filter.json`` meta over ``shards/`` parquet);
+``probe`` loads the table whose ``filter.json`` it is given and probes
+it with the zero-Python ``probe_sql``.
+
 Local smoke (this sandbox)::
 
     python -m xorfilter_net_spark.cli build-xor \
@@ -105,22 +110,19 @@ def cmd_update_xor(args: argparse.Namespace) -> dict:
 
 
 def cmd_probe(args: argparse.Namespace) -> dict:
-    import json as _json
+    import os
 
     from pyspark.sql import functions as F
 
-    from .filters.spark_build import ShardedFilter, is_member, probe_sql
+    from .filters.spark_build import probe_sql
+    from .filters.table import XorFilterTable
 
     spark = _get_spark("xorfilter-probe")
-    with open(args.filter) as f:
-        sxf = ShardedFilter.from_dict(_json.load(f))
+    tab = XorFilterTable.load(spark, os.path.dirname(os.path.abspath(args.filter)))
     df = spark.read.parquet(args.input).withColumn(
         "key", F.expr(args.key_expr)
     )
-    if sxf.digest_kind == "xxhash64jvm" and sxf.mode == "sqlhash":
-        probed = probe_sql(sxf, df, "key")  # zero-Python codegen path
-    else:  # murmur JSON written by older builds
-        probed = df.withColumn("is_member", is_member(spark, sxf, "key"))
+    probed = probe_sql(tab.to_sharded(), df, "key")  # zero-Python codegen path
     probed.write.mode("overwrite").parquet(args.output)
     n = spark.read.parquet(args.output).count()
     return {"command": "probe", "output": args.output, "rows": n}
@@ -860,7 +862,10 @@ def main(argv: list[str] | None = None) -> int:
     u.set_defaults(fn=cmd_update_xor)
 
     pr = sub.add_parser("probe", help="probe a built filter")
-    pr.add_argument("--filter", required=True)
+    pr.add_argument(
+        "--filter", required=True,
+        help="filter.json of a build-xor/update-xor run dir or filter table",
+    )
     pr.add_argument("--input", required=True)
     pr.add_argument("--key-expr", required=True)
     pr.add_argument("--output", required=True)

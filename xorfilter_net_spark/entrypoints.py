@@ -295,12 +295,11 @@ def q_fuse_sql_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q_xor_sharded(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Fully executor-side construction path (per-shard applyInPandas
-    peel) with ``dedup='shuffle'``: a distinct-aggregate shuffle ahead of
-    the shard exchange instead of the in-shard dedup."""
+    peel) over duplicate-heavy input: every key three times, so each
+    shard kernel's in-shard dedup must leave one copy of each digest."""
     t = with_membership_key(load_transcripts(spark, sf_dir))
-    sxf = build_sharded_filter(
-        t, "key", num_shards=16, width=16, seed=42, dedup="shuffle"
-    )
+    tripled = t.unionAll(t).unionAll(t)
+    sxf = build_sharded_filter(tripled, "key", num_shards=16, width=16, seed=42)
     r = t.select("key").distinct().withColumn(
         "is_member", is_member(spark, sxf, "key")
     )
@@ -386,11 +385,11 @@ def q_xor_incremental_update(spark: SparkSession, sf_dir: str) -> DataFrame:
     base ∪ delta, (2) zero false negatives over the union via the
     zero-Python SQL probe, (3) strictly fewer shards re-peeled than
     exist."""
-    import json as _json
     import shutil
     import tempfile
 
     from .pipeline.checkpoint import (
+        artifact_canonical_json,
         build_xor_filter_checkpointed,
         update_xor_filter_checkpointed,
     )
@@ -400,13 +399,6 @@ def q_xor_incremental_update(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     base, delta = docs.filter("doc_id >= 25"), docs.filter("doc_id < 25")
     kw = dict(num_shards=64, width=16, seed=7)
-
-    def canon(d: dict) -> str:
-        d = _json.loads(_json.dumps(d))
-        for sh in d.get("shards", {}).values():
-            sh.pop("metrics", None)
-        return _json.dumps(d, sort_keys=True)
-
     tmp = tempfile.mkdtemp(prefix="xorupd_")
     try:
         build_xor_filter_checkpointed(
@@ -427,7 +419,7 @@ def q_xor_incremental_update(spark: SparkSession, sf_dir: str) -> DataFrame:
         return spark.createDataFrame(
             [
                 (
-                    canon(upd.to_dict()) == canon(full.to_dict()),
+                    artifact_canonical_json(upd) == artifact_canonical_json(full),
                     n_false == 0,
                     1 <= rebuilt < kw["num_shards"],
                 )

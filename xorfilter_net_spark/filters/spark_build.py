@@ -21,9 +21,14 @@ sharded (``build_sharded_filter`` and every sharded build built on
     so no hot key can skew the exchange — hashing IS the salt.
     Construction is embarrassingly parallel and merge-free.
 
+Every ``ShardedFilter`` is of that one lane (JVM digests, 'sqlhash'
+addressing) by construction: it is built here or loaded from a filter
+table (``table.XorFilterTable.to_sharded``), the one on-disk form of a
+sharded filter. Its dict form is only the broadcast payload.
+
 Probes: ``is_member`` (broadcast Arrow probe of any filter) and
-``probe_sql`` (zero-Python codegen probe of a sqlhash sharded filter);
-a persisted table artifact is probed shard-cogrouped
+``probe_sql`` (zero-Python codegen probe of a sharded filter); a
+persisted table artifact is probed shard-cogrouped
 (``table.XorFilterTable.probe``). The sharded layer reaches a family
 (XOR, fuse) only through the hook in its core module: ``probe_params``
 (per-shard parameters from an artifact's meta) and ``slot_index`` (the
@@ -155,16 +160,15 @@ def is_member(spark: SparkSession, f, col: Column | str) -> Column:
 
     ``fingerprint(key) == slots[h0]^slots[h1]^slots[h2]``
     (BaseXorFilter.cs:98-108) over Arrow batches; the slot table ships to
-    executors once via ``SparkContext.broadcast``. For 'xxhash64jvm'
-    filters the (d0, d1) digests are computed in whole-stage codegen and
-    only two int64 columns cross the Arrow boundary; otherwise the Python
-    kernel re-digests the raw keys (global filters, and sharded JSON
-    written by older murmur builds), or an XOR
-    ``mode='exact'`` filter hashes the key bytes themselves.
+    executors once via ``SparkContext.broadcast``. For a sharded filter
+    the (d0, d1) digests are computed in whole-stage codegen and only two
+    int64 columns cross the Arrow boundary; a global filter re-digests
+    the raw keys with the Python kernel, or, in XOR ``mode='exact'``,
+    hashes the key bytes themselves.
     """
     bc = spark.sparkContext.broadcast(f.to_dict())
 
-    if getattr(f, "digest_kind", "murmur") == "xxhash64jvm":
+    if isinstance(f, ShardedFilter):
 
         @pandas_udf("boolean")
         def _probe_jvm(d0: pd.Series, d1: pd.Series) -> pd.Series:
@@ -193,32 +197,20 @@ class ShardedFilter:
     Scale path for key sets whose unique-digest array exceeds driver
     memory: every shard is built executor-side in applyInPandas; no global
     peel, no driver collect of keys. Shard routing: ``d0 % num_shards``
-    (uniform — d0 is a hash lane).
+    (uniform — d0 is a hash lane). The digests are JVM ``xxhash64``
+    (``key_digests_jvm``) and every shard uses 'sqlhash' slot addressing,
+    so ``probe_sql`` can recompute both inside codegen.
     """
 
     def __init__(
-        self,
-        width: int,
-        seed: int,
-        shards: dict,
-        num_shards: int,
-        digest_kind: str = "murmur",
-        mode: str = "digest",
-        kind: str = "xor",
+        self, width: int, seed: int, shards: dict, num_shards: int, kind: str = "xor"
     ):
         self.width = width
         self.seed = seed
-        # slot-addressing mode shared by every shard: 'digest' (splitmix)
-        # or 'sqlhash' (Spark xxhash64-on-long semantics, SQL-probe-able)
-        self.mode = mode
         self.shards = shards
         # routing modulus = the build-time shard count, NOT len(shards):
         # shards that received no keys are simply absent (probe -> False)
         self.num_shards = num_shards
-        # which digest produced (d0, d1): 'xxhash64jvm' (JVM codegen, every
-        # sharded build) or 'murmur' (the Python kernel of JSON written by
-        # older builds) — probes MUST recompute keys with the same source
-        self.digest_kind = digest_kind
         self.kind = kind  # filter family of every shard ('xor' | 'fuse3')
 
     @staticmethod
@@ -262,7 +254,7 @@ class ShardedFilter:
         fl = self._flat()
         shard = self.route(d0, self.num_shards)
         p = {k: v[shard] for k, v in fl["params"].items()}
-        idx = _FAMILIES[self.kind][2].slot_index(d0, p, self.mode)
+        idx = _FAMILIES[self.kind][2].slot_index(d0, p, "sqlhash")
         idx += fl["offsets"][shard, None]
         slots = fl["slots"]
         acc = (
@@ -270,7 +262,7 @@ class ShardedFilter:
             ^ slots[idx[:, 1]].astype(np.uint64)
             ^ slots[idx[:, 2]].astype(np.uint64)
         )
-        fp = fingerprint(d1, self.width, self.mode)
+        fp = fingerprint(d1, self.width, "sqlhash")
         return (acc == fp) & fl["present"][shard]
 
     def to_dict(self) -> dict:
@@ -279,24 +271,15 @@ class ShardedFilter:
             "width": self.width,
             "seed": self.seed,
             "num_shards": self.num_shards,
-            "digest_kind": self.digest_kind,
-            "mode": self.mode,
             "shards": {str(k): v.to_dict() for k, v in self.shards.items()},
         }
 
     @classmethod
     def from_dict(cls, d: dict) -> "ShardedFilter":
-        kind = d.get("kind", "xor")
-        fcls = _FAMILIES[kind][0]
-        return cls(
-            d["width"],
-            d["seed"],
-            {int(k): fcls.from_dict(v) for k, v in d["shards"].items()},
-            d["num_shards"],
-            d.get("digest_kind", "murmur"),
-            d.get("mode", "digest"),
-            kind,
-        )
+        """The inverse of ``to_dict`` (the broadcast payload)."""
+        fcls = _FAMILIES[d["kind"]][0]
+        shards = {int(k): fcls.from_dict(v) for k, v in d["shards"].items()}
+        return cls(d["width"], d["seed"], shards, d["num_shards"], d["kind"])
 
     @property
     def metrics(self) -> dict:
@@ -343,21 +326,28 @@ def shard_build_kernel(
     checkpointed) runs it, so all produce bit-identical shards. The row
     is a pure function of the shard's unique digest SET, so a shard
     rebuilt from any ordering or partitioning of the same digests (the
-    checkpointed update) is byte-identical."""
+    checkpointed update) is byte-identical.
+
+    Duplicates share d0, hence a shard, so the kernel dedups each shard
+    locally (lexsort mask) before peeling. ``addressing`` and ``dedup``
+    name the one lane ('sqlhash', 'in_shard') and take no other value."""
+    # kept only because the benchmark passes them; the next benchmark change drops them
+    if (addressing, dedup) != ("sqlhash", "in_shard"):
+        raise ValueError(
+            "sharded filters use 'sqlhash' addressing and in-shard dedup only "
+            f"(got {addressing!r}, {dedup!r})"
+        )
     build = _FAMILIES[kind][1]
 
     def build_one(pdf: pd.DataFrame) -> pd.DataFrame:
         sid = int(pdf["shard"].iloc[0])
-        d0, d1 = _u64(pdf["d0"]), _u64(pdf["d1"])
-        unique = dedup == "in_shard"
-        if unique:
-            # lexsorted unique (d0, d1) — the canonical order the build
-            # kernel would otherwise re-derive, so it can skip its sort
-            d0, d1 = _dedup_digests(d0, d1)
+        # lexsorted unique (d0, d1) — the canonical order the build kernel
+        # would otherwise re-derive, so it can skip its sort
+        d0, d1 = _dedup_digests(_u64(pdf["d0"]), _u64(pdf["d1"]))
         # per-shard deterministic seed => rebuild-stable across runs
         f = build(
-            d0, d1, width=width, seed=seed ^ (sid * 0x9E37), mode=addressing,
-            assume_unique=unique,
+            d0, d1, width=width, seed=seed ^ (sid * 0x9E37), mode="sqlhash",
+            assume_unique=True,
         )
         return pd.DataFrame(
             {"shard": [sid], "meta": [json.dumps(f.meta())], "slots": [f.slots.tobytes()]}
@@ -367,26 +357,13 @@ def shard_build_kernel(
 
 
 def shard_frame(
-    dig: DataFrame,
-    num_shards: int,
-    width: int,
-    seed: int,
-    addressing: str,
-    dedup: str = "in_shard",
-    kind: str = "xor",
+    dig: DataFrame, num_shards: int, width: int, seed: int, kind: str = "xor"
 ) -> DataFrame:
-    """(d0, d1) digest rows -> one ``SHARD_SCHEMA`` row per non-empty shard.
-
-    ``dedup='in_shard'`` (default): one shuffle — duplicates share d0,
-    hence a shard, so each shard kernel dedups locally (lexsort mask)
-    before peeling. ``dedup='shuffle'``: a distinct-aggregate shuffle
-    first (map-side partial dedup) — cheaper when the corpus is highly
-    duplicated, since the shard shuffle then carries only unique digests.
-    """
-    src = dig if dedup == "in_shard" else dig.dropDuplicates(["d0", "d1"])
-    kernel = shard_build_kernel(width, seed, addressing, dedup, kind)
+    """(d0, d1) digest rows -> one ``SHARD_SCHEMA`` row per non-empty
+    shard, after one shuffle (``_shard_exchange``)."""
+    kernel = shard_build_kernel(width, seed, "sqlhash", "in_shard", kind)
     return (
-        _shard_exchange(src, num_shards)
+        _shard_exchange(dig, num_shards)
         .groupBy("shard")
         .applyInPandas(kernel, schema=SHARD_SCHEMA)
     )
@@ -419,23 +396,18 @@ def build_sharded_filter(
     num_shards: int = 32,
     width: int = 8,
     seed: int = 0,
-    dedup: str = "in_shard",
     kind: str = "xor",
 ) -> ShardedFilter:
     """Sharded filter of family ``kind`` (see ``shard_frame``) over JVM
     xxhash64 digests with 'sqlhash' slot addressing, collected to the
     driver; probe it with ``is_member`` or, with zero Python,
     ``probe_sql``."""
-    rows = shard_frame(
-        key_digests_jvm(df, key_col), num_shards, width, seed, "sqlhash", dedup, kind
-    )
+    rows = shard_frame(key_digests_jvm(df, key_col), num_shards, width, seed, kind)
     shards = {
         int(r.shard): _shard_filter(r.meta, r.slots)
         for r in rows.toPandas().itertuples(index=False)
     }
-    return ShardedFilter(
-        width, seed, shards, num_shards, "xxhash64jvm", "sqlhash", kind
-    )
+    return ShardedFilter(width, seed, shards, num_shards, kind)
 
 
 def probe_sql(
@@ -446,9 +418,8 @@ def probe_sql(
 ) -> DataFrame:
     """Zero-Python membership probe, fully inside whole-stage codegen.
 
-    Requires a sharded filter over JVM digests (every
-    ``build_sharded_filter`` build): digests are ``xxhash64`` of the key
-    and the addressing mode is 'sqlhash' (slot mixing is
+    Every ``ShardedFilter`` qualifies: its digests are ``xxhash64`` of
+    the key and its addressing mode is 'sqlhash' (slot mixing is
     ``xxhash64(d0, seed_j)`` — the exact builtin the JVM can recompute).
     The plan is: per-row shard parameters from a small broadcast table,
     three slot indexes computed with ANSI-safe long arithmetic (the
@@ -468,12 +439,6 @@ def probe_sql(
     (``table.build_xor_filter_table``) and probe it shard-cogrouped with
     ``XorFilterTable.probe``.
     """
-    if sxf.digest_kind != "xxhash64jvm" or sxf.mode != "sqlhash":
-        raise ValueError(
-            "probe_sql requires JVM digests with sqlhash addressing (got "
-            f"digest_kind={sxf.digest_kind!r}, mode={sxf.mode!r}); use "
-            "is_member for other filters"
-        )
     params_df, slots_df = _probe_frames(df.sparkSession, sxf)
     t = _T
 

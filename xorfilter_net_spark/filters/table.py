@@ -38,8 +38,14 @@ broadcast paths (``is_member``, zero-Python ``probe_sql``)
 apply unchanged — at bench scale those are faster because they avoid
 the probe-side shuffle entirely.
 
-Artifacts carry their digest kind in ``filter.json``; one written by the
-older Python-murmur lane is refused (rebuild it).
+A table is a directory: ``filter.json`` (the meta of ``table_meta``: width,
+seed, num_shards, digest kind; a few hundred bytes) over ``shards/``
+(parquet of ``SHARD_SCHEMA`` rows). It is the one on-disk form of a
+sharded filter: a checkpointed build's run dir
+(``pipeline/checkpoint.py``) is a table too. A meta written by the older
+Python-murmur lane, or one without a digest kind, is refused (rebuild
+it); extra keys are ignored, so run dirs whose ``filter.json`` still
+holds the whole hex-encoded filter load as tables.
 """
 
 from __future__ import annotations
@@ -64,7 +70,7 @@ from .spark_build import (
     shard_frame,
 )
 
-__all__ = ["XorFilterTable", "build_xor_filter_table"]
+__all__ = ["XorFilterTable", "build_xor_filter_table", "table_meta"]
 
 _META_FILE = "filter.json"
 _SHARDS_DIR = "shards"
@@ -78,19 +84,17 @@ class XorFilterTable:
     """
 
     def __init__(self, spark: SparkSession, path: str, meta: dict):
-        if meta["digest_kind"] != "xxhash64jvm":
+        kind = meta.get("digest_kind", "murmur")
+        if kind != "xxhash64jvm":
             raise ValueError(
-                f"filter table {path!r} holds {meta['digest_kind']!r} digests, "
-                "which no probe reads any more; rebuild it with "
-                "build_xor_filter_table"
+                f"filter table {path!r} holds {kind!r} digests, which no "
+                "probe reads any more; rebuild it"
             )
         self.spark = spark
         self.path = path
         self.width = meta["width"]
         self.seed = meta["seed"]
         self.num_shards = meta["num_shards"]
-        self.digest_kind = meta["digest_kind"]
-        self.mode = meta["mode"]
         self._metrics = meta.get("metrics")
 
     @property
@@ -127,10 +131,7 @@ class XorFilterTable:
             int(r.shard): _shard_filter(r.meta, r.slots)
             for r in self.shards_df().toPandas().itertuples(index=False)
         }
-        return ShardedFilter(
-            self.width, self.seed, shards, self.num_shards,
-            self.digest_kind, self.mode,
-        )
+        return ShardedFilter(self.width, self.seed, shards, self.num_shards)
 
     # -- probing ------------------------------------------------------------
     def probe(
@@ -175,6 +176,19 @@ class XorFilterTable:
         )
 
 
+def table_meta(width: int, seed: int, num_shards: int) -> dict:
+    """The ``filter.json`` of a table: structural metadata only.
+    Aggregate metrics are computed lazily on first ``.metrics`` access
+    (from the pruned ``meta`` column — the slots column is never read on
+    the driver), so no synchronous driver metadata job rides on a build."""
+    return {
+        "width": width,
+        "seed": seed,
+        "num_shards": num_shards,
+        "digest_kind": "xxhash64jvm",
+    }
+
+
 def build_xor_filter_table(
     df: DataFrame,
     key_col: str,
@@ -183,7 +197,6 @@ def build_xor_filter_table(
     width: int = 8,
     seed: int = 0,
     jvm_digests: bool = True,
-    dedup: str = "in_shard",
 ) -> XorFilterTable:
     """Build a sharded XOR filter and persist it as a distributed table.
 
@@ -192,27 +205,16 @@ def build_xor_filter_table(
     difference is the sink: shard rows are written to parquet by the
     executors instead of collected, so the build has NO per-key serial
     stage and the artifact size is bounded by storage, not driver memory.
+    Construction therefore ends with the executor-parallel parquet commit
+    and the meta publish.
     """
     # kept only because the benchmark passes it; the next benchmark change drops it
     if not jvm_digests:
         raise ValueError("the murmur sharded lane is gone; jvm_digests must be True")
     retract(os.path.join(path, _META_FILE))  # the shards are overwritten in place
     shard_frame(
-        key_digests_jvm(df, key_col), num_shards, width, seed, "sqlhash", dedup
+        key_digests_jvm(df, key_col), num_shards, width, seed
     ).write.mode("overwrite").parquet(os.path.join(path, _SHARDS_DIR))
-
-    spark = df.sparkSession
-    # structural metadata only: aggregate metrics are computed lazily on
-    # first ``.metrics`` access (from the pruned ``meta`` column — the
-    # slots column is never read on the driver). Construction therefore
-    # ends with the executor-parallel parquet commit; no synchronous
-    # driver metadata job rides on the timed path.
-    meta = {
-        "width": width,
-        "seed": seed,
-        "num_shards": num_shards,
-        "digest_kind": "xxhash64jvm",
-        "mode": "sqlhash",
-    }
+    meta = table_meta(width, seed, num_shards)
     publish(os.path.join(path, _META_FILE), json.dumps(meta, indent=1))
-    return XorFilterTable(spark, path, meta)
+    return XorFilterTable(df.sparkSession, path, meta)

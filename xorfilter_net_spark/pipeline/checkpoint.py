@@ -1,15 +1,20 @@
 """Checkpointed, resumable build pipeline (north_rule: "resumable from
 checkpoint with per-partition lineage + metrics").
 
-A run directory holds one subdirectory per completed stage::
+A run directory holds one output per completed stage::
 
     <run_dir>/
       digests/            stage output (parquet)
       digests.manifest.json
-      shards/             per-shard filter artifacts (parquet)
+      shards/             per-shard filter artifacts (SHARD_SCHEMA parquet)
       shards.manifest.json
-      filter.json         final artifact
+      filter.json         the table meta over shards/ (filters/table.py)
       filter.manifest.json
+
+so a finished run dir is a filter table: ``XorFilterTable.load(spark,
+run_dir)`` opens it, and ``cli probe`` probes it. ``filter.json`` of run
+dirs written before it became the table meta holds the whole filter,
+hex-encoded; those still load (the table reads only its meta keys).
 
 Each manifest records the stage fingerprint (params + upstream
 fingerprint), wall time, row counts, and per-partition lineage (output
@@ -36,10 +41,10 @@ from ..commit import publish, retract
 from ..filters.spark_build import (
     SHARD_SCHEMA,
     ShardedXorFilter,
-    _shard_filter,
     key_digests_jvm,
     shard_frame,
 )
+from ..filters.table import XorFilterTable, table_meta
 
 
 def artifact_canonical_json(sxf: ShardedXorFilter) -> str:
@@ -150,23 +155,24 @@ class BuildRun:
         self.metrics[stage] = {**manifest, "resumed": False}
 
 
-def _filter_stage(
-    run: BuildRun, fp_shards: str, shards_df: DataFrame, width, seed, num_shards
+def _table_stages(
+    run: BuildRun, fp_shards: str, produce: Callable[[], DataFrame], meta: dict
 ) -> ShardedXorFilter:
-    """The final JSON stage: collected ``SHARD_SCHEMA`` rows -> the filter
-    artifact."""
+    """The shards stage (``SHARD_SCHEMA`` parquet) and the filter stage,
+    which publishes the table ``meta`` over it: the run dir is then a
+    filter table. The meta describes ``shards/`` without containing it, so a
+    shards rerun retracts the filter stage (manifest, then meta) before
+    ``shards/`` is overwritten in place."""
 
-    def assemble() -> dict:
-        shards = {
-            r["shard"]: _shard_filter(r["meta"], r["slots"])
-            for r in shards_df.collect()
-        }
-        return ShardedXorFilter(
-            width, seed, shards, num_shards, "xxhash64jvm", "sqlhash"
-        ).to_dict()
+    def overwrite() -> DataFrame:
+        retract(run._manifest_path("filter"))
+        retract(os.path.join(run.run_dir, "filter.json"))
+        return produce()
 
+    run.dataframe_stage("shards", fp_shards, overwrite)
     fp = _fingerprint({"stage": "filter", "up": fp_shards})
-    return ShardedXorFilter.from_dict(run.json_stage("filter", fp, assemble))
+    published = run.json_stage("filter", fp, lambda: meta)
+    return XorFilterTable(run.spark, run.run_dir, published).to_sharded()
 
 
 def build_xor_filter_checkpointed(
@@ -183,9 +189,9 @@ def build_xor_filter_checkpointed(
 
     Stages: digests (JVM xxhash64 digests + distributed dedup, parquet)
     -> shards (per-shard peel in applyInPandas with sqlhash addressing,
-    parquet of artifacts) -> filter (assembled ShardedXorFilter JSON,
-    probe-able with zero Python by ``probe_sql``). Returns (filter,
-    stage metrics).
+    parquet of artifacts) -> filter (the table meta). Returns (the run
+    dir's table loaded by ``XorFilterTable.to_sharded``, probe-able with
+    zero Python by ``probe_sql``; stage metrics).
 
     ``input_token`` should identify the input dataset (e.g. its path +
     snapshot id); it chains into every stage fingerprint.
@@ -224,13 +230,10 @@ def build_xor_filter_checkpointed(
             "format": SHARD_SCHEMA,
         }
     )
-    shards_df = run.dataframe_stage(
-        "shards",
-        fp_shards,
-        lambda: shard_frame(digests, num_shards, width, seed, "sqlhash"),
+    sxf = _table_stages(
+        run, fp_shards, lambda: shard_frame(digests, num_shards, width, seed),
+        table_meta(width, seed, num_shards),
     )
-
-    sxf = _filter_stage(run, fp_shards, shards_df, width, seed, num_shards)
     return sxf, run.metrics
 
 
@@ -276,7 +279,7 @@ def update_xor_filter_checkpointed(
       4. copies every other shard's artifact verbatim from the base run.
 
     The build parameters (width, seed, num_shards) come from the base
-    run's filter artifact — an update can never silently fork the
+    run's table meta — an update can never silently fork the
     configuration; a base run built on murmur digests is refused. The
     result is byte-identical to a fresh full build over (base corpus ∪
     delta) (asserted in tests/test_checkpoint.py): per-shard
@@ -290,17 +293,8 @@ def update_xor_filter_checkpointed(
 
     spark = delta_df.sparkSession
 
-    with open(os.path.join(base_run_dir, "filter.json")) as f:
-        base_art = json.load(f)
-    width = base_art["width"]
-    seed = base_art["seed"]
-    num_shards = base_art["num_shards"]
-    if base_art.get("digest_kind", "murmur") != "xxhash64jvm":
-        raise ValueError(
-            f"base run {base_run_dir!r} holds murmur digests, which no "
-            "sharded build reads any more; rebuild it with "
-            "build_xor_filter_checkpointed first"
-        )
+    base = XorFilterTable.load(spark, base_run_dir)  # refuses murmur runs
+    width, seed, num_shards = base.width, base.seed, base.num_shards
 
     base_fp = BuildRun(spark, base_run_dir)._load_manifest("shards") or {}
     if json.loads(base_fp.get("fingerprint", "{}")).get("format") != SHARD_SCHEMA:
@@ -358,24 +352,22 @@ def update_xor_filter_checkpointed(
     )
 
     def produce_shards() -> DataFrame:
-        base_shards = spark.read.parquet(os.path.join(base_run_dir, "shards"))
+        base_shards = base.shards_df()
         if not affected:
             return base_shards
-        all_digests = spark.read.parquet(
-            *_digest_dirs(base_run_dir)
-        ).unionAll(new_digests)
+        all_digests = base_digests.unionAll(new_digests)
         rebuilt = shard_frame(
             all_digests.filter(shard_col.isin([int(s) for s in affected])),
-            num_shards, width, seed, "sqlhash",
+            num_shards, width, seed,
         )
         kept = base_shards.filter(
             ~F.col("shard").isin([int(s) for s in affected])
         )
         return kept.unionAll(rebuilt)
 
-    shards_df = run.dataframe_stage("shards", fp_shards, produce_shards)
-
-    sxf = _filter_stage(run, fp_shards, shards_df, width, seed, num_shards)
+    sxf = _table_stages(
+        run, fp_shards, produce_shards, table_meta(width, seed, num_shards)
+    )
     run.metrics["update"] = {
         "shards_rebuilt": len(affected),
         "shards_total": num_shards,
