@@ -6,6 +6,7 @@ equivalence with the driver-collected build (same kernel => bit-identical
 shards; reference determinism contract, DeterministicIntegrationTests.cs:13-34).
 """
 
+import hashlib
 import json
 import os
 
@@ -13,6 +14,7 @@ import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
+from xorfilter_net_spark.filters import spark_build
 from xorfilter_net_spark.filters.spark_build import (
     build_sharded_filter,
     is_member,
@@ -155,26 +157,61 @@ def _shard_rows(tab) -> dict:
     }
 
 
-def test_artifact_bytes_independent_of_task_layout(spark, keyed, tmp_path):
+def _rows_sha256(rows: dict) -> str:
+    """sha256 over shard rows in shard order: ``str(shard)``, the meta JSON
+    with sorted keys, then the slot bytes."""
+    h = hashlib.sha256()
+    for sid in sorted(rows):
+        meta, slots = rows[sid]
+        h.update(str(sid).encode())
+        h.update(json.dumps(meta, sort_keys=True).encode())
+        h.update(slots)
+    return h.hexdigest()
+
+
+# shard rows of the ``keyed`` fixture at num_shards 8, width 16, seed 42,
+# unchanged since the one sharded layer was introduced
+XOR_ROWS_SHA256 = "6689a85f6cb8b22c9ee373258da5399afdb51211aa668e83314333288b932fa6"
+FUSE_ROWS_SHA256 = "b52d994376a9d6f2dbd54e28d5e9d12df209f61f74016260245e29a786574a2f"
+
+
+def test_artifact_bytes_independent_of_task_layout(spark, keyed, tmp_path, monkeypatch):
     """The shard exchange sends shard s to task s mod T, T = min(num_shards,
-    spark.sql.shuffle.partitions): one task per shard, several shards per
-    task, or all shards in one task must give the same artifact bytes."""
+    _build_tasks): one task per shard, several shards per task, or all
+    shards in one task must give the same artifact bytes."""
+    dig = key_digests_jvm(keyed, "key")
+    for num_shards in (8, 64):
+        seen = []
+        for tasks in (1, 3, 128):
+            monkeypatch.setattr(spark_build, "_build_tasks", lambda _s, t=tasks: t)
+            tab = build_xor_filter_table(
+                keyed, "key", str(tmp_path / f"art_{num_shards}_{tasks}"),
+                num_shards=num_shards, width=16, seed=42, jvm_digests=True,
+            )
+            seen.append(_shard_rows(tab))
+            stage = shard_frame(dig, num_shards, 16, 42)
+            assert stage.rdd.getNumPartitions() == min(num_shards, tasks)
+        assert len(seen[0]) == num_shards
+        assert seen[1] == seen[0] and seen[2] == seen[0]
+        if num_shards == 8:
+            assert _rows_sha256(seen[0]) == XOR_ROWS_SHA256
+
+    monkeypatch.undo()
+    fuse = build_sharded_filter(keyed, "key", num_shards=8, width=16, seed=42, kind="fuse3")
+    assert _rows_sha256({
+        sid: (_without_timings(f.meta()), f.slots.tobytes())
+        for sid, f in fuse.shards.items()
+    }) == FUSE_ROWS_SHA256
+
+    # one wave: task slots, floored at half the (2x cores) shuffle partitions
     conf = "spark.sql.shuffle.partitions"
+    cores = spark.sparkContext.defaultParallelism
     before = spark.conf.get(conf)
     try:
-        for num_shards in (8, 64):
-            seen = []
-            for parts in (1, 3, 128):
-                spark.conf.set(conf, str(parts))
-                tab = build_xor_filter_table(
-                    keyed, "key", str(tmp_path / f"art_{num_shards}_{parts}"),
-                    num_shards=num_shards, width=16, seed=42, jvm_digests=True,
-                )
-                seen.append(_shard_rows(tab))
-                stage = shard_frame(key_digests_jvm(keyed, "key"), num_shards, 16, 42)
-                assert stage.rdd.getNumPartitions() == min(num_shards, parts)
-            assert len(seen[0]) == num_shards
-            assert seen[1] == seen[0] and seen[2] == seen[0]
+        for shuffle, width in ((2 * cores, cores), (2, cores), (128, 64)):
+            spark.conf.set(conf, str(shuffle))
+            stage = shard_frame(dig, 64, 16, 42)
+            assert stage.rdd.getNumPartitions() == width
     finally:
         spark.conf.set(conf, before)
 

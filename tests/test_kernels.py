@@ -58,6 +58,14 @@ def test_murmur_batch_matches_scalar(seed):
     assert got.tolist() == exp
 
 
+def test_murmur_batch_per_row_seeds():
+    buf, lens = pack_bytes(EDGE_KEYS)
+    seeds = np.arange(len(EDGE_KEYS), dtype=np.uint32) * np.uint32(0x9E3779B1)
+    got = murmur3_32(buf, lens, seeds)
+    exp = [murmur3_32_scalar(k, int(s)) for k, s in zip(EDGE_KEYS, seeds)]
+    assert got.tolist() == exp
+
+
 def test_crc32_matches_zlib_and_empty_is_zero():
     buf, lens = pack_bytes(EDGE_KEYS)
     got = crc32(buf, lens)
@@ -88,6 +96,24 @@ def test_digest128_no_easy_collisions():
     d0, d1 = digest128(buf, lens)
     pairs = np.stack([d0, d1], axis=1)
     assert np.unique(pairs, axis=0).shape[0] == len(keys)
+
+
+def test_digest128_equals_four_murmur_lanes():
+    """The one-pass digest is the four fixed-seed murmur3_32 lanes, on keys
+    of every length 0-67 (every ``len % 4`` tail, the empty key) packed
+    together so short keys run through padding columns."""
+    rng = np.random.default_rng(7)
+    keys = [bytes(rng.integers(0, 256, n, dtype=np.uint8)) for n in range(68)]
+    buf, lens = pack_bytes(keys)
+    d0, d1 = digest128(buf, lens)
+    seeds = (0xD6E8FEB8, 0x85EBCA6B, 0xC2B2AE35, 0x27D4EB2F)
+    m = [murmur3_32(buf, lens, s).astype(np.uint64) for s in seeds]
+    assert d0.dtype == np.uint64 and d1.dtype == np.uint64
+    assert np.array_equal(d0, (m[0] << np.uint64(32)) | m[1])
+    assert np.array_equal(d1, (m[2] << np.uint64(32)) | m[3])
+    for k, a, b in zip(keys, d0.tolist(), d1.tolist()):
+        lanes = [murmur3_32_scalar(k, s) for s in seeds]
+        assert (a, b) == ((lanes[0] << 32) | lanes[1], (lanes[2] << 32) | lanes[3])
 
 
 def test_pack_bytes_empty_rows():

@@ -13,9 +13,10 @@ build (``build_xor_filter_table``)
     -> ONE exchange on the shard id ``s = pmod(d0, num_shards)``
        (uniform: d0 is a hash lane, so conv_id skew cannot reach it):
        shard ``s`` goes to task ``s mod T``, ``T = min(num_shards,
-       spark.sql.shuffle.partitions)``
-    -> per-shard dedup + peel + fill in ``applyInPandas``: each task
-       runs one Python runner and builds its shards one at a time
+       max(sc.defaultParallelism, spark.sql.shuffle.partitions // 2))``
+    -> per-shard dedup + peel + fill in ``applyInPandas`` in one wave:
+       each core runs one Python runner and builds its shards one at a
+       time
     -> parquet write of ``(shard, meta, slots)`` rows, executor-parallel.
     Summary metrics are assembled lazily on first ``.metrics`` access,
     reading ONLY the pruned ``meta`` column (bytes per shard, not per

@@ -47,6 +47,15 @@ def _rotl32(x: np.ndarray, r: int) -> np.ndarray:
     return (x << r) | (x >> _U32(32 - int(r)))
 
 
+def _fmix32(h: np.ndarray) -> np.ndarray:
+    """MurmurHash3's 32-bit finalizer (the caller has mixed in the length)."""
+    h = h ^ (h >> _U32(16))
+    h = h * _U32(0x85EBCA6B)
+    h ^= h >> _U32(13)
+    h = h * _U32(0xC2B2AE35)
+    return h ^ (h >> _U32(16))
+
+
 def pack_bytes(values) -> tuple[np.ndarray, np.ndarray]:
     """Pack a sequence of ``bytes`` into a zero-padded uint8 matrix.
 
@@ -70,6 +79,31 @@ def pack_bytes(values) -> tuple[np.ndarray, np.ndarray]:
     return buf, lens
 
 
+def _murmur_lanes(buf: np.ndarray, lens: np.ndarray, seeds: np.ndarray) -> np.ndarray:
+    """MurmurHash3 x86_32 of each row of ``buf`` under each row of ``seeds``.
+
+    ``buf`` is ``pack_bytes``' zero-padded ``(n, 4m)`` uint8 matrix and
+    ``seeds`` a ``(k, n)`` uint32 array (one row per seed lane); returns
+    the ``(k, n)`` hashes. The block words (a little-endian ``uint32`` view
+    of the rows) and each column's block mix ``k1`` depend only on the
+    key, so they are computed once for all k lanes; only the lane state
+    depends on the seed. The loop runs over block columns, each step
+    vectorized across lanes and rows.
+    """
+    with np.errstate(over="ignore"):
+        # one block column per row of k1, so each step reads contiguously
+        words = np.ascontiguousarray(np.ascontiguousarray(buf).view("<u4").T)
+        k1 = _rotl32(words * _C1, 15) * _C2
+        h = seeds
+        nfull = lens // 4
+        for j, kj in enumerate(k1):
+            hf = _rotl32(h ^ kj, 13) * _U32(5) + _U32(0xE6546B64)
+            # past a row's full blocks its block is the zero-padded tail
+            # (kj is the murmur tail mix) or all padding (kj == 0)
+            h = np.where(j < nfull, hf, h ^ kj)
+        return _fmix32(h ^ lens.astype(_U32))
+
+
 def murmur3_32(
     buf: np.ndarray, lens: np.ndarray, seed: int | np.ndarray
 ) -> np.ndarray:
@@ -79,36 +113,8 @@ def murmur3_32(
     rows; loops only over the (padded) block columns.
     """
     n = buf.shape[0]
-    nblocks = buf.shape[1] // 4
-    with np.errstate(over="ignore"):
-        blocks = (
-            buf[:, 0::4].astype(_U32)
-            | (buf[:, 1::4].astype(_U32) << _U32(8))
-            | (buf[:, 2::4].astype(_U32) << _U32(16))
-            | (buf[:, 3::4].astype(_U32) << _U32(24))
-        )
-        h = np.broadcast_to(np.asarray(seed, dtype=_U32), (n,)).copy()
-        nfull = (lens // 4).astype(np.int64)
-        tail_len = (lens % 4).astype(np.int64)
-        for j in range(nblocks):
-            kj = blocks[:, j]
-            k1 = kj * _C1
-            k1 = _rotl32(k1, 15)
-            k1 = k1 * _C2
-            full = j < nfull
-            hf = h ^ k1
-            hf = _rotl32(hf, 13)
-            hf = hf * _U32(5) + _U32(0xE6546B64)
-            is_tail = (j == nfull) & (tail_len > 0)
-            # tail block: padded zeros give exactly the murmur tail k1
-            h = np.where(full, hf, np.where(is_tail, h ^ k1, h))
-        h ^= lens.astype(_U32)
-        h ^= h >> _U32(16)
-        h = h * _U32(0x85EBCA6B)
-        h ^= h >> _U32(13)
-        h = h * _U32(0xC2B2AE35)
-        h ^= h >> _U32(16)
-    return h
+    seeds = np.broadcast_to(np.asarray(seed, dtype=_U32), (1, n))
+    return _murmur_lanes(buf, lens, seeds)[0]
 
 
 def murmur3_32_scalar(data: bytes, seed: int = 0) -> int:
@@ -234,14 +240,17 @@ def derive_attempt_seeds(user_seed: int, attempt: int) -> np.ndarray:
         return splitmix64(np.asarray(base, dtype=_U64) + np.arange(3, dtype=_U64))
 
 
+# seeds of the four murmur3_32 lanes of ``digest128`` (d0 = m0:m1, d1 = m2:m3)
+_DIGEST_SEEDS = np.array([0xD6E8FEB8, 0x85EBCA6B, 0xC2B2AE35, 0x27D4EB2F], dtype=_U32)
+
+
 def digest128(buf: np.ndarray, lens: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
     """128-bit canonical key digest as two uint64s, built from four
     murmur3_32 lanes with fixed seeds. Used by the scale path so the driver
-    peel only ever sees 16 bytes/key regardless of key length."""
-    m0 = murmur3_32(buf, lens, 0xD6E8FEB8)
-    m1 = murmur3_32(buf, lens, 0x85EBCA6B)
-    m2 = murmur3_32(buf, lens, 0xC2B2AE35)
-    m3 = murmur3_32(buf, lens, 0x27D4EB2F)
-    d0 = (m0.astype(_U64) << _U64(32)) | m1.astype(_U64)
-    d1 = (m2.astype(_U64) << _U64(32)) | m3.astype(_U64)
-    return d0, d1
+    peel only ever sees 16 bytes/key regardless of key length.
+
+    Byte-identical to four ``murmur3_32`` calls, in one pass: the four
+    lanes share the block mix (``_murmur_lanes``)."""
+    seeds = np.broadcast_to(_DIGEST_SEEDS[:, None], (4, buf.shape[0]))
+    m = _murmur_lanes(buf, lens, seeds).astype(_U64)
+    return (m[0] << _U64(32)) | m[1], (m[2] << _U64(32)) | m[3]
