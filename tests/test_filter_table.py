@@ -177,13 +177,13 @@ FUSE_ROWS_SHA256 = "b52d994376a9d6f2dbd54e28d5e9d12df209f61f74016260245e29a78657
 
 def test_artifact_bytes_independent_of_task_layout(spark, keyed, tmp_path, monkeypatch):
     """The shard exchange sends shard s to task s mod T, T = min(num_shards,
-    _build_tasks): one task per shard, several shards per task, or all
+    task_slots): one task per shard, several shards per task, or all
     shards in one task must give the same artifact bytes."""
     dig = key_digests_jvm(keyed, "key")
     for num_shards in (8, 64):
         seen = []
         for tasks in (1, 3, 128):
-            monkeypatch.setattr(spark_build, "_build_tasks", lambda _s, t=tasks: t)
+            monkeypatch.setattr(spark_build, "task_slots", lambda _s, t=tasks: t)
             tab = build_xor_filter_table(
                 keyed, "key", str(tmp_path / f"art_{num_shards}_{tasks}"),
                 num_shards=num_shards, width=16, seed=42, jvm_digests=True,

@@ -1,20 +1,51 @@
 """Execution shape of the two-phase sketch aggregate (sketches/base.py):
-one job with one stage, a fold that depends only on the multiset of
-phase-1 states, the zero state for an empty input, and a pre-merge level
-that keeps the collect under ``spark.driver.maxResultSize``."""
+one job with one stage whose phase 1 runs one wave of task slots, a fold
+that depends only on the multiset of phase-1 states, the zero state for
+an empty input, and a pre-merge level that keeps the collect under
+``spark.driver.maxResultSize``."""
 
 import os
 import uuid
 
+from xorfilter_net_spark.sketches import base
 from xorfilter_net_spark.sketches.base import aggregate, aggregate_checkpointed
 from xorfilter_net_spark.sketches.bloom import BloomSketch
+from xorfilter_net_spark.sketches.cms import CmsSketch
+from xorfilter_net_spark.sketches.columns import partial_states
 from xorfilter_net_spark.sketches.hll import HllSketch
 from xorfilter_net_spark.sketches.kll import KllSketch
 from xorfilter_net_spark.sketches.tdigest import TDigestSketch
+from xorfilter_net_spark.sources.session import task_slots
 
 
 def _values(spark, lo, hi, parts, expr):
     return spark.range(lo, hi, numPartitions=parts).selectExpr(f"{expr} as value")
+
+
+def _stage_tasks(spark, run) -> list[list[int]]:
+    """Run ``run()`` under a fresh job group; per job, the task count of
+    each of its stages."""
+    sc = spark.sparkContext
+    group = f"sketch-aggregate-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "job shape")
+    try:
+        run()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    tracker = sc.statusTracker()
+    return [
+        [tracker.getStageInfo(s).numTasks for s in tracker.getJobInfo(j).stageIds]
+        for j in sorted(tracker.getJobIdsForGroup(group))
+    ]
+
+
+def _persisted(spark, parts):
+    df = spark.range(0, 4_000, numPartitions=parts).selectExpr(
+        "cast(id as double) as value", "cast(id % 5 as int) as g"
+    ).persist()
+    df.count()
+    return df
 
 
 def test_fold_depends_only_on_the_states_not_their_order(spark):
@@ -29,21 +60,91 @@ def test_fold_depends_only_on_the_states_not_their_order(spark):
 
 
 def test_aggregate_is_one_job_with_one_stage(spark):
-    sc = spark.sparkContext
-    df = _values(spark, 0, 4_000, 8, "cast(id as double)").persist()
-    df.count()
-    group = f"sketch-aggregate-{uuid.uuid4().hex}"
-    sc.setJobGroup(group, "job shape")
+    """A persisted 8-partition input on local[4]: ``aggregate`` is one job
+    with one stage of ``task_slots`` tasks, and so is ``partial_states``."""
+    df = _persisted(spark, 8)
     try:
-        aggregate(df, ["value"], KllSketch(64, value_col="value"))
+        assert df.rdd.getNumPartitions() == 8
+        slots = task_slots(spark)
+        assert slots == 4
+        kll = KllSketch(64, value_col="value")
+        assert _stage_tasks(spark, lambda: aggregate(df, ["value"], kll)) == [[slots]]
+        hll = HllSketch(10, key_col="value")
+        assert _stage_tasks(
+            spark, lambda: partial_states(df, ["g"], ["value"], hll).collect()
+        ) == [[slots]]
     finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-        sc.setLocalProperty("spark.job.description", None)
         df.unpersist()
-    tracker = sc.statusTracker()
-    jobs = tracker.getJobIdsForGroup(group)
-    assert len(jobs) == 1, jobs
-    assert len(tracker.getJobInfo(jobs[0]).stageIds) == 1
+
+
+def test_small_file_splits_keep_every_input_partition(spark):
+    """With ``spark.sql.files.maxPartitionBytes`` so small that
+    ceil(size / split) passes the input's partition count, the phase-1
+    stage keeps every input partition."""
+    df = _persisted(spark, 8)
+    conf = "spark.sql.files.maxPartitionBytes"
+    before = spark.conf.get(conf)
+    spark.conf.set(conf, "64")
+    try:
+        kll = KllSketch(64, value_col="value")
+        assert _stage_tasks(spark, lambda: aggregate(df, ["value"], kll)) == [[8]]
+        hll = HllSketch(10, key_col="value")
+        assert _stage_tasks(
+            spark, lambda: partial_states(df, ["g"], ["value"], hll).collect()
+        ) == [[8]]
+    finally:
+        spark.conf.set(conf, before)
+        df.unpersist()
+
+
+def test_unknown_or_overflowing_estimates_leave_the_input_alone(spark):
+    """Phase 1 coalesces only what the optimizer can size: an RDD-backed
+    input (unknown size) and a cross join whose estimate passes an int
+    partition count are left as they are."""
+
+    def coalesced(df):
+        plan = base._one_wave(df, df.columns)._jdf.queryExecution().logical()
+        return "Repartition" in plan.toString()
+
+    assert coalesced(_values(spark, 0, 1_000, 8, "id"))
+    rdd = spark.sparkContext.parallelize([(i,) for i in range(100)], 8)
+    assert not coalesced(spark.createDataFrame(rdd, "value long"))
+    # 8 GB x 0.8 GB: under Long.MaxValue, past 2**31 splits of 128 MB
+    cross = spark.range(10**9).crossJoin(spark.range(10**8).withColumnRenamed("id", "j"))
+    assert not coalesced(cross)
+
+
+def test_fixed_size_states_equal_one_pandas_update(spark):
+    """HLL, Bloom and CMS states do not depend on how the input is split
+    into partitions or grouped into phase-1 tasks."""
+    keys = spark.range(0, 6_000).selectExpr("cast(id * 7919 % 4000 as string) as key")
+    pdf = keys.toPandas()
+    sketches = (
+        HllSketch(12, key_col="key"),
+        BloomSketch(1 << 16, 3, key_col="key"),
+        CmsSketch(4, 512, key_col="key"),
+    )
+    for parts in (1, 3, 8):
+        df = keys.repartition(parts).persist()
+        try:
+            for sk in sketches:
+                expect = sk.serialize(sk.update(sk.zero(), pdf))
+                got = sk.serialize(aggregate(df, ["key"], sk))
+                assert got == expect, (type(sk).__name__, parts)
+        finally:
+            df.unpersist()
+
+
+def test_order_sensitive_states_repeat_on_the_same_input(spark):
+    """KLL and t-digest bytes follow the coalescer's grouping, which is
+    fixed for one input partitioning and block placement."""
+    df = _persisted(spark, 8)
+    try:
+        for sk in (KllSketch(64, value_col="value"), TDigestSketch(50.0, value_col="value")):
+            first = sk.serialize(aggregate(df, ["value"], sk))
+            assert sk.serialize(aggregate(df, ["value"], sk)) == first, type(sk).__name__
+    finally:
+        df.unpersist()
 
 
 def test_empty_input_gives_the_zero_state(spark, tmp_path):
@@ -71,17 +172,24 @@ def test_checkpointed_resume_reproduces_the_kll_state(spark, tmp_path):
     assert sk.serialize(fresh) == sk.serialize(aggregate(df, ["value"], sk))
 
 
-def test_large_states_pre_merge_under_the_result_size_limit(spark):
-    """Eight 512 KB Bloom states (4 MB) pass a 2 MB result-size limit, so
-    a direct collect would abort; the pre-merge level folds them into
-    isqrt(8) = 2 states first, and the OR-merged bits stay exact."""
+def test_large_states_pre_merge_under_the_result_size_limit(spark, monkeypatch):
+    """Phase 1 folds the 8 input partitions into task_slots (4) states of
+    512 KB: 2 MB, past half of a 2 MB result-size limit, so the pre-merge
+    level runs (into min(isqrt(4), 1 MB / 512 KB) = 2 groups) before the
+    collect, and the OR-merged bits stay exact."""
     df = spark.range(0, 8_000, numPartitions=8).selectExpr(
         "cast(id as string) as key"
     )
     sk = BloomSketch(4 * 1024 * 1024, 3, key_col="key")
     limit = 2 * 1024 * 1024
-    assert 8 * len(sk.serialize(sk.zero())) > limit
+    slots = task_slots(spark)
+    assert slots * len(sk.serialize(sk.zero())) > limit // 2
     expect = sk.serialize(sk.update(sk.zero(), df.toPandas()))
+    folds = []
+    fold_states = base._fold_states
+    monkeypatch.setattr(
+        base, "_fold_states", lambda s: folds.append(s) or fold_states(s)
+    )
     # The live SparkContext conf: each new task set reads the limit from it.
     conf = spark.sparkContext._jsc.sc().conf()
     conf.set("spark.driver.maxResultSize", str(limit))
@@ -89,4 +197,5 @@ def test_large_states_pre_merge_under_the_result_size_limit(spark):
         got = sk.serialize(aggregate(df, ["key"], sk))
     finally:
         conf.remove("spark.driver.maxResultSize")
+    assert folds == [sk]
     assert got == expect

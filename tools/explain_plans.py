@@ -89,9 +89,10 @@ def main() -> None:
     sections.append(
         (
             "Sketch-column partials (partial_states)",
-            "MapInPandas sits directly on the scan with NO Exchange below "
-            "it: the raw corpus never shuffles; only one serialized state "
-            "per (partition x group) leaves the stage.",
+            "MapInPandas sits on a Coalesce of the scan (one wave of "
+            "task slots, about one file split per task at most) with NO "
+            "Exchange below it: the raw corpus never shuffles; only one "
+            "serialized state per (task x group) leaves the stage.",
             captured_explain(daily),
         )
     )

@@ -48,6 +48,7 @@ from pyspark.sql.functions import pandas_udf
 
 from ..kernels.column import digest_series as _digest_batch
 from ..kernels.column import series_to_bytes as _series_to_bytes
+from ..sources.session import task_slots
 from . import fuse_core, xor_core
 from .fuse_core import FuseFilter, build_fuse_from_digests
 from .ribbon import RibbonFilter, build_ribbon_from_digests
@@ -369,46 +370,37 @@ def shard_frame(
     )
 
 
-def _build_tasks(spark: SparkSession) -> int:
-    """Task slots for one build wave: ``sc.defaultParallelism``, floored
-    at half of ``spark.sql.shuffle.partitions``."""
-    shuffle = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    return max(spark.sparkContext.defaultParallelism, shuffle // 2)
-
-
 def _shard_exchange(dig: DataFrame, num_shards: int) -> DataFrame:
     """(d0, d1) digest rows -> (d0, d1, shard) rows after the build's one
     exchange: shard ``s`` goes to task ``s mod T``, with
-    ``T = min(num_shards, max(sc.defaultParallelism,
-    spark.sql.shuffle.partitions // 2))`` (``_build_tasks``), so the peel
-    runs as one wave with one Python runner per core, each building
-    ceil(num_shards / T) shards one group at a time.
+    ``T = min(num_shards, task_slots)`` (``sources.session.task_slots``:
+    ``max(sc.defaultParallelism, spark.sql.shuffle.partitions // 2)``),
+    so the peel runs as one wave with one Python runner per core, each
+    building ceil(num_shards / T) shards one group at a time.
 
     One wave, not the 2x-cores shuffle partitions the session sets for
-    other stages: each Python task pays a fixed runner cost whatever it
-    holds (about 0.1 s on a 4-core host: an identity ``mapInPandas`` took
-    0.55 s over 8 partitions and 0.33 s over 4), which dominates a shard
-    kernel of ~1 us/key. Shards are routed by a hash lane, so every task
-    gets the same number of shards holding about the same number of keys
-    (``s mod T`` keeps that count exact; a hash of the shard ids would
-    not), and a second wave does not balance load the first lacks. It
-    does not guard against a slow node or a lost task either: that task
-    holds 1/T of the build. The exchange's partitioning is the grouping
-    key itself, so the groupBy adds no second exchange. The count is
-    explicit, so AQE does not coalesce the stage: it would size the
-    reduce side by shuffle BYTES (~64MB advisory), but the peel is
-    CPU-heavy per byte, and byte-sized coalescing starves it of cores
-    (measured 1.5x construction slowdown at local[8]).
-
-    ``defaultParallelism`` is ``spark.default.parallelism`` when set,
-    else the executor cores registered when the build is planned (at
-    least 2; ``local[n]``: n). Under dynamic allocation, or while
-    executors are still starting, that can be far below the cluster's
-    size, so the session conf sets the floor: the library sizes shuffle
-    partitions at 2x the cores the session is for (``get_spark``), so
-    half of them is that core count, whichever executors are up. The
-    one-wave gain was measured on ``local[4]`` only, not on a cluster."""
-    tasks = min(num_shards, _build_tasks(dig.sparkSession))
+    other stages: each Python task pays a fixed set-up cost whatever it
+    holds, and it is paid per task, not per worker process (reused
+    workers pay it again). ``pyspark.worker`` calls
+    ``worker_util.setup_spark_files`` for every task, which ends in
+    ``importlib.invalidate_caches()``; on CPython 3.11 that re-reads the
+    central directory of ``pyspark.zip`` once per zipimporter on
+    ``sys.path`` (3.12 re-reads lazily). The event log reports it as the
+    task metric ``time to initialize Python workers``: 0.19-0.81 s per
+    task on a 4-core host, against a shard kernel of ~1 us/key. Shards are
+    routed by a hash lane, so every task gets the same number of shards
+    holding about the same number of keys (``s mod T`` keeps that count
+    exact; a hash of the shard ids would not), and a second wave does not
+    balance load the first lacks. It does not guard against a slow node
+    or a lost task either: that task holds 1/T of the build. The
+    exchange's partitioning is the grouping key itself, so the groupBy
+    adds no second exchange. The count is explicit, so AQE does not
+    coalesce the stage: it would size the reduce side by shuffle BYTES
+    (~64MB advisory), but the peel is CPU-heavy per byte, and byte-sized
+    coalescing starves it of cores (measured 1.5x construction slowdown
+    at local[8]). The one-wave gain was measured on ``local[4]`` only,
+    not on a cluster."""
+    tasks = min(num_shards, task_slots(dig.sparkSession))
     return dig.withColumn(
         "shard", F.pmod(F.col("d0"), F.lit(num_shards)).cast("int")
     ).repartitionById(tasks, "shard")

@@ -12,10 +12,12 @@ states — the 100 TB raw scan is never repeated. Works for any
 
 Scale shape:
   - ``partial_states``: ``mapInPandas`` map-side combine — one state per
-    (input partition × group). NO raw-row shuffle at all; only the tiny
-    state rows move afterwards. This beats ``groupBy().applyInPandas``
+    (phase-1 task × group), over the input coalesced to one wave of
+    tasks capped at about one file split each (``base._one_wave``, the
+    rule of ``aggregate``'s phase 1). NO raw-row shuffle at all; only the
+    tiny state rows move afterwards. This beats ``groupBy().applyInPandas``
     (sketches/base.py::aggregate_by_group) whenever groups hold many rows:
-    the shuffle payload is O(partitions × groups × state_size), not O(rows).
+    the shuffle payload is O(tasks × groups × state_size), not O(rows).
   - ``merge_states``: ``groupBy(subset-of-group-cols).applyInPandas`` over
     serialized states. Input rows are already tiny, so this is cheap at any
     corpus size, and its output remains a mergeable sketch column (rollups
@@ -25,6 +27,9 @@ Scale shape:
 Bit-exactness: merging per-day states for a type yields byte-identical
 serialized state to aggregating the type directly (merge associativity —
 asserted in tests and in the ``hll_rollup_events_ok`` contract gate).
+Order-sensitive states (KLL, t-digest) follow the coalescer's grouping
+of input partitions into tasks, which is fixed for a given input
+partitioning and block placement; their error bounds do not depend on it.
 """
 
 from __future__ import annotations
@@ -35,7 +40,7 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql.functions import pandas_udf
 
-from .base import MergeableSketch, merge_serialized
+from .base import MergeableSketch, _one_wave, merge_serialized
 
 
 def _group_fields(df: DataFrame, group_cols: list[str]) -> str:
@@ -49,13 +54,13 @@ def partial_states(
     value_cols: list[str],
     sketch: MergeableSketch,
 ) -> DataFrame:
-    """One serialized sketch state per (input partition × group).
+    """One serialized sketch state per (phase-1 task × group).
 
     Map-side combine with zero raw-row shuffle; feed the result to
     ``merge_states`` (or persist it as-is) to finalize per-group states.
     Group keys with nulls are preserved (``dropna=False``).
     """
-    proj = df.select(*group_cols, *value_cols)
+    proj = _one_wave(df, [*group_cols, *value_cols])
     fields = _group_fields(proj, group_cols)
     n_g = len(group_cols)
 

@@ -18,8 +18,8 @@ Published error contract (validated in tests/test_sketches.py):
   DuckDB oracle.
 
 Like the other sketches this is dict-arithmetic per BATCH (pandas
-``value_counts`` is the vectorized inner loop), one state per partition
-collected to the driver and merged there (``sketches/base.py``).
+``value_counts`` is the vectorized inner loop), one state per phase-1
+task collected to the driver and merged there (``sketches/base.py``).
 """
 
 from __future__ import annotations

@@ -85,6 +85,21 @@ def session_confs(shuffle_partitions: int) -> dict[str, str]:
     return confs
 
 
+def task_slots(spark: SparkSession) -> int:
+    """Python tasks that fill one wave: ``sc.defaultParallelism``, floored
+    at half of ``spark.sql.shuffle.partitions``.
+
+    ``defaultParallelism`` is ``spark.default.parallelism`` when set,
+    else the executor cores registered when the plan is made (at least 2;
+    ``local[n]``: n). Under dynamic allocation, or while executors are
+    still starting, that can be far below the cluster's size, so the
+    session conf sets the floor: ``get_spark`` sizes shuffle partitions
+    at 2x the cores the session is for, so half of them is that core
+    count, whichever executors are up."""
+    shuffle = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    return max(spark.sparkContext.defaultParallelism, shuffle // 2)
+
+
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Resolve table ``name`` under ``sf_dir``: a parquet directory, or
     ``catalog:<namespace>`` for catalog-resolved (e.g. Iceberg) tables."""
