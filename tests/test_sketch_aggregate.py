@@ -199,3 +199,37 @@ def test_large_states_pre_merge_under_the_result_size_limit(spark, monkeypatch):
         conf.remove("spark.driver.maxResultSize")
     assert folds == [sk]
     assert got == expect
+
+
+def test_group_functions_carry_no_half_type_hints(spark):
+    """``applyInPandas`` warns on every call when a function's type hints
+    name no eval type; the per-group functions carry none, so the grouped
+    map eval type is chosen without the warning."""
+    import warnings
+
+    from xorfilter_net_spark.sketches.base import aggregate_by_group
+    from xorfilter_net_spark.sketches.columns import merge_states
+    from xorfilter_net_spark.sketches.rolling import rolling_distinct_exact
+
+    df = spark.range(10).selectExpr("id % 3 as g", "id as u", "timestamp_seconds(id) as ts")
+    sk = HllSketch(p=4)
+    with warnings.catch_warnings(record=True) as caught:
+        warnings.simplefilter("always")
+        merge_states(aggregate_by_group(df, ["g"], ["u"], sk), ["g"], sk)
+        rolling_distinct_exact(df, "u", "ts", 100, window=2)
+    assert not [w for w in caught if "Cannot infer the eval type" in str(w.message)]
+
+
+def test_long_keys_digest_alike_with_a_null_in_their_batch(spark):
+    """Arrow hands a ``long`` batch holding a null to pandas as float64;
+    each long still sets the register it sets from a batch without one."""
+    import numpy as np
+
+    sk = HllSketch(p=12)
+    longs = spark.range(0, 1000, numPartitions=1).selectExpr("id as k")
+    with_null = spark.range(0, 1001, numPartitions=1).selectExpr(
+        "if(id = 1000, null, id) as k"
+    )
+    a, b = aggregate(longs, ["k"], sk), aggregate(with_null, ["k"], sk)
+    assert np.array_equal(sk.merge(a, b), b)
+    assert abs(sk.estimate(sk.merge(a, b)) - 1000) < 50

@@ -3,6 +3,11 @@
 These are the building blocks of the XOR-filter family, re-expressed for
 batch execution over Arrow/NumPy buffers:
 
+- ``pack_spans``: the one packing kernel under every Python digest. It
+  gathers byte spans of one buffer (an Arrow column's data buffer and
+  offsets, see ``kernels/column.py``, or a ``b"".join`` of a list of
+  ``bytes`` in ``pack_bytes``) into the zero-padded ``(n, pad)`` uint8
+  matrix the hashes below read, one row copy per key.
 - ``murmur3_32``: MurmurHash3 x86 32-bit, the slot-addressing hash the
   reference uses (XORFilter.Net ``BaseXorFilter.cs:147-149``). Implemented
   lane-parallel over a zero-padded ``(n, max_len)`` byte matrix: the block
@@ -24,6 +29,7 @@ from __future__ import annotations
 import numpy as np
 
 __all__ = [
+    "pack_spans",
     "pack_bytes",
     "murmur3_32",
     "murmur3_32_scalar",
@@ -56,33 +62,51 @@ def _fmix32(h: np.ndarray) -> np.ndarray:
     return h ^ (h >> _U32(16))
 
 
-def pack_bytes(values) -> tuple[np.ndarray, np.ndarray]:
-    """Pack a sequence of ``bytes`` into a zero-padded uint8 matrix.
+# row k keeps the first k bytes of a _MASK_W-byte block column
+_MASK_W = 64
+_KEEP = np.tri(_MASK_W + 1, _MASK_W, -1, dtype=np.uint8) * np.uint8(0xFF)
 
-    Returns ``(buf, lens)`` where ``buf`` is ``(n, max_len_padded_to_4)``
-    uint8 and ``lens`` the true byte lengths. Single O(total_bytes) copy,
-    no per-row Python beyond ``len()``.
+
+def pack_spans(
+    data: np.ndarray, starts: np.ndarray, lens: np.ndarray
+) -> tuple[np.ndarray, np.ndarray]:
+    """Gather byte spans of one buffer into a zero-padded uint8 matrix.
+
+    Row i of ``buf`` is ``data[starts[i] : starts[i] + lens[i]]`` (every
+    span within ``data``), zero-padded to ``(n, max_len_padded_to_4)``;
+    returns ``(buf, lens)`` with ``lens`` as int64. Each row is copied whole
+    from a sliding-window view of ``data`` (one ``pad``-byte window per
+    byte offset), then the bytes past its length are masked off, 64 columns
+    at a time, with rows of a fixed keep-mask table. Temporaries are a
+    ``pad``-extended copy of ``data`` and one mask block of at most the
+    size of ``buf``: no per-byte index matrix, no per-row Python.
     """
-    n = len(values)
-    lens = np.fromiter((len(v) for v in values), dtype=np.int64, count=n)
-    total = int(lens.sum())
-    max_len = int(lens.max()) if n else 0
+    lens = np.asarray(lens, dtype=np.int64)
+    max_len = int(lens.max()) if lens.size else 0
     pad = ((max_len + 3) // 4) * 4 if max_len else 4
-    buf = np.zeros((n, pad), dtype=np.uint8)
-    if total:
-        flat = np.frombuffer(b"".join(values), dtype=np.uint8)
-        offsets = np.zeros(n, dtype=np.int64)
-        np.cumsum(lens[:-1], out=offsets[1:])
-        row_idx = np.repeat(np.arange(n, dtype=np.int64), lens)
-        col_idx = np.arange(total, dtype=np.int64) - np.repeat(offsets, lens)
-        buf[row_idx, col_idx] = flat
+    ext = np.zeros(data.size + pad, dtype=np.uint8)
+    ext[: data.size] = data
+    windows = np.lib.stride_tricks.sliding_window_view(ext, pad)
+    buf = windows[np.asarray(starts, dtype=np.int64)]
+    for c in range(0, pad, _MASK_W):
+        block = buf[:, c : c + _MASK_W]
+        block &= _KEEP[np.clip(lens - c, 0, _MASK_W), : block.shape[1]]
     return buf, lens
+
+
+def pack_bytes(values) -> tuple[np.ndarray, np.ndarray]:
+    """Pack a sequence of ``bytes`` into ``pack_spans``' zero-padded matrix:
+    one ``b"".join`` and the spans' offsets, no per-row Python beyond
+    ``len()``."""
+    lens = np.fromiter((len(v) for v in values), dtype=np.int64, count=len(values))
+    data = np.frombuffer(b"".join(values), dtype=np.uint8)
+    return pack_spans(data, np.cumsum(lens) - lens, lens)
 
 
 def _murmur_lanes(buf: np.ndarray, lens: np.ndarray, seeds: np.ndarray) -> np.ndarray:
     """MurmurHash3 x86_32 of each row of ``buf`` under each row of ``seeds``.
 
-    ``buf`` is ``pack_bytes``' zero-padded ``(n, 4m)`` uint8 matrix and
+    ``buf`` is ``pack_spans``' zero-padded ``(n, 4m)`` uint8 matrix and
     ``seeds`` a ``(k, n)`` uint32 array (one row per seed lane); returns
     the ``(k, n)`` hashes. The block words (a little-endian ``uint32`` view
     of the rows) and each column's block mix ``k1`` depend only on the

@@ -257,7 +257,7 @@ def aggregate_by_group(
     gschema = df.select(*group_cols).schema
     fields = ", ".join(f"{f.name} {f.dataType.simpleString()}" for f in gschema)
 
-    def per_group(keys, pdf: pd.DataFrame) -> pd.DataFrame:
+    def per_group(keys, pdf):
         st = sketch.update(sketch.zero(), pdf)
         row = {c: [k] for c, k in zip(group_cols, keys)}
         row["state"] = [sketch.serialize(st)]

@@ -105,7 +105,7 @@ def merge_states(
     """
     fields = _group_fields(states, group_cols)
 
-    def per_group(keys, pdf: pd.DataFrame) -> pd.DataFrame:
+    def per_group(keys, pdf):
         st = merge_serialized(sketch, pdf[state_col])
         row: dict[str, list] = {c: [k] for c, k in zip(group_cols, keys)}
         row["state"] = [sketch.serialize(st)]

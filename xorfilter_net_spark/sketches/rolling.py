@@ -105,7 +105,7 @@ def _window_merge(
         f"{g} {states.schema[g].dataType.simpleString()}, " for g in gcols
     )
 
-    def per_window(keys, pdf: pd.DataFrame) -> pd.DataFrame:
+    def per_window(keys, pdf):
         cols = finish(merge_serialized(sketch, pdf["state"]))
         n = len(next(iter(cols.values())))
         row = {c: [k] * n for c, k in zip(gcols, keys)}
