@@ -280,10 +280,10 @@ def test_which_columns_skip_the_per_row_loop():
         pd.Series(["a", None], dtype="string"),
         pd.Series([1, 2], dtype=np.int64),
         pd.Series([1, None], dtype="Int64"),
-        pd.Series([1.0, np.nan, -3.0]),
         pd.Series([None, None], dtype=object),
     ]
     per_row = [
+        pd.Series([1.0, np.nan, -3.0]),
         pd.Series([True, False]),
         pd.Series([1.5, 2.0]),
         pd.Series([np.inf, 1.0]),

@@ -18,12 +18,11 @@ A value's key bytes depend on the value alone, never on its batch:
 ``digest_series`` encodes without per-row Python for the columns
 ``mapInPandas`` hands the sketches: object columns that Arrow converts to
 string or binary (``str``, ``bytes``, a mix of the two, nulls), pandas
-``string`` columns, integer columns (numpy or nullable) and float columns
-whose non-null values are all integral within ``2**53``. Such a column goes
-through ``pa.array(s, from_pandas=True)`` (C-level) and its offsets and data
-buffers feed ``hashes.pack_spans``. Every other column (bool, datetimes,
-categoricals, non-integral floats, objects of mixed types) takes the
-per-row ``series_to_bytes`` loop. Both paths yield the same bytes.
+``string`` columns and integer columns (numpy or nullable). Such a column
+goes through ``pa.array(s, from_pandas=True)`` (C-level) and its offsets and
+data buffers feed ``hashes.pack_spans``. Every other column (floats, bool,
+datetimes, categoricals, objects of mixed types) takes the per-row
+``series_to_bytes`` loop. Both paths yield the same bytes.
 """
 
 from __future__ import annotations
@@ -50,8 +49,8 @@ def series_to_bytes(s: pd.Series) -> list[bytes]:
             out.append(v.encode("utf-8"))
         elif isinstance(v, bytes):
             out.append(v)
-        elif isinstance(v, bytearray):
-            out.append(bytes(v))
+        elif isinstance(v, int):  # bool too: str(True) is its text
+            out.append(str(v).encode("utf-8"))
         elif isinstance(v, (float, np.floating)):
             if v != v:
                 out.append(b"")
@@ -59,6 +58,8 @@ def series_to_bytes(s: pd.Series) -> list[bytes]:
                 out.append(str(int(v)).encode("utf-8"))
             else:
                 out.append(str(v).encode("utf-8"))
+        elif isinstance(v, bytearray):
+            out.append(bytes(v))
         elif _is_null(v):
             out.append(b"")
         else:
@@ -69,20 +70,12 @@ def series_to_bytes(s: pd.Series) -> list[bytes]:
 def _arrow_keys(s: pd.Series) -> pa.Array | None:
     """The column's key bytes as one Arrow ``large_binary`` array (nulls
     stay null), or None when the column takes the per-row path."""
-    if s.dtype.kind == "f":
-        v = s.to_numpy(dtype=np.float64, na_value=np.nan)
-        null = np.isnan(v)
-        whole = (v == np.trunc(v)) & (np.abs(v) <= _FLOAT_INT_LIMIT)
-        if not (whole | null).all():
-            return None
-        arr = pa.array(np.where(whole, v, 0).astype(np.int64), mask=null)
-    elif s.dtype.kind in "iuO":
-        try:
-            arr = pa.array(s, from_pandas=True)
-        except (pa.ArrowInvalid, pa.ArrowTypeError, pa.ArrowNotImplementedError,
-                UnicodeError, OverflowError):
-            return None
-    else:
+    if s.dtype.kind not in "iuO":
+        return None
+    try:
+        arr = pa.array(s, from_pandas=True)
+    except (pa.ArrowInvalid, pa.ArrowTypeError, pa.ArrowNotImplementedError,
+            UnicodeError, OverflowError):
         return None
     t = arr.type
     if pa.types.is_integer(t):
